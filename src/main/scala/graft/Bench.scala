@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -17,7 +18,7 @@ object Bench {
       val refCpus = "\"__cpus\"\\s*:\\s*([0-9.]+)".r
         .findFirstMatchIn(text).map(_.group(1).toDouble)
       (times, refCpus)
-    } catch { case _: Throwable => (Map.empty, None) }
+    } catch { case NonFatal(_) => (Map.empty, None) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,7 +33,7 @@ object Bench {
     // first timed query isn't charged for it.
     SparkEntry.queries.get("q_initial_offset").foreach { fn =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     val runT0 = System.nanoTime()
     def sinceStart: Double = (System.nanoTime() - runT0) / 1e9
@@ -45,7 +46,7 @@ object Bench {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: $e"); -1.0 }
     }
     // Optional comma-separated filter for targeted re-measurement while
@@ -146,7 +147,7 @@ object Bench {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")),
         allLine + "\n")
-      catch { case e: Throwable => System.err.println(s"[bench] bench_last.json write failed: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] bench_last.json write failed: $e") }
     // ...then the machine-read summary LAST and compact: the harness keeps
     // only a bounded tail of stdout and json-parses it line by line, so this
     // line must stay well under ~1.8 kB — slowest 50 queries only.

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.util.control.NonFatal
 
 /** Shared SparkSession configuration for every entrypoint (Verify, Bench,
   * tests). Centralised so the correctness gate, the benchmark and the test
@@ -65,8 +66,9 @@ object GraftSession {
     * call sites become reliable HDFS/object-store checkpoints, so a lost
     * node costs a re-read of the checkpoint file instead of the whole
     * iterative job (kCore, connectedComponents, the index lifecycle, …).
-    * Lazy (`eager = false`) checkpoints keep the kCore discipline either
-    * way: materialized by the very next probe job, one job per round. */
+    * Lazy (`eager = false`) checkpoints are materialized by the caller's
+    * next action either way; [[graft.operators.Fixpoint]] builds its
+    * one-probe-job rounds on that. */
   def checkpointed[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
     quietTruncatedUnpersistWarning
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) {
@@ -85,7 +87,7 @@ object GraftSession {
     } else ds.localCheckpoint(eager)
   }
 
-  /** Iterative operators (kCenterGreedy per-round release,
+  /** Iterative operators ([[graft.operators.Fixpoint]]'s per-round release,
     * [[releaseMaterialized]] between queries) unpersist locally-checkpointed
     * frames that are DELIBERATELY never recomputed; Spark warns on every such
     * unpersist ("lineage has been truncated and cannot be recomputed").
@@ -95,7 +97,7 @@ object GraftSession {
   private lazy val quietTruncatedUnpersistWarning: Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
   /** Call-site sugar for [[checkpointed]]: `df.ckpt(true)` reads like the
     * `localCheckpoint` it replaces while keeping the strategy switch in one

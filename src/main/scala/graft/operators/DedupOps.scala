@@ -672,56 +672,43 @@ object DedupOps {
     * each round every node takes the min of its own label and its
     * neighbours' labels, then relabels through its label's own label
     * (label(id) := label(label(id))) — the classic doubling step, so
-    * convergence needs O(log diameter) rounds, not diameter. Each round's
-    * result is lineage-truncated (`localCheckpoint`) — without that the
-    * self-referential plan doubles every round; on a real cluster point
-    * the session at a checkpoint dir and swap in reliable `checkpoint` for
-    * fault tolerance. Convergence is the label-sum fixpoint: labels only
-    * ever decrease, so an unchanged sum IS the fixpoint (summed in
+    * convergence needs O(log diameter) rounds, not diameter. The rounds
+    * run on [[Fixpoint]]; the probe is the label sum: labels only ever
+    * decrease, so an unchanged sum IS the fixpoint (summed in
     * decimal(38,0): no overflow at any id scale). Nothing collects to the
-    * driver; the per-round action is one scalar aggregate.
+    * driver; the per-round action is one scalar aggregate. When `maxIter`
+    * rounds pass without convergence the labels of the last round are
+    * returned.
     *
     * Output: one row per node appearing in `pairs` — (id, cluster), where
     * cluster = the component's minimum id. Singleton documents never enter
     * the pair list and are absent (their cluster is trivially themselves). */
   def connectedComponents(pairs: DataFrame, idaCol: String = "ida",
                           idbCol: String = "idb", maxIter: Int = 25): DataFrame = {
-    // Materialize the pair list once before symmetrizing: the union reads
-    // `pairs` twice, and without the checkpoint both branches re-run the
-    // (expensive) pair-generation subtree — the projections differ enough
-    // that ReuseExchange does not dedupe them (measured at sf0.1:
-    // q_dedup_clusters 3.9→3.1s, q_dedup_drop 2.8→2.1s, q_dedup_keep_best
-    // 3.6→2.7s). Pairs are orders of magnitude smaller than the corpus
-    // that produced them.
-    val p0 = pairs.select(col(idaCol).as("src"), col(idbCol).as("dst"))
-      .ckpt(true)
-    val edges = p0
-      .union(p0.select(col("dst").as("src"), col("src").as("dst")))
+    // Symmetrize with a narrow 2× generator, which reads `pairs` once (a
+    // union of both directions would re-run the expensive pair-generation
+    // subtree through both branches: the projections differ enough that
+    // ReuseExchange does not dedupe them), then materialize the edge list
+    // once: every round joins against it. Pairs are orders of magnitude
+    // smaller than the corpus that produced them.
+    val edges = pairs
+      .select(explode(array(
+        struct(col(idaCol).as("src"), col(idbCol).as("dst")),
+        struct(col(idbCol).as("src"), col(idaCol).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .persist()
+      .ckpt(true)
     def labelSum(l: DataFrame): java.math.BigDecimal =
       l.agg(sum(col("cluster").cast("decimal(38,0)"))).first().getDecimal(0)
     // Fused first round: labels₀ = id makes round 1's neighbour-min over
     // {self} ∪ neighbours exactly least(src, min(dst)) — one aggregation
     // over the symmetrized edges replaces the node-distinct, its
-    // checkpoint, AND the first loop iteration's join (the loop below then
-    // starts from labels₁; convergence detection is unchanged since labels
-    // only ever decrease).
-    // LAZY checkpoints throughout the loop: the labelSum convergence probe
-    // that immediately follows each checkpoint is a full action over every
-    // partition, so it materializes the checkpoint as a side effect — one
-    // job per round instead of eager-checkpoint + probe (two). Same
-    // lineage-truncation semantics, half the job barriers — and per-job
-    // latency is exactly what degrades first on a contended driver box
-    // (ARCHITECTURE, "Driver-box bench divergence").
-    var labels = edges.groupBy(col("src"))
+    // checkpoint, AND a first join round (convergence detection is
+    // unchanged since labels only ever decrease).
+    val firstLabels = edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster"))
       .select(col("src").as("id"), col("cluster"))
-      .ckpt(false)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
+    Fixpoint.iterate(firstLabels, maxIter)(labelSum) { (labels, _) =>
       val fromNeighbours = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("cluster"))
@@ -730,19 +717,11 @@ object DedupOps {
       // pointer jump: follow the label one hop (labels are node ids, so the
       // label's own row always exists; left join guards the root, whose
       // label is itself)
-      val next = combined
+      combined
         .join(combined.select(col("id").as("cluster"), col("cluster").as("jump")),
           Seq("cluster"), "left")
         .select(col("id"), coalesce(col("jump"), col("cluster")).as("cluster"))
-        .ckpt(false) // materialized by the labelSum probe below
-      val s = labelSum(next)
-      labels = next
-      done = s == prevSum
-      prevSum = s
-      iter += 1
-    }
-    edges.unpersist()
-    labels
+    }.frame
   }
 
   /** Leakage-safe train/valid/test split: assign every document the split

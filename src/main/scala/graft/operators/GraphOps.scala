@@ -390,12 +390,12 @@ object GraphOps {
     * Scale shape: each round is one key aggregation over the surviving
     * edge relation plus two semi-joins on node keys — hash-distributed,
     * AQE-splittable, no driver state beyond the 1-row survivor-count
-    * probe. Rounds = peel depth of the graph, not data size. LAZY
-    * checkpoints truncate the per-round lineage and are materialized by
-    * the very next survivor-count probe — one job per round, the
-    * [[graft.operators.DedupOps.connectedComponents]] job-count pattern.
-    * Convergence is count equality: the survivor set only ever shrinks,
-    * so equal counts ⇒ equal sets. */
+    * probe. Rounds = peel depth of the graph, not data size. The rounds
+    * run on [[Fixpoint]], each round one peel of the surviving edge
+    * relation, probed by its edge count: the edge set only ever shrinks,
+    * so equal counts ⇒ equal sets, and an unchanged set is the k-core.
+    * `maxRounds` caps the peels (the first included); a graph not peeled
+    * to its core within the cap fails rather than return a partial core. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // symmetrize via canonical-form distinct + narrow 2× generator: the
@@ -404,7 +404,7 @@ object GraphOps {
     // explode — one upstream pass, one exchange, no double-build (a lazy
     // unionAll here would re-run the upstream through both branches, the
     // exact defect clusteringCoefficient had pre-r12)
-    var e = edges
+    val symmetric = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b"))
@@ -413,29 +413,25 @@ object GraphOps {
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .ckpt(false)
-    var prevNodes = -1L
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    // one peel: keep the edges whose BOTH endpoints have degree ≥ k. Both
+    // semi-joins probe the SAME `keep` plan, so its exchange (a broadcast at
+    // small scale) is built once and reused — a per-side projection of it
+    // would plan two different exchanges, one more job per round.
+    def peel(e: DataFrame): DataFrame = {
+      val keep = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
-        .select(col("src").as("node"))
-        .ckpt(false) // materialized by the count probe below
-      val n = keep.count()
-      if (n == prevNodes) converged = true
-      else {
-        e = e
-          .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .ckpt(false) // materialized by next round's probe
-        prevNodes = n
-      }
-      rounds += 1
+        .select(col("node"))
+      e.join(keep, col("src") === col("node"), "left_semi")
+        .join(keep, col("dst") === col("node"), "left_semi")
     }
-    require(converged || prevNodes == 0L,
+    // probe: an RDD count is one job; Dataset.count adds a SinglePartition
+    // exchange, which AQE runs as a second job every round
+    val rounds = Fixpoint.iterate(peel(symmetric), maxRounds - 1)(_.rdd.count())((e, _) => peel(e))
+    // an empty edge set is the (empty) core even when the cap cut the
+    // confirming round
+    require(rounds.converged || rounds.probes.last == 0L,
       s"kCore did not converge within $maxRounds rounds — raise maxRounds")
-    e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    rounds.frame.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
   }
 

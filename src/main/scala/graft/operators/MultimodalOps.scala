@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import java.security.MessageDigest
+import scala.util.control.NonFatal
 
 /** Multimodal-column operators: image/audio/video as opaque `binary` columns
   * with typed metadata, plus sniff / decode / feature-extract / frame-sample
@@ -51,7 +52,7 @@ object MultimodalOps {
     try {
       val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
       if (img == null) None else grayOf(img)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** BufferedImage → deterministic gray raster (shared by [[decodeImage]]
     * and the single-reader multi-frame path). */
@@ -209,7 +210,7 @@ object MultimodalOps {
     // (non-audio bytes, other encodings, big-endian PCM) bit-identical.
     // Catch-all like the JDK path: decodeWav is documented total (None for
     // malformed bytes); an adversarial header must never fail the task.
-    val fast = try decodeCanonicalWav(bytes) catch { case _: Throwable => None }
+    val fast = try decodeCanonicalWav(bytes) catch { case NonFatal(_) => None }
     if (fast.isDefined) fast else decodeWavJdk(bytes)
   }
 
@@ -278,7 +279,7 @@ object MultimodalOps {
           Some(DecodedAudio(f.getSampleRate.toInt, f.getChannels, samples))
         }
       } finally ais.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Encode signed 16-bit PCM samples (interleaved if multi-channel) as a
     * real WAV container via the JDK encoder — the fixture/normalize
@@ -636,7 +637,7 @@ object MultimodalOps {
           finally r.dispose()
         }
       } finally iis.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Encode an animated grayscale GIF (one global 256-gray palette per
     * frame, lossless for 8-bit gray) via the JDK writer — the multi-frame
@@ -712,7 +713,7 @@ object MultimodalOps {
           } finally r.dispose()
         }
       } finally iis.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Per-frame perceptual hashes for multi-frame containers: ONE ImageReader
     * walk per payload (the [[frameCountAndFirst]] single-reader discipline —
@@ -763,7 +764,7 @@ object MultimodalOps {
           } finally r.dispose()
         }
       } finally iis.close()
-    } catch { case _: Throwable => Seq.empty }
+    } catch { case NonFatal(_) => Seq.empty }
 
   /** Animation near-dup over per-frame hashes ([[frameHashes]] output):
     * two payloads are near-duplicates when they have the SAME frame count

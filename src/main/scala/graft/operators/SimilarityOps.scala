@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.GraftSession
 import graft.GraftSession.Ckpt
 
 import graft.functions.VectorFunctions._
@@ -504,57 +503,37 @@ object SimilarityOps {
 
   /** The farthest-point greedy itself: selected (id, vector, norm,
     * min-dist-at-selection) in selection order — bounded model metadata
-    * (k rows), shared by [[kCenterSelect]] and [[kCenterAssign]]. */
+    * (k rows), shared by [[kCenterSelect]] and [[kCenterAssign]].
+    *
+    * The rounds run on [[Fixpoint]]. The frame carries each row's distance
+    * `md` to its nearest selected center; a round folds in ONE new distance
+    * per row against the newest center — least(stored md, d_new) — instead
+    * of re-deriving the whole i-term least-chain from the parquet scan up
+    * (the pre-r14 form: O(k²) distance work + k source re-reads). The
+    * probe is the argmax row (ties to the lowest id): with every `md` still
+    * null in round 0 it is the seed, the lowest id. An exhausted corpus
+    * (n < k) probes None, which leaves the frame as it is, so the next
+    * probe repeats and the rounds stop with the selected prefix. */
   private def kCenterGreedy(emb: DataFrame, k: Int, vecCol: String,
                             idCol: String): Seq[(Long, Seq[Double], Double, Option[Long])] = {
     require(k >= 1 && k <= 128, s"k must be in [1, 128] (k driver rounds), got $k")
-    val spark = emb.sparkSession
-    val sc = spark.sparkContext
     val p = prepared(emb, vecCol, idCol)
-      .select(col("id").cast("long").as("id"), col("v"), col("nrm"))
-    // seed: lowest id — 1 bounded row to the driver (model metadata)
-    val seedRows = p.orderBy(col("id")).limit(1).take(1)
-    require(seedRows.nonEmpty, "kCenterGreedy: empty input — no vectors to select from")
-    val seed = seedRows(0)
-    val sel = scala.collection.mutable.ArrayBuffer[(Long, Seq[Double], Double, Option[Long])](
-      (seed.getLong(0), seed.getSeq[Double](1), seed.getDouble(2), None))
-    // `md` is MATERIALIZED each round: a lazy checkpoint computed by the very
-    // next TakeOrdered probe (the kCore one-job-per-round pattern,
-    // GraphOps.kCore), so round i evaluates exactly ONE new distance per row
-    // against the newest center — least(stored md, d_new) — instead of
-    // re-deriving the whole i-term least-chain from the parquet scan up
-    // (the pre-r14 form: O(k²) distance work + k source re-reads). Each
-    // round's frame supersedes the last, so the previous round's blocks are
-    // released as soon as the new frame is materialized — resident state is
-    // ~one (id, v, nrm, md) copy of the corpus, not k of them.
-    var frame: DataFrame = p
-    var prevIds: Set[Int] = Set.empty
-    var exhausted = false
-    var i = 1
-    while (i < k && !exhausted) {
-      val (cid, cv, cn, _) = sel.last
-      val d = lit(10000L) -
-        round(cosinePrenormed(array(cv.map(lit): _*), col("v"), lit(cn), col("nrm")) * 10000)
-          .cast("long")
-      val before = sc.getPersistentRDDs.keySet.toSet
-      frame = GraftSession.checkpointed(
-        frame.where(col("id") =!= cid)
-          .withColumn("md", if (i == 1) d else least(col("md"), d)),
-        eager = false) // materialized by the argmax probe below
-      val r = frame.orderBy(col("md").desc, col("id")).limit(1)
-        .select(col("id"), col("v"), col("nrm"), col("md")).take(1)
-      val fresh = sc.getPersistentRDDs.keySet.toSet -- before
-      prevIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevIds = fresh
-      if (r.isEmpty) exhausted = true // n < k: return the selected prefix
-      else {
-        val row = r(0)
-        sel += ((row.getLong(0), row.getSeq[Double](1), row.getDouble(2), Some(row.getLong(3))))
+      .select(col("id").cast("long").as("id"), col("v"), col("nrm"), lit(null).cast("long").as("md"))
+    val rounds = Fixpoint.iterate(p, k - 1) { frame =>
+      frame.orderBy(col("md").desc, col("id")).limit(1).take(1).headOption.map(row =>
+        (row.getLong(0), row.getSeq[Double](1), row.getDouble(2),
+          if (row.isNullAt(3)) None else Some(row.getLong(3))))
+    } { (frame, selected) =>
+      selected.fold(frame) { case (cid, cv, cn, _) =>
+        val d = lit(10000L) -
+          round(cosinePrenormed(array(cv.map(lit): _*), col("v"), lit(cn), col("nrm")) * 10000)
+            .cast("long")
+        frame.where(col("id") =!= cid).withColumn("md", least(col("md"), d))
       }
-      i += 1
     }
-    prevIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    sel.toSeq
+    rounds.release()
+    require(rounds.probes.head.nonEmpty, "kCenterGreedy: empty input — no vectors to select from")
+    rounds.probes.flatten
   }
 
   /** (id, band, bucket) rows: `bands` bands of `nPlanes` hyperplane sign

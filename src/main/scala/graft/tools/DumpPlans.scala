@@ -3,6 +3,7 @@ package graft.tools
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool: write `.explain("formatted")` for named queries to files —
   * the plans/r14/<query>_{before,after}.txt evidence artifacts.
@@ -31,7 +32,7 @@ object DumpPlans {
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         println(s"[plans] wrote ${name}_$suffix.txt (${txt.length} chars)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"[plans] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
       GraftSession.releaseMaterialized(spark)

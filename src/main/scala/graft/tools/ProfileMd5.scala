@@ -3,6 +3,7 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Dev microbench: size the md5-uniform chain's cost — the
   * conv(substring(md5(s),1,8),16,10) pattern is the per-row hot path of
@@ -36,7 +37,7 @@ object ProfileMd5 {
     time("conv(substring(md5))") {
       base.select(conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long").as("u")) }
     try time("md5_u32 native") { base.select(call_function("md5_u32", col("s")).as("u")) }
-    catch { case e: Throwable => println(s"md5_u32 not registered: ${e.getMessage}") }
+    catch { case NonFatal(e) => println(s"md5_u32 not registered: ${e.getMessage}") }
     spark.stop()
   }
 }

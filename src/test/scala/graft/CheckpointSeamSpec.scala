@@ -27,12 +27,15 @@ class CheckpointSeamSpec extends SparkSpec {
     val emb = (1L to 24L).map(i =>
         (i, Seq(math.cos(i * 0.41).toFloat, math.sin(i * 0.41).toFloat)))
       .toDF("vec_id", "embedding")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L)).toDF("ida", "idb")
 
     // local-path results first (no checkpoint dir — the default)
     assert(spark.sparkContext.getCheckpointDir.isEmpty, "suite assumes no global checkpoint dir")
     val localKcore = operators.GraphOps.kCore(edges, 2)
       .as[(Long, Long)].collect().toSet
     val localPanel = operators.SimilarityOps.kCenterFit(emb, k = 5)
+    val localLabels = operators.DedupOps.connectedComponents(pairs)
+      .as[(Long, Long)].collect().toSet
 
     val dir = Files.createTempDirectory("graft-reliable-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
@@ -40,10 +43,14 @@ class CheckpointSeamSpec extends SparkSpec {
       val reliableKcore = operators.GraphOps.kCore(edges, 2)
         .as[(Long, Long)].collect().toSet
       val reliablePanel = operators.SimilarityOps.kCenterFit(emb, k = 5)
+      val reliableLabels = operators.DedupOps.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toSet
       assert(reliableKcore == localKcore,
         s"kCore diverged across checkpoint strategies: $reliableKcore vs $localKcore")
       assert(reliablePanel == localPanel,
         s"kCenterFit diverged across checkpoint strategies: $reliablePanel vs $localPanel")
+      assert(reliableLabels == localLabels,
+        s"connectedComponents diverged across checkpoint strategies: $reliableLabels vs $localLabels")
       // proof the reliable path actually ran: checkpoint files exist under
       // the configured dir (one rdd-* dir per materialized checkpoint)
       assert(rddDirsUnder(dir) > 0, s"no reliable checkpoint files were written under $dir")

@@ -629,12 +629,19 @@ class PlanQualitySpec extends SparkSpec {
       s"verify join degenerated:\n$full")
   }
 
-  test("simhash signature build has no exchange and the chunk join is an equi-join") {
+  test("simhash signature build has no keyed exchange and the chunk join is an equi-join") {
     import graft.operators.DedupOps
-    // signature: one narrow codegen'd map — no generator, no aggregate
+    // signature: one narrow codegen'd map — no generator, no aggregate. The
+    // one permitted exchange is the ROUND-ROBIN fan-out ahead of the kernel
+    // (ScaleOps.fanOut, the small-file-trap mitigation, a no-op at
+    // production scale); key-based repartitionings stay forbidden.
     val sigs = DedupOps.simhash(t.documents)
     val sigPlan = sigs.queryExecution.executedPlan.toString
-    assert(!sigPlan.contains("Exchange"), s"simhash signature build shuffles:\n$sigPlan")
+    for (bad <- Seq("hashpartitioning", "rangepartitioning", "Generate", "Aggregate"))
+      assert(!sigPlan.contains(bad), s"simhash signature build plan contains $bad:\n$sigPlan")
+    assert("Exchange".r.findAllIn(sigPlan).size ==
+      "Exchange RoundRobinPartitioning".r.findAllIn(sigPlan).size,
+      s"simhash signature build shuffles by more than the round-robin fan-out:\n$sigPlan")
     // candidate pairs: chunk-keyed equi-join, never a cross product
     val pairs = DedupOps.simhashPairs(t.documents)
     val plan = pairs.queryExecution.executedPlan.toString

@@ -18,12 +18,12 @@ class SourceAuditSpec extends AnyFunSuite {
   // file (relative to src/main/scala/graft) -> (expected site count, bound)
   private val allowed = Map(
     "operators/SimilarityOps.scala" ->
-      (6, "k-means fit sample (≤ 256·nCentroids vectors by construction); " +
+      (5, "k-means fit sample (≤ 256·nCentroids vectors by construction); " +
         "index-deletion emptied-cell list (≤ nCentroids touched cells); " +
         "drift-refit predicate (1-row max-shift scalar); " +
         "marginMine broadcast-budget crossover (1-row count+dim scalar); " +
-        "kCenterSelect seed + per-round argmax (1 bounded row × k ≤ 128 " +
-        "rounds — the selected set IS the model)"),
+        "kCenterSelect per-round argmax, the seed's round included (1 bounded " +
+        "row × k ≤ 128 rounds — the selected set IS the model)"),
     "operators/DedupOps.scala" ->
       (1, "1-row decimal checksum driving the label-propagation fixpoint"),
     "operators/QuantileOps.scala" ->
@@ -34,10 +34,7 @@ class SourceAuditSpec extends AnyFunSuite {
       (1, "dev-only plan-dump utility, never on the query path"),
     "tools/ProfileKeyword.scala" ->
       (2, "dev-only profiler: two 1-row scalar aggregates (sum of hit counts) " +
-        "read for timing printouts, never on the query path"),
-    "tools/ProfileKCenter.scala" ->
-      (1, "dev-only profiler: collects the k-row (k ≤ 128) panel for timing " +
-        "printouts, never on the query path")
+        "read for timing printouts, never on the query path")
   )
 
   test("driver-side materialization only at allowlisted bounded-metadata sites") {
