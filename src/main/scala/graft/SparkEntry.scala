@@ -62,7 +62,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Execution contract: queries are run SEQUENTIALLY within a session
-    * (Verify, Bench, JobCount all iterate one at a time). A few entries
+    * (Verify, Bench, DumpPlans all iterate one at a time). A few entries
     * scope a session conf around their own eager materialization
     * (q_graph_reach raises `spark.sql.cteRecursionRowLimit` in a
     * set/try/finally) — safe under sequential execution, but a harness that

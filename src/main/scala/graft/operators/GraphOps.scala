@@ -221,7 +221,7 @@ object GraphOps {
       // within whichever downstream job touches it first), but the barrier
       // no longer costs its own job — the triangle/clustering queries run
       // 2-3 eager-checkpoint jobs fewer per call, which at bench scale is
-      // pure scheduling latency removed (r15 JobCount audit).
+      // pure scheduling latency removed (r15 job-count audit).
       .ckpt(false)
 
   /** Triangle counting over an ALREADY-canonical, already-materialized

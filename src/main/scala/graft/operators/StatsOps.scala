@@ -562,7 +562,7 @@ object StatsOps {
     * whole-stage codegen, while the exploded plan keeps one narrow
     * codegen'd weight expression per row. (A count()-based A/B picks the
     * WRONG winner here — ColumnPruning deletes the unused agg columns;
-    * tools/ProfileBootstrap evaluates with a noop write for this reason.)
+    * the A/B was measured with a noop write for this reason.)
     * Kept private as the measured alternative and bitwise-parity anchor
     * (AnalyticsOpsSpec "bootstrap forms agree"). */
   private[graft] def bootstrapCiColumnar(df: DataFrame, keyCol: Column, valCol: Column,

@@ -226,7 +226,7 @@ case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInpu
   * allocation inside commons-codec's md5Hex). This expression digests the
   * input bytes once into a thread-local MessageDigest and assembles the
   * long from the first 4 digest bytes — same value, zero string
-  * intermediates (measured ~2× on the chain: tools/ProfileMd5).
+  * intermediates (measured ~2× on the chain).
   * Equivalence is pinned in ScalaTest (NativeExprSpec) and every consumer
   * stays oracle-checked against the hex-based DuckDB SQL. */
 case class Md5U32(child: Expression) extends UnaryExpression with ExpectsInputTypes {

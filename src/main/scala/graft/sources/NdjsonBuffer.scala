@@ -37,16 +37,6 @@ final class NdjsonBuffer(maxLineBytes: Int = NdjsonBuffer.DefaultMaxLineBytes) {
   require(maxLineBytes > 0, s"maxLineBytes must be positive, got $maxLineBytes")
   private var carry: Array[Byte] = Array.emptyByteArray
   private var discarding = false // inside an oversized record's tail
-  private val mapper = new ObjectMapper()
-
-  private def isValidJson(s: String): Boolean =
-    try {
-      val p = mapper.createParser(s)
-      p.readValueAsTree()
-      // a truncated head like `:"0"}` or `"a":"0"}` starts with a valid
-      // token — require the parser to consume the whole line
-      p.nextToken() == null
-    } catch { case _: Exception => false }
 
   /** Feed one raw byte chunk (the first `len` bytes); returns the complete,
     * valid JSON lines it completed. */
@@ -62,7 +52,7 @@ final class NdjsonBuffer(maxLineBytes: Int = NdjsonBuffer.DefaultMaxLineBytes) {
         if (discarding) discarding = false // oversized record's tail — drop
         else {
           val line = new String(buf, start, i - start, StandardCharsets.UTF_8).trim
-          if (line.nonEmpty && isValidJson(line)) out += line
+          if (line.nonEmpty && NdjsonBuffer.isValidJson(line)) out += line
         }
         start = i + 1
       }
@@ -94,4 +84,17 @@ object NdjsonBuffer {
   /** Generous for webhook-sized JSON frames while still bounding a
     * newline-less stream to one buffer's worth of memory. */
   val DefaultMaxLineBytes: Int = 16 << 20 // 16 MiB
+
+  private val mapper = new ObjectMapper()
+
+  /** One whole JSON value and nothing after it — the line-level contract
+    * both the live stream and batch replay keep. */
+  def isValidJson(s: String): Boolean =
+    try {
+      val p = mapper.createParser(s)
+      p.readValueAsTree()
+      // a truncated head like `:"0"}` or `"a":"0"}` starts with a valid
+      // token — require the parser to consume the whole line
+      p.nextToken() == null
+    } catch { case _: Exception => false }
 }

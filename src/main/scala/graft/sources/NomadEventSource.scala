@@ -92,9 +92,11 @@ private[sources] case class NomadOffset(lineCount: Long) extends Offset {
 private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
     maxLinesPerBatch: Long = Long.MaxValue) extends MicroBatchStream {
 
-  // (absolute line index, raw json line); trimmed on commit().
-  private val buffer = ArrayBuffer.empty[(Long, String)]
-  private var nextLine = 0L
+  // raw json lines; buffer(i) is absolute line `base + i`. commit() drops
+  // a prefix and advances `base`.
+  private val buffer = ArrayBuffer.empty[String]
+  private var base = 0L
+  private def nextLine = base + buffer.length
   private var lastPlannedEnd = 0L
   private val stopped = new AtomicBoolean(false)
   @volatile private var pollerFailure: Option[Throwable] = None
@@ -113,9 +115,7 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
           // bytes, not text: a multi-byte UTF-8 char split across reads must
           // survive the chunk boundary (NdjsonBuffer carries raw bytes)
           val lines = ndjson.feedBytes(chunk, n)
-          buffer.synchronized {
-            lines.foreach { l => buffer += ((nextLine, l)); nextLine += 1 }
-          }
+          buffer.synchronized { buffer ++= lines }
         }
       }
     } catch {
@@ -134,16 +134,14 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
     * numbering starts at 0 per connection (the HTTP stream cannot rewind —
     * like Spark's socket source, in-flight lines of the failed batch are
     * lost). Seeing a checkpointed offset ahead of our numbering means we are
-    * recovering: renumber fresh lines to CONTINUE the checkpointed count, so
-    * `latestOffset` never regresses and `commit(checkpointedEnd)` can never
-    * trim fresh, undelivered lines. */
+    * recovering: shift the numbering so fresh lines CONTINUE the checkpointed
+    * count, so `latestOffset` never regresses and `commit(checkpointedEnd)`
+    * can never trim fresh, undelivered lines. */
   override def deserializeOffset(json: String): Offset = {
     val off = json.toLong
     buffer.synchronized {
       if (off > nextLine) {
-        val delta = off - nextLine
-        for (i <- buffer.indices) buffer(i) = (buffer(i)._1 + delta, buffer(i)._2)
-        nextLine = off
+        base += off - nextLine
         lastPlannedEnd = math.max(lastPlannedEnd, off)
       }
     }
@@ -170,28 +168,34 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[NomadOffset].lineCount
     val e = end.asInstanceOf[NomadOffset].lineCount
-    buffer.synchronized { lastPlannedEnd = math.max(lastPlannedEnd, e) }
-    val rows = buffer.synchronized {
-      buffer.filter { case (i, _) => i >= s && i < e }.toArray
+    buffer.synchronized {
+      lastPlannedEnd = math.max(lastPlannedEnd, e)
+      val from = math.max(s, base)
+      val until = math.max(from, math.min(e, nextLine))
+      Array(NomadInputPartition(from,
+        buffer.slice((from - base).toInt, (until - base).toInt).toArray))
     }
-    Array(NomadInputPartition(rows))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => {
-      val rows = partition.asInstanceOf[NomadInputPartition].rows
+      val p = partition.asInstanceOf[NomadInputPartition]
       new PartitionReader[InternalRow] {
         private var i = -1
-        override def next(): Boolean = { i += 1; i < rows.length }
+        override def next(): Boolean = { i += 1; i < p.lines.length }
         override def get(): InternalRow =
-          InternalRow(rows(i)._1, UTF8String.fromString(rows(i)._2))
+          InternalRow(p.first + i, UTF8String.fromString(p.lines(i)))
         override def close(): Unit = ()
       }
     }
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[NomadOffset].lineCount
-    buffer.synchronized { buffer.filterInPlace { case (i, _) => i >= e } }
+    buffer.synchronized {
+      val n = math.min(math.max(e - base, 0L), buffer.length.toLong).toInt
+      buffer.remove(0, n)
+      base += n
+    }
   }
 
   override def stop(): Unit = {
@@ -200,4 +204,6 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
   }
 }
 
-private[sources] case class NomadInputPartition(rows: Array[(Long, String)]) extends InputPartition
+/** Lines `first`, `first + 1`, … of one micro-batch. */
+private[sources] case class NomadInputPartition(first: Long, lines: Array[String])
+  extends InputPartition

@@ -60,8 +60,10 @@ class AnomalyProcessor(minPrior: Int, threshold: Double, ttl: TTLConfig)
 object AnomalyProcessor {
 
   /** Score a metric stream. `ttl` None = keep per-key statistics forever;
-    * Some(d) = evict idle keys (TTL requires `TimeMode.ProcessingTime`, as
-    * with [[WatermarkDedupProcessor.dedup]]). */
+    * Some(d) = evict idle keys. TTL state requires `TimeMode.ProcessingTime`
+    * (Spark rejects TTL variables under `TimeMode.None` with
+    * StatefulProcessorCannotAssignTTLInTimeMode), so the time mode follows
+    * the ttl choice. */
   def score(points: Dataset[MetricPoint], minPrior: Int = 5,
             threshold: Double = 2.5,
             ttl: Option[java.time.Duration] = None): Dataset[ScoredPoint] = {

@@ -62,8 +62,9 @@ class HeavyHittersProcessor(capacity: Int, ttl: TTLConfig)
 
 object HeavyHittersProcessor {
 
-  /** Track approximate heavy hitters per key. `ttl` as in
-    * [[WatermarkDedupProcessor.dedup]] (Some ⇒ ProcessingTime mode). */
+  /** Track approximate heavy hitters per key. `ttl` None = keep per-key
+    * counters forever; Some(d) = evict idle keys (Some ⇒ ProcessingTime
+    * mode, as in [[AnomalyProcessor.score]]). */
   def track(events: Dataset[ItemEvent], capacity: Int = 8,
             ttl: Option[java.time.Duration] = None): Dataset[HeavyHitter] = {
     require(capacity > 0, s"capacity must be positive, got $capacity")

@@ -29,7 +29,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ids that stop emitting forever once their allocation dies. With a TTL,
   * a key whose state has seen no events for the duration is dropped from
   * the state store (processing-time timeout, the same eviction contract as
-  * [[WatermarkDedupProcessor]]); if the key later re-appears its watermark
+  * the `ttl` of the transformWithState processors, e.g.
+  * [[AnomalyProcessor]]); if the key later re-appears its watermark
   * RE-SEEDS to `initialWatermarkNs`, so a post-eviction replay of old
   * events can pass — the explicit trade of the bounded-state mode. Default
   * `None` preserves reference semantics exactly.

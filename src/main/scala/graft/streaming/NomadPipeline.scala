@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.NomadEventOps._
+import graft.sources.NdjsonBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,10 +119,14 @@ object NomadPipeline {
 
   /** Batch replay of captured NDJSON stream files (the reference ships such
     * a capture as a fixture, reference spec/fixtures/nomad/stream_a_1.txt):
-    * read as text lines, then the same decode path — truncated or malformed
-    * lines drop exactly as they do on the live stream. */
-  def readNdjsonFiles(spark: SparkSession, path: String): DataFrame =
-    decode(spark.read.text(path).withColumnRenamed("value", "value"))
+    * read as text lines, keep the ones the live stream keeps
+    * ([[NdjsonBuffer.isValidJson]] — `from_json` alone would accept a line
+    * with trailing text after its first JSON value), then the same decode
+    * path. */
+  def readNdjsonFiles(spark: SparkSession, path: String): DataFrame = {
+    val wholeJsonValue = udf(NdjsonBuffer.isValidJson _)
+    decode(spark.read.text(path).where(wholeJsonValue(col("value"))))
+  }
 
   /** Full streaming query: raw-line stream → deduped, classified
     * notifications. Stateful dedup keyed by task identifier with the

@@ -1,9 +1,8 @@
 package graft.streaming
 
-/** The pure core of ST1's frame-snapshot dedup, shared by both stateful
-  * implementations ([[HighWatermarkDedup]] on flatMapGroupsWithState,
-  * [[WatermarkDedupProcessor]] on transformWithState) and property-tested in
-  * isolation (reference app.rb:163-167, 270-273).
+/** The pure core of ST1's frame-snapshot dedup: [[HighWatermarkDedup]]
+  * runs it per key inside flatMapGroupsWithState, and it is property-tested
+  * in isolation (reference app.rb:163-167, 270-273).
   */
 object WatermarkLogic {
 

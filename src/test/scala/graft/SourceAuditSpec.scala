@@ -29,12 +29,7 @@ class SourceAuditSpec extends AnyFunSuite {
     "operators/QuantileOps.scala" ->
       (2, "distributed selection metadata: (partitions × groups) count rows, " +
         "then ≤ 2·quantiles boundary rows per group — both output-sized, " +
-        "never data-sized (the result itself is one row per group)"),
-    "tools/DiagPlan.scala" ->
-      (1, "dev-only plan-dump utility, never on the query path"),
-    "tools/ProfileKeyword.scala" ->
-      (2, "dev-only profiler: two 1-row scalar aggregates (sum of hit counts) " +
-        "read for timing printouts, never on the query path")
+        "never data-sized (the result itself is one row per group)")
   )
 
   test("driver-side materialization only at allowlisted bounded-metadata sites") {
@@ -65,5 +60,15 @@ class SourceAuditSpec extends AnyFunSuite {
 
     val stale = allowed.keySet.filterNot(found.contains)
     assert(stale.isEmpty, s"stale allowlist entries: ${stale.mkString(", ")}")
+  }
+
+  test("entrypoints: Bench, Verify and tools.DumpPlans are the only mains") {
+    // One dev entrypoint: a new profiling need extends DumpPlans instead of
+    // growing another main with its own session setup.
+    val mains = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        """\bdef main\(""".r.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toSeq.sorted
+    assert(mains == Seq("Bench.scala", "Verify.scala", "tools/DumpPlans.scala"))
   }
 }

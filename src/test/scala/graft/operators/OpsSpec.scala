@@ -1114,7 +1114,9 @@ class OpsSpec extends SparkSpec {
     java.nio.file.Files.writeString(f,
       "\"FailedSibling\":\"\",\"Time\":123}\n" +           // truncated head, dropped
       "{}\n" +                                             // heartbeat
-      "{\"Index\":7,\"Events\":[]}\n")                     // data frame
+      "{\"Index\":7,\"Events\":[]}\n" +                    // data frame
+      "{\"Index\":8,\"Events\":[]}{\"Index\":9}\n" +       // two values, dropped
+      "{\"Index\":10,\"Events\":[]} x\n")                  // trailing text, dropped
     val frames = NomadPipeline.readNdjsonFiles(spark, f.toString)
     assert(frames.count() == 2)
     assert(NomadPipeline.heartbeats(frames).count() == 1)

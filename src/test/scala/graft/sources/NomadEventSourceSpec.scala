@@ -140,13 +140,13 @@ class NomadEventSourceSpec extends SparkSpec {
         assert(latest == 102L, s"latestOffset must continue past the restart offset, got $latest")
         // the replayed in-flight batch matches nothing (stream cannot rewind)
         assert(stream.planInputPartitions(NomadOffset(98), NomadOffset(100))
-          .head.asInstanceOf[NomadInputPartition].rows.isEmpty)
+          .head.asInstanceOf[NomadInputPartition].lines.isEmpty)
         // committing the checkpointed end must NOT trim the fresh lines
         stream.commit(NomadOffset(100))
-        val rows = stream.planInputPartitions(NomadOffset(100), NomadOffset(102))
-          .head.asInstanceOf[NomadInputPartition].rows
-        assert(rows.map(_._1).toSeq == Seq(100L, 101L))
-        assert(rows.map(_._2).toSeq == frames)
+        val p = stream.planInputPartitions(NomadOffset(100), NomadOffset(102))
+          .head.asInstanceOf[NomadInputPartition]
+        assert((p.first until p.first + p.lines.length) == Seq(100L, 101L))
+        assert(p.lines.toSeq == frames)
       } finally stream.stop()
     }
   }

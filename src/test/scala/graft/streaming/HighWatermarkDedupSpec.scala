@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-case class Te(task_identifier: String, event_time: Long, payload: String)
+case class Te(task_identifier: String, event_time: Long, payload: String,
+    frame_index: Long = 0L)
 
 /** ST1 semantics under real micro-batches (SURVEY §7.4.2): the watermark is
   * compared as a batch-start snapshot, so equal-timestamp duplicates inside
@@ -14,9 +15,9 @@ case class Te(task_identifier: String, event_time: Long, payload: String)
 class HighWatermarkDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def runBatches(init: Long, batches: Seq[Te]*): Seq[Seq[(String, Long)]] = {
+  private def runBatches(dedup: HighWatermarkDedup, batches: Seq[Te]*): Seq[Seq[(String, Long)]] = {
     val input = MemoryStream[Te](spark)
-    val deduped = HighWatermarkDedup(init).apply(spark, input.toDF())
+    val deduped = dedup.apply(spark, input.toDF())
     val dir = java.nio.file.Files.createTempDirectory("dedup-test").toString
     val query = deduped.writeStream
       .format("memory").queryName(s"dedup_out_${System.nanoTime()}")
@@ -34,7 +35,7 @@ class HighWatermarkDedupSpec extends SparkSpec {
   }
 
   test("intra-batch equal-timestamp duplicates all pass; stale events drop") {
-    val Seq(after1, after2, after3) = runBatches(100L,
+    val Seq(after1, after2, after3) = runBatches(HighWatermarkDedup(100L),
       // batch 1: two equal timestamps above the seed watermark — both pass
       Seq(Te("a", 200L, "x"), Te("a", 200L, "y"), Te("a", 50L, "stale")),
       // batch 2: 200 is now <= watermark → dropped; 300 passes
@@ -46,8 +47,21 @@ class HighWatermarkDedupSpec extends SparkSpec {
     assert(after3 == after2)
   }
 
+  test("frameCol: a duplicate re-sent in a later frame of the same batch drops") {
+    val Seq(after1, after2) = runBatches(
+      HighWatermarkDedup(100L, frameCol = Some("frame_index")),
+      // one batch, two frames: equal timestamps within frame 1 both pass;
+      // 200 re-sent in frame 2 is dropped against frame 1's watermark
+      Seq(Te("a", 200L, "x", 1L), Te("a", 200L, "y", 1L), Te("a", 50L, "stale", 1L),
+        Te("a", 200L, "dup", 2L), Te("a", 300L, "new", 2L)),
+      // next batch: the watermark carried over is 300
+      Seq(Te("a", 300L, "old", 3L), Te("a", 400L, "ok", 3L)))
+    assert(after1 == Seq(("a", 200L), ("a", 200L), ("a", 300L)))
+    assert(after2 == after1 :+ (("a", 400L)))
+  }
+
   test("keys are independent; seed watermark applies per key") {
-    val Seq(out) = runBatches(1000L,
+    val Seq(out) = runBatches(HighWatermarkDedup(1000L),
       Seq(Te("a", 1500L, "x"), Te("b", 500L, "old-key-b"), Te("b", 2000L, "new-key-b")))
     assert(out == Seq(("a", 1500L), ("b", 2000L)))
   }
@@ -85,7 +99,7 @@ class HighWatermarkDedupSpec extends SparkSpec {
     val batch = graft.operators.NomadEventOps
       .dedupHighWatermark(rows.toDF(), col("task_identifier"), col("event_time"))
       .select("event_time").as[Long].collect().toSeq.sorted
-    val Seq(streaming) = runBatches(5L, rows)
+    val Seq(streaming) = runBatches(HighWatermarkDedup(5L), rows)
     assert(batch == Seq(10L, 20L, 20L))
     assert(streaming.map(_._2).sorted == Seq(10L, 20L, 20L))
   }
