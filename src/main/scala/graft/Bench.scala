@@ -22,13 +22,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.mainCpus
+    val spark = GraftSession.forMain()
     // Untimed warmup: absorb JVM/codegen/parquet-footer initialisation so the
     // first timed query isn't charged for it.
     SparkEntry.queries.get("q_initial_offset").foreach { fn =>
@@ -51,7 +46,7 @@ object Bench {
     }
     // Optional comma-separated filter for targeted re-measurement while
     // iterating on one query (dev loop; the driver never sets it).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = GraftSession.onlyQueries()
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val starts = scala.collection.mutable.LinkedHashMap.empty[String, Double]

@@ -106,6 +106,27 @@ object GraftSession {
     def ckpt(eager: Boolean): Dataset[T] = checkpointed(ds, eager)
   }
 
+  /** The entrypoints' core count: `SPARK_GRAFT_CPUS`, default 4. */
+  def mainCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The entrypoints' session (Bench, Verify, tools.DumpPlans):
+    * `local[mainCpus]` with as many shuffle partitions, no UI, WARN logs. */
+  def forMain(): SparkSession = {
+    val s = configure(SparkSession.builder()
+      .master(s"local[$mainCpus]")
+      .config("spark.sql.shuffle.partitions", mainCpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** The entrypoints' query subset from `SPARK_GRAFT_ONLY`: comma-separated
+    * names, blanks trimmed and empty entries dropped; None (unset) = every
+    * query. */
+  def onlyQueries(env: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Option[Set[String]] =
+    env.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   /** Local session for tests / ad-hoc runs. */
   def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(

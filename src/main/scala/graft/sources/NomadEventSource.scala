@@ -78,9 +78,7 @@ private class NomadEventTable(options: CaseInsensitiveStringMap)
             NomadConfig(
               baseUrl = options.get("baseUrl"),
               namespace = Option(options.get("namespace")),
-              token = Option(options.get("token"))),
-            maxLinesPerBatch =
-              Option(options.get("maxLinesPerBatch")).map(_.toLong).getOrElse(Long.MaxValue))
+              token = Option(options.get("token"))))
       }
     }
 }
@@ -89,15 +87,13 @@ private[sources] case class NomadOffset(lineCount: Long) extends Offset {
   override def json(): String = lineCount.toString
 }
 
-private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
-    maxLinesPerBatch: Long = Long.MaxValue) extends MicroBatchStream {
+private[sources] class NomadMicroBatchStream(cfg: NomadConfig) extends MicroBatchStream {
 
   // raw json lines; buffer(i) is absolute line `base + i`. commit() drops
   // a prefix and advances `base`.
   private val buffer = ArrayBuffer.empty[String]
   private var base = 0L
   private def nextLine = base + buffer.length
-  private var lastPlannedEnd = 0L
   private val stopped = new AtomicBoolean(false)
   @volatile private var pollerFailure: Option[Throwable] = None
 
@@ -139,37 +135,22 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig,
     * can never trim fresh, undelivered lines. */
   override def deserializeOffset(json: String): Offset = {
     val off = json.toLong
-    buffer.synchronized {
-      if (off > nextLine) {
-        base += off - nextLine
-        lastPlannedEnd = math.max(lastPlannedEnd, off)
-      }
-    }
+    buffer.synchronized { if (off > nextLine) base += off - nextLine }
     NomadOffset(off)
   }
 
-  /** Admission control: each micro-batch admits at most `maxLinesPerBatch`
-    * lines past the previous planned end, bounding batch size (and state/
-    * sink pressure) during catch-up after a stall. */
+  /** Every buffered line: a micro-batch takes all that arrived since the
+    * previous one. */
   override def latestOffset(): Offset = {
     pollerFailure.foreach(e =>
       throw new IllegalStateException("nomad event stream poller failed", e))
-    buffer.synchronized {
-      // guard the uncapped default against Long overflow
-      val limit =
-        if (maxLinesPerBatch > Long.MaxValue - lastPlannedEnd) Long.MaxValue
-        else lastPlannedEnd + maxLinesPerBatch
-      val capped = math.min(nextLine, limit)
-      lastPlannedEnd = math.max(lastPlannedEnd, capped)
-      NomadOffset(capped)
-    }
+    buffer.synchronized { NomadOffset(nextLine) }
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[NomadOffset].lineCount
     val e = end.asInstanceOf[NomadOffset].lineCount
     buffer.synchronized {
-      lastPlannedEnd = math.max(lastPlannedEnd, e)
       val from = math.max(s, base)
       val until = math.max(from, math.min(e, nextLine))
       Array(NomadInputPartition(from,

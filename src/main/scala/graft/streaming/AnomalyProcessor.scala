@@ -22,21 +22,20 @@ case class ScoredPoint(key: String, seq: Long, value: Double,
   * size is 24 bytes × keys regardless of stream length. That constant-state
   * shape is what survives 100 TB streams; a sliding-window variant would
   * buffer `lookback` values per key. Welford's update is numerically stable
-  * (no catastrophic sum-of-squares cancellation). TTL evicts keys that stop
-  * emitting, bounding key cardinality in the state store.
+  * (no catastrophic sum-of-squares cancellation).
   *
   * Within a micro-batch, a key's rows are processed in `seq` order so
   * replayed batches score identically (exactly-once state + deterministic
   * emission ⇒ idempotent downstream writes).
   */
-class AnomalyProcessor(minPrior: Int, threshold: Double, ttl: TTLConfig)
+class AnomalyProcessor(minPrior: Int, threshold: Double)
     extends StatefulProcessor[String, MetricPoint, ScoredPoint] {
 
   @transient private var stats: ValueState[(Long, Double, Double)] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     stats = getHandle.getValueState[(Long, Double, Double)](
-      "welford", Encoders.product[(Long, Double, Double)], ttl)
+      "welford", Encoders.product[(Long, Double, Double)], TTLConfig.NONE)
 
   override def handleInputRows(key: String, rows: Iterator[MetricPoint],
                                timerValues: TimerValues): Iterator[ScoredPoint] = {
@@ -59,21 +58,15 @@ class AnomalyProcessor(minPrior: Int, threshold: Double, ttl: TTLConfig)
 
 object AnomalyProcessor {
 
-  /** Score a metric stream. `ttl` None = keep per-key statistics forever;
-    * Some(d) = evict idle keys. TTL state requires `TimeMode.ProcessingTime`
-    * (Spark rejects TTL variables under `TimeMode.None` with
-    * StatefulProcessorCannotAssignTTLInTimeMode), so the time mode follows
-    * the ttl choice. */
+  /** Score a metric stream; per-key statistics live for the life of the
+    * query. */
   def score(points: Dataset[MetricPoint], minPrior: Int = 5,
-            threshold: Double = 2.5,
-            ttl: Option[java.time.Duration] = None): Dataset[ScoredPoint] = {
-    val cfg = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+            threshold: Double = 2.5): Dataset[ScoredPoint] = {
     implicit val enc = Encoders.product[ScoredPoint]
     points
       .groupByKey(_.key)(Encoders.STRING)
       .transformWithState(
-        new AnomalyProcessor(minPrior, threshold, cfg),
-        timeMode, OutputMode.Append())
+        new AnomalyProcessor(minPrior, threshold),
+        TimeMode.None(), OutputMode.Append())
   }
 }

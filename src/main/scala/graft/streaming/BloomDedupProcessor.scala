@@ -31,7 +31,7 @@ case class FreshItem(key: String, seq: Long, item: Long)
   * Rows are processed in `seq` order within a batch (sorted locally), so
   * in-batch duplicates resolve to the first occurrence deterministically.
   */
-class BloomDedupProcessor(numBits: Int, ttl: TTLConfig)
+class BloomDedupProcessor(numBits: Int)
     extends StatefulProcessor[String, SeenItem, FreshItem] {
   require(numBits > 0 && numBits % 64 == 0,
     s"numBits must be a positive multiple of 64, got $numBits")
@@ -42,7 +42,7 @@ class BloomDedupProcessor(numBits: Int, ttl: TTLConfig)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     bits = getHandle.getValueState[Array[Long]](
-      "bloom", Encoders.kryo[Array[Long]], ttl)
+      "bloom", Encoders.kryo[Array[Long]], TTLConfig.NONE)
 
   override def handleInputRows(key: String, rows: Iterator[SeenItem],
                                timerValues: TimerValues): Iterator[FreshItem] = {
@@ -67,15 +67,12 @@ class BloomDedupProcessor(numBits: Int, ttl: TTLConfig)
 
 object BloomDedupProcessor {
   /** First-occurrence filter over a keyed item stream, O(m) state per key. */
-  def distinctItems(events: Dataset[SeenItem], numBits: Int = 1 << 16,
-                    ttl: Option[java.time.Duration] = None): Dataset[FreshItem] = {
-    val cfg = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+  def distinctItems(events: Dataset[SeenItem], numBits: Int = 1 << 16): Dataset[FreshItem] = {
     implicit val enc = Encoders.product[FreshItem]
     events
       .groupByKey(_.key)(Encoders.STRING)
       .transformWithState(
-        new BloomDedupProcessor(numBits, cfg),
-        timeMode, OutputMode.Append())
+        new BloomDedupProcessor(numBits),
+        TimeMode.None(), OutputMode.Append())
   }
 }

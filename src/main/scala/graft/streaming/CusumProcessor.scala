@@ -14,17 +14,17 @@ case class CusumPoint(key: String, seq: Long, n_obs: Long, cusum: Double,
   * left-associated arithmetic as the batch fold step, so after any prefix
   * the streamed score is BITWISE the batch fold of that prefix — pinned in
   * the spec. Rows within a micro-batch process in `seq` order (idempotent
-  * replays); TTL evicts idle keys. This is the live-ingest shape of the
-  * batch op: alert on sustained feature drift before a corpus snapshot is
-  * cut, then reset or re-baseline out-of-band. */
-class CusumProcessor(target: Double, slack: Double, h: Double, ttl: TTLConfig)
+  * replays). This is the live-ingest shape of the batch op: alert on
+  * sustained feature drift before a corpus snapshot is cut, then reset or
+  * re-baseline out-of-band. */
+class CusumProcessor(target: Double, slack: Double, h: Double)
     extends StatefulProcessor[String, SeriesPoint, CusumPoint] {
 
   @transient private var state: ValueState[(Long, Double)] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     state = getHandle.getValueState[(Long, Double)](
-      "cusum", Encoders.product[(Long, Double)], ttl)
+      "cusum", Encoders.product[(Long, Double)], TTLConfig.NONE)
 
   override def handleInputRows(key: String, rows: Iterator[SeriesPoint],
                                timerValues: TimerValues): Iterator[CusumPoint] = {
@@ -41,17 +41,14 @@ class CusumProcessor(target: Double, slack: Double, h: Double, ttl: TTLConfig)
 
 object CusumProcessor {
 
-  /** Monitor a series stream. `ttl` None = keep per-key state forever;
-    * Some(d) = evict idle keys (TTL requires `TimeMode.ProcessingTime`). */
+  /** Monitor a series stream; per-key state lives for the life of the
+    * query. */
   def monitor(points: Dataset[SeriesPoint], target: Double,
-              slack: Double = 0.25, h: Double = 100.0,
-              ttl: Option[java.time.Duration] = None): Dataset[CusumPoint] = {
-    val cfg = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+              slack: Double = 0.25, h: Double = 100.0): Dataset[CusumPoint] = {
     implicit val enc = Encoders.product[CusumPoint]
     points
       .groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new CusumProcessor(target, slack, h, cfg),
-        timeMode, OutputMode.Append())
+      .transformWithState(new CusumProcessor(target, slack, h),
+        TimeMode.None(), OutputMode.Append())
   }
 }

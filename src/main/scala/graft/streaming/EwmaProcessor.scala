@@ -19,16 +19,15 @@ case class EwmaPoint(key: String, seq: Long, n_obs: Long, ewma: Double)
   * step is the same exact FP scaling as the batch fold step, so after any
   * prefix the streaming value is BITWISE the batch fold of that prefix —
   * the parity the spec pins. Rows within a micro-batch are processed in
-  * `seq` order, so replayed batches emit identically (idempotent sinks).
-  * TTL evicts keys that stop emitting. */
-class EwmaProcessor(alpha: Double, ttl: TTLConfig)
+  * `seq` order, so replayed batches emit identically (idempotent sinks). */
+class EwmaProcessor(alpha: Double)
     extends StatefulProcessor[String, SeriesPoint, EwmaPoint] {
 
   @transient private var state: ValueState[(Long, Double)] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     state = getHandle.getValueState[(Long, Double)](
-      "ewma", Encoders.product[(Long, Double)], ttl)
+      "ewma", Encoders.product[(Long, Double)], TTLConfig.NONE)
 
   override def handleInputRows(key: String, rows: Iterator[SeriesPoint],
                                timerValues: TimerValues): Iterator[EwmaPoint] = {
@@ -45,16 +44,13 @@ class EwmaProcessor(alpha: Double, ttl: TTLConfig)
 
 object EwmaProcessor {
 
-  /** Smooth a series stream. `ttl` None = keep per-key state forever;
-    * Some(d) = evict idle keys (TTL requires `TimeMode.ProcessingTime`). */
-  def smooth(points: Dataset[SeriesPoint], alpha: Double = 0.5,
-             ttl: Option[java.time.Duration] = None): Dataset[EwmaPoint] = {
+  /** Smooth a series stream; per-key state lives for the life of the
+    * query. */
+  def smooth(points: Dataset[SeriesPoint], alpha: Double = 0.5): Dataset[EwmaPoint] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1]; got $alpha")
-    val cfg = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
     implicit val enc = Encoders.product[EwmaPoint]
     points
       .groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new EwmaProcessor(alpha, cfg), timeMode, OutputMode.Append())
+      .transformWithState(new EwmaProcessor(alpha), TimeMode.None(), OutputMode.Append())
   }
 }

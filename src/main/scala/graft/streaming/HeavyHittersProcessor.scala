@@ -27,14 +27,14 @@ case class HeavyHitter(key: String, as_of_seq: Long, item: String, est: Long)
   * key's full tracked snapshot tagged with the batch's max `seq`, so
   * downstream consumers read the latest `as_of_seq` per key.
   */
-class HeavyHittersProcessor(capacity: Int, ttl: TTLConfig)
+class HeavyHittersProcessor(capacity: Int)
     extends StatefulProcessor[String, ItemEvent, HeavyHitter] {
 
   @transient private var counters: MapState[String, Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     counters = getHandle.getMapState[String, Long](
-      "mg", Encoders.STRING, Encoders.scalaLong, ttl)
+      "mg", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
 
   override def handleInputRows(key: String, rows: Iterator[ItemEvent],
                                timerValues: TimerValues): Iterator[HeavyHitter] = {
@@ -62,19 +62,15 @@ class HeavyHittersProcessor(capacity: Int, ttl: TTLConfig)
 
 object HeavyHittersProcessor {
 
-  /** Track approximate heavy hitters per key. `ttl` None = keep per-key
-    * counters forever; Some(d) = evict idle keys (Some ⇒ ProcessingTime
-    * mode, as in [[AnomalyProcessor.score]]). */
-  def track(events: Dataset[ItemEvent], capacity: Int = 8,
-            ttl: Option[java.time.Duration] = None): Dataset[HeavyHitter] = {
+  /** Track approximate heavy hitters per key; per-key counters live for
+    * the life of the query. */
+  def track(events: Dataset[ItemEvent], capacity: Int = 8): Dataset[HeavyHitter] = {
     require(capacity > 0, s"capacity must be positive, got $capacity")
-    val cfg = ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
     implicit val enc = Encoders.product[HeavyHitter]
     events
       .groupByKey(_.key)(Encoders.STRING)
       .transformWithState(
-        new HeavyHittersProcessor(capacity, cfg),
-        timeMode, OutputMode.Append())
+        new HeavyHittersProcessor(capacity),
+        TimeMode.None(), OutputMode.Append())
   }
 }

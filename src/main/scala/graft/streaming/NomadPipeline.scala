@@ -16,15 +16,19 @@ import org.apache.spark.sql.functions._
   * Every stage is a built-in expression, so in streaming mode the whole chain
   * (minus the stateful dedup) is a single stateless whole-stage-codegen span
   * between the source and `flatMapGroupsWithState`.
+  *
+  * The proxy anti-filter pattern and the namespace that task identifiers
+  * omit are the reference's constants (app.rb:139-144), not settings.
   */
 final case class PipelineConfig(
     startingIndex: Long,
     denylist: Seq[String] = Nil,
-    allowlist: Seq[String] = Nil,
-    taskNameAntiPattern: String = "connect-proxy",
-    defaultNamespace: String = "default")
+    allowlist: Seq[String] = Nil)
 
 object NomadPipeline {
+
+  private val TaskNameAntiPattern = "connect-proxy"
+  private val DefaultNamespace = "default"
 
   /** Boot sequence (app.rb:63-70): discover the starting index from the
     * agent's raft stats; the reference exits with an operator hint when the
@@ -72,9 +76,9 @@ object NomadPipeline {
       .where(col("task_states").isNotNull)                       // F4 null guard
       .select(col("frame_index"), col("namespace"), col("node_name"), col("job_id"),
         explode(col("task_states")).as(Seq("task_id", "task_state")))
-      .transform(df => regexAntiFilter(df, col("task_id"), cfg.taskNameAntiPattern))
+      .transform(df => regexAntiFilter(df, col("task_id"), TaskNameAntiPattern))
       .withColumn("task_identifier",
-        taskIdentifier(col("namespace"), cfg.defaultNamespace, col("job_id"), col("task_id")))
+        taskIdentifier(col("namespace"), DefaultNamespace, col("job_id"), col("task_id")))
       .select(col("frame_index"), col("namespace"), col("node_name"), col("job_id"),
         col("task_id"), col("task_identifier"),
         explode(col("task_state.Events")).as("te"))
@@ -91,11 +95,8 @@ object NomadPipeline {
     * shape. */
   def notifications(events: DataFrame, cfg: PipelineConfig): DataFrame = {
     val filtered = denyAllowFilter(events, col("event_type"), cfg.denylist, cfg.allowlist)
-    val detailsClean = transform_values(
-      coalesce(col("details"), map()),
-      (_, v) => regexp_replace(v, "\"", "'"))
     // Deterministic key order for the JSON encoding (SURVEY §7.4.3).
-    val detailsSorted = map_from_entries(array_sort(map_entries(detailsClean)))
+    val detailsSorted = map_from_entries(array_sort(map_entries(coalesce(col("details"), map()))))
     filtered
       .withColumn("state",
         classifyState(col("event_type"), "Restart Signaled", "Terminated",
@@ -105,10 +106,7 @@ object NomadPipeline {
       .withColumn("subject",
         subject(col("task_identifier"), col("event_type"), col("node_name")))
       .withColumn("description",
-        fencedDescription(
-          coalesce(col("display_message"), lit("")),
-          when(size(map_entries(detailsSorted)) > 0, to_json(detailsSorted))
-            .otherwise(lit("{}"))))
+        fencedDescription(coalesce(col("display_message"), lit("")), detailsJson(detailsSorted)))
       .withColumn("discord_payload",
         discordPayload(col("subject"), col("description"), discordColor(col("state"))))
       .withColumn("slack_subject", slackMarkdown(col("subject")))
@@ -133,9 +131,7 @@ object NomadPipeline {
     * reference's batch-snapshot semantics ([[HighWatermarkDedup]]). */
   def stream(spark: SparkSession, lines: DataFrame, cfg: PipelineConfig,
              initialWatermarkNs: Long): DataFrame = {
-    val events = taskEvents(decode(lines), cfg)
-    val deduped = HighWatermarkDedup(initialWatermarkNs, frameCol = Some("frame_index"))
-      .apply(spark, events)
+    val deduped = HighWatermarkDedup(taskEvents(decode(lines), cfg), initialWatermarkNs)
     notifications(deduped, cfg)
   }
 }

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
@@ -38,12 +37,7 @@ object DumpPlans extends AdaptiveSparkPlanHelper {
     val Array(outDir, suffix) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("set SPARK_GRAFT_SF_DIR to a scale-factor directory"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     Files.createDirectories(Paths.get(outDir))
     // Both listeners sit on the listener bus's shared queue, which delivers
     // in post order: once the noop write is reported, every job the query
@@ -61,8 +55,7 @@ object DumpPlans extends AdaptiveSparkPlanHelper {
     // Registry functions write only through v1 file sources, so the one
     // v2 write is the noop sink's.
     def isNoopWrite(qe: QueryExecution) = qe.executedPlan.isInstanceOf[V2TableWriteExec]
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = GraftSession.onlyQueries()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

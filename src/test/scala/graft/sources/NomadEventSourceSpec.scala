@@ -100,29 +100,6 @@ class NomadEventSourceSpec extends SparkSpec {
     }
   }
 
-  test("maxLinesPerBatch caps micro-batch size during catch-up") {
-    val frames = (1 to 6).map(i => s"""{"Index":$i,"Events":[]}""")
-    withServer(frames) { (url, _) =>
-      val q = spark.readStream.format("nomad-events")
-        .option("baseUrl", url)
-        .option("maxLinesPerBatch", "2")
-        .load()
-        .writeStream.format("memory").queryName("nomad_throttled")
-        .trigger(Trigger.ProcessingTime(100))
-        .start()
-      try {
-        val deadline = System.currentTimeMillis() + 30000
-        while (spark.table("nomad_throttled").count() < 6 && System.currentTimeMillis() < deadline) {
-          Thread.sleep(200)
-        }
-        assert(spark.table("nomad_throttled").count() == 6)
-        val batchSizes = q.recentProgress.map(_.numInputRows).filter(_ > 0)
-        assert(batchSizes.nonEmpty && batchSizes.forall(_ <= 2),
-          s"batch sizes exceeded cap: ${batchSizes.mkString(",")}")
-      } finally q.stop()
-    }
-  }
-
   test("restart recovery: numbering continues from the checkpointed offset") {
     val frames = Seq("""{"Index":1,"Events":[]}""", """{"Index":2,"Events":[]}""")
     withServer(frames) { (url, _) =>

@@ -1,11 +1,15 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 case class Te(task_identifier: String, event_time: Long, payload: String,
+    frame_index: Long = 0L)
+
+/** A task event whose `Time` may be missing. */
+case class TeOpt(task_identifier: String, event_time: Option[Long], payload: String,
     frame_index: Long = 0L)
 
 /** ST1 semantics under real micro-batches (SURVEY §7.4.2): the watermark is
@@ -15,9 +19,10 @@ case class Te(task_identifier: String, event_time: Long, payload: String,
 class HighWatermarkDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def runBatches(dedup: HighWatermarkDedup, batches: Seq[Te]*): Seq[Seq[(String, Long)]] = {
-    val input = MemoryStream[Te](spark)
-    val deduped = dedup.apply(spark, input.toDF())
+  private def runBatches[T : Encoder](initialWatermarkNs: Long,
+      batches: Seq[T]*): Seq[Seq[(String, Long)]] = {
+    val input = MemoryStream[T](spark)
+    val deduped = HighWatermarkDedup(input.toDF(), initialWatermarkNs)
     val dir = java.nio.file.Files.createTempDirectory("dedup-test").toString
     val query = deduped.writeStream
       .format("memory").queryName(s"dedup_out_${System.nanoTime()}")
@@ -35,7 +40,7 @@ class HighWatermarkDedupSpec extends SparkSpec {
   }
 
   test("intra-batch equal-timestamp duplicates all pass; stale events drop") {
-    val Seq(after1, after2, after3) = runBatches(HighWatermarkDedup(100L),
+    val Seq(after1, after2, after3) = runBatches(100L,
       // batch 1: two equal timestamps above the seed watermark — both pass
       Seq(Te("a", 200L, "x"), Te("a", 200L, "y"), Te("a", 50L, "stale")),
       // batch 2: 200 is now <= watermark → dropped; 300 passes
@@ -47,9 +52,8 @@ class HighWatermarkDedupSpec extends SparkSpec {
     assert(after3 == after2)
   }
 
-  test("frameCol: a duplicate re-sent in a later frame of the same batch drops") {
-    val Seq(after1, after2) = runBatches(
-      HighWatermarkDedup(100L, frameCol = Some("frame_index")),
+  test("a duplicate re-sent in a later frame of the same batch drops") {
+    val Seq(after1, after2) = runBatches(100L,
       // one batch, two frames: equal timestamps within frame 1 both pass;
       // 200 re-sent in frame 2 is dropped against frame 1's watermark
       Seq(Te("a", 200L, "x", 1L), Te("a", 200L, "y", 1L), Te("a", 50L, "stale", 1L),
@@ -61,14 +65,14 @@ class HighWatermarkDedupSpec extends SparkSpec {
   }
 
   test("keys are independent; seed watermark applies per key") {
-    val Seq(out) = runBatches(HighWatermarkDedup(1000L),
+    val Seq(out) = runBatches(1000L,
       Seq(Te("a", 1500L, "x"), Te("b", 500L, "old-key-b"), Te("b", 2000L, "new-key-b")))
     assert(out == Seq(("a", 1500L), ("b", 2000L)))
   }
 
   test("watermark state survives a query restart from the checkpoint") {
     val input = MemoryStream[Te](spark)
-    val deduped = HighWatermarkDedup(0L).apply(spark, input.toDF())
+    val deduped = HighWatermarkDedup(input.toDF(), 0L)
     val ckpt = java.nio.file.Files.createTempDirectory("dedup-restart").toString
     val outDir = java.nio.file.Files.createTempDirectory("dedup-restart-out").toString
     def start() = deduped.writeStream
@@ -99,50 +103,19 @@ class HighWatermarkDedupSpec extends SparkSpec {
     val batch = graft.operators.NomadEventOps
       .dedupHighWatermark(rows.toDF(), col("task_identifier"), col("event_time"))
       .select("event_time").as[Long].collect().toSeq.sorted
-    val Seq(streaming) = runBatches(HighWatermarkDedup(5L), rows)
+    val Seq(streaming) = runBatches(5L, rows)
     assert(batch == Seq(10L, 20L, 20L))
     assert(streaming.map(_._2).sorted == Seq(10L, 20L, 20L))
   }
 
-  test("stateTtl evicts idle keys; an evicted key re-seeds to the initial watermark") {
-    val input = MemoryStream[Te](spark)
-    val deduped = HighWatermarkDedup(0L, stateTtl = Some(java.time.Duration.ofMillis(200)))
-      .apply(spark, input.toDF())
-    val dir = java.nio.file.Files.createTempDirectory("dedup-ttl").toString
-    val query = deduped.writeStream
-      .format("memory").queryName(s"dedup_ttl_${System.nanoTime()}")
-      .option("checkpointLocation", dir)
-      .outputMode("append").start()
-    def emitted(): Seq[(String, Long)] =
-      spark.table(query.name).select("task_identifier", "event_time")
-        .as[(String, Long)].collect().toSeq.sorted
-    // With a ProcessingTimeTimeout registered the engine schedules
-    // timeout-evaluation batches on its own clock, so processAllAvailable
-    // can livelock against the trigger thread — poll the sink for the
-    // expected row count instead (the engine drains MemoryStream data by
-    // itself; nothing here depends on batch boundaries).
-    def awaitRows(n: Int): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (emitted().size < n && System.nanoTime() < deadline) Thread.sleep(50L)
-      query.exception.foreach(throw _)
-      assert(emitted().size == n, s"expected $n rows, got ${emitted()}")
-    }
-    // key a advances its watermark to 500
-    input.addData(Seq(Te("a", 500L, "x")))
-    awaitRows(1)
-    assert(emitted() == Seq(("a", 500L)))
-    // let a's idle clock expire (timeout batches fire on the engine's own
-    // trigger), then feed key b
-    Thread.sleep(1000L)
-    input.addData(Seq(Te("b", 100L, "y")))
-    awaitRows(2)
-    // a returns with an event BELOW its old watermark. Evicted → re-seeded
-    // to init 0 → the event passes. (Without the TTL this is the stale-drop
-    // case above and would be suppressed.)
-    input.addData(Seq(Te("a", 400L, "replay")))
-    awaitRows(3)
-    assert(emitted() == Seq(("a", 400L), ("a", 500L), ("b", 100L)),
-      "evicted key must re-seed, so a sub-watermark event passes after TTL")
-    query.stop()
+  test("an event with no Time never passes and leaves the watermark unmoved") {
+    val Seq(after1, after2) = runBatches(100L,
+      Seq(TeOpt("a", None, "no-time", 1L)),
+      // a null Time beside a timed event in one frame; b's only earlier
+      // event has no Time, so b still holds the seed and 101 passes
+      Seq(TeOpt("a", None, "no-time", 2L), TeOpt("a", Some(150L), "x", 2L),
+        TeOpt("b", None, "no-time", 2L), TeOpt("b", Some(101L), "y", 3L)))
+    assert(after1.isEmpty)
+    assert(after2 == Seq(("a", 150L), ("b", 101L)))
   }
 }
