@@ -54,16 +54,11 @@ object TextFunctions {
   // one automaton pass per row, cost independent of dictionary size. The
   // phrase list must be a literal (validated at analysis time).
 
-  /** Sorted distinct dictionary phrases occurring in `text`. */
+  /** Sorted distinct dictionary phrases occurring in `text`. A blocklist
+    * filter `size(keywordMatches(…)) === 0` plans as the early-exit
+    * `keyword_any` probe (the SimplifyKeywordPredicates rewrite). */
   def keywordMatches(text: Column, phrases: Seq[String]): Column =
     call_function("keyword_matches", text, lit(phrases.distinct.sorted.toArray))
-
-  /** Does any dictionary phrase occur in `text`? Early-exits at the first
-    * hit — prefer this (or a `size(keywordMatches(…)) === 0` predicate,
-    * which the SimplifyKeywordPredicates rule rewrites to it) for
-    * blocklist filters. */
-  def keywordAny(text: Column, phrases: Seq[String]): Column =
-    call_function("keyword_any", text, lit(phrases.distinct.sorted.toArray))
 
   /** Every phrase occurrence as struct<pos:int, phrase:string> (1-based
     * BYTE offsets; overlaps and nestings included). */

@@ -691,13 +691,14 @@ object DedupOps {
     // ReuseExchange does not dedupe them), then materialize the edge list
     // once: every round joins against it. Pairs are orders of magnitude
     // smaller than the corpus that produced them.
-    val edges = pairs
+    val sc = pairs.sparkSession.sparkContext
+    val (edges, edgeRdds) = Fixpoint.persisting(sc)(pairs
       .select(explode(array(
         struct(col(idaCol).as("src"), col(idbCol).as("dst")),
         struct(col(idbCol).as("src"), col(idaCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .ckpt(true)
+      .ckpt(true))
     def labelSum(l: DataFrame): java.math.BigDecimal =
       l.agg(sum(col("cluster").cast("decimal(38,0)"))).first().getDecimal(0)
     // Fused first round: labels₀ = id makes round 1's neighbour-min over
@@ -708,7 +709,7 @@ object DedupOps {
     val firstLabels = edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("cluster"))
       .select(col("src").as("id"), col("cluster"))
-    Fixpoint.iterate(firstLabels, maxIter)(labelSum) { (labels, _) =>
+    val rounds = Fixpoint.iterate(firstLabels, maxIter)(labelSum) { (labels, _) =>
       val fromNeighbours = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("cluster"))
@@ -721,7 +722,11 @@ object DedupOps {
         .join(combined.select(col("id").as("cluster"), col("cluster").as("jump")),
           Seq("cluster"), "left")
         .select(col("id"), coalesce(col("jump"), col("cluster")).as("cluster"))
-    }.frame
+    }
+    // the last round is materialized and no longer reads the edges: hold
+    // one round's blocks, like every other Fixpoint caller
+    Fixpoint.release(sc, edgeRdds)
+    rounds.frame
   }
 
   /** Leakage-safe train/valid/test split: assign every document the split

@@ -43,10 +43,11 @@ object Fixpoint {
       step: (DataFrame, V) => DataFrame): Rounds[V] = {
     val sc = init.sparkSession.sparkContext
     def round(df: DataFrame): (DataFrame, V, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val frame = GraftSession.checkpointed(df, eager = false)
-      val v = probe(frame) // materializes the checkpoint
-      (frame, v, sc.getPersistentRDDs.keySet.toSet -- before)
+      val ((frame, v), held) = persisting(sc) {
+        val frame = GraftSession.checkpointed(df, eager = false)
+        (frame, probe(frame)) // the probe materializes the checkpoint
+      }
+      (frame, v, held)
     }
     var (frame, v, held) = round(init)
     val probes = Vector.newBuilder[V] += v
@@ -63,7 +64,14 @@ object Fixpoint {
     Rounds(frame, probes.result(), converged, held)
   }
 
-  private def release(sc: SparkContext, ids: Set[Int]): Unit = {
+  /** `body`'s result and the ids of the RDDs it newly persisted. */
+  private[operators] def persisting[T](sc: SparkContext)(body: => T): (T, Set[Int]) = {
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+  }
+
+  private[operators] def release(sc: SparkContext, ids: Set[Int]): Unit = {
     val live = sc.getPersistentRDDs
     ids.flatMap(live.get).foreach(_.unpersist(blocking = false))
   }

@@ -4,12 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level scale-safety audit: driver-side materialization
+/** Source-level audits of src/main.
+  *
+  * Scale safety: driver-side materialization
   * (`collect`/`first`/`head`/`toLocalIterator`) pulls a DataFrame onto one
   * JVM — at 100 TB that is an OOM, not a slowdown. The only legitimate uses
   * pull BOUNDED MODEL METADATA (a fit sample capped by construction, a
   * 1-row scalar aggregate). Every such site must be allowlisted here with
   * its bound; a new `.collect()` anywhere else fails the build.
+  *
+  * Reachability: every top-level type serves a product path (the batch
+  * registry, the notifier pipeline, the mains, the benchmark harness), so
+  * code kept only for its own spec fails the build.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -70,5 +76,56 @@ class SourceAuditSpec extends AnyFunSuite {
         """\bdef main\(""".r.findFirstIn(Files.readString(p)).isDefined)
       .map(p => root.relativize(p).toString).toSeq.sorted
     assert(mains == Seq("Bench.scala", "Verify.scala", "tools/DumpPlans.scala"))
+  }
+
+  test("every top-level type in src/main is reachable from a product root") {
+    // Comments are blanked (a scaladoc "Heartbeat frames" is no caller);
+    // string and char literals are matched first so a `//` inside one stays.
+    val lexeme =
+      """"{3}[\s\S]*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/""".r
+    def code(p: Path): String = lexeme.replaceAllIn(Files.readString(p), m =>
+      if (m.matched.startsWith("/")) " " else java.util.regex.Matcher.quoteReplacement(m.matched))
+    def scalaFiles(dir: Path): Seq[Path] =
+      Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val decl = ("""(?m)^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|""" +
+      """abstract\s+|case\s+|implicit\s+)*(?:class|object|trait)\s+(\w+)""").r
+    def declared(src: String): Set[String] = decl.findAllMatchIn(src).map(_.group(1)).toSet
+
+    val files = scalaFiles(root).map(p => root.relativize(p).toString -> code(p)).toMap
+    // name -> declaring files: a companion object and its class are one type
+    val home: Map[String, Set[String]] = files.toSeq
+      .flatMap { case (f, src) => declared(src).map(_ -> f) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+
+    // Roots: the registry, the notifier pipeline, the mains, the DSv2
+    // service registrations, and the benchmark harness — a caller outside
+    // the tests, and the only one that wires WebhookSink.
+    val rootFiles = Seq("SparkEntry.scala", "streaming/NomadPipeline.scala",
+      "Bench.scala", "Verify.scala", "tools/DumpPlans.scala")
+    val services = Files.list(Paths.get("src/main/resources/META-INF/services"))
+      .iterator().asScala.flatMap(p => Files.readAllLines(p).asScala)
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split('.').last)
+    var reached = services.toSet ++ rootFiles.flatMap(f => declared(files(f)))
+    var texts = scalaFiles(Paths.get("perfbench/scala")).map(code)
+    var scanned = Set.empty[String]
+    var grew = true
+    while (grew) {
+      val fresh = reached.flatMap(home.getOrElse(_, Set.empty[String])) -- scanned
+      scanned ++= fresh
+      texts ++= fresh.toSeq.map(files)
+      val found = (home.keySet -- reached).filter { n =>
+        val own = s"""\\b(?:class|object|trait)\\s+$n\\b""".r
+        val word = s"""\\b$n\\b""".r
+        texts.exists(t => word.findFirstIn(own.replaceAllIn(t, " ")).isDefined)
+      }
+      reached ++= found
+      grew = fresh.nonEmpty || found.nonEmpty
+    }
+
+    val unreached = (home.keySet -- reached).toSeq.sorted
+      .map(n => s"$n (${home(n).toSeq.sorted.mkString(", ")})")
+    assert(unreached.isEmpty,
+      s"top-level types no product root reaches (call them from a product " +
+        s"path or delete them):\n  ${unreached.mkString("\n  ")}")
   }
 }

@@ -51,12 +51,17 @@ class FixpointSpec extends SparkSpec {
     GraftSession.releaseMaterialized(spark)
   }
 
-  /** RDDs a finished call leaves persisted. */
+  /** RDDs a finished call leaves persisted. The result frame stays
+    * reachable until they are counted: once it is collectable, a GC lets
+    * the ContextCleaner unpersist its blocks mid-count. */
   private def heldBy(run: => DataFrame): Int =
     try {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      run.collect()
-      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      val frame = run
+      frame.collect()
+      val held = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      java.lang.ref.Reference.reachabilityFence(frame)
+      held
     } finally GraftSession.releaseMaterialized(spark)
 
   test("kCore and connectedComponents hold one round's blocks however many rounds they run") {

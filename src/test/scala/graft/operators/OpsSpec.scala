@@ -680,22 +680,6 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("typed MinHashAggregator equals the relational signature formulation") {
-    import graft.functions.{MinHashAggregator, TextFunctions}
-    val relational = DedupOps.minhashSignatures(docs, n = 3, numHashes = 16)
-      .collect().map(r => r.getAs[Long]("id") -> r.getSeq[Long](1).toVector).toMap
-    val typed = docs
-      .select(col("doc_id"), explode(TextFunctions.shingles(
-        TextFunctions.tokens(col("text")), 3)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(new MinHashAggregator(16).toColumn.name("sig").as[Array[Long]])
-      .collect().map { case (id, sig) => id -> sig.toVector }.toMap
-    assert(typed == relational)
-  }
-
   test("TopKAggregator: bounded buffer, insert order invariance, tie-breaks") {
     val agg = new graft.functions.TopKAggregator(3)
     val xs = Seq((5.0, 9L), (1.0, 1L), (5.0, 2L), (7.0, 4L), (3.0, 3L), (7.0, 8L))

@@ -21,6 +21,7 @@ class NomadEventSourceSpec extends SparkSpec {
                         (body: (String, CopyOnWriteArrayList[String]) => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val seenHeaders = new CopyOnWriteArrayList[String]()
+    val hangUp = new CountDownLatch(1)
     server.createContext("/v1/agent/self", (ex: HttpExchange) => {
       val json = raftIndex
         .map(i => s"""{"stats":{"raft":{"last_log_index":"$i"}}}""")
@@ -42,12 +43,13 @@ class NomadEventSourceSpec extends SparkSpec {
         Thread.sleep(20)
         out.write(bytes, mid, bytes.length - mid); out.flush()
       }
-      // keep the connection open like a real event stream
-      Thread.sleep(60000)
+      // keep the connection open like a real event stream, until the test
+      // ends: stop(0) joins the dispatcher thread this handler runs on
+      hangUp.await()
     })
     server.start()
     try body(s"http://127.0.0.1:${server.getAddress.getPort}", seenHeaders)
-    finally server.stop(0)
+    finally { hangUp.countDown(); server.stop(0) }
   }
 
   test("initialIndex digs stats.raft.last_log_index; None when absent") {

@@ -8,9 +8,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 /** Streaming parity for the retrieval family (BM25): corpus-global
   * statistics (df, N, avgdl) make BM25 a VIEW over the whole corpus, not a
   * per-row transform — so the streaming formulation is micro-batch
-  * materialized-view maintenance (the same contract as StreamingAggView):
-  * each micro-batch lands in its own idempotent partition, and the ranking
-  * is recomputed over the accumulated corpus. After every batch the view
+  * materialized-view maintenance: each micro-batch lands in its own
+  * idempotent partition, and the ranking is recomputed over the
+  * accumulated corpus. After every batch the view
   * equals the batch BM25 over the union of all data seen so far, and
   * at-least-once replay of a batch does not change the corpus.
   */

@@ -5,7 +5,7 @@ import graft.SparkSpec
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.CopyOnWriteArrayList
+import java.util.concurrent.{CopyOnWriteArrayList, CountDownLatch}
 
 /** Full-pipeline integration: stub Nomad server → `nomad-events` DSv2 source
   * → decode → filters/explodes → stateful high-watermark dedup → classify →
@@ -51,6 +51,7 @@ class StreamingE2ESpec extends SparkSpec {
     val slackUrl = s"http://127.0.0.1:${hookServer.getAddress.getPort}/slack"
 
     val nomad = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val hangUp = new CountDownLatch(1)
     nomad.createContext("/v1/event/stream", (ex: HttpExchange) => {
       ex.sendResponseHeaders(200, 0)
       val out = ex.getResponseBody
@@ -58,7 +59,9 @@ class StreamingE2ESpec extends SparkSpec {
         out.write((f + "\n").getBytes(StandardCharsets.UTF_8)); out.flush()
         Thread.sleep(30)
       }
-      Thread.sleep(60000)
+      // hold the stream open until the test ends: stop(0) joins the
+      // dispatcher thread this handler runs on
+      hangUp.await()
     })
     nomad.start()
 
@@ -102,6 +105,6 @@ class StreamingE2ESpec extends SparkSpec {
         assert(att.get("text").asText().contains("\n```{"))
         assert(att.has("color"))
       }
-    } finally { nomad.stop(0); hookServer.stop(0) }
+    } finally { hangUp.countDown(); nomad.stop(0); hookServer.stop(0) }
   }
 }
