@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.charset.StandardCharsets
 import java.util
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable.ArrayBuffer
@@ -30,7 +31,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Design: like Spark's socket source, a driver-side poller thread owns the
   * HTTP connection and buffers completed lines; micro-batch planning slices
-  * the buffer by offset range, and `commit()` trims delivered rows. This is a
+  * the buffer by offset range, and `commit()` trims delivered rows. Lines are
+  * buffered and shipped to the executor as UTF-8 bytes, encoded once by the
+  * poller, so the reader wraps them as `value` without re-encoding. This is a
   * control-plane stream (cluster events, not data volume) — downstream
   * processing is distributed, ingestion is a single ordered connection by
   * nature of the protocol.
@@ -89,9 +92,9 @@ private[sources] case class NomadOffset(lineCount: Long) extends Offset {
 
 private[sources] class NomadMicroBatchStream(cfg: NomadConfig) extends MicroBatchStream {
 
-  // raw json lines; buffer(i) is absolute line `base + i`. commit() drops
-  // a prefix and advances `base`.
-  private val buffer = ArrayBuffer.empty[String]
+  // raw json lines as UTF-8; buffer(i) is absolute line `base + i`.
+  // commit() drops a prefix and advances `base`.
+  private val buffer = ArrayBuffer.empty[Array[Byte]]
   private var base = 0L
   private def nextLine = base + buffer.length
   private val stopped = new AtomicBoolean(false)
@@ -110,7 +113,7 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig) extends MicroBatc
         else if (n > 0) {
           // bytes, not text: a multi-byte UTF-8 char split across reads must
           // survive the chunk boundary (NdjsonBuffer carries raw bytes)
-          val lines = ndjson.feedBytes(chunk, n)
+          val lines = ndjson.feedBytes(chunk, n).map(_.getBytes(StandardCharsets.UTF_8))
           buffer.synchronized { buffer ++= lines }
         }
       }
@@ -165,7 +168,7 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig) extends MicroBatc
         private var i = -1
         override def next(): Boolean = { i += 1; i < p.lines.length }
         override def get(): InternalRow =
-          InternalRow(p.first + i, UTF8String.fromString(p.lines(i)))
+          InternalRow(p.first + i, UTF8String.fromBytes(p.lines(i)))
         override def close(): Unit = ()
       }
     }
@@ -185,6 +188,6 @@ private[sources] class NomadMicroBatchStream(cfg: NomadConfig) extends MicroBatc
   }
 }
 
-/** Lines `first`, `first + 1`, … of one micro-batch. */
-private[sources] case class NomadInputPartition(first: Long, lines: Array[String])
+/** Lines `first`, `first + 1`, … of one micro-batch, each as UTF-8. */
+private[sources] case class NomadInputPartition(first: Long, lines: Array[Array[Byte]])
   extends InputPartition

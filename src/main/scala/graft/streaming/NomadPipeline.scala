@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   * key build → explode task events → dedup → deny/allow → classify → format →
   * payloads.
   *
-  * Every stage is a built-in expression, so in streaming mode the whole chain
-  * (minus the stateful dedup) is a single stateless whole-stage-codegen span
-  * between the source and `flatMapGroupsWithState`.
+  * Every stage is a built-in expression. One step runs interpreted: the
+  * `Generate` that parses each line (`from_json` has no generated code),
+  * which ends the source's codegen span. Everything after it, up to the
+  * stateful dedup's `flatMapGroupsWithState`, is one stateless
+  * whole-stage-codegen span.
   *
   * The proxy anti-filter pattern and the namespace that task identifiers
   * omit are the reference's constants (app.rb:139-144), not settings.
@@ -45,14 +47,19 @@ object NomadPipeline {
   /** Raw lines (`value` string column) → parsed frames. Malformed lines are
     * dropped (lib/ndjson.rb:31-33) — PERMISSIVE `from_json` parses them to
     * all-null structs, indistinguishable from the `{}` heartbeat, so a
-    * corrupt-record column marks them explicitly. */
+    * corrupt-record column marks them explicitly.
+    *
+    * Each line is parsed once: the parse sits behind a one-element explode,
+    * a `Generate` the optimizer cannot push the corrupt-record filter below.
+    * A plain projection would be inlined into that filter and into each
+    * later field access, one `from_json` call per copy. */
   def decode(lines: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val schemaWithCorrupt = StructType(NomadSchemas.frame.fields :+
       StructField("_corrupt", StringType))
     lines
-      .withColumn("frame", from_json(col("value"), schemaWithCorrupt,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
+      .select(col("*"), explode(array(from_json(col("value"), schemaWithCorrupt,
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))).as("frame"))
       .where(col("frame").isNotNull && col("frame._corrupt").isNull)
       .withColumn("frame", col("frame").dropFields("_corrupt"))
   }

@@ -716,8 +716,30 @@ class PlanQualitySpec extends SparkSpec {
     assert(plan.contains("*("), s"morton value not codegen'd:\n$plan")
   }
 
-  test("global-window audit: unpartitioned windows only ever run over bounded tables") {
+  // One pass over the catalog feeds the two catalog-wide audits below: each
+  // query is built once (a rebuild re-runs its eager checkpoints and fixpoint
+  // probes), and the pass keeps which audited shapes its plans hold.
+  private case class CatalogPlan(name: String, globalWindow: Boolean,
+                                 cartesian: Boolean, nestedLoopJoin: Boolean)
+  private lazy val catalogPlans: Seq[CatalogPlan] = {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val qe = fn(spark, dir).queryExecution
+      val globalWindow = qe.optimizedPlan.exists {
+        case w: LogicalWindow => w.partitionSpec.isEmpty
+        case _ => false
+      }
+      val executed = qe.executedPlan.toString
+      // building a query eagerly materializes its localCheckpoint sites;
+      // release them so the catalog sweep doesn't accumulate 160 queries'
+      // blocks in the shared session (ARCHITECTURE.md §13)
+      GraftSession.releaseMaterialized(spark)
+      CatalogPlan(name, globalWindow, executed.contains("CartesianProduct"),
+        executed.contains("BroadcastNestedLoopJoin"))
+    }
+  }
+
+  test("global-window audit: unpartitioned windows only ever run over bounded tables") {
     // An unpartitioned Window funnels its ENTIRE input through one task —
     // the canonical 100-TB cliff (WindowExec's "No Partition Defined"
     // warning). Legitimate uses window a provably model-sized relation:
@@ -741,16 +763,7 @@ class PlanQualitySpec extends SparkSpec {
       "q_score_auc"        -> "cumulative offsets over per-block subtotals (block count rows, q_ks_test's shape)",
       "q_rank_sum"         -> "cumulative offsets over per-block subtotals (block count rows, q_ks_test's shape)"
     )
-    val withGlobals = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val globals = fn(spark, dir).queryExecution.optimizedPlan.collect {
-        case w: LogicalWindow if w.partitionSpec.isEmpty => w
-      }
-      // building a query eagerly materializes its localCheckpoint sites;
-      // release them so the catalog sweep doesn't accumulate 160 queries'
-      // blocks in the shared session (ARCHITECTURE.md §13)
-      GraftSession.releaseMaterialized(spark)
-      if (globals.nonEmpty) Some(name) else None
-    }.toSet
+    val withGlobals = catalogPlans.filter(_.globalWindow).map(_.name).toSet
     val offenders = withGlobals.diff(bounded.keySet)
     assert(offenders.isEmpty,
       s"unallowlisted global windows (one-task bottleneck at scale) in: " +
@@ -812,17 +825,14 @@ class PlanQualitySpec extends SparkSpec {
       // is pinned directly via marginSurvivors in the dedicated bitext
       // tests above (one BNLJ, WindowGroupLimit, no cartesian).
     )
-    val (issues, bnljSeen) = SparkEntry.queries.toSeq.foldLeft(
-        (Seq.empty[String], Set.empty[String])) { case ((is, seen), (name, fn)) =>
-      val plan = fn(spark, dir).queryExecution.executedPlan.toString
-      GraftSession.releaseMaterialized(spark) // see the global-window sweep
-      val hasBnlj = plan.contains("BroadcastNestedLoopJoin")
-      val cart = if (plan.contains("CartesianProduct")) Seq(s"$name: CartesianProduct") else Nil
-      val bnlj = if (hasBnlj && !bnljBounded.contains(name))
-        Seq(s"$name: unallowlisted BroadcastNestedLoopJoin") else Nil
-      (is ++ cart ++ bnlj, if (hasBnlj) seen + name else seen)
+    val issues = catalogPlans.flatMap { p =>
+      val cart = if (p.cartesian) Seq(s"${p.name}: CartesianProduct") else Nil
+      val bnlj = if (p.nestedLoopJoin && !bnljBounded.contains(p.name))
+        Seq(s"${p.name}: unallowlisted BroadcastNestedLoopJoin") else Nil
+      cart ++ bnlj
     }
     assert(issues.isEmpty, s"all-pairs join shapes in the catalog:\n  ${issues.mkString("\n  ")}")
+    val bnljSeen = catalogPlans.filter(_.nestedLoopJoin).map(_.name).toSet
     val stale = bnljBounded.keySet.diff(bnljSeen)
     assert(stale.isEmpty,
       s"stale BNLJ allowlist entries (no nested-loop join planned): ${stale.mkString(", ")}")

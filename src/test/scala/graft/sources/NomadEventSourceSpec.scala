@@ -74,10 +74,16 @@ class NomadEventSourceSpec extends SparkSpec {
   }
 
   test("streaming source reassembles chunked NDJSON frames into rows") {
+    // the stub server cuts each frame at its middle byte: here that falls
+    // inside a three-byte character, which must arrive whole in `value`
+    val multiByte = """{"Index":3,"Events":[],"Note":"€€€€€€€€€€€"}"""
+    val mb = (multiByte + "\n").getBytes(StandardCharsets.UTF_8)
+    assert((mb(mb.length / 2) & 0xC0) == 0x80, "cut must land mid-character")
     val frames = Seq(
       """{"Index":1,"Events":[]}""",
       """{}""",
-      """{"Index":2,"Events":[]}""")
+      """{"Index":2,"Events":[]}""",
+      multiByte)
     withServer(frames) { (url, headers) =>
       val q = spark.readStream.format("nomad-events")
         .option("baseUrl", url)
@@ -89,13 +95,13 @@ class NomadEventSourceSpec extends SparkSpec {
         .start()
       try {
         val deadline = System.currentTimeMillis() + 30000
-        while (spark.table("nomad_src_out").count() < 3 && System.currentTimeMillis() < deadline) {
+        while (spark.table("nomad_src_out").count() < 4 && System.currentTimeMillis() < deadline) {
           Thread.sleep(200)
         }
         val rows = spark.table("nomad_src_out").collect()
           .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
         assert(rows.map(_._2).toSeq == frames)
-        assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L))
+        assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L, 3L))
         assert(headers.contains("token=secret"))
         assert(headers.contains("query=namespace=prod"))
       } finally q.stop()
@@ -125,7 +131,7 @@ class NomadEventSourceSpec extends SparkSpec {
         val p = stream.planInputPartitions(NomadOffset(100), NomadOffset(102))
           .head.asInstanceOf[NomadInputPartition]
         assert((p.first until p.first + p.lines.length) == Seq(100L, 101L))
-        assert(p.lines.toSeq == frames)
+        assert(p.lines.toSeq.map(new String(_, StandardCharsets.UTF_8)) == frames)
       } finally stream.stop()
     }
   }

@@ -84,10 +84,45 @@ class NomadPipelineSpec extends SparkSpec {
   }
 
   test("heartbeat frames split out; malformed lines dropped") {
-    val frames = NomadPipeline.decode(Seq("{}", "not json at all {", frame(200, "default", "j", "n1",
-      "t" -> Seq(("Started", 1L, Map.empty)))).toDF("value"))
-    assert(NomadPipeline.heartbeats(frames).count() == 1)
-    assert(frames.count() == 2) // heartbeat + data; malformed dropped
+    val data = frame(200, "default", "j", "n1", "t" -> Seq(("Started", 1L, Map.empty)))
+    // PERMISSIVE `from_json` against the frame schema: a line survives iff it
+    // is a JSON object whose fields all convert (string fields take any
+    // token as text); anything else is corrupt or null and dropped
+    val lines = Seq(
+      "{}",
+      "not json at all {",
+      data,
+      "[1,2]",
+      "5",
+      "null",
+      "\"s\"",
+      """{"Index":"x","Events":[]}""",                          // mismatch, read field
+      """{"Index":9,"Events":[{"Topic":"Node","Index":"x"}]}""", // mismatch, unread field
+      """[{"Index":6,"Events":[]}]""",                          // an array of frames
+      """{"Index":8}""",
+      """{"Events":null}""",
+      """{"Index":5,"Events":[{"Topic":1}]}""")                 // numeric Topic
+    val frames = NomadPipeline.decode(lines.toDF("value"))
+    val kept = frames.select(col("value"), to_json(col("frame"))).as[(String, String)].collect()
+    assert(kept.map(_._1).toSeq == Seq("{}", data, """{"Index":8}""", """{"Events":null}""",
+      """{"Index":5,"Events":[{"Topic":1}]}"""))
+    assert(kept.filter(_._1 != data).map(_._2).toSeq ==
+      Seq("{}", """{"Index":8}""", "{}", """{"Index":5,"Events":[{"Topic":"1"}]}"""))
+    assert(frames.schema("frame").dataType == NomadSchemas.frame)
+    assert(NomadPipeline.heartbeats(frames).count() == 2) // `{}` and `{"Events":null}`
+    assert(frames.count() == 5) // heartbeats + data; malformed dropped
+  }
+
+  test("decode parses each line once") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    // not a local relation: the optimizer would evaluate that one eagerly
+    val lines = spark.range(1).select(col("id").cast("string").as("value"))
+    val plan = NomadPipeline.taskEvents(NomadPipeline.decode(lines), cfg)
+      .queryExecution.optimizedPlan
+    val parses = plan.flatMap(node =>
+      node.expressions.flatMap(_.collect { case _: JsonToStructs => node.nodeName }))
+    assert(parses.size == 1,
+      s"${parses.size} from_json calls in the optimized plan, in: ${parses.mkString(", ")}")
   }
 
   test("deny-then-allow precedence: denylist wins for a type in both lists") {
