@@ -29,12 +29,6 @@ object GraftSession {
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    // Recursive-CTE cumulative-row guardrail stays at Spark's 1M default
-    // session-globally (the runaway backstop); the one query whose frontier
-    // volume is legitimately data-sized (q_graph_reach — a 6M-row lineitem
-    // backbone exceeded 1M on the r12 10×-facts probe) raises it to 100M
-    // scoped set/restore around its own eager materialization
-    // (AnalyticsQueries "q_graph_reach").
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     // Dimension tables (region/nation/customer/supplier/part at test SF) are
     // broadcast; at production scale the 64 MB threshold still keeps the

@@ -62,13 +62,9 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Execution contract: queries are run SEQUENTIALLY within a session
-    * (Verify, Bench, DumpPlans all iterate one at a time). A few entries
-    * scope a session conf around their own eager materialization
-    * (q_graph_reach raises `spark.sql.cteRecursionRowLimit` in a
-    * set/try/finally) — safe under sequential execution, but a harness that
-    * ever runs registry queries CONCURRENTLY in one session must serialize
-    * the conf-scoped ones (or give each its own session), or a concurrently
-    * planned recursive CTE would silently inherit the raised limit. */
+    * (Verify, Bench, DumpPlans all iterate one at a time). No entry changes
+    * a session conf; only the SQL-surface entries register temp views
+    * (SparkEntrySpec pins both). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     providers.flatMap(_._1).map { case (name, f) =>
       name -> ((s: SparkSession, dir: String) => f(Tables(s, dir)))

@@ -283,8 +283,9 @@ object TextOps {
     * the VOCABULARY relation (distinct words — millions of rows at 100 TB,
     * not the corpus): one pair aggregation, a 1-row best-pair broadcast
     * (no driver collect — the argmin rides a crossJoin), and a narrow
-    * string map. Rounds are lazily checkpointed like the other iterative
-    * operators, one job per round. */
+    * string map. Each round runs two eager checkpoints while the plan is
+    * built: the 1-row best pair and the merged vocabulary, so the returned
+    * union only reads checkpointed rows. */
   def bpeTrain(docs: DataFrame, rounds: Int,
                textCol: String = "text"): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1, 64], got $rounds")

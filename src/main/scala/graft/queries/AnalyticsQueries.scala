@@ -450,34 +450,27 @@ object AnalyticsQueries {
         .orderBy("x", "y")
     },
 
-    // Bounded-depth BFS reachability from the backbone's minimum node via
-    // a RECURSIVE CTE — Spark 4's WITH RECURSIVE surface driving the same
-    // iterate-to-frontier shape kCore/PageRank hand-roll: min-hop distance
-    // per node within 3 hops. Depth guard bounds path fan-out under
-    // cycles. The recursive walk text is shared verbatim with the oracle;
-    // the edge relation materializes ONCE up front — Spark re-evaluates
-    // non-recursive CTEs on every recursion step, so an unstaged run
-    // rebuilds the quadratic backbone per hop (measured 9.5 s → ~1 s).
-    // The recursive-CTE cumulative-row guardrail is raised to 100M ONLY for
-    // this query (a reachability frontier's volume is data-sized — the 10×
-    // probe's 6M-row lineitem legitimately exceeded the 1M default), and
-    // restored in a finally so the 1M default stays the session-global
-    // runaway backstop for every other recursive CTE. Because the limit is
-    // read at execution time, the walk is materialized EAGERLY
-    // (localCheckpoint) inside the raised-limit scope; the returned frame
-    // is a scan of the checkpointed blocks.
+    // Bounded-depth BFS reachability from the support-≥2 backbone's minimum
+    // node: min-hop distance per node within 3 hops. The depth is fixed, so
+    // the walk is three frontier joins over the edges, materialized once
+    // (otherwise each hop re-runs the quadratic co-occurrence build). A
+    // frontier carries walks, not distinct nodes: a per-frontier distinct
+    // cost more heap than the duplicate rows it drops.
     "q_graph_reach" -> { t =>
-      val limitKey = "spark.sql.cteRecursionRowLimit"
-      val prev = t.spark.conf.get(limitKey)
-      t.spark.conf.set(limitKey, (100 * 1000 * 1000).toString)
-      try {
-        t.lineitem.createOrReplaceTempView("lineitem_q_graph_reach")
-        t.spark.sql(AnalyticsQueries.graphReachEdgesSql("lineitem_q_graph_reach"))
-          .ckpt(true)
-          .createOrReplaceTempView("g_q_graph_reach")
-        t.spark.sql(AnalyticsQueries.graphReachWalkSql("g_q_graph_reach"))
-          .ckpt(true)
-      } finally t.spark.conf.set(limitKey, prev)
+      import org.apache.spark.sql.functions.{col, lit, min}
+      val edges = GraphOps.coOccurrenceEdges(t.lineitem, "l_orderkey", "l_partkey")
+        .where(col("w") >= 2)
+        .select(col("src").as("node"), col("dst"))
+        .ckpt(true)
+      val seed = edges.agg(min("node").as("node"))
+      val frontiers = (1 to 3).scanLeft(seed) { (f, _) =>
+        f.join(edges, "node").select(col("dst").as("node"))
+      }
+      frontiers.zipWithIndex
+        .map { case (f, d) => f.withColumn("d", lit(d.toLong)) }
+        .reduce(_ union _)
+        .groupBy("node").agg(min("d").as("hops"))
+        .orderBy("node")
     },
 
     // Additive seasonal decomposition of the hourly event-count series per
@@ -672,30 +665,6 @@ object AnalyticsQueries {
       s" GROUP BY n ORDER BY node").replaceAll("\\s+", " ")
   }
 
-  /** Shared SQL for engine and oracle: the backbone edge build (staged
-    * once engine-side, since Spark re-runs non-recursive CTEs per
-    * recursion step) and the recursive walk, whose text is IDENTICAL in
-    * both engines — the parity check covers Spark 4's recursive-CTE
-    * planner itself, not a re-derivation. */
-  private[queries] def graphReachEdgesSql(lineitemRel: String): String =
-    s"""WITH gp AS (
-       |  SELECT DISTINCT l_orderkey AS grp, l_partkey AS item FROM $lineitemRel),
-       |e0 AS (SELECT a.item AS u, b.item AS v
-       |  FROM gp a JOIN gp b ON a.grp = b.grp AND a.item < b.item
-       |  GROUP BY 1, 2 HAVING count(*) >= 2)
-       |SELECT u AS src, v AS dst FROM e0
-       |UNION ALL SELECT v, u FROM e0""".stripMargin.replaceAll("\\s+", " ")
-
-  private[queries] def graphReachWalkSql(edgeRel: String): String =
-    s"""WITH RECURSIVE seed AS (SELECT min(src) AS s FROM $edgeRel),
-       |walk(node, d) AS (
-       |  SELECT s, 0 FROM seed
-       |  UNION ALL
-       |  SELECT g.dst, w.d + 1 FROM walk w JOIN $edgeRel g ON g.src = w.node
-       |  WHERE w.d < 3)
-       |SELECT node, CAST(min(d) AS BIGINT) AS hops FROM walk
-       |GROUP BY node ORDER BY node""".stripMargin.replaceAll("\\s+", " ")
-
   /** The q_triangle_count / q_clustering_coeff oracle with ONE extra
     * induced-subgraph stage mirroring the engine's cappedUndirected:
     * keep = backbone nodes of degree ≤ cap, e = edges with BOTH endpoints
@@ -779,18 +748,24 @@ object AnalyticsQueries {
         |  CAST(count(*) * 8 AS BIGINT) AS n_tri_est
         |FROM t""".stripMargin.replaceAll("\\s+", " "),
 
-    // g materializes once (mirroring the engine's staged checkpoint);
-    // the walk text after it is graphReachWalkSql verbatim.
+    // Recursive on purpose: the engine unrolls the depth-3 walk into three
+    // joins, so this checks it against an independent formulation.
     "q_graph_reach" ->
-      ("""WITH RECURSIVE gp AS (
-         |  SELECT DISTINCT l_orderkey AS grp, l_partkey AS item FROM lineitem),
-         |e0 AS (SELECT a.item AS u, b.item AS v
-         |  FROM gp a JOIN gp b ON a.grp = b.grp AND a.item < b.item
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-         |g AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
-         |  UNION ALL SELECT v, u FROM e0),
-         |""".stripMargin.replaceAll("\\s+", " ") +
-        graphReachWalkSql("g").stripPrefix("WITH RECURSIVE ")),
+      """WITH RECURSIVE gp AS (
+        |  SELECT DISTINCT l_orderkey AS grp, l_partkey AS item FROM lineitem),
+        |e0 AS (SELECT a.item AS u, b.item AS v
+        |  FROM gp a JOIN gp b ON a.grp = b.grp AND a.item < b.item
+        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        |g AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
+        |  UNION ALL SELECT v, u FROM e0),
+        |seed AS (SELECT min(src) AS s FROM g),
+        |walk(node, d) AS (
+        |  SELECT s, 0 FROM seed
+        |  UNION ALL
+        |  SELECT g.dst, w.d + 1 FROM walk w JOIN g ON g.src = w.node
+        |  WHERE w.d < 3)
+        |SELECT node, CAST(min(d) AS BIGINT) AS hops FROM walk
+        |GROUP BY node ORDER BY node""".stripMargin.replaceAll("\\s+", " "),
 
     // Wedge pairs through ≤100-degree centers only (mirrors maxDegree);
     // endpoint degrees for Jaccard stay UNcapped. cn and the Jaccard

@@ -546,6 +546,16 @@ class PlanQualitySpec extends SparkSpec {
       s"centers must ride as literals into the codegen'd distance:\n${plan.take(400)}")
   }
 
+  test("graph reachability runs in at most 12 jobs: one edge checkpoint, three join hops") {
+    // A fixed-depth walk needs no recursion: the edge checkpoint's jobs plus
+    // one plan of three hop joins, each exchange one AQE stage job.
+    val jobs =
+      try jobsDuring(SparkEntry.queries("q_graph_reach")(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+      finally GraftSession.releaseMaterialized(spark)
+    assert(jobs <= 12, s"q_graph_reach build + noop write ran $jobs jobs")
+  }
+
   test("clustering coefficient builds the co-occurrence backbone exactly once") {
     // The quadratic collect_set + pair-explode upstream must run ONCE into
     // the shared checkpointed backbone; the final plan then derives BOTH

@@ -535,32 +535,20 @@ class AnalyticsOpsSpec extends SparkSpec {
     // of one more round is exactly ONE TakeOrdered probe job — pinned here
     // as jobs(k+Δ) − jobs(k) == Δ, which fails if any round re-derives the
     // chain through extra jobs or the probe stops materializing the frame.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val emb = (1L to 40L).map(i =>
         (i, Seq(math.cos(i * 0.37).toFloat, math.sin(i * 0.37).toFloat)))
       .toDF("vec_id", "embedding")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     def jobsFor(k: Int): Int =
-      try {
-        jobs.set(0)
-        SimilarityOps.kCenterSelect(emb, k).collect()
-        Thread.sleep(300) // listener events are async; the bus drains quickly
-        jobs.get()
-      } finally graft.GraftSession.releaseMaterialized(spark)
-    try {
-      val j5 = jobsFor(5)
-      val j9 = jobsFor(9)
-      assert(j9 - j5 == 4, s"per-round job count must be flat at 1: k=5→$j5 jobs, k=9→$j9")
-      // per-round release: the greedy leaves no persistent blocks behind
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      SimilarityOps.kCenterSelect(emb, 6).collect()
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"greedy must release its per-round frames, leaked RDDs: $leaked")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      try jobsDuring(SimilarityOps.kCenterSelect(emb, k).collect())
+      finally graft.GraftSession.releaseMaterialized(spark)
+    val j5 = jobsFor(5)
+    val j9 = jobsFor(9)
+    assert(j9 - j5 == 4, s"per-round job count must be flat at 1: k=5→$j5 jobs, k=9→$j9")
+    // per-round release: the greedy leaves no persistent blocks behind
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SimilarityOps.kCenterSelect(emb, 6).collect()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"greedy must release its per-round frames, leaked RDDs: $leaked")
   }
 
   test("kCenterGreedy guards: empty input fails clearly, n < k returns the selected prefix") {

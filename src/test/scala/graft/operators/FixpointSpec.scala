@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{GraftSession, SparkSpec}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -81,22 +80,11 @@ class FixpointSpec extends SparkSpec {
     // the round's checkpoint. A round that re-derived earlier rounds, planned
     // a second broadcast of `keep`, or needed a separate checkpoint job would
     // break the slope.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     def jobsFor(tail: Int): Int =
-      try {
-        jobs.set(0)
-        GraphOps.kCore(triangleWithTail(tail), k = 2).collect()
-        Thread.sleep(300) // listener events are async; the bus drains quickly
-        jobs.get()
-      } finally GraftSession.releaseMaterialized(spark)
-    try {
-      val (j2, j4, j8) = (jobsFor(2), jobsFor(4), jobsFor(8))
-      assert(j4 - j2 == 3 * 2 && j8 - j4 == 3 * 4,
-        s"per-round job count must be flat at 3: tail 2→$j2 jobs, 4→$j4, 8→$j8")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      try jobsDuring(GraphOps.kCore(triangleWithTail(tail), k = 2).collect())
+      finally GraftSession.releaseMaterialized(spark)
+    val (j2, j4, j8) = (jobsFor(2), jobsFor(4), jobsFor(8))
+    assert(j4 - j2 == 3 * 2 && j8 - j4 == 3 * 4,
+      s"per-round job count must be flat at 3: tail 2→$j2 jobs, 4→$j4, 8→$j8")
   }
 }

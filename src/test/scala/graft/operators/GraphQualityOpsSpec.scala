@@ -77,6 +77,40 @@ class GraphQualityOpsSpec extends SparkSpec {
     assert(k1 == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L))
   }
 
+  /** q_graph_reach over a hand-built `lineitem.parquet`: (node, hops) rows
+    * in output order, a NULL node as None. */
+  private def graphReach(lineitem: Seq[(Long, Long)]): Seq[(Option[Long], Long)] = {
+    val dir = java.nio.file.Files.createTempDirectory("graph-reach").toString
+    try {
+      lineitem.toDF("l_orderkey", "l_partkey").coalesce(1)
+        .write.parquet(s"$dir/lineitem.parquet")
+      graft.SparkEntry.queries("q_graph_reach")(spark, dir).collect().toSeq
+        .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1)))
+    } finally {
+      graft.GraftSession.releaseMaterialized(spark)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("q_graph_reach: min hops ≤ 3 from the smallest backbone node, w ≥ 2 edges only") {
+    // Every order holds exactly one part pair, so w(a, b) is the number of
+    // orders listing {a, b}; `edge` lists a pair twice (w = 2).
+    var order = 0L
+    def pair(a: Long, b: Long): Seq[(Long, Long)] = { order += 1; Seq((order, a), (order, b)) }
+    def edge(a: Long, b: Long): Seq[(Long, Long)] = pair(a, b) ++ pair(a, b)
+    val lineitem =
+      edge(1, 2) ++ edge(2, 3) ++ edge(3, 1) ++ // cycle through the seed
+      edge(1, 4) ++ edge(2, 5) ++ edge(5, 4) ++ // 4 at depth 1, again at 3 via 1-2-5-4
+      edge(1, 6) ++ edge(6, 7) ++ edge(7, 8) ++ edge(8, 9) ++ // 9 only at depth 4
+      pair(0, 1) // w = 1: no edge, so 0 is neither the seed nor reached
+    assert(graphReach(lineitem) == Seq(
+      Some(1L) -> 0L, Some(2L) -> 1L, Some(3L) -> 1L, Some(4L) -> 1L,
+      Some(5L) -> 2L, Some(6L) -> 1L, Some(7L) -> 2L, Some(8L) -> 3L))
+    // no w ≥ 2 pair: the seed is min over no edges, one (NULL, 0) row
+    assert(graphReach(Seq((1L, 10L), (1L, 20L), (2L, 20L), (2L, 30L), (3L, 40L))) ==
+      Seq(None -> 0L))
+  }
+
   test("linkPrediction scores non-adjacent pairs and excludes existing edges") {
     // square 1-2-3-4-1: diagonals (1,3) and (2,4) share two degree-2
     // neighbours → cn 2, jaccard 2/(2+2−2)=1, aa 2/ln2, ra 1; the four
