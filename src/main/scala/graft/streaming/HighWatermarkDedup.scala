@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** ST1 — keyed stateful high-watermark dedup with the reference's exact
@@ -19,16 +20,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    a later frame is dropped even when both frames share a micro-batch.
   *
   * Implemented with `flatMapGroupsWithState` — an API extension point, not
-  * planner surgery (SURVEY §4). State is one Long per key: at 100 TB-scale
-  * key cardinality this stays KB-per-million-keys in the state store. Like
-  * the reference's `task_metadata` map (app.rb:78), a key's state lives for
-  * the life of the query.
+  * planner surgery (SURVEY §4). It groups by the `task_identifier` column,
+  * so no row is deserialized before the shuffle. State is one Long per key:
+  * at 100 TB-scale key cardinality this stays KB-per-million-keys in the
+  * state store. Like the reference's `task_metadata` map (app.rb:78), a
+  * key's state lives for the life of the query.
   */
 object HighWatermarkDedup {
 
   def apply(events: DataFrame, initialWatermarkNs: Long): DataFrame = {
     val schema = events.schema
-    val keyIdx = schema.fieldIndex("task_identifier")
     val timeIdx = schema.fieldIndex("event_time")
     val frameIdx = schema.fieldIndex("frame_index")
     implicit val rowEnc: ExpressionEncoder[Row] =
@@ -37,7 +38,7 @@ object HighWatermarkDedup {
     implicit val stateEnc = Encoders.scalaLong
 
     events
-      .groupByKey((r: Row) => r.getString(keyIdx))
+      .groupBy(col("task_identifier")).as[String, Row]
       .flatMapGroupsWithState[Long, Row](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (_: String, rows: Iterator[Row], state: GroupState[Long]) =>

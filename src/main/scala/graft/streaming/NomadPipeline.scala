@@ -112,8 +112,10 @@ object NomadPipeline {
           coalesce(element_at(col("details"), "exit_code"), lit(""))))
       .withColumn("subject",
         subject(col("task_identifier"), col("event_type"), col("node_name")))
+      .withColumn("details_json", detailsJson(detailsSorted))
       .withColumn("description",
-        fencedDescription(coalesce(col("display_message"), lit("")), detailsJson(detailsSorted)))
+        fencedDescription(coalesce(col("display_message"), lit("")), col("details_json")))
+      .drop("details_json")
       .withColumn("discord_payload",
         discordPayload(col("subject"), col("description"), discordColor(col("state"))))
       .withColumn("slack_subject", slackMarkdown(col("subject")))

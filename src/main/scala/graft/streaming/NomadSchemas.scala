@@ -2,51 +2,32 @@ package graft.streaming
 
 import org.apache.spark.sql.types._
 
-/** Explicit Spark schemas for the Nomad event-stream payload — the fields the
-  * reference actually consumes (FIXTURES.md §A.1; access sites reference
-  * app.rb:119-209). `from_json` in PERMISSIVE mode ignores the rest of
-  * Nomad's (much larger) allocation payload, which is the schema-on-read
-  * spirit of the reference plus free nested-schema pruning.
+/** Explicit Spark schemas for the Nomad event-stream payload: exactly the 14
+  * fields [[NomadPipeline.taskEvents]] reads (FIXTURES.md §A.1; access sites
+  * reference app.rb:119-209). `from_json` in PERMISSIVE mode ignores every
+  * other field of Nomad's (much larger) allocation payload, so an unread
+  * field of an unexpected JSON type never drops its frame, as the
+  * reference's untyped `Hash#dig` never does.
   */
 object NomadSchemas {
 
   val taskEvent: StructType = StructType(Seq(
     StructField("Type", StringType),
     StructField("Time", LongType),               // int64 epoch NANOseconds (app.rb:154)
-    StructField("Message", StringType),
     StructField("DisplayMessage", StringType),
-    StructField("Details", MapType(StringType, StringType)),
-    StructField("FailsTask", BooleanType),
-    StructField("ExitCode", LongType),
-    StructField("Signal", LongType),
-    StructField("KillTimeout", LongType),
-    StructField("RestartReason", StringType),
-    StructField("DriverError", StringType),
-    StructField("KillReason", StringType)))
+    StructField("Details", MapType(StringType, StringType))))
 
   val taskState: StructType = StructType(Seq(
-    StructField("State", StringType),
-    StructField("Failed", BooleanType),
-    StructField("Restarts", LongType),
-    StructField("StartedAt", StringType),
-    StructField("FinishedAt", StringType),
     StructField("Events", ArrayType(taskEvent))))
 
   val allocation: StructType = StructType(Seq(
-    StructField("ID", StringType),
     StructField("Namespace", StringType),
     StructField("NodeName", StringType),
     StructField("JobID", StringType),
-    StructField("TaskGroup", StringType),
-    StructField("ClientStatus", StringType),
     StructField("TaskStates", MapType(StringType, taskState))))
 
   val streamEvent: StructType = StructType(Seq(
     StructField("Topic", StringType),
-    StructField("Type", StringType),
-    StructField("Key", StringType),
-    StructField("Namespace", StringType),
-    StructField("Index", LongType),
     StructField("Payload", StructType(Seq(
       StructField("Allocation", allocation))))))
 

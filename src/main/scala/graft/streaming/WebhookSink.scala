@@ -84,16 +84,12 @@ object WebhookSink {
   def deliver(discordUrl: Option[String], slackUrl: Option[String],
               maxRetries: Int = 0, backoffMs: Long = 100)
              (batch: DataFrame, batchId: Long): Unit = {
-    val cols = batch.columns.zipWithIndex.toMap
-    batch.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.foreach { r =>
-        discordUrl.foreach { u =>
-          postWithRetry(u, r.getString(cols("discord_payload")), maxRetries, backoffMs)
+    batch.select("discord_payload", "slack_payload").foreachPartition {
+      rows: Iterator[org.apache.spark.sql.Row] =>
+        rows.foreach { r =>
+          discordUrl.foreach(u => postWithRetry(u, r.getString(0), maxRetries, backoffMs))
+          slackUrl.foreach(u => postWithRetry(u, r.getString(1), maxRetries, backoffMs))
         }
-        slackUrl.foreach { u =>
-          postWithRetry(u, r.getString(cols("slack_payload")), maxRetries, backoffMs)
-        }
-      }
     }
   }
 }

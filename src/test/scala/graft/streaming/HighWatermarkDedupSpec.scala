@@ -1,9 +1,13 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+
+import java.nio.file.Files
 
 case class Te(task_identifier: String, event_time: Long, payload: String,
     frame_index: Long = 0L)
@@ -93,6 +97,48 @@ class HighWatermarkDedupSpec extends SparkSpec {
     q2.stop()
     val out = spark.read.parquet(outDir).select("event_time").as[Long].collect().toSeq.sorted
     assert(out == Seq(500L, 600L), s"restored state should drop <=500 in run 2, got $out")
+  }
+
+  test("a checkpoint written by the lambda-keyed dedup restores under the column-keyed one") {
+    // the earlier form of HighWatermarkDedup: the key came from a lambda
+    // over the deserialized Row (`groupByKey`), not from the column
+    def lambdaKeyed(events: DataFrame, initialWatermarkNs: Long): DataFrame = {
+      val schema = events.schema
+      val keyIdx = schema.fieldIndex("task_identifier")
+      val timeIdx = schema.fieldIndex("event_time")
+      val frameIdx = schema.fieldIndex("frame_index")
+      val rowEnc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder.encoderFor(schema))
+      events
+        .groupByKey((r: Row) => r.getString(keyIdx))(Encoders.STRING)
+        .flatMapGroupsWithState[Long, Row](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (_: String, rows: Iterator[Row], state: GroupState[Long]) =>
+            val frames = rows.toVector.groupBy(_.getLong(frameIdx)).toSeq.sortBy(_._1).map(_._2)
+            val (out, wm) = WatermarkLogic.dedupUnits[Row](frames,
+              r => if (r.isNullAt(timeIdx)) None else Some(r.getLong(timeIdx)),
+              state.getOption.getOrElse(initialWatermarkNs))
+            state.update(wm)
+            out.iterator
+        }(Encoders.scalaLong, rowEnc)
+        .toDF(schema.fieldNames.toIndexedSeq: _*)
+    }
+    val in = Files.createTempDirectory("dedup-compat-in")
+    val ckpt = Files.createTempDirectory("dedup-compat-ckpt").toString
+    val outDir = Files.createTempDirectory("dedup-compat-out").toString
+    def runOnce(dedup: (DataFrame, Long) => DataFrame, file: String, rows: Te*): Unit = {
+      Files.writeString(in.resolve(file), rows.toDF().toJSON.collect().mkString("\n"))
+      dedup(spark.readStream.schema(Encoders.product[Te].schema).json(in.toString), 0L)
+        .writeStream.format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+
+    runOnce(lambdaKeyed, "1.json", Te("a", 500L, "first", 1L))
+    runOnce(HighWatermarkDedup(_, _), "2.json",
+      Te("a", 500L, "resent", 2L), Te("a", 600L, "newer", 2L), Te("b", 100L, "new-key", 2L))
+    val out = spark.read.parquet(outDir).select("payload").as[String].collect().toSeq.sorted
+    assert(out == Seq("first", "new-key", "newer"), "the restored watermark for a is 500")
   }
 
   test("batch analog matches streaming semantics on first-batch data") {

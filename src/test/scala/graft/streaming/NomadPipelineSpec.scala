@@ -86,7 +86,7 @@ class NomadPipelineSpec extends SparkSpec {
   test("heartbeat frames split out; malformed lines dropped") {
     val data = frame(200, "default", "j", "n1", "t" -> Seq(("Started", 1L, Map.empty)))
     // PERMISSIVE `from_json` against the frame schema: a line survives iff it
-    // is a JSON object whose fields all convert (string fields take any
+    // is a JSON object whose read fields all convert (string fields take any
     // token as text); anything else is corrupt or null and dropped
     val lines = Seq(
       "{}",
@@ -97,20 +97,22 @@ class NomadPipelineSpec extends SparkSpec {
       "null",
       "\"s\"",
       """{"Index":"x","Events":[]}""",                          // mismatch, read field
-      """{"Index":9,"Events":[{"Topic":"Node","Index":"x"}]}""", // mismatch, unread field
+      """{"Index":9,"Events":[{"Topic":"Node","Index":"x"}]}""", // mismatch, unread field: kept
       """[{"Index":6,"Events":[]}]""",                          // an array of frames
       """{"Index":8}""",
       """{"Events":null}""",
       """{"Index":5,"Events":[{"Topic":1}]}""")                 // numeric Topic
     val frames = NomadPipeline.decode(lines.toDF("value"))
     val kept = frames.select(col("value"), to_json(col("frame"))).as[(String, String)].collect()
-    assert(kept.map(_._1).toSeq == Seq("{}", data, """{"Index":8}""", """{"Events":null}""",
-      """{"Index":5,"Events":[{"Topic":1}]}"""))
+    assert(kept.map(_._1).toSeq == Seq("{}", data,
+      """{"Index":9,"Events":[{"Topic":"Node","Index":"x"}]}""", """{"Index":8}""",
+      """{"Events":null}""", """{"Index":5,"Events":[{"Topic":1}]}"""))
     assert(kept.filter(_._1 != data).map(_._2).toSeq ==
-      Seq("{}", """{"Index":8}""", "{}", """{"Index":5,"Events":[{"Topic":"1"}]}"""))
+      Seq("{}", """{"Index":9,"Events":[{"Topic":"Node"}]}""", """{"Index":8}""", "{}",
+        """{"Index":5,"Events":[{"Topic":"1"}]}"""))
     assert(frames.schema("frame").dataType == NomadSchemas.frame)
     assert(NomadPipeline.heartbeats(frames).count() == 2) // `{}` and `{"Events":null}`
-    assert(frames.count() == 5) // heartbeats + data; malformed dropped
+    assert(frames.count() == 6) // heartbeats + data; malformed dropped
   }
 
   test("decode parses each line once") {
@@ -123,6 +125,50 @@ class NomadPipelineSpec extends SparkSpec {
       node.expressions.flatMap(_.collect { case _: JsonToStructs => node.nodeName }))
     assert(parses.size == 1,
       s"${parses.size} from_json calls in the optimized plan, in: ${parses.mkString(", ")}")
+  }
+
+  test("a wrong-typed field the notifier never reads keeps its frame's notification") {
+    def patched(job: String, from: String, to: String): String = {
+      val line = frame(200, "default", job, "n1",
+        "t" -> Seq(("Terminated", 1L, Map("exit_code" -> "137"))))
+      assert(line.contains(from))
+      line.replace(from, to)
+    }
+    val terminated = "\"Type\":\"Terminated\","
+    val lines = Seq(
+      patched("fails-task", terminated, terminated + "\"FailsTask\":\"yes\","),
+      patched("exit-code", terminated, terminated + "\"ExitCode\":\"137\","),
+      patched("restarts", "{\"State\":\"running\",", "{\"State\":\"running\",\"Restarts\":\"2\","),
+      patched("event-index", "\"Index\":200,\"Payload\"", "\"Index\":\"x\",\"Payload\""))
+    val out = run(lines).select("task_identifier", "state").as[(String, String)].collect()
+    assert(out.sorted.toSeq == Seq("event-index", "exit-code", "fails-task", "restarts")
+      .map(j => (s"$j.t", "failure")))
+  }
+
+  test("the stream plan parses, keys and formats only what the notifier reads") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, JsonToStructs}
+    import org.apache.spark.sql.catalyst.plans.logical.AppendColumns
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
+    // not a local relation: the optimizer would evaluate that one eagerly
+    val lines = spark.range(1).select(col("id").cast("string").as("value"))
+    val plan = NomadPipeline.stream(spark, lines, cfg, initialWatermarkNs = 0L)
+      .queryExecution.optimizedPlan
+    // the dedup keys on the task_identifier column: no per-row Row
+    // conversion before its shuffle
+    assert(plan.collect { case a: AppendColumns => a }.isEmpty, plan.treeString)
+    // the details JSON is built once per event
+    val sorts = plan.flatMap(_.expressions.flatMap(_.collect { case a: ArraySort => a }))
+    assert(sorts.size == 1, plan.treeString)
+    def structFields(t: DataType): Int = t match {
+      case s: StructType => s.fields.map(f => 1 + structFields(f.dataType)).sum
+      case a: ArrayType => structFields(a.elementType)
+      case m: MapType => structFields(m.keyType) + structFields(m.valueType)
+      case _ => 0
+    }
+    val Seq(parseSchema) =
+      plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j.schema }))
+    assert(parseSchema == StructType(NomadSchemas.frame.fields :+ StructField("_corrupt", StringType)))
+    assert(structFields(NomadSchemas.frame) == 14)
   }
 
   test("deny-then-allow precedence: denylist wins for a type in both lists") {
