@@ -28,8 +28,6 @@ object VectorFunctions {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Cosine given precomputed norms (avoids recomputing norms on the big side
     * of a pairwise join). */
   def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =

@@ -280,9 +280,8 @@ object DedupOps {
   /** The corpus side of incremental dedup as a MAINTAINED artifact:
     * `postings` = capped shingle posting lists (s → old_ids, saturated
     * shingles dropped), `sizes` = per-doc distinct-shingle counts. Both
-    * halves persist/restore as plain parquet; [[removeFromNearDupIndex]]
-    * retracts deleted docs; the `*Against` checkers join ingest batches
-    * against it. */
+    * halves persist/restore as plain parquet; the `*Against` checkers join
+    * ingest batches against it. */
   final case class NearDupIndex(postings: DataFrame, sizes: DataFrame)
 
   /** Build the [[NearDupIndex]] — one pass over the corpus, same
@@ -297,33 +296,6 @@ object DedupOps {
     val postE = exE.groupBy("s").agg(cappedIds(col("id")).as("old_ids"))
       .where(size(col("old_ids")) <= maxDf)
     NearDupIndex(postE, szE)
-  }
-
-  /** RETRACTION for the incremental-dedup corpus index: without it the
-    * index is append-only and a deleted document's postings keep
-    * suppressing new near-dups as ghosts. The removal batch aggregates to
-    * a single broadcast array (deletion batches are model-sized next to
-    * the corpus — the Bloom-blob pattern); only posting lists that
-    * actually contain a removed id are rewritten (`arrays_overlap` gate),
-    * emptied lists drop out, and the sizes table anti-joins the removals.
-    * Saturation is NOT reversible by design: a shingle dropped at build
-    * time for df > maxDf stays dropped even if deletions bring its true
-    * df under maxDf — scores remain tight lower bounds, exactly the
-    * [[ngramJaccard]] contract. */
-  def removeFromNearDupIndex(index: NearDupIndex, removedIds: DataFrame,
-                             idCol: String = "doc_id"): NearDupIndex = {
-    val rmArr = broadcast(removedIds.select(col(idCol).as("__rm_id")).distinct()
-      .agg(sort_array(collect_list(col("__rm_id"))).as("__rm")))
-    val postings = index.postings.crossJoin(rmArr)
-      .withColumn("old_ids",
-        when(arrays_overlap(col("old_ids"), col("__rm")),
-          array_except(col("old_ids"), col("__rm")))
-          .otherwise(col("old_ids")))
-      .where(size(col("old_ids")) > 0)
-      .drop("__rm")
-    val sizes = index.sizes.join(
-      broadcast(removedIds.select(col(idCol).as("id")).distinct()), Seq("id"), "left_anti")
-    NearDupIndex(postings, sizes)
   }
 
   /** Batch-vs-index candidate pairs (new_id, old_id, shared, ni, ne): the
@@ -591,39 +563,6 @@ object DedupOps {
     verifyJaccard(docs, cands, n, threshold, textCol, idCol)
   }
 
-  /** 64-bit SimHash over the token multiset: per bit, sum ±1 weighted by
-    * token occurrences; bit = sign.
-    *
-    * Plan shape: ONE NARROW MAP — per-token xxhash64 inside a `transform`
-    * lambda feeds the native `simhash64` codegen expression
-    * ([[graft.plans.SimHash64]]), which runs the 64-bit majority vote as a
-    * primitive loop per document. The original explode → 64-column
-    * conditional-sum aggregate → sign-pack formulation shuffled a 65-column
-    * partial aggregate per document; this shape has no generator, no
-    * aggregate and no exchange at all (signature build measured 3.5s → scan
-    * speed at sf0.1). Bit packing and tie-rounding are identical to the
-    * aggregate formulation (pinned in ScalaTest). */
-  def simhash(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    // fanOut before the kernel (the shingleHashed small-file-trap fix)
-    ScaleOps.fanOut(docs
-      .where(col(textCol).isNotNull) // explode() dropped null-text rows; keep that contract
-      .select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"),
-        call_function("simhash64",
-          transform(tokens(col("__t")), t => xxhash64(t))).as("simhash"))
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, candidates
-    * prefiltered by exact match on one of four 16-bit chunks (pigeonhole: any
-    * pair within Hamming 3 of 64 bits shares at least one chunk; maxHamming
-    * above 3 trades recall for speed). The banding/verify machinery is
-    * [[MultimodalOps.hammingPairs]] — one implementation of the pigeonhole
-    * invariant serves every 64-bit fingerprint family (SimHash here,
-    * perceptual dHash for images). */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    MultimodalOps.hammingPairs(simhash(docs, textCol, idCol), maxHamming,
-      idCol = "id", hashCol = "simhash")
-
   /** Exact-substring duplication stats (the Lee et al. 2021 "Deduplicating
     * Training Data" signal, position-resolved): a token position is
     * DUPLICATED when its n-gram occurs anywhere else in the corpus (another
@@ -664,7 +603,7 @@ object DedupOps {
 
   /** Connected components over near-duplicate pairs: the clustering step
     * between candidate generation ([[ngramJaccard]]/[[minhashLsh]]/
-    * [[simhashPairs]]) and canonical-document selection — every doc in a
+    * [[simhashNearDup]]) and canonical-document selection — every doc in a
     * cluster gets the cluster's minimum doc id as its label, so "keep one
     * per cluster" is a plain filter on `doc_id === cluster`.
     *

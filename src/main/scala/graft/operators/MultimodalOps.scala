@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import java.security.MessageDigest
 import scala.util.control.NonFatal
 
 /** Multimodal-column operators: image/audio/video as opaque `binary` columns
@@ -28,15 +27,6 @@ import scala.util.control.NonFatal
   * stage actually touches it (nested-schema pruning on the parquet scan).
   */
 object MultimodalOps {
-
-  /** An opaque media payload with routing metadata. */
-  final case class MediaRow(id: Long, mediaType: String, bytes: Array[Byte])
-
-  /** Extracted features; `width`/`height` are REAL decoded dimensions
-    * (0 × 0 when the payload is not a decodable image). */
-  final case class MediaFeature(
-      id: Long, mediaType: String, byteLen: Long, sha256: String,
-      width: Int, height: Int)
 
   /** A decoded raster: real dimensions plus the 8-bit grayscale plane
     * (row-major), via the integer ITU-R 601-ish luma (77R+150G+29B)>>8 —
@@ -182,9 +172,6 @@ object MultimodalOps {
     javax.imageio.ImageIO.write(img, "png", out)
     out.toByteArray
   }
-
-  private def sha256Hex(bytes: Array[Byte], md: MessageDigest): String =
-    md.digest(bytes).map("%02x".format(_)).mkString
 
   // ---------------------------------------------------------------- audio
 
@@ -620,28 +607,9 @@ object MultimodalOps {
 
   // --------------------------------------------------------- multi-frame
 
-  /** REAL frame count for multi-image containers (animated GIF; 1 for
-    * PNG/JPEG) via the JDK `ImageReader` — `getNumImages(true)` walks the
-    * container's frame directory. None when no installed reader accepts
-    * the bytes. */
-  def imageFrameCount(bytes: Array[Byte]): Option[Int] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val r = readers.next()
-          try { r.setInput(iis); Some(r.getNumImages(true)) }
-          finally r.dispose()
-        }
-      } finally iis.close()
-    } catch { case NonFatal(_) => None }
-
   /** Encode an animated grayscale GIF (one global 256-gray palette per
     * frame, lossless for 8-bit gray) via the JDK writer — the multi-frame
-    * fixture helper paired with [[imageFrameCount]]. */
+    * fixture helper for the frame-walking operators ([[frameHashes]]). */
   def encodeGrayGifFrames(width: Int, height: Int, frames: Int,
                           pixel: (Int, Int, Int) => Int): Array[Byte] = {
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
@@ -833,24 +801,6 @@ object MultimodalOps {
         col("max_hamming"))
   }
 
-  /** Per-partition feature extraction: one digest + codec context per
-    * partition, batch-shaped iteration — expensive init (digest instance,
-    * ImageIO disk cache off) amortised across the partition, and the real
-    * decoder runs where the bytes already are. Non-image payloads keep
-    * their byte-level features with 0×0 dimensions. */
-  def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeature] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      val md = MessageDigest.getInstance("SHA-256")
-      rows.map { r =>
-        val dims = decodeImage(r.bytes).map(d => (d.width, d.height)).getOrElse((0, 0))
-        MediaFeature(r.id, r.mediaType, r.bytes.length.toLong,
-          sha256Hex(r.bytes, md), dims._1, dims._2)
-      }
-    }
-  }
-
   /** Decoded-image features over a binary column: real dimensions plus the
     * aHash/dHash perceptual fingerprints, NULL columns for undecodable
     * payloads. The narrow per-partition decode pass — output is (id, flag,
@@ -876,12 +826,12 @@ object MultimodalOps {
   }
 
   /** Near-duplicate pairs over a 64-bit perceptual hash column by Hamming
-    * distance — the image analog of [[DedupOps.simhashPairs]], same
-    * pigeonhole banding: candidates must match exactly on one of four
-    * 16-bit bands (any pair within Hamming 3 shares a band; `maxHamming`
-    * above 3 trades recall for speed), then the full 64-bit Hamming
-    * verifies. Band buckets are equi-join keys — hash-distributed,
-    * AQE-splittable; nothing all-pairs.
+    * distance — pigeonhole banding (the chunk blocking of
+    * [[DedupOps.simhashNearDup]] without probes): candidates must match
+    * exactly on one of four 16-bit bands (any pair within Hamming 3
+    * shares a band; `maxHamming` above 3 trades recall for speed), then
+    * the full 64-bit Hamming verifies. Band buckets are equi-join keys —
+    * hash-distributed, AQE-splittable; nothing all-pairs.
     *
     * `alignKeys` names extra columns that must match EXACTLY for a pair to
     * be a candidate (e.g. `frame_idx` for per-frame animation alignment) —
@@ -909,41 +859,9 @@ object MultimodalOps {
       .distinct()
   }
 
-  /** REAL image resize: decode, deterministic area-average downsample
-    * ([[downsample]] — integer arithmetic, not platform-dependent
-    * Graphics2D filtering), re-encode as grayscale PNG. Payloads that do
-    * not decode pass through untouched (route them with [[sniffContainer]]
-    * first if mixing media). Per-partition map; binary in, smaller binary
-    * out, no shuffle. */
-  def resizeImages(media: Dataset[MediaRow], width: Int, height: Int): Dataset[MediaRow] = {
-    require(width > 0 && height > 0, s"target dims must be positive, got $width x $height")
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        decodeImage(r.bytes) match {
-          case Some(d) =>
-            val small = downsample(d, width, height)
-            r.copy(bytes = encodeGrayPng(width, height, (x, y) => small(y * width + x)))
-          case None => r
-        }
-      }
-    }
-  }
-
-  /** Deterministic frame sampling: every `stride`-th slice of `frameLen`
-    * bytes — the video-keyframe access pattern over an opaque payload. */
-  def sampleFrames(media: Dataset[MediaRow], frameLen: Int, stride: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      Iterator.range(0, math.max(r.bytes.length - frameLen + 1, 0), stride * frameLen)
-        .map(off => (r.id, off, r.bytes.slice(off, off + frameLen)))
-    }.toDF("id", "frame_offset", "frame_bytes")
-  }
-
   /** Column-level frame sampling: every `stride`-th `frameLen`-byte slice
-    * of a binary column, as (id, frame_offset, frame_hex) rows — the same
-    * access pattern as [[sampleFrames]] but expressed with
+    * of a binary column, as (id, frame_offset, frame_hex) rows — the
+    * video-keyframe access pattern over an opaque payload, expressed with
     * `sequence`+`explode`+`substr`, so it stays inside whole-stage codegen
     * and needs no typed serialization. Payloads shorter than one frame
     * yield no rows. The explode fan-out is bounded by payload/stride — a
@@ -970,7 +888,7 @@ object MultimodalOps {
     * big-endian uint32s at fixed offsets 16/20 — parseable without a
     * decoder). Narrow per-row map over the first 24 bytes; at 100 TB this
     * is the "route by container type" dispatch ahead of the per-format
-    * decode stage ([[extractFeatures]]'s mapPartitions pattern), and the
+    * decode stage ([[imageFeatures]]' mapPartitions pattern), and the
     * binary column's tail never leaves the scan. */
   def sniffContainer(df: DataFrame, binCol: String, idCol: String): DataFrame = {
     val hdr = upper(hex(substring(col(binCol), 1, 12))) // 24 hex chars
@@ -1020,13 +938,4 @@ object MultimodalOps {
       length(col(binCol)).cast("long").as("byte_len"),
       md5(col(binCol)).as("digest"),
       upper(hex(substring(col(binCol), 1, 8))).as("header_hex"))
-
-  /** Documents table → media dataset (text bytes standing in for an opaque
-    * payload; schema and partitioning are what's exercised). */
-  def documentsAsMedia(spark: SparkSession, docs: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    docs.select(col("doc_id").as("id"), lit("text/plain").as("mediaType"),
-        col("text").cast("binary").as("bytes"))
-      .as[MediaRow]
-  }
 }

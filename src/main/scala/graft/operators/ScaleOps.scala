@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale-technique helpers: bucketed layouts for shuffle-free co-located
-  * joins, and key salting for skewed joins. These are the knobs the engine
-  * reaches for at 100 TB when AQE alone isn't enough.
+/** Scale-technique helpers: source fan-out, Bloom-prefiltered semi
+  * joins, key salting for skewed joins and Z-order keys. These are the
+  * knobs the engine reaches for at 100 TB when AQE alone isn't enough.
   */
 object ScaleOps {
 
@@ -64,18 +64,6 @@ object ScaleOps {
         col(bigKey) === col("__sk"), "left_semi")
   }
 
-  /** Persist a DataFrame as a bucketed, sorted table. Later joins and
-    * aggregations on the bucket key read co-located partitions and skip the
-    * exchange entirely — the classic pre-shuffle trade: one write-time
-    * shuffle amortised over every subsequent query. */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int, key: String): Unit =
-    df.write
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .mode("overwrite")
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Salted equi-join for skewed keys: the skewed (big) side gets a random
     * salt in [0, saltFactor); the small side is replicated saltFactor times,
     * so one hot key fans out over saltFactor reducers instead of one.
@@ -95,12 +83,6 @@ object ScaleOps {
       .drop("__salt")
   }
 
-  /** Range-partitioned layout for time-ordered scans: repartition by range
-    * on the event-time column so downstream per-key, time-ordered windows
-    * sort locally. */
-  def timePartitioned(df: DataFrame, tsCol: Column, partitions: Int): DataFrame =
-    df.repartitionByRange(partitions, tsCol)
-
   /** Z-order (Morton) value of two keys: interleave the low `bits` bits of
     * x (even positions) and y (odd positions). Sorting/range-partitioning a
     * table by this value clusters rows that are close in BOTH dimensions
@@ -113,33 +95,4 @@ object ScaleOps {
       shiftleft(shiftright(x, i).bitwiseAND(1), 2 * i) +
         shiftleft(shiftright(y, i).bitwiseAND(1), 2 * i + 1)
     }.reduce(_ + _)
-
-  /** Hive-style partitioned layout: one directory per key value, so
-    * predicates on the partition column prune entire directories at planning
-    * time (`PartitionFilters` in the scan, zero bytes read for excluded
-    * keys) — the first defence at 100 TB. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.partitionBy(partitionCol).mode("overwrite").parquet(path)
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * ⌈bytes / targetFileBytes⌉ files. Streaming sinks and fine-grained
-    * ingest leave thousands of KB-scale files per partition; at 100 TB that
-    * turns every scan into a metadata/open() storm (one task + one footer
-    * read per file) and starves the scheduler. Compaction is the standing
-    * maintenance op every lakehouse runs (OPTIMIZE in Delta/Iceberg): one
-    * read → `coalesce` (no shuffle — files merge within existing
-    * partitions) → write to a fresh directory, swap-on-success by the
-    * caller, so readers never observe a half-written layout. Returns the
-    * output file count. */
-  def compact(spark: org.apache.spark.sql.SparkSession, srcPath: String,
-              destPath: String, targetFileBytes: Long = 128L << 20): Long = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(srcPath)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hadoopPath).getLength
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(srcPath).coalesce(nFiles)
-      .write.mode("overwrite").parquet(destPath)
-    val destHadoop = new org.apache.hadoop.fs.Path(destPath)
-    fs.listStatus(destHadoop).count(_.getPath.getName.endsWith(".parquet")).toLong
-  }
 }

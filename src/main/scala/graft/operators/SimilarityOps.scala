@@ -31,7 +31,7 @@ object SimilarityOps {
     * as ONE partition, and the block/band explodes downstream then run
     * single-task until the first shuffle) — a provable no-op at production
     * scale, see [[ScaleOps.fanOut]]. */
-  private def prepared(emb: DataFrame, vecCol: String, idCol: String): DataFrame =
+  private[operators] def prepared(emb: DataFrame, vecCol: String, idCol: String): DataFrame =
     ScaleOps.fanOut(
       emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
         .withColumn("nrm", norm(col("v"))))
@@ -100,12 +100,10 @@ object SimilarityOps {
     * exact-decimal mean. The exact arithmetic makes the fit a constant of
     * the corpus, not of the cluster layout (pinned by `DeterminismSpec`).
     * Shared by [[ivfTopK]] and [[semanticDedup]], which must agree on
-    * cell geometry; public (like [[pqFitBooks]]) so an ingest path can
-    * code new vectors against the corpus-fitted model. Expects a
-    * [[prepared]]-shaped frame — use [[fitCoarseQuantizerOf]] from raw
-    * embeddings. */
-  private def fitCoarseQuantizer(c: DataFrame, nCentroids: Int,
-                                 kmeansIters: Int): Array[(Int, Seq[Double], Double)] =
+    * cell geometry. Expects a [[prepared]]-shaped frame — [[fitIvfPq]]
+    * fits from raw embeddings. */
+  private[operators] def fitCoarseQuantizer(c: DataFrame, nCentroids: Int,
+                                            kmeansIters: Int): Array[(Int, Seq[Double], Double)] =
     fitCoarseQuantizerFromSample(fitSample(c, nCentroids), nCentroids, kmeansIters)
 
   /** The Lloyd loop of [[fitCoarseQuantizer]] over an ALREADY-collected
@@ -114,11 +112,9 @@ object SimilarityOps {
     * result (or a prefix-extending superset truncated to the right size by
     * the caller), or the fit constant changes. */
   private def fitCoarseQuantizerFromSample(sample: Array[Seq[Double]], nCentroids: Int,
-                                           kmeansIters: Int,
-                                           spreadInit: Boolean = false)
-      : Array[(Int, Seq[Double], Double)] = {
+                                           kmeansIters: Int): Array[(Int, Seq[Double], Double)] = {
     var centroids: Array[(Int, Seq[Double], Double)] =
-      initPicks(sample, nCentroids, spreadInit).zipWithIndex.map { case (v, i) =>
+      sample.take(nCentroids).zipWithIndex.map { case (v, i) =>
         (i, v, math.sqrt(v.map(x => x * x).sum))
       }
     for (_ <- 1 to kmeansIters) {
@@ -471,8 +467,8 @@ object SimilarityOps {
   /** Fit the exemplar panel ALONE: (center_id, vector, norm) in selection
     * order — bounded model metadata, the artifact a maintained core-set
     * lifecycle freezes between refits (the kCenter mirror of [[fitIvfPq]]'s
-    * models: build once, serve appends against it, re-greedy on drift via
-    * [[driftExceeds]] — CoreSetLifecycleSpec pins the discipline). */
+    * models: build once, serve appends against it, re-greedy on drift
+    * — CoreSetLifecycleSpec pins the discipline). */
   def kCenterFit(emb: DataFrame, k: Int,
                  vecCol: String = "embedding",
                  idCol: String = "vec_id"): Seq[(Long, Seq[Double], Double)] =
@@ -835,37 +831,22 @@ object SimilarityOps {
     * standalone fit would use (the lowest `256·n` ids; the shared collect is
     * the larger of the two and the smaller model takes the prefix, which is
     * the identical array because the sample is id-ordered), so the fitted
-    * models are bit-identical to [[fitCoarseQuantizerOf]] + [[pqFitBooks]]
+    * models are bit-identical to [[fitCoarseQuantizer]] + [[pqFitBooks]]
     * run separately — at half the corpus TakeOrdered passes. This is the
     * model-build entry an index pipeline calls once and shares across
     * search, coding ([[ivfPqCode]]) and evaluation ([[recallAtK]]). */
   def fitIvfPq(emb: DataFrame, nCentroids: Int = 16, nSub: Int = 4,
                nPqCentroids: Int = 16, kmeansIters: Int = 0,
-               vecCol: String = "embedding", idCol: String = "vec_id",
-               spreadInit: Boolean = false)
+               vecCol: String = "embedding", idCol: String = "vec_id")
       : (Array[(Int, Seq[Double], Double)], Array[Array[Seq[Double]]]) = {
     val p = emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
     val sample = fitSample(p, math.max(nCentroids, nPqCentroids))
     val coarse = fitCoarseQuantizerFromSample(
-      sample.take(FitSamplePerCentroid * nCentroids), nCentroids, kmeansIters, spreadInit)
+      sample.take(FitSamplePerCentroid * nCentroids), nCentroids, kmeansIters)
     val books = pqFitBooksFromSample(
-      sample.take(FitSamplePerCentroid * nPqCentroids), nSub, nPqCentroids, kmeansIters,
-      spreadInit)
+      sample.take(FitSamplePerCentroid * nPqCentroids), nSub, nPqCentroids, kmeansIters)
     (coarse, books)
   }
-
-  /** Strided init for a Lloyd fit: every (|sample|/n)-th sample vector
-    * instead of the id-prefix. Still deterministic and a constant of the
-    * corpus — but distribution-aware: when the corpus is a mix of an old
-    * and a new region (the refit scenario), prefix init seeds every
-    * centroid in whichever region owns the low ids, and Lloyd can never
-    * split the single entry that captures the other region (all its points
-    * stay nearest that one entry). Striding seeds proportionally to mass
-    * across the id range, so shifted regions get entries to refine. */
-  private def initPicks(sample: Array[Seq[Double]], n: Int,
-                        spread: Boolean): Array[Seq[Double]] =
-    if (!spread || sample.length <= n) sample.take(n)
-    else Array.tabulate(n)(i => sample((i.toLong * sample.length / n).toInt))
 
   /** [[ivfPqTopK]] against ALREADY-FITTED models — the search half of the
     * fit-once contract ([[fitIvfPq]]): an evaluation like [[recallAtK]]'s
@@ -876,24 +857,14 @@ object SimilarityOps {
                     centroids: Array[(Int, Seq[Double], Double)],
                     books: Array[Array[Seq[Double]]], nProbe: Int = 4,
                     vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val coded = ivfPqCode(corpus, centroids, books, vecCol, idCol)
-      .select(col(idCol).as("id"), col("cell"), split(col("codes"), ",").as("cs"))
-    searchCoded(coded, queries, centroids, books, k, nProbe, vecCol, idCol)
-  }
-
-  /** The probe-and-score half of IVF-PQ search over an ALREADY-CODED corpus
-    * — (id, cell, cs) rows, whether freshly coded ([[ivfPqTopKWith]]) or
-    * read back from a persisted index ([[readIvfPqIndex]]). */
-  private def searchCoded(coded: DataFrame, queries: DataFrame,
-                          centroids: Array[(Int, Seq[Double], Double)],
-                          books: Array[Array[Seq[Double]]], k: Int, nProbe: Int,
-                          vecCol: String, idCol: String): DataFrame = {
     val nCentroids = centroids.length
     require(nProbe >= 1 && nProbe <= nCentroids,
       s"nProbe must be in [1, nCentroids=$nCentroids]; got $nProbe")
     val q = prepared(queries, vecCol, idCol)
       .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
         explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
+    val coded = ivfPqCode(corpus, centroids, books, vecCol, idCol)
+      .select(col(idCol).as("id"), col("cell"), split(col("codes"), ",").as("cs"))
     val scored = coded.join(broadcast(q), Seq("cell"))
       .where(col("id") =!= col("query_id"))
       .withColumn("sim", adcSim(books, col("cs"), col("qv"), col("qnrm")))
@@ -904,142 +875,6 @@ object SimilarityOps {
       .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
         round(col("sim"), 4).as("sim"))
   }
-
-  /** Persist the IVF-PQ index CELL-PARTITIONED — one hive directory per
-    * inverted list, rows carrying only (id, code word). This is the
-    * billion-vector layout the search path assumes: the wide embedding
-    * column does not exist in the index at all (nSub bytes/vector), and
-    * because `cell` is the PARTITION column, a probe join prunes whole
-    * directories — cells outside every query's probe set are never read,
-    * not merely filtered. */
-  def writeIvfPqIndex(emb: DataFrame, centroids: Array[(Int, Seq[Double], Double)],
-                      books: Array[Array[Seq[Double]]], path: String,
-                      mode: String = "overwrite",
-                      vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
-    ivfPqCode(emb, centroids, books, vecCol, idCol)
-      .write.partitionBy("cell").mode(mode).parquet(path)
-
-  /** Search a persisted [[writeIvfPqIndex]] layout. The probe join keys on
-    * the PARTITION column with a broadcast query side, so Spark's dynamic
-    * partition pruning turns the probe set into `PartitionFilters` on the
-    * scan — at 100 TB a 4-of-√n-cell probe reads 4/√n of the index's
-    * bytes at the FILE level (pinned in `IvfIndexLayoutSpec`: the scan
-    * plans a dynamicpruning expression and the result equals the
-    * in-memory search bitwise). Models must be the pair the index was
-    * written under — fit once with [[fitIvfPq]], share across write and
-    * every search. */
-  def readIvfPqIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
-                         queries: DataFrame,
-                         centroids: Array[(Int, Seq[Double], Double)],
-                         books: Array[Array[Seq[Double]]], k: Int, nProbe: Int = 4,
-                         vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val coded = spark.read.parquet(path)
-      .select(col(idCol).as("id"), col("cell").cast("int").as("cell"),
-        split(col("codes"), ",").as("cs"))
-    searchCoded(coded, queries, centroids, books, k, nProbe, vecCol, idCol)
-  }
-
-  /** Retract vectors from a persisted [[writeIvfPqIndex]] layout — the
-    * DELETION half of index maintenance ([[writeIvfPqIndex]]'s append mode
-    * is the other half): compaction touches ONLY the inverted lists that
-    * contain a removed id. Mechanics: the removal set (broadcast — a
-    * deletion batch is model-sized next to the index) joins the index to
-    * find touched cells (≤ nCentroids rows); survivors of those cells are
-    * materialized off the files (executor-local checkpoint — plain parquet
-    * has no transactions, and Spark refuses an overwrite of a path it is
-    * reading), then written back under DYNAMIC partition overwrite, so
-    * untouched cell directories are never rewritten; a cell whose every
-    * row was removed — which dynamic overwrite alone would leave stale on
-    * disk — has its directory dropped explicitly (a driver-side metadata
-    * op over ≤ touched-cell names). Post-delete, search can never return
-    * a removed id: its rows are physically gone, not tombstoned. */
-  def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                           removedIds: DataFrame, idCol: String = "vec_id"): Unit = {
-    val idx = spark.read.parquet(path)
-    val rm = broadcast(removedIds.select(col(idCol)).distinct())
-    val touched = idx.join(rm, Seq(idCol)).select(col("cell")).distinct()
-      .ckpt(true)
-    val survivors = idx
-      .join(broadcast(touched), Seq("cell"))
-      .join(rm, Seq(idCol), "left_anti")
-      .select(col(idCol), col("codes"), col("cell"))
-      .ckpt(true)
-    // fully-emptied inverted lists: touched cells with zero survivors —
-    // bounded by the coarse-quantizer size, a metadata collect
-    val emptied = touched
-      .join(survivors.groupBy("cell").agg(count(lit(1))), Seq("cell"), "left_anti")
-      .collect().map(_.get(0))
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try survivors.write.partitionBy("cell").mode("overwrite").parquet(path)
-    finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    emptied.foreach(c =>
-      fs.delete(new org.apache.hadoop.fs.Path(hPath, s"cell=$c"), true))
-  }
-
-  /** Refit policy predicate for [[refitIvfPqIndex]]: does any dimension's
-    * mean shift between the reference distribution (what the frozen models
-    * were fitted on) and the current ingest exceed `maxShift`? Rides
-    * [[QualityOps.embeddingDrift]] (one pass over both samples, dims-sized
-    * output) and reduces to one scalar driver-side. Frozen quantizers
-    * mis-assign cells under distribution shift — recall decays silently
-    * while searches keep succeeding — so index maintenance polls this
-    * between ingest batches and triggers the refit when it fires. */
-  def driftExceeds(ref: DataFrame, cur: DataFrame, maxShift: Double,
-                   vecCol: String = "embedding"): Boolean = {
-    // an empty side yields NULL means → NULL max-shift: that is "no
-    // evidence of drift", not a crash in the polling loop
-    val row = QualityOps.embeddingDrift(ref, cur, vecCol)
-      .agg(max(col("shift"))).head()
-    !row.isNullAt(0) && row.getDouble(0) > maxShift
-  }
-
-  /** Drift-triggered REFIT: fit fresh quantizers on the CURRENT corpus and
-    * rewrite the persisted index under them — the heavyweight, rare event
-    * of the index lifecycle (vs. the per-batch stateless append of
-    * [[ivfPqCode]] and the cell-local compaction of
-    * [[deleteFromIvfPqIndex]]). The whole index is rewritten by design:
-    * new quantizer geometry can move every inverted list, so there is
-    * nothing incremental to preserve. Returns the new models — every
-    * subsequent append/search MUST use them (the old models now describe
-    * nothing on disk). The corpus is the caller's source of truth for
-    * vectors; the index never stores them. The refit fits with STRIDED
-    * init ([[initPicks]]): a refit exists precisely because the corpus
-    * distribution changed, and the default id-prefix init would seed every
-    * centroid in the old region — Lloyd can then never split the single
-    * entry that captures the drifted mass, and recall stays decayed. */
-  def refitIvfPqIndex(emb: DataFrame, path: String,
-                      nCentroids: Int = 16, nSub: Int = 4, nPqCentroids: Int = 16,
-                      kmeansIters: Int = 0, vecCol: String = "embedding",
-                      idCol: String = "vec_id")
-      : (Array[(Int, Seq[Double], Double)], Array[Array[Seq[Double]]]) = {
-    val (centroids, books) =
-      fitIvfPq(emb, nCentroids, nSub, nPqCentroids, kmeansIters, vecCol, idCol,
-        spreadInit = true)
-    // the rewrite must be a FULL overwrite: pin STATIC partition-overwrite
-    // mode for this write, because under a session-level dynamic setting
-    // mode("overwrite") only replaces cells present in the new coding — a
-    // cell emptied by the new quantizer geometry would keep its old
-    // directory, whose codes decode as garbage under the new books
-    val conf = emb.sparkSession.conf
-    val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try ivfPqCode(emb, centroids, books, vecCol, idCol)
-      .write.partitionBy("cell").mode("overwrite").parquet(path)
-    finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    (centroids, books)
-  }
-
-  /** [[fitCoarseQuantizer]] from raw embeddings — the public model-fit
-    * entry an ingest pipeline pairs with [[pqFitBooks]]. */
-  def fitCoarseQuantizerOf(emb: DataFrame, nCentroids: Int = 16,
-                           kmeansIters: Int = 0,
-                           vecCol: String = "embedding",
-                           idCol: String = "vec_id"): Array[(Int, Seq[Double], Double)] =
-    fitCoarseQuantizer(prepared(emb, vecCol, idCol), nCentroids, kmeansIters)
 
   /** The IVF-PQ WRITE path: code vectors against ALREADY-FITTED quantizers
     * — (id, inverted-list cell, PQ code word) in one narrow codegen'd pass
@@ -1110,10 +945,9 @@ object SimilarityOps {
   /** The per-subspace Lloyd loop of [[pqFitBooks]] over an ALREADY-collected
     * [[fitSample]] — same caller contract as
     * [[fitCoarseQuantizerFromSample]]. */
-  private def pqFitBooksFromSample(sample: Array[Seq[Double]], nSub: Int,
-                                   nCentroids: Int, kmeansIters: Int,
-                                   spreadInit: Boolean = false): Array[Array[Seq[Double]]] = {
-    val init = initPicks(sample, nCentroids, spreadInit)
+  private def pqFitBooksFromSample(sample: Array[Seq[Double]], nSub: Int, nCentroids: Int,
+                                   kmeansIters: Int): Array[Array[Seq[Double]]] = {
+    val init = sample.take(nCentroids)
     val dim = init.head.length
     require(dim % nSub == 0, s"dim $dim not divisible into $nSub subspaces")
     val sd = dim / nSub

@@ -326,38 +326,6 @@ object StatsOps {
         .otherwise(round(z, 6)).as("z"))
   }
 
-  /** Pre-aggregated HLL sketch rollup: one DataSketches HLL sketch of
-    * `valueCol` per `keyCols` group (Spark's built-in `hll_sketch_agg`).
-    *
-    * The sketch-table pattern for distinct counting at 100 TB: the raw
-    * history is reduced ONCE to a per-key sketch table (kilobytes per key),
-    * and any later "distinct over key range" readout merges the stored
-    * sketches instead of rescanning history — HLL registers are per-item
-    * maxima, so merge is associative, commutative, and order-independent:
-    * merging per-day sketches gives EXACTLY the sketch a direct scan of
-    * the union produces (pinned in `SketchRollupSpec`). The rollup shuffles
-    * only (key, sketch-update) partial states; raw values never cross the
-    * exchange twice. */
-  def hllRollup(df: DataFrame, keyCols: Seq[String], valueCol: String,
-                lgK: Int = 12): DataFrame = {
-    require(keyCols.nonEmpty, "hllRollup: need at least one key column")
-    df.groupBy(keyCols.map(col): _*)
-      .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("hll"),
-        count(lit(1)).as("n_rows"))
-  }
-
-  /** Distinct-count readout over a sketch table: merges the per-key HLL
-    * sketches of each `groupCols` group (`hll_union_agg`) and estimates.
-    * Scans only the (tiny) sketch table — the raw history is never touched,
-    * which is the entire point of maintaining the rollup. */
-  def hllMergedDistinct(rollup: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val merged =
-      if (groupCols.isEmpty) rollup.agg(hll_union_agg(col("hll")).as("hll"))
-      else rollup.groupBy(groupCols.map(col): _*).agg(hll_union_agg(col("hll")).as("hll"))
-    merged.withColumn("distinct_est", hll_sketch_estimate(col("hll")).cast("long"))
-      .drop("hll")
-  }
-
   /** Calibration audit (reliability diagram + expected calibration error)
     * of a probabilistic scorer against observed outcomes — the companion
     * to [[aucMannWhitney]]: AUC says whether a quality classifier RANKS
@@ -491,10 +459,9 @@ object StatsOps {
     * so all `b` resamples ride ONE scan as a ×b explode + one partial-
     * aggregated groupBy. No row-level resample shuffle exists at any
     * scale. (The column-wise form — 2b agg columns, no row blow-up —
-    * looks cheaper on paper but measures ~4× SLOWER fully evaluated: the
-    * 2b+2-expression aggregate falls out of whole-stage codegen; kept as
-    * [[bootstrapCiColumnar]] with the parity pin. See ARCHITECTURE
-    * "q_bootstrap_ci attribution".)
+    * looks cheaper on paper but measured ~4× SLOWER fully evaluated: the
+    * 2b+2-expression aggregate falls out of whole-stage codegen. See
+    * ARCHITECTURE "q_bootstrap_ci attribution".)
     *
     * Determinism: the weight is a pure function of (id, replica) — a
     * 32-bit md5 uniform compared against frozen integer
@@ -552,51 +519,5 @@ object StatsOps {
         round(col("sv").cast("double") / col("n") / 100.0, 6).as("mean"),
         round(element_at(col("ms"), least(lit(kLo), col("nr")).cast("int")), 6).as("ci_lo"),
         round(element_at(col("ms"), least(lit(kHi), col("nr")).cast("int")), 6).as("ci_hi"))
-  }
-
-  /** The COLUMN-WISE form of [[bootstrapCi]]: each replica is two agg
-    * columns (Σw·cv, Σw) of ONE groupBy(key) — no ×b row blow-up, no
-    * join. Measured and REJECTED as the public form: fully evaluated it
-    * runs ~4× slower than the explode form (5.7 s vs 1.3 s at sf0.1
-    * b=64) because the 2b+2-expression HashAggregate falls out of
-    * whole-stage codegen, while the exploded plan keeps one narrow
-    * codegen'd weight expression per row. (A count()-based A/B picks the
-    * WRONG winner here — ColumnPruning deletes the unused agg columns;
-    * the A/B was measured with a noop write for this reason.)
-    * Kept private as the measured alternative and bitwise-parity anchor
-    * (AnalyticsOpsSpec "bootstrap forms agree"). */
-  private[graft] def bootstrapCiColumnar(df: DataFrame, keyCol: Column, valCol: Column,
-                                         idCol: Column, b: Int = 32,
-                                         loPct: Double = 0.025,
-                                         hiPct: Double = 0.975): DataFrame = {
-    require(b >= 2, s"need at least 2 replicas, got $b")
-    require(loPct > 0 && hiPct < 1 && loPct < hiPct,
-      s"percentiles must satisfy 0 < lo < hi < 1, got ($loPct, $hiPct)")
-    val cents = round(valCol * 100).cast("long")
-    val base = ScaleOps.fanOut(df.where(valCol.isNotNull)
-      .select(keyCol.as("k"), cents.as("cv"), idCol.cast("string").as("rid")))
-    def weight(rep: Int): Column =
-      call_function("poisson_w", concat(col("rid"), lit(":"), lit(rep)))
-    val aggCols = (0 until b).flatMap { r =>
-      val w = weight(r)
-      Seq(sum(w * col("cv")).as(s"sv$r"), sum(w).as(s"sw$r"))
-    } ++ Seq(count(lit(1)).as("n"), sum(col("cv")).as("sv"))
-    val perK = base.groupBy(col("k")).agg(aggCols.head, aggCols.tail: _*)
-    // replica means as a bounded array; sw=0 replicas drop out before the
-    // order statistic (the NULL filter), mirroring the exploded form's
-    // WHERE sw > 0
-    val ms = array_sort(filter(
-      array((0 until b).map(r =>
-        when(col(s"sw$r") > 0,
-          col(s"sv$r").cast("double") / col(s"sw$r") / 100.0)): _*),
-      m => m.isNotNull))
-    val kLo = math.max(1, math.floor(loPct * b).toInt)
-    val kHi = math.min(b, math.ceil(hiPct * b).toInt)
-    perK
-      .withColumn("ms", ms)
-      .select(col("k"), col("n"),
-        round(col("sv").cast("double") / col("n") / 100.0, 6).as("mean"),
-        round(element_at(col("ms"), least(lit(kLo), size(col("ms")))), 6).as("ci_lo"),
-        round(element_at(col("ms"), least(lit(kHi), size(col("ms")))), 6).as("ci_hi"))
   }
 }

@@ -336,9 +336,9 @@ object TextOps {
     * symbol), then the merge list applies in rank order, each merge a
     * global leftmost-nonoverlapping literal replace — the rank-greedy
     * application order of the BPE literature (Sennrich 2016; GPT-2's
-    * per-word loop realizes the same rank precedence). Everything is a
-    * chain of codegen'd string expressions: a narrow per-row map with no
-    * shuffle, no UDF, and the merge table folded into the plan as
+    * per-word loop realizes the same rank precedence). One native
+    * expression ([[graft.plans.BpeMerger]]) runs it: a narrow per-row map
+    * with no shuffle, no UDF, and the merge table folded into the plan as
     * literals — the broadcast-a-model-artifact shape at any scale.
     * Emits the symbolized text and the post-merge symbol count.
     */
@@ -349,8 +349,8 @@ object TextOps {
     // r12 10× stress probe priced the chain at a merges-count constant
     // (8.1× ratio / 15.2 s at 10× data for 10 merges). Semantic parity
     // with the chain is exact on sep-free text (pinned by a randomized
-    // property against [[bpeApplyChainColumn]] AND by the unchanged
-    // chain-formulation DuckDB oracle).
+    // property against the chain, BpeMergerProperties, AND by the
+    // unchanged chain-formulation DuckDB oracle).
     val flat = sep +: merges.flatMap { case (a, b) => Seq(a, b) }
     val clean = call_function("bpe_apply", col(textCol), array(flat.map(lit): _*))
     docs
@@ -386,29 +386,6 @@ object TextOps {
       .select(col("lang"), col("n_docs"),
         round(col("ss").cast("double") / col("swd"), 6).as("fertility"),
         round(col("sb").cast("double") / col("ss"), 6).as("bytes_per_symbol"))
-  }
-
-  /** The original replace-CHAIN formulation of BPE application, kept as the
-    * independent reference the native [[graft.plans.BpeMerger]] is
-    * property-tested against (and the formulation the DuckDB oracle still
-    * runs): sep-wrap every word so merge patterns anchor on whole-symbol
-    * boundaries — an unpadded 'a·b' pattern would also match where a is
-    * the SUFFIX of a longer symbol ('the·s' contains 'e·s') — then one
-    * global leftmost-nonoverlapping literal replace per merge in rank
-    * order, then strip the wrapping separators. */
-  private[graft] def bpeApplyChainColumn(textCol: Column,
-                                         merges: Seq[(String, String)],
-                                         sep: String = "·"): Column = {
-    val wrapped = regexp_replace(
-      regexp_replace(textCol, "(\\S)", "$1" + sep),
-      "(^| )", "$1" + sep)
-    val merged = merges.foldLeft(wrapped) { case (acc, (a, b)) =>
-      call_function("replace", acc,
-        lit(sep + a + sep + b + sep), lit(sep + a + b + sep))
-    }
-    regexp_replace(
-      regexp_replace(merged, sep + "( |$)", "$1"),
-      "(^| )" + sep, "$1")
   }
 
   /** PMI collocation mining — pointwise mutual information of adjacent

@@ -82,12 +82,6 @@ final class AhoCorasick private (
     new GenericArrayData(res)
   }
 
-  /** Test/REPL convenience over JVM strings. */
-  def matched(s: String): Seq[String] = {
-    val arr = matchArray(UTF8String.fromString(s))
-    Seq.tabulate(arr.numElements())(i => arr.getUTF8String(i).toString)
-  }
-
   /** Every occurrence of every dictionary phrase in `text`, as (pos, id)
     * pairs sorted by (pos, id) — pos is the 1-BASED BYTE offset of the
     * occurrence start (byte = the scale-correct unit: no per-row decode;

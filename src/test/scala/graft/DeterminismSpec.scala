@@ -48,10 +48,9 @@ class DeterminismSpec extends SparkSpec {
     // sample with exact-decimal means — the fitted model must be a constant
     // of the corpus SET, not of how the scan happens to be partitioned.
     def fits(nParts: Int) = {
-      val e = emb.repartition(nParts)
-      (SimilarityOps.fitCoarseQuantizerOf(e, nCentroids = 8, kmeansIters = 2).toSeq,
-        SimilarityOps.pqFitBooks(e, nSub = 4, nCentroids = 8, kmeansIters = 2)
-          .map(_.toSeq).toSeq)
+      val (coarse, books) = SimilarityOps.fitIvfPq(emb.repartition(nParts),
+        nCentroids = 8, nSub = 4, nPqCentroids = 8, kmeansIters = 2)
+      (coarse.toSeq, books.map(_.toSeq).toSeq)
     }
     val (coarse8, books8) = fits(8)
     val (coarse32, books32) = fits(32)

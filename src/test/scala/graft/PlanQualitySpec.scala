@@ -641,22 +641,53 @@ class PlanQualitySpec extends SparkSpec {
 
   test("simhash signature build has no keyed exchange and the chunk join is an equi-join") {
     import graft.operators.DedupOps
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // simhashNearDup checkpoints its candidate pairs before the verify join,
+    // so the gate reads the plan of that checkpoint's own execution
+    val executions = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def isSignature(p: SparkPlan) = p match {
+      case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[graft.plans.SimHash64]))
+      case _ => false
+    }
+    spark.listenerManager.register(listener)
+    val cands = try {
+      DedupOps.simhashNearDup(t.documents, n = 4, threshold = 0.5, chunks = 4, probeBits = 2)
+      Iterator.continually(executions.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(qe => Option(qe).getOrElse(fail("the candidate checkpoint was never reported")))
+        .map(_.executedPlan).find(aqe.find(_)(isSignature).isDefined).get
+    } finally spark.listenerManager.unregister(listener)
     // signature: one narrow codegen'd map — no generator, no aggregate. The
     // one permitted exchange is the ROUND-ROBIN fan-out ahead of the kernel
     // (ScaleOps.fanOut, the small-file-trap mitigation, a no-op at
     // production scale); key-based repartitionings stay forbidden.
-    val sigs = DedupOps.simhash(t.documents)
-    val sigPlan = sigs.queryExecution.executedPlan.toString
-    for (bad <- Seq("hashpartitioning", "rangepartitioning", "Generate", "Aggregate"))
-      assert(!sigPlan.contains(bad), s"simhash signature build plan contains $bad:\n$sigPlan")
-    assert("Exchange".r.findAllIn(sigPlan).size ==
-      "Exchange RoundRobinPartitioning".r.findAllIn(sigPlan).size,
-      s"simhash signature build shuffles by more than the round-robin fan-out:\n$sigPlan")
+    val sigs = aqe.collect(cands) { case p if isSignature(p) => p }
+    sigs.foreach { sig =>
+      val nodes = aqe.collect(sig) { case n => n }
+      assert(!nodes.exists(n => n.isInstanceOf[GenerateExec] || n.isInstanceOf[BaseAggregateExec]),
+        s"simhash signature build has a generator or an aggregate:\n$sig")
+      assert(nodes.forall {
+        case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => true
+      }, s"simhash signature build shuffles by more than the round-robin fan-out:\n$sig")
+    }
     // candidate pairs: chunk-keyed equi-join, never a cross product
-    val pairs = DedupOps.simhashPairs(t.documents)
-    val plan = pairs.queryExecution.executedPlan.toString
+    val plan = cands.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"simhash chunk join degenerated:\n$plan")
+    assert(aqe.find(cands)(p => p.isInstanceOf[HashJoin] || p.isInstanceOf[SortMergeJoinExec])
+      .isDefined, s"simhash chunk join is not an equi-join:\n$plan")
   }
 
   test("token masking is a narrow per-row map: no shuffle") {

@@ -14,19 +14,30 @@ import org.scalatest.funsuite.AnyFunSuite
   * its bound; a new `.collect()` anywhere else fails the build.
   *
   * Reachability: every top-level type serves a product path (the batch
-  * registry, the notifier pipeline, the mains, the benchmark harness), so
-  * code kept only for its own spec fails the build.
+  * registry, the notifier pipeline, the mains, the benchmark harness), and
+  * so does every member of the batch library, so code kept only for its
+  * own spec fails the build.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
 
+  // Comments are blanked (a scaladoc "Heartbeat frames" is no caller);
+  // string and char literals are matched first so a `//` inside one stays.
+  private val lexeme =
+    """"{3}[\s\S]*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/""".r
+  /** Source text with comments blanked, and literals too when `literals`. */
+  private def code(p: Path, literals: Boolean = false): String =
+    lexeme.replaceAllIn(Files.readString(p), m =>
+      if (literals || m.matched.startsWith("/")) " "
+      else java.util.regex.Matcher.quoteReplacement(m.matched))
+  private def scalaFiles(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+
   // file (relative to src/main/scala/graft) -> (expected site count, bound)
   private val allowed = Map(
     "operators/SimilarityOps.scala" ->
-      (5, "k-means fit sample (≤ 256·nCentroids vectors by construction); " +
-        "index-deletion emptied-cell list (≤ nCentroids touched cells); " +
-        "drift-refit predicate (1-row max-shift scalar); " +
+      (3, "k-means fit sample (≤ 256·nCentroids vectors by construction); " +
         "marginMine broadcast-budget crossover (1-row count+dim scalar); " +
         "kCenterSelect per-round argmax, the seed's round included (1 bounded " +
         "row × k ≤ 128 rounds — the selected set IS the model)"),
@@ -79,14 +90,6 @@ class SourceAuditSpec extends AnyFunSuite {
   }
 
   test("every top-level type in src/main is reachable from a product root") {
-    // Comments are blanked (a scaladoc "Heartbeat frames" is no caller);
-    // string and char literals are matched first so a `//` inside one stays.
-    val lexeme =
-      """"{3}[\s\S]*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/""".r
-    def code(p: Path): String = lexeme.replaceAllIn(Files.readString(p), m =>
-      if (m.matched.startsWith("/")) " " else java.util.regex.Matcher.quoteReplacement(m.matched))
-    def scalaFiles(dir: Path): Seq[Path] =
-      Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     val decl = ("""(?m)^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|""" +
       """abstract\s+|case\s+|implicit\s+)*(?:class|object|trait)\s+(\w+)""").r
     def declared(src: String): Set[String] = decl.findAllMatchIn(src).map(_.group(1)).toSet
@@ -106,7 +109,7 @@ class SourceAuditSpec extends AnyFunSuite {
       .iterator().asScala.flatMap(p => Files.readAllLines(p).asScala)
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split('.').last)
     var reached = services.toSet ++ rootFiles.flatMap(f => declared(files(f)))
-    var texts = scalaFiles(Paths.get("perfbench/scala")).map(code)
+    var texts = scalaFiles(Paths.get("perfbench/scala")).map(code(_))
     var scanned = Set.empty[String]
     var grew = true
     while (grew) {
@@ -127,5 +130,52 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(unreached.isEmpty,
       s"top-level types no product root reaches (call them from a product " +
         s"path or delete them):\n  ${unreached.mkString("\n  ")}")
+  }
+
+  // library member -> why it stays without a product caller
+  private val testedReferences = Map(
+    "VectorFunctions.dotBuiltin" ->
+      "the built-in formulation the native vec_dot kernel is tested against",
+    "VectorFunctions.hyperplaneBitsBuiltin" ->
+      "the built-in formulation the native vec_lsh_bits kernel is tested against",
+    "MultimodalOps.encodePcmWavJdk" ->
+      "the JDK-writer reference encodePcmWav is byte-exact against",
+    "GraphOps.pageRankBroadcast" ->
+      "pins the broadcast side of pageRank's size crossover",
+    "GraphOps.pageRankPartitioned" ->
+      "pins the partitioned side of pageRank's size crossover")
+
+  test("every library member in operators/, functions/ and plans/ has a product caller") {
+    // A member is a `def`, `class` or `case class` at two-space indent (the
+    // members of a top-level object or class) that is not an override. It is
+    // reached when its name appears as a word in src/main or perfbench/scala
+    // outside its own declaration. Literals are blanked too, so
+    // `col("simhash")` names a column, not a DedupOps.simhash. Deleting a
+    // member can orphan its helpers: delete until the list is empty.
+    val texts = (scalaFiles(root) ++ scalaFiles(Paths.get("perfbench/scala")))
+      .map(p => p -> code(p, literals = true))
+    val decl = ("""(?m)^  (?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|""" +
+      """abstract\s+|implicit\s+|lazy\s+|@\w+\s+)*(?:case\s+)?(?:def|class)\s+(\w+)""").r
+    val library = Seq("operators", "functions", "plans").map(root.resolve)
+    val members = texts.filter { case (p, _) => library.exists(p.startsWith) }
+      .flatMap { case (p, src) =>
+        val owner = p.getFileName.toString.stripSuffix(".scala")
+        decl.findAllMatchIn(src).map(m => s"$owner.${m.group(1)}" -> m.group(1))
+      }
+    val unreached = members.filterNot { case (_, n) =>
+      val own = s"""\\b(?:def|class)\\s+$n\\b""".r
+      val word = s"""\\b$n\\b""".r
+      texts.exists { case (_, t) =>
+        word.findFirstIn(t).isDefined && word.findFirstIn(own.replaceAllIn(t, " ")).isDefined
+      }
+    }.map(_._1).toSet
+
+    val orphans = (unreached -- testedReferences.keySet).toSeq.sorted
+    assert(orphans.isEmpty,
+      s"library members no product path calls (call them from a product " +
+        s"path or delete them):\n  ${orphans.mkString("\n  ")}")
+    val stale = (testedReferences.keySet -- unreached).toSeq.sorted
+    assert(stale.isEmpty, s"allowlisted members that now have a product caller " +
+      s"(drop them from the allowlist): ${stale.mkString(", ")}")
   }
 }

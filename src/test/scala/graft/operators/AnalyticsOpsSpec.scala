@@ -484,23 +484,6 @@ class AnalyticsOpsSpec extends SparkSpec {
       s"a 200-row half-half mix cannot bootstrap anywhere near the extremes: $m")
   }
 
-  test("bootstrap forms agree: columnar alternative is bitwise the public exploded form") {
-    import org.apache.spark.sql.functions.col
-    // the measured-rejected columnar form (r14 attribution experiment —
-    // see StatsOps.bootstrapCiColumnar) must remain a pure plan change:
-    // same hash inputs, same frozen thresholds, same order statistic —
-    // pinned bitwise on a multi-group frame with skewed group sizes
-    // (incl. a 3-row group whose small-n edge exercises the
-    // sw=0-replica drop path most plausibly)
-    val df = ((1 to 97).map(i => ("big", (i % 13).toDouble, i.toLong)) ++
-      (1 to 3).map(i => ("tiny", i * 2.0, 1000L + i))).toDF("k", "v", "id")
-    val exploded = StatsOps.bootstrapCi(df, col("k"), col("v"), col("id"), b = 32)
-      .as[(String, Long, Double, Double, Double)].collect().toSet
-    val colwise = StatsOps.bootstrapCiColumnar(df, col("k"), col("v"), col("id"), b = 32)
-      .as[(String, Long, Double, Double, Double)].collect().toSet
-    assert(colwise == exploded, s"forms diverged: ${(colwise diff exploded) ++ (exploded diff colwise)}")
-  }
-
   test("kCenterSelect replays the hand-computed farthest-point greedy") {
     // seed = lowest id (1); round 1 picks the opposite vector (dist 20000),
     // round 2 the orthogonal one (min-dist 10000); the near-duplicate of

@@ -10,6 +10,24 @@ import graft.operators.MultimodalOps._
 class AudioDecodeSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Frame count of a multi-image container via the JDK `ImageReader`
+    * (`getNumImages(true)` walks the frame directory); None when no
+    * installed reader accepts the bytes. */
+  private def imageFrameCount(bytes: Array[Byte]): Option[Int] =
+    scala.util.Try {
+      val iis = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try {
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) None
+        else {
+          val r = readers.next()
+          try { r.setInput(iis); Some(r.getNumImages(true)) }
+          finally r.dispose()
+        }
+      } finally iis.close()
+    }.toOption.flatten
+
   test("WAV encode→decode roundtrip recovers exact 16-bit samples, rate, channels") {
     val samples = Array.tabulate(100)(i => (i * 31) % 2003 - 1001)
     val wav = encodePcmWav(8000, 1, samples)

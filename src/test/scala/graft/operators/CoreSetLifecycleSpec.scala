@@ -4,13 +4,13 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The core-set (k-center exemplar panel) as a MAINTAINED artifact, not a
-  * one-shot query — mirroring `IndexLifecycleSpec`'s build/serve/refit
-  * discipline for the IVF index: fit the panel once ([[SimilarityOps.
-  * kCenterFit]]), assign streamed appends against the FROZEN panel through
-  * the same codegen argmin the batch path uses ([[SimilarityOps.
-  * kCenterAssignWith]] is a pure projection, so it runs unchanged on a
-  * streaming frame), and re-greedy when [[SimilarityOps.driftExceeds]]
-  * fires — the coverage radius the panel exists to bound recovers.
+  * one-shot query: fit the panel once ([[SimilarityOps.kCenterFit]]),
+  * assign streamed appends against the FROZEN panel through the same
+  * codegen argmin the batch path uses ([[SimilarityOps.kCenterAssignWith]]
+  * is a pure projection, so it runs unchanged on a streaming frame), and
+  * re-greedy when the per-dimension mean shift of
+  * [[QualityOps.embeddingDrift]] exceeds a bound — the coverage radius the
+  * panel exists to bound recovers.
   */
 class CoreSetLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -59,7 +59,7 @@ class CoreSetLifecycleSpec extends SparkSpec {
     val rnd = new scala.util.Random(79)
     // base corpus lives in the FIRST half of the space (per-dim mean ~1
     // there), drifted ingest in the second — the per-dimension MEAN moves
-    // by ~1 (what driftExceeds measures) and a frozen panel fitted on base
+    // by ~1 (what embeddingDrift measures) and a frozen panel fitted on base
     // covers drifted rows badly (near-orthogonal support)
     def baseVec() = Array.tabulate(12)(i => if (i < 6) 0.5f + rnd.nextFloat() else 0.02f * rnd.nextFloat())
     def driftVec() = Array.tabulate(12)(i => if (i >= 6) 0.5f + rnd.nextFloat() else 0.02f * rnd.nextFloat())
@@ -68,11 +68,11 @@ class CoreSetLifecycleSpec extends SparkSpec {
 
     val frozen = SimilarityOps.kCenterFit(base, k = 6)
 
-    // the lifecycle's trigger: the same drift probe the IVF index uses
-    assert(SimilarityOps.driftExceeds(base, drifted, maxShift = 0.5),
-      "constructed drift must trip the refit trigger")
-    assert(!SimilarityOps.driftExceeds(base, base, maxShift = 0.5),
-      "no false trigger without drift")
+    // the lifecycle's trigger: the largest per-dimension mean shift
+    def maxShift(cur: org.apache.spark.sql.DataFrame): Double =
+      QualityOps.embeddingDrift(base, cur).agg(max(col("shift"))).head().getDouble(0)
+    assert(maxShift(drifted) > 0.5, "constructed drift must trip the refit trigger")
+    assert(maxShift(base) <= 0.5, "no false trigger without drift")
 
     def coverage(panel: Seq[(Long, Seq[Double], Double)]): (Long, Long) = {
       val r = SimilarityOps.kCenterAssignWith(drifted, panel)

@@ -147,19 +147,4 @@ class ImageDecodeSpec extends SparkSpec {
     assert(pairs.map(p => (p._1, p._2)) == Seq((1L, 2L)),
       s"expected only the perturbed pair, got $pairs")
   }
-
-  test("resizeImages really decodes, area-averages, and re-encodes a valid PNG") {
-    def pix(x: Int, y: Int) = x * 16 + y * 32
-    val media = Seq(
-      MediaRow(1L, "image/png", encodeGrayPng(8, 4, pix)),
-      MediaRow(2L, "text/plain", "untouched".getBytes("UTF-8"))).toDS()
-    val out = resizeImages(media, 4, 2).collect().sortBy(_.id)
-    val resized = decodeImage(out(0).bytes).get
-    assert(resized.width == 4 && resized.height == 2)
-    // expected = integer mean of each 2×2 box of the source raster
-    val src = decodeImage(encodeGrayPng(8, 4, pix)).get
-    assert(resized.gray.toSeq == downsample(src, 4, 2).toSeq)
-    // non-image passes through byte-identical
-    assert(new String(out(1).bytes, "UTF-8") == "untouched")
-  }
 }

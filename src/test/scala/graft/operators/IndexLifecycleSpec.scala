@@ -1,225 +1,12 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
-/** The maintenance half of the index lifecycle: deletion/retraction for
-  * both the persisted IVF-PQ ANN index and the incremental-dedup corpus
-  * index, and the drift-triggered refit that closes the loop
-  * (build → append → drift → refit, with retraction throughout).
+/** The incremental-dedup corpus index: [[DedupOps.buildNearDupIndex]]
+  * and the checkers that probe it agree with the one-shot batch pipeline.
   */
 class IndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
-
-  test("IVF-PQ deletion: removed ids gone from search, only touched cells rewritten, emptied cell dropped") {
-    val rnd = new scala.util.Random(47)
-    val emb = (0 until 96).map(i => (i.toLong, Array.fill(16)(rnd.nextFloat() * 2 - 1)))
-      .toDF("vec_id", "embedding")
-    val (centroids, books) = SimilarityOps.fitIvfPq(emb, nCentroids = 8, nSub = 4,
-      nPqCentroids = 8, kmeansIters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-delete").toString
-    SimilarityOps.writeIvfPqIndex(emb, centroids, books, dir)
-
-    // choose removals: every member of one cell (to exercise the
-    // emptied-directory path) plus two members of another (partial)
-    val byCell = SimilarityOps.ivfPqCode(emb, centroids, books)
-      .select(col("vec_id"), col("cell").cast("int")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1))
-    val cells = byCell.groupBy(_._2).view.mapValues(_.map(_._1).toSeq).toMap
-    val emptiedCell = cells.minBy { case (c, ids) => (ids.size, c) }._1
-    val partialCell = cells.keys.filter(_ != emptiedCell).min
-    val removed = cells(emptiedCell) ++ cells(partialCell).take(2)
-    assert(removed.nonEmpty && cells(partialCell).size > 2, "need a partial survivor cell")
-
-    def cellFiles(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles().filter(_.getName.startsWith("cell="))
-        .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    val before = cellFiles()
-
-    SimilarityOps.deleteFromIvfPqIndex(spark, dir, removed.toDF("vec_id"))
-
-    val after = cellFiles()
-    // the fully-emptied inverted list's directory is gone
-    assert(!after.contains(s"cell=$emptiedCell"), s"cell=$emptiedCell must be dropped")
-    // the partially-touched cell was rewritten; every untouched cell's
-    // files are byte-for-byte the same objects (names unchanged)
-    assert(after(s"cell=$partialCell") != before(s"cell=$partialCell"))
-    before.keys.filter(c => c != s"cell=$emptiedCell" && c != s"cell=$partialCell")
-      .foreach(c => assert(after(c) == before(c), s"untouched $c must not be rewritten"))
-
-    // search can never return a removed id, and equals a from-scratch
-    // search over the surviving corpus under the same models
-    val survivors = emb.where(!col("vec_id").isin(removed: _*))
-    val queries = emb.where(col("vec_id") < 4)
-    val fromIndex = SimilarityOps.readIvfPqIndexTopK(spark, dir, queries,
-      centroids, books, k = 5, nProbe = 8).collect().toSet
-    assert(fromIndex.forall(r => !removed.contains(r.getLong(1))),
-      "deleted ids must never surface in search results")
-    val rebuilt = SimilarityOps.ivfPqTopKWith(survivors, queries, k = 5,
-      centroids, books, nProbe = 8).collect().toSet
-    assert(fromIndex == rebuilt, "post-delete index search must equal surviving-corpus search")
-  }
-
-  test("drift-triggered refit: frozen models decay recall on drifted ingest; refit restores it") {
-    val rnd = new scala.util.Random(53)
-    def vec() = Array.fill(16)(rnd.nextFloat() * 2 - 1)
-    val base = (0 until 64).map(i => (i.toLong, vec()))
-    // drifted ingest: 12 sibling groups of 4 near-identical vectors in a
-    // shifted region — each group member's TRUE neighbors are its three
-    // siblings by a wide cosine margin, so recall is a sharp signal, not a
-    // tie-break among near-identical candidates
-    val seeds = (0 until 12).map(_ => vec().map(_ + 4f))
-    val drifted = for (g <- 0 until 12; m <- 0 until 4) yield
-      (1000L + g * 4 + m, seeds(g).map(v => v + (rnd.nextFloat() - 0.5f) * 0.05f))
-    val baseDf = base.toDF("vec_id", "embedding")
-    val driftedDf = drifted.toDF("vec_id", "embedding")
-    val union = (base ++ drifted).toDF("vec_id", "embedding")
-
-    // fit on the base distribution, build, then append the drifted batch
-    // with FROZEN models — the silent-decay scenario
-    val (c0, b0) = SimilarityOps.fitIvfPq(baseDf, nCentroids = 8, nSub = 8,
-      nPqCentroids = 32, kmeansIters = 4)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-refit").toString
-    SimilarityOps.writeIvfPqIndex(baseDf, c0, b0, dir)
-    SimilarityOps.writeIvfPqIndex(driftedDf, c0, b0, dir, mode = "append")
-
-    // the drift signal fires exactly when the distribution moved
-    assert(SimilarityOps.driftExceeds(baseDf, driftedDf, maxShift = 1.0))
-    assert(!SimilarityOps.driftExceeds(baseDf, baseDf, maxShift = 1.0))
-
-    def meanRecall(cs: Array[(Int, Seq[Double], Double)],
-                   bs: Array[Array[Seq[Double]]]): Double = {
-      val queries = union.where(col("vec_id") >= 1000L && col("vec_id") % 4 === 0)
-      val approx = SimilarityOps.readIvfPqIndexTopK(spark, dir, queries, cs, bs,
-        k = 3, nProbe = 2)
-      val exact = SimilarityOps.bruteForceTopK(union, queries, k = 3)
-      SimilarityOps.recallAtK(approx, exact, k = 3)
-        .agg(avg("recall")).head().getDouble(0)
-    }
-    val decayed = meanRecall(c0, b0)
-
-    // refit on the CURRENT corpus and rewrite; search with the new models
-    val (c1, b1) = SimilarityOps.refitIvfPqIndex(union, dir, nCentroids = 8,
-      nSub = 8, nPqCentroids = 32, kmeansIters = 4)
-    val restored = meanRecall(c1, b1)
-    assert(restored > decayed,
-      s"refit must improve drifted-probe recall: decayed=$decayed restored=$restored")
-    assert(restored >= 0.8, s"post-refit recall should be healthy, got $restored")
-  }
-
-  test("near-dup index retraction: deleted docs stop suppressing new near-dups as ghosts") {
-    val existing = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four five six")).toDF("doc_id", "text")
-    val incoming = Seq(
-      (10L, "alpha beta gamma delta epsilon eta"), // near-dup of doc 1
-      (11L, "totally different tokens here now")).toDF("doc_id", "text")
-
-    val index = DedupOps.buildNearDupIndex(existing, n = 3, maxDf = 100)
-    // the maintained-index checker matches the one-shot formulation exactly
-    val oneShot = DedupOps.incrementalNearDup(existing, incoming, n = 3, threshold = 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaIndex = DedupOps.incrementalNearDupAgainst(index, incoming, n = 3, threshold = 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(oneShot == viaIndex && viaIndex == Set((10L, 1L)))
-
-    // retract doc 1: the ghost match disappears; doc 2's postings survive
-    val compacted = DedupOps.removeFromNearDupIndex(index, Seq(1L).toDF("doc_id"))
-    val postDelete = DedupOps.incrementalNearDupAgainst(compacted, incoming, n = 3,
-      threshold = 0.4).collect()
-    assert(postDelete.isEmpty, s"deleted doc must not match: ${postDelete.toSeq}")
-    assert(compacted.sizes.as[(Long, Long)].collect().toMap.keySet == Set(2L))
-    // untouched posting lists pass through structurally unchanged
-    assert(compacted.postings.where(array_contains(col("old_ids"), 1L)).count() == 0)
-    val incomingDup2 = Seq((12L, "one two three four five seven")).toDF("doc_id", "text")
-    val still = DedupOps.incrementalNearDupAgainst(compacted, incomingDup2, n = 3,
-      threshold = 0.4).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(still == Seq((12L, 2L)), "surviving docs must still match")
-  }
-
-  test("driftExceeds: empty samples mean no evidence of drift, not a crash") {
-    val some = Seq((1L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
-    val none = some.where(col("vec_id") < 0)
-    assert(!SimilarityOps.driftExceeds(some, none, maxShift = 0.1))
-    assert(!SimilarityOps.driftExceeds(none, some, maxShift = 0.1))
-    assert(!SimilarityOps.driftExceeds(none, none, maxShift = 0.1))
-  }
-
-  test("refit is a FULL rewrite even under a session-level dynamic overwrite mode") {
-    // with dynamic partition overwrite set session-wide, a naive
-    // mode("overwrite") only replaces cells present in the new coding —
-    // cells emptied by the new quantizer geometry would keep stale
-    // directories whose codes decode as garbage under the new books
-    val rnd = new scala.util.Random(67)
-    val emb = (0 until 48).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat())))
-      .toDF("vec_id", "embedding")
-    val (c0, b0) = SimilarityOps.fitIvfPq(emb, nCentroids = 8, nSub = 4,
-      nPqCentroids = 8, kmeansIters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-refit-static").toString
-    SimilarityOps.writeIvfPqIndex(emb, c0, b0, dir)
-    val cellsBefore = new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("cell="))
-    assert(cellsBefore > 2, "need more initial cells than the refit target")
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // refit to a 2-cell quantizer: at most 2 cell dirs may survive
-      val (c1, b1) = SimilarityOps.refitIvfPqIndex(emb, dir, nCentroids = 2,
-        nSub = 4, nPqCentroids = 8, kmeansIters = 1)
-      val dirs = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("cell=")).map(_.getName).toSet
-      assert(dirs.size <= 2, s"stale old-geometry cells survived: $dirs")
-      // and the index is consistent under the new models
-      val q = emb.where(col("vec_id") < 2)
-      val got = SimilarityOps.readIvfPqIndexTopK(spark, dir, q, c1, b1,
-        k = 3, nProbe = 2).collect().toSet
-      val want = SimilarityOps.ivfPqTopKWith(emb, q, k = 3, c1, b1, nProbe = 2)
-        .collect().toSet
-      assert(got == want)
-      assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic",
-        "caller's session setting must be restored")
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-  }
-
-  test("snapshotDiff's removed class drives both index retractions end-to-end") {
-    // corpus republishes a full snapshot; the diff's `removed` keys are the
-    // retraction feed for BOTH maintained indexes — no hand-built removal
-    // list anywhere in this test
-    val oldDocs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four five six"),
-      (3L, "kept kept kept kept kept kept")).toDF("doc_id", "text")
-    val newDocs = Seq(
-      (2L, "one two three four five six"),
-      (3L, "kept kept kept kept kept kept")).toDF("doc_id", "text")
-    val removed = PipelineOps.snapshotDiff(oldDocs, newDocs, "doc_id", Seq("text"))
-      .where(col("change_type") === "removed")
-      .select("doc_id")
-
-    // (a) incremental-dedup index: the deleted doc's ghost stops matching
-    val index = DedupOps.buildNearDupIndex(oldDocs, n = 3, maxDf = 100)
-    val probe = Seq((10L, "alpha beta gamma delta epsilon eta")).toDF("doc_id", "text")
-    assert(DedupOps.incrementalNearDupAgainst(index, probe, n = 3, threshold = 0.4)
-      .collect().map(_.getLong(1)).toSeq == Seq(1L))
-    val compacted = DedupOps.removeFromNearDupIndex(index, removed)
-    assert(DedupOps.incrementalNearDupAgainst(compacted, probe, n = 3, threshold = 0.4)
-      .collect().isEmpty)
-
-    // (b) persisted IVF-PQ index: the same diff feed, via the vec_id key
-    val rnd = new scala.util.Random(61)
-    val emb = Seq(1L, 2L, 3L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
-      .toDF("vec_id", "embedding")
-    val (cs, bs) = SimilarityOps.fitIvfPq(emb, nCentroids = 2, nSub = 2,
-      nPqCentroids = 2, kmeansIters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-diff-delete").toString
-    SimilarityOps.writeIvfPqIndex(emb, cs, bs, dir)
-    SimilarityOps.deleteFromIvfPqIndex(spark, dir,
-      removed.withColumnRenamed("doc_id", "vec_id"))
-    val surfaced = SimilarityOps.readIvfPqIndexTopK(spark, dir, emb, cs, bs,
-      k = 3, nProbe = 2).select("neighbor_id").collect().map(_.getLong(0)).toSet
-    assert(!surfaced.contains(1L), "diff-removed id must be gone from search")
-    assert(surfaced.nonEmpty, "survivors still searchable")
-  }
 
   test("index and batch sides of incremental near-dup share ONE shingle hash space") {
     // DedupOps deliberately carries TWO 64-bit shingle hash spaces: the
@@ -259,8 +46,5 @@ class IndexLifecycleSpec extends SparkSpec {
     val got = DedupOps.incrementalContainmentAgainst(index, incoming, n = 4, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((20L, 1L)))
-    val compacted = DedupOps.removeFromNearDupIndex(index, Seq(1L).toDF("doc_id"))
-    assert(DedupOps.incrementalContainmentAgainst(compacted, incoming, n = 4,
-      threshold = 0.8).collect().isEmpty)
   }
 }

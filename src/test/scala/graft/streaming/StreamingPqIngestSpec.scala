@@ -18,8 +18,8 @@ class StreamingPqIngestSpec extends SparkSpec {
     val rnd = new scala.util.Random(9)
     val rows = (0 until 200).map(i => VecRow(i.toLong, Array.fill(32)(rnd.nextFloat() * 2 - 1)))
     val emb = rows.toDF()
-    val centroids = SimilarityOps.fitCoarseQuantizerOf(emb, nCentroids = 8, kmeansIters = 2)
-    val books = SimilarityOps.pqFitBooks(emb, nSub = 4, nCentroids = 8, kmeansIters = 2)
+    val (centroids, books) = SimilarityOps.fitIvfPq(emb, nCentroids = 8, nSub = 4,
+      nPqCentroids = 8, kmeansIters = 2)
     val batch = SimilarityOps.ivfPqCode(emb, centroids, books)
       .as[(Long, Int, String)].collect().map(r => r._1 -> (r._2, r._3)).toMap
 
