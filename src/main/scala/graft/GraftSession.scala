@@ -63,7 +63,7 @@ object GraftSession {
     * Lazy (`eager = false`) checkpoints are materialized by the caller's
     * next action either way; [[graft.operators.Fixpoint]] builds its
     * one-probe-job rounds on that. */
-  def checkpointed[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+  def checkpointed[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
     quietTruncatedUnpersistWarning
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       // Reliable checkpoints write their files in a SECOND job that
@@ -122,7 +122,7 @@ object GraftSession {
     env.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
   /** Local session for tests / ad-hoc runs. */
-  def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(threads: Int): SparkSession = {
     val s = configure(
       SparkSession.builder()
         .master(s"local[$threads]")

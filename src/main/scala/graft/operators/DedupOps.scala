@@ -24,14 +24,20 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
+  private val Text = "text"
+  private val DocId = "doc_id"
+  /** Document-frequency cap of the shingle and fingerprint posting lists
+    * (see [[ngramJaccard]]). */
+  private val MaxDf = 100
+
   /** Exact dedup: one row per distinct content hash with the surviving
     * (minimum) doc id and the duplicate count. Map-side partial aggregation;
     * one shuffle on the digest. */
-  def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+  def exact(docs: DataFrame): DataFrame =
     docs
-      .select(md5(col(textCol).cast("binary")).as("h"), col(idCol))
+      .select(md5(col(Text).cast("binary")).as("h"), col(DocId))
       .groupBy("h")
-      .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_dupes"))
+      .agg(min(col(DocId)).as("keeper"), count(lit(1)).as("n_dupes"))
 
   // Measured notes (local[32], sf0.1, 255k shingle instances):
   //  - Generate (explode) over a higher-order-function-built array is
@@ -49,7 +55,7 @@ object DedupOps {
     * NO fanOut here (measured r15): the hash kernel is cheap native work
     * and every consumer shuffles immediately after — adding a fan-out
     * exchange cost the minhash/index family +15-20% solo. */
-  private def shingleHashed(docs: DataFrame, textCol: String, idCol: String, n: Int): DataFrame =
+  private def shingleHashed(docs: DataFrame, n: Int): DataFrame =
     docs
       // explicit not-null guard: null ids can never reach the output (every
       // consumer inner-joins on id), but stating it HERE keeps the pushed
@@ -57,8 +63,8 @@ object DedupOps {
       // their exchange subtrees stay canonically equal and ReuseExchange
       // dedupes the scan+explode+distinct work instead of re-running it per
       // consumer (measured: one corpus pass instead of two at sf0.01)
-      .where(col(idCol).isNotNull)
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .where(col(DocId).isNotNull)
+      .select(col(DocId).as("id"), tokens(col(Text)).as("toks"))
       .where(size(col("toks")) >= n)
       .select(col("id"), col("toks"),
         explode(sequence(lit(0), size(col("toks")) - n)).as("i"))
@@ -75,10 +81,9 @@ object DedupOps {
     * shingle set is distinct'd and BROADCAST, so the corpus is scanned once
     * with a map-side hash join — no shuffle of the 100 TB side, cost linear
     * in corpus tokens. */
-  def contamination(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def contamination(corpus: DataFrame, benchmark: DataFrame, n: Int = 8): DataFrame = {
     def shingles(df: DataFrame): DataFrame = df
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .select(col(DocId).as("id"), tokens(col(Text)).as("toks"))
       .where(size(col("toks")) >= n)
       .select(col("id"), col("toks"),
         explode(sequence(lit(0), size(col("toks")) - n)).as("i"))
@@ -88,7 +93,7 @@ object DedupOps {
       .join(broadcast(bench), Seq("s"))
       .groupBy("id")
       .agg(count(lit(1)).as("n_hits"))
-      .select(col("id").as(idCol), col("n_hits"))
+      .select(col("id").as(DocId), col("n_hits"))
   }
 
   /** Near-duplicate pairs by n-gram Jaccard ≥ threshold.
@@ -119,9 +124,8 @@ object DedupOps {
     * is partially aggregated map-side.
     */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-                   maxDf: Int = 100,
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    sharedShinglePairs(docs, n, maxDf, textCol, idCol)
+                   maxDf: Int = MaxDf): DataFrame =
+    sharedShinglePairs(docs, n, maxDf)
       .withColumn("jaccard",
         col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
       .where(col("jaccard") >= threshold)
@@ -130,8 +134,7 @@ object DedupOps {
   /** Candidate pairs (ida, idb, shared, na, nb) from the capped-posting
     * shingle index — the shared core of [[ngramJaccard]] and [[containment]]
     * (the two differ only in the final similarity formula). */
-  private def sharedShinglePairs(docs: DataFrame, n: Int, maxDf: Int,
-                                 textCol: String, idCol: String): DataFrame = {
+  private def sharedShinglePairs(docs: DataFrame, n: Int, maxDf: Int): DataFrame = {
     // Per-doc sorted-DISTINCT shingle hashes from the native ngram_hashes
     // kernel (the minhash/simhash idiom): set semantics are established
     // per row in the scan stage, so the former global
@@ -145,9 +148,9 @@ object DedupOps {
     // the signature operators already make — pair outputs are unchanged
     // (oracle re-verified 245/245).
     val withSh = docs
-      .where(col(idCol).isNotNull)
-      .select(col(idCol).as("id"),
-        call_function("ngram_hashes", tokens(col(textCol)), lit(n)).as("sh"))
+      .where(col(DocId).isNotNull)
+      .select(col(DocId).as("id"),
+        call_function("ngram_hashes", tokens(col(Text)), lit(n)).as("sh"))
       .where(size(col("sh")) > 0)
     val ex = withSh.select(col("id"), explode(col("sh")).as("s"))
     val sz = withSh.select(col("id"), size(col("sh")).cast("long").as("n_sh"))
@@ -179,11 +182,9 @@ object DedupOps {
     * (reference analogue: none; this is the training-data-pipeline tier).
     * Same index, cap contract, and cost shape as [[ngramJaccard]]: one
     * corpus pass for the capped posting lists, map-side pair fan-out
-    * bounded by maxDf² per shingle, sizes joined after pair aggregation. */
-  def containment(docs: DataFrame, n: Int = 4, threshold: Double = 0.8,
-                  maxDf: Int = 100,
-                  textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    sharedShinglePairs(docs, n, maxDf, textCol, idCol)
+    * bounded by MaxDf² per shingle, sizes joined after pair aggregation. */
+  def containment(docs: DataFrame, n: Int = 4, threshold: Double = 0.8): DataFrame =
+    sharedShinglePairs(docs, n, MaxDf)
       .withColumn("containment",
         col("shared").cast("double") / least(col("na"), col("nb")))
       .where(col("containment") >= threshold)
@@ -198,16 +199,14 @@ object DedupOps {
     * grams are kept), which at 100 TB is the difference between indexing
     * every 4-gram of the corpus and indexing a 2/(w+1) sample with the same
     * detection floor. Same capped-posting contract as [[ngramJaccard]]:
-    * a boilerplate fingerprint's posting state saturates at maxDf+1 and is
-    * dropped from pair generation, bounding fan-out at maxDf² per
+    * a boilerplate fingerprint's posting state saturates at MaxDf+1 and is
+    * dropped from pair generation, bounding fan-out at MaxDf² per
     * fingerprint. Returns (ida, idb, shared_fps). */
-  def winnowPairs(docs: DataFrame, k: Int = 4, w: Int = 5, minShared: Long = 2,
-                  maxDf: Int = 100,
-                  textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val fps = TextOps.winnow(docs, k, w, textCol, idCol)
-    val cappedIds = udaf(new graft.functions.CappedSetAggregator(maxDf + 1))
+  def winnowPairs(docs: DataFrame, k: Int = 4, w: Int = 5, minShared: Long = 2): DataFrame = {
+    val fps = TextOps.winnow(docs, k, w)
+    val cappedIds = udaf(new graft.functions.CappedSetAggregator(MaxDf + 1))
     val postings = fps.groupBy("fp").agg(cappedIds(col("doc_id")).as("ids"))
-      .where(size(col("ids")) <= maxDf)
+      .where(size(col("ids")) <= MaxDf)
     postings
       .select(explode(flatten(transform(col("ids"), a =>
         transform(filter(col("ids"), b => b > a), b =>
@@ -227,25 +226,23 @@ object DedupOps {
     * document frequency — linear in the batch, never |corpus|².
     *
     * Same df-cap contract as [[ngramJaccard]]: corpus-side shingles above
-    * `maxDf` (near-universal boilerplate) are dropped from the join only,
+    * `MaxDf` (near-universal boilerplate) are dropped from the join only,
     * making the score a tight lower bound and bounding the per-shingle
     * fan-out. Returns (new_id, old_id, jaccard) — aggregate per new_id
     * downstream for a keep/drop decision. */
   def incrementalNearDup(existing: DataFrame, incoming: DataFrame, n: Int = 3,
-                         threshold: Double = 0.5, maxDf: Int = 100,
-                         textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+                         threshold: Double = 0.5): DataFrame =
     incrementalNearDupAgainst(
-      buildNearDupIndex(existing, n, maxDf, textCol, idCol),
-      incoming, n, threshold, textCol, idCol)
+      buildNearDupIndex(existing, n),
+      incoming, n, threshold)
 
   /** [[incrementalNearDup]] against a MAINTAINED [[NearDupIndex]] — the
     * rolling-ingest loop that keeps one corpus index alive across batches
     * (build once, append/retract as the corpus changes) instead of
     * re-deriving it from the full corpus per batch. */
   def incrementalNearDupAgainst(index: NearDupIndex, incoming: DataFrame, n: Int = 3,
-                                threshold: Double = 0.5,
-                                textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    sharedPairsAgainstIndex(index, incoming, n, textCol, idCol)
+                                threshold: Double = 0.5): DataFrame =
+    sharedPairsAgainstIndex(index, incoming, n)
       .withColumn("jaccard",
         col("shared").cast("double") / (col("ni") + col("ne") - col("shared")))
       .where(col("jaccard") >= threshold)
@@ -260,18 +257,16 @@ object DedupOps {
     * case: a new doc that wholesale-includes an archived one (or a stub
     * extracted from one) scores ≈ 1 here while its Jaccard stays ≈ 0. */
   def incrementalContainment(existing: DataFrame, incoming: DataFrame, n: Int = 4,
-                             threshold: Double = 0.8, maxDf: Int = 100,
-                             textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+                             threshold: Double = 0.8): DataFrame =
     incrementalContainmentAgainst(
-      buildNearDupIndex(existing, n, maxDf, textCol, idCol),
-      incoming, n, threshold, textCol, idCol)
+      buildNearDupIndex(existing, n),
+      incoming, n, threshold)
 
   /** [[incrementalContainment]] against a maintained [[NearDupIndex]] —
     * see [[incrementalNearDupAgainst]]. */
   def incrementalContainmentAgainst(index: NearDupIndex, incoming: DataFrame, n: Int = 4,
-                                    threshold: Double = 0.8,
-                                    textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    sharedPairsAgainstIndex(index, incoming, n, textCol, idCol)
+                                    threshold: Double = 0.8): DataFrame =
+    sharedPairsAgainstIndex(index, incoming, n)
       .withColumn("containment",
         col("shared").cast("double") / least(col("ni"), col("ne")))
       .where(col("containment") >= threshold)
@@ -286,15 +281,14 @@ object DedupOps {
 
   /** Build the [[NearDupIndex]] — one pass over the corpus, same
     * saturation contract as [[ngramJaccard]]: a corpus-hot shingle's
-    * aggregation state caps at maxDf+1 ids instead of buffering its full
-    * posting list, and size > maxDf identifies (and drops) it exactly. */
-  def buildNearDupIndex(existing: DataFrame, n: Int = 3, maxDf: Int = 100,
-                        textCol: String = "text", idCol: String = "doc_id"): NearDupIndex = {
-    val exE = shingleHashed(existing, textCol, idCol, n).distinct()
+    * aggregation state caps at MaxDf+1 ids instead of buffering its full
+    * posting list, and size > MaxDf identifies (and drops) it exactly. */
+  def buildNearDupIndex(existing: DataFrame, n: Int = 3): NearDupIndex = {
+    val exE = shingleHashed(existing, n).distinct()
     val szE = exE.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val cappedIds = udaf(new graft.functions.CappedSetAggregator(maxDf + 1))
+    val cappedIds = udaf(new graft.functions.CappedSetAggregator(MaxDf + 1))
     val postE = exE.groupBy("s").agg(cappedIds(col("id")).as("old_ids"))
-      .where(size(col("old_ids")) <= maxDf)
+      .where(size(col("old_ids")) <= MaxDf)
     NearDupIndex(postE, szE)
   }
 
@@ -304,8 +298,8 @@ object DedupOps {
     * corpus df, never |corpus|². Shared core of the incremental
     * checkers. */
   private def sharedPairsAgainstIndex(index: NearDupIndex, incoming: DataFrame,
-                                      n: Int, textCol: String, idCol: String): DataFrame = {
-    val exI = shingleHashed(incoming, textCol, idCol, n).distinct()
+                                      n: Int): DataFrame = {
+    val exI = shingleHashed(incoming, n).distinct()
     val szI = exI.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val cand = exI.select(col("id").as("new_id"), col("s"))
       .join(index.postings, Seq("s"))
@@ -328,13 +322,12 @@ object DedupOps {
     * family, ~10× cheaper, and the aggregate shuffles only (id, 32 longs).
     * Arithmetic is overflow-free under ANSI: base and a_i are < 2^31, so
     * a_i·base + b_i < 2^63. */
-  def minhashSignatures(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
-                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def minhashSignatures(docs: DataFrame, n: Int = 3, numHashes: Int = 32): DataFrame = {
     val P = 2147483647L // 2^31 - 1 (Mersenne prime)
     val rnd = new scala.util.Random(42)
     val coeffs = Seq.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1), rnd.nextInt(Int.MaxValue).toLong))
     // duplicates don't affect a min-aggregate, so no distinct here
-    val ex = shingleHashed(docs, textCol, idCol, n)
+    val ex = shingleHashed(docs, n)
       .withColumn("base", col("s").bitwiseAND(lit(P)))
     val mins = coeffs.zipWithIndex.map { case ((a, b), i) =>
       min((col("base") * a + b) % P).as(s"m$i")
@@ -369,7 +362,7 @@ object DedupOps {
     * function of the candidate set and the corpus, so any candidate
     * generator with full recall yields exactly the true pair set. */
   private def verifyJaccard(docs: DataFrame, cands0: DataFrame, n: Int,
-                            threshold: Double, textCol: String, idCol: String): DataFrame = {
+                            threshold: Double): DataFrame = {
     // Materialize the candidate pairs once (executor-local checkpoint, the
     // same pattern as connectedComponents): the pair list is read twice
     // below — as the semi-join filter and as the join probe — and column
@@ -389,7 +382,7 @@ object DedupOps {
     val candIds = cands.select(col("ida").as("__cand_id"))
       .union(cands.select(col("idb").as("__cand_id")))
       .distinct()
-    val needed = docs.join(candIds, col(idCol) === col("__cand_id"), "left_semi")
+    val needed = docs.join(candIds, col(DocId) === col("__cand_id"), "left_semi")
     // Per-doc sorted distinct shingle-hash sets as a PURE MAP (native
     // ngram_hashes kernel) — no explode, no groupBy, no shuffle; sorted so
     // the per-PAIR intersection is a primitive two-pointer merge (native
@@ -408,8 +401,8 @@ object DedupOps {
     // candidate docs × ~n_sh longs; released by
     // GraftSession.releaseMaterialized after the query.
     val sets = needed
-      .where(col(textCol).isNotNull && col(idCol).isNotNull)
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .where(col(Text).isNotNull && col(DocId).isNotNull)
+      .select(col(DocId).as("id"), tokens(col(Text)).as("toks"))
       .select(col("id"), call_function("ngram_hashes", col("toks"), lit(n)).as("sh"))
       .withColumn("n_sh", size(col("sh")).cast("long"))
       .where(col("n_sh") > 0)
@@ -435,13 +428,12 @@ object DedupOps {
     * the recall observed on a given corpus is a constant of the build, not a
     * per-run draw. Cost scales with colliding-band pairs, never n². */
   def minhashLsh(docs: DataFrame, n: Int = 3, numHashes: Int = 64, bands: Int = 32,
-                 rowsPerBand: Int = 2, threshold: Double = 0.7,
-                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+                 rowsPerBand: Int = 2, threshold: Double = 0.7): DataFrame = {
     require(bands * rowsPerBand <= numHashes,
       s"bands*rowsPerBand (${bands * rowsPerBand}) exceeds numHashes ($numHashes)")
-    val sigs = minhashSignatures(docs, n, numHashes, textCol, idCol)
+    val sigs = minhashSignatures(docs, n, numHashes)
     val cands = minhashCandidates(sigs, bands, rowsPerBand)
-    verifyJaccard(docs, cands, n, threshold, textCol, idCol)
+    verifyJaccard(docs, cands, n, threshold)
   }
 
   /** SimHash-blocked near-dup pipeline: candidate pairs from chunk
@@ -470,8 +462,7 @@ object DedupOps {
     * chunks with 2-bit probes would be 529×); false candidates are
     * discarded by the exact verification. */
   def simhashNearDup(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-                     chunks: Int = 4, probeBits: Int = 2,
-                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+                     chunks: Int = 4, probeBits: Int = 2): DataFrame = {
     require(64 % chunks == 0, s"chunks must divide 64, got $chunks")
     require(probeBits >= 0 && probeBits <= 2, s"probeBits must be 0..2, got $probeBits")
     val width = 64 / chunks
@@ -498,8 +489,8 @@ object DedupOps {
     // exactly as before — measured 1.85 s single-task vs ~0.3 s spread at
     // sf0.1 for the post-signature stages alone).
     val sigsPar = ScaleOps.fanOut(docs
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), col(textCol).as("__t")))
+      .where(col(Text).isNotNull)
+      .select(col(DocId).as("id"), col(Text).as("__t")))
       .select(col("id"), tokens(col("__t")).as("toks"))
       .select(col("id"),
         call_function("simhash64", transform(col("toks"), t => xxhash64(t))).as("simhash"),
@@ -560,7 +551,7 @@ object DedupOps {
       .where(bit_count(xorSig) <= maxHamming &&
         col("a.chunk") === firstCollidingChunk && lengthGate)
       .select(col("a.id").as("ida"), col("b.id").as("idb"))
-    verifyJaccard(docs, cands, n, threshold, textCol, idCol)
+    verifyJaccard(docs, cands, n, threshold)
   }
 
   /** Exact-substring duplication stats (the Lee et al. 2021 "Deduplicating
@@ -577,10 +568,9 @@ object DedupOps {
     * Nothing driver-side; no pairwise joins at all — cost is linear in
     * corpus positions, which is what makes this the 100 TB-safe exact
     * signal next to the pairwise Jaccard family. */
-  def duplicatedSpanStats(docs: DataFrame, n: Int = 8,
-                          textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def duplicatedSpanStats(docs: DataFrame, n: Int = 8): DataFrame = {
     val pos = docs
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .select(col(DocId).as("id"), tokens(col(Text)).as("toks"))
       .where(size(col("toks")) >= n)
       .select(col("id"), col("toks"),
         explode(sequence(lit(0), size(col("toks")) - n)).as("i"))
@@ -597,7 +587,7 @@ object DedupOps {
       .agg(
         count(lit(1)).as("n_positions"),
         sum(when(col("cnt") > 1, 1L).otherwise(0L)).as("dup_positions"))
-      .select(col("id").as(idCol), col("n_positions"), col("dup_positions"),
+      .select(col("id").as(DocId), col("n_positions"), col("dup_positions"),
         round(col("dup_positions").cast("double") / col("n_positions"), 6).as("dup_ratio"))
   }
 
@@ -622,8 +612,7 @@ object DedupOps {
     * Output: one row per node appearing in `pairs` — (id, cluster), where
     * cluster = the component's minimum id. Singleton documents never enter
     * the pair list and are absent (their cluster is trivially themselves). */
-  def connectedComponents(pairs: DataFrame, idaCol: String = "ida",
-                          idbCol: String = "idb", maxIter: Int = 25): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     // Symmetrize with a narrow 2× generator, which reads `pairs` once (a
     // union of both directions would re-run the expensive pair-generation
     // subtree through both branches: the projections differ enough that
@@ -633,8 +622,8 @@ object DedupOps {
     val sc = pairs.sparkSession.sparkContext
     val (edges, edgeRdds) = Fixpoint.persisting(sc)(pairs
       .select(explode(array(
-        struct(col(idaCol).as("src"), col(idbCol).as("dst")),
-        struct(col(idbCol).as("src"), col(idaCol).as("dst")))).as("e"))
+        struct(col("ida").as("src"), col("idb").as("dst")),
+        struct(col("idb").as("src"), col("ida").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .ckpt(true))
@@ -682,12 +671,11 @@ object DedupOps {
     * id STRING instead of the doc's own text. Scale shape: one left
     * equi-join of the corpus ids against the (pairs-sized, ≪ corpus)
     * cluster table + a narrow hash projection. */
-  def clusterAwareSplit(docs: DataFrame, clusters: DataFrame,
-                        idCol: String = "doc_id"): DataFrame = {
-    val rep = docs.select(col(idCol))
-      .join(clusters.select(col("id").as(idCol), col("cluster")), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("cluster"), col(idCol)).as("cluster_rep"))
-    rep.select(col(idCol), col("cluster_rep"),
+  def clusterAwareSplit(docs: DataFrame, clusters: DataFrame): DataFrame = {
+    val rep = docs.select(col(DocId))
+      .join(clusters.select(col("id").as(DocId), col("cluster")), Seq(DocId), "left")
+      .select(col(DocId), coalesce(col("cluster"), col(DocId)).as("cluster_rep"))
+    rep.select(col(DocId), col("cluster_rep"),
       PipelineOps.md5Split(col("cluster_rep").cast("string")).as("split"))
   }
 }

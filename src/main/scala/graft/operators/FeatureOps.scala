@@ -14,30 +14,31 @@ import org.apache.spark.sql.functions._
   */
 object FeatureOps {
 
+  /** Decimal places of imputed and standardized values. */
+  private val Scale = 6
+
   /** Replace NULLs in `valCol` with the group's mean (per `groupCol`),
-    * rounded to `scale` so imputed values compare stably cross-engine.
+    * rounded to [[Scale]] places so imputed values compare stably cross-engine.
     * Rows whose group has no observed value at all stay NULL.
     */
-  def imputeMean(df: DataFrame, groupCol: String, valCol: String,
-      scale: Int = 6): DataFrame = {
+  def imputeMean(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val means = df.groupBy(col(groupCol))
-      .agg(round(avg(col(valCol)), scale).as("__mean"))
+      .agg(round(avg(col(valCol)), Scale).as("__mean"))
     df.join(broadcast(means), Seq(groupCol), "left")
       .withColumn(s"${valCol}_imp",
-        coalesce(round(col(valCol), scale), col("__mean")))
+        coalesce(round(col(valCol), Scale), col("__mean")))
       .drop("__mean")
   }
 
   /** Z-score standardization of `valCol` within each group: (x - μ)/σ,
     * NULL where the group's sample stddev is 0 or undefined.
     */
-  def standardize(df: DataFrame, groupCol: String, valCol: String,
-      scale: Int = 6): DataFrame = {
+  def standardize(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val stats = df.groupBy(col(groupCol))
       .agg(avg(col(valCol)).as("__mu"), stddev_samp(col(valCol)).as("__sd"))
     df.join(broadcast(stats), Seq(groupCol), "left")
       .withColumn(s"${valCol}_z",
-        when(col("__sd") > 0, round((col(valCol) - col("__mu")) / col("__sd"), scale)))
+        when(col("__sd") > 0, round((col(valCol) - col("__mu")) / col("__sd"), Scale)))
       .drop("__mu", "__sd")
   }
 

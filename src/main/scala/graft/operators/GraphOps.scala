@@ -435,6 +435,9 @@ object GraphOps {
       .select(col("src").as("node"), col("deg"))
   }
 
+  /** PageRank's damping factor d. */
+  private val Damping = 0.85
+
   /** Weighted PageRank by fixed-iteration power iteration.
     *
     * rank₀ = 1/N; rankₖ₊₁(v) = (1-d)/N + d·Σ_{(u,v)∈E} rankₖ(u)·w(u,v)/outw(u).
@@ -442,7 +445,7 @@ object GraphOps {
     * no dangling-mass term is needed. Returns (node, rank_ratio) where
     * rank_ratio = rank·N (mean 1.0), rounded to 6 dp for stable comparison.
     */
-  def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iterations: Int): DataFrame = {
     val (e, nodes, n) = prepRank(edges)
     // crossover on the RANK VECTOR, not the edges: the per-iteration join
     // broadcasts one (node, rank) row per vertex, so the broadcast form is
@@ -451,8 +454,8 @@ object GraphOps {
     // autoBroadcastJoinThreshold — past it, flip to the pre-partitioned
     // shuffle iteration (identical output, pinned in ScalaTest).
     val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    if (thresh > 0 && n * 32L <= thresh) broadcastIterate(e, nodes, n, iterations, damping)
-    else partitionedIterate(e, nodes, n, iterations, damping)
+    if (thresh > 0 && n * 32L <= thresh) broadcastIterate(e, nodes, n, iterations)
+    else partitionedIterate(e, nodes, n, iterations)
   }
 
   /** Normalized edge fractions + node table + node count — shared setup of
@@ -477,8 +480,8 @@ object GraphOps {
     * is (1-d)/N + d·Σcontrib, with Σcontrib = 0 (NULL) for zero-in-degree
     * nodes — shared by both iteration strategies so the rank arithmetic is
     * bitwise one expression. */
-  private def rankOf(c: Column, n: Long, damping: Double): Column =
-    lit((1 - damping) / n) + lit(damping) * coalesce(c, lit(0.0))
+  private def rankOf(c: Column, n: Long): Column =
+    lit((1 - Damping) / n) + lit(Damping) * coalesce(c, lit(0.0))
 
   /** Small-|V| iteration: the rank vector broadcasts, the edge relation
     * never moves after setup — zero per-iteration exchanges of |E| rows.
@@ -493,7 +496,7 @@ object GraphOps {
     * literal (no broadcast at all), and `nodes` is joined exactly once at
     * the end to emit zero-in-degree nodes. */
   private def broadcastIterate(e: DataFrame, nodes: DataFrame, n: Long,
-                               iterations: Int, damping: Double): DataFrame = {
+                               iterations: Int): DataFrame = {
     if (iterations < 1)
       return finishRank(nodes.withColumn("rank", lit(1.0 / n)), n)
     var contrib = e.groupBy(col("dst"))
@@ -502,10 +505,10 @@ object GraphOps {
       contrib = e.join(broadcast(contrib.select(col("dst").as("__cs"), col("c"))),
           col("src") === col("__cs"), "left")
         .groupBy(col("dst"))
-        .agg(sum(col("frac") * rankOf(col("c"), n, damping)).as("c"))
+        .agg(sum(col("frac") * rankOf(col("c"), n)).as("c"))
     }
     val ranks = nodes.join(broadcast(contrib), col("node") === col("dst"), "left")
-      .select(col("node"), rankOf(col("c"), n, damping).as("rank"))
+      .select(col("node"), rankOf(col("c"), n).as("rank"))
     finishRank(ranks, n)
   }
 
@@ -521,7 +524,7 @@ object GraphOps {
     * per iteration (SMJ) or re-broadcasting a vector the crossover said
     * doesn't fit. */
   private def partitionedIterate(e: DataFrame, nodes: DataFrame, n: Long,
-                                 iterations: Int, damping: Double): DataFrame = {
+                                 iterations: Int): DataFrame = {
     if (iterations < 1)
       return finishRank(nodes.withColumn("rank", lit(1.0 / n)), n)
     val eSrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
@@ -537,24 +540,22 @@ object GraphOps {
         .join(contrib.select(col("dst").as("__cs"), col("c")).hint("shuffle_hash"),
           col("src") === col("__cs"), "left")
         .groupBy(col("dst"))
-        .agg(sum(col("frac") * rankOf(col("c"), n, damping)).as("c"))
+        .agg(sum(col("frac") * rankOf(col("c"), n)).as("c"))
     }
     val ranks = nodes.join(contrib.hint("shuffle_hash"), col("node") === col("dst"), "left")
-      .select(col("node"), rankOf(col("c"), n, damping).as("rank"))
+      .select(col("node"), rankOf(col("c"), n).as("rank"))
     finishRank(ranks, n)
   }
 
   /** Test/measurement entries pinning the two strategies independently of
     * the [[pageRank]] crossover. */
-  private[operators] def pageRankBroadcast(edges: DataFrame, iterations: Int,
-                                           damping: Double = 0.85): DataFrame = {
+  private[operators] def pageRankBroadcast(edges: DataFrame, iterations: Int): DataFrame = {
     val (e, nodes, n) = prepRank(edges)
-    broadcastIterate(e, nodes, n, iterations, damping)
+    broadcastIterate(e, nodes, n, iterations)
   }
 
-  private[operators] def pageRankPartitioned(edges: DataFrame, iterations: Int,
-                                             damping: Double = 0.85): DataFrame = {
+  private[operators] def pageRankPartitioned(edges: DataFrame, iterations: Int): DataFrame = {
     val (e, nodes, n) = prepRank(edges)
-    partitionedIterate(e, nodes, n, iterations, damping)
+    partitionedIterate(e, nodes, n, iterations)
   }
 }

@@ -429,7 +429,7 @@ object MultimodalOps {
     * 100 ms leading-silence trim shifts every span — the most common real
     * near-dup transform after re-encoding escaped it. Here:
     *
-    *  1. leading and trailing silence (|sample| ≤ `silenceEps`) strips
+    *  1. leading and trailing silence (|sample| ≤ [[SilenceEps]]) strips
     *     FIRST, so windowing anchors at the content onset — the signature
     *     is EXACTLY invariant to any silence pad/trim, at any offset, not
     *     just whole-window multiples;
@@ -447,16 +447,18 @@ object MultimodalOps {
     * Distinct + sorted, so the signature is a pure function of the clip.
     * Clips shorter than (shingleBits+1) full windows after stripping
     * yield no shingles. */
+  /** The largest |sample| audioShingles still counts as silence. */
+  private val SilenceEps = 0
+
   def audioShingles(a: DecodedAudio, windowSamples: Int = 4,
-                    shingleBits: Int = 16, silenceEps: Int = 0): Array[Long] = {
+                    shingleBits: Int = 16): Array[Long] = {
     require(windowSamples > 0, s"windowSamples must be positive, got $windowSamples")
     require(shingleBits >= 1 && shingleBits <= 63,
       s"shingleBits must be in [1, 63], got $shingleBits")
-    require(silenceEps >= 0, s"silenceEps must be non-negative, got $silenceEps")
     var lo = 0
     var hi = a.samples.length
-    while (lo < hi && math.abs(a.samples(lo)) <= silenceEps) lo += 1
-    while (hi > lo && math.abs(a.samples(hi - 1)) <= silenceEps) hi -= 1
+    while (lo < hi && math.abs(a.samples(lo)) <= SilenceEps) lo += 1
+    while (hi > lo && math.abs(a.samples(hi - 1)) <= SilenceEps) hi -= 1
     val nW = (hi - lo) / windowSamples
     if (nW < shingleBits + 1) return Array.empty[Long]
     val e = new Array[Long](nW)
@@ -514,9 +516,8 @@ object MultimodalOps {
     * containment). All exchanges carry (long, long) rows; per-id set sizes
     * are clip-length-bounded (one shingle per window hop). */
   def shingleContainmentPairs(shingles: DataFrame, minContainment: Double,
-                              idCol: String = "id",
-                              shingleCol: String = "shingle"): DataFrame = {
-    val s = shingles.select(col(idCol).as("id"), col(shingleCol).as("v"))
+                              idCol: String = "id"): DataFrame = {
+    val s = shingles.select(col(idCol).as("id"), col("shingle").as("v"))
     val counts = s.groupBy(col("id")).agg(count(lit(1)).as("n"))
     s.as("a").join(s.as("b"),
         col("a.v") === col("b.v") && col("a.id") < col("b.id"))
@@ -687,34 +688,29 @@ object MultimodalOps {
     * walk per payload (the [[frameCountAndFirst]] single-reader discipline —
     * decode CPU stays one container parse regardless of how many frames are
     * hashed) emitting (id, frame_idx, width, height, dhash) for every
-    * `stride`-th frame. `stride` > 1 is the keyframe-strided mode for long
-    * animations — the hash series stays bounded while same-source copies
-    * still align frame-by-frame (both sides stride identically). Frames are
-    * hashed AS STORED (each frame's own raster); GIF disposal/offset
-    * composition is out of scope — full-frame containers (the ingest
-    * normal form) hash exactly. Undecodable payloads yield no rows.
+    * frame. Frames are hashed AS STORED (each frame's own raster); GIF
+    * disposal/offset composition is out of scope — full-frame containers
+    * (the ingest normal form) hash exactly. Undecodable payloads yield no
+    * rows.
     *
-    * Scale shape: a narrow per-partition flatMap; fan-out is frames/stride
+    * Scale shape: a narrow per-partition flatMap; fan-out is the frame count
     * per payload, and only 8-byte hashes leave the stage — the per-frame
     * mirror of [[imageFeatures]], feeding [[animationNearDup]]. */
-  def frameHashes(df: DataFrame, binCol: String, idCol: String,
-                  stride: Int = 1): DataFrame = {
-    require(stride > 0, s"stride must be positive, got $stride")
+  def frameHashes(df: DataFrame, binCol: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("long"), col(binCol))
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { case (id, bytes) => readFrameHashes(id, bytes, stride) }
+        rows.flatMap { case (id, bytes) => readFrameHashes(id, bytes) }
       }
       .toDF(idCol, "frame_idx", "width", "height", "dhash")
   }
 
   /** Single-reader frame walk: directory count + per-frame decode + dHash,
     * materialized BEFORE the reader is disposed. */
-  private def readFrameHashes(id: Long, bytes: Array[Byte],
-                              stride: Int): Seq[(Long, Int, Int, Int, Long)] =
+  private def readFrameHashes(id: Long, bytes: Array[Byte]): Seq[(Long, Int, Int, Int, Long)] =
     try {
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(bytes))
@@ -726,7 +722,7 @@ object MultimodalOps {
           try {
             r.setInput(iis)
             val n = r.getNumImages(true)
-            (0 until n by stride).flatMap { f =>
+            (0 until n).flatMap { f =>
               grayOf(r.read(f)).map(d => (id, f, d.width, d.height, dHash64(d)))
             }
           } finally r.dispose()
@@ -746,11 +742,9 @@ object MultimodalOps {
     * key, so band buckets never mix frames and nothing is all-pairs; the
     * per-pair rollup and the two frame-count joins are id-keyed,
     * hash-distributed, AQE-splittable. */
-  def animationNearDup(frameHashes: DataFrame, maxHamming: Int = 3,
-                       idCol: String = "doc_id", frameCol: String = "frame_idx",
-                       hashCol: String = "dhash"): DataFrame = {
-    val fh = frameHashes.select(col(idCol).as("id"), col(frameCol).as("frame_idx"),
-      col(hashCol).as("h"))
+  def animationNearDup(frameHashes: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val fh = frameHashes.select(col("doc_id").as("id"), col("frame_idx").as("frame_idx"),
+      col("dhash").as("h"))
     val counts = fh.groupBy(col("id")).agg(count(lit(1)).as("nf"))
     hammingPairs(fh, maxHamming, alignKeys = Seq("frame_idx"))
       .groupBy("ida", "idb")
@@ -778,13 +772,10 @@ object MultimodalOps {
     * constant, and candidates ride [[hammingPairs]]' (slot, 16-bit-band)
     * equi-keys — hashes shuffle, pixels never do. */
   def animationNearDupNormalized(frameHashes: DataFrame, slots: Int = 4,
-                                 maxHamming: Int = 3,
-                                 idCol: String = "doc_id",
-                                 frameCol: String = "frame_idx",
-                                 hashCol: String = "dhash"): DataFrame = {
+                                 maxHamming: Int = 3): DataFrame = {
     require(slots > 0, s"slots must be positive, got $slots")
-    val fh = frameHashes.select(col(idCol).as("id"),
-      col(frameCol).cast("long").as("frame_idx"), col(hashCol).as("h"))
+    val fh = frameHashes.select(col("doc_id").as("id"),
+      col("frame_idx").cast("long").as("frame_idx"), col("dhash").as("h"))
     val counts = fh.groupBy(col("id")).agg(count(lit(1)).as("nf"))
     val keyed = fh.join(counts, Seq("id"))
       .withColumn("slot", explode(sequence(lit(0L), lit(slots - 1L))))
@@ -838,10 +829,9 @@ object MultimodalOps {
     * they ride the band equi-join key, so misaligned rows never even meet
     * in a bucket, and they are carried (from the a-side) on the output. */
   def hammingPairs(hashes: DataFrame, maxHamming: Int = 3,
-                   idCol: String = "id", hashCol: String = "h",
                    alignKeys: Seq[String] = Nil): DataFrame = {
     val chunked = hashes
-      .select(col(idCol).as("id") +: col(hashCol).as("h") +: alignKeys.map(col): _*)
+      .select(col("id").as("id") +: col("h").as("h") +: alignKeys.map(col): _*)
       .where(col("h").isNotNull)
       .select(col("id") +: col("h") +: alignKeys.map(col) :+
         posexplode(array((0 until 4).map(c =>

@@ -21,12 +21,21 @@ import org.apache.spark.sql.functions._
   */
 object PipelineOps {
 
+  private val Text = "text"
+  private val DocId = "doc_id"
+  /** The token maskTokens writes in place of a masked one. */
+  private val MaskToken = "<mask>"
+  /** Quality buckets of selectByTokenBudget. */
+  private val BudgetBuckets = 1000
+  /** Hashed-unigram buckets of dsirResample's bag-of-words models. */
+  private val DsirBuckets = 256
+
   /** Deterministic train/valid/test assignment from a content hash: the
     * first hex nibble of md5(text) buckets the corpus 12/2/2 (75% / 12.5% /
     * 12.5%). Content-keyed (not id-keyed) so re-ingested duplicates land in
     * the same split — the standard guard against train/test leakage. */
-  def hashSplit(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol), md5Split(col(textCol)).as("split"))
+  def hashSplit(docs: DataFrame): DataFrame =
+    docs.select(col(DocId), md5Split(col(Text)).as("split"))
 
   /** THE md5-nibble → split rule (~75/12.5/12.5): one definition shared by
     * [[hashSplit]] and [[graft.operators.DedupOps.clusterAwareSplit]], so
@@ -59,8 +68,7 @@ object PipelineOps {
     * because blocks follow id order the global batch numbering is
     * bit-identical to the single-window form (pinned in ScalaTest), not
     * merely waste-equivalent like a hash-shard would be. */
-  def lengthBuckets(docs: DataFrame, batchSize: Int = 8,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def lengthBuckets(docs: DataFrame, batchSize: Int = 8): DataFrame = {
     require(batchSize > 0, s"batchSize must be positive, got $batchSize")
     val spark = docs.sparkSession
     val threads = spark.sparkContext.defaultParallelism
@@ -70,11 +78,11 @@ object PipelineOps {
     // start throwing once the corpus grows past the crossover (the window
     // form is correct for any orderable id, just bucket-bound in
     // parallelism — a documented trade, not a failure)
-    if (!hasIntegralId(docs, idCol) ||
+    if (!hasIntegralId(docs) ||
       docs.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxPart) * threads)
-      windowLengthBuckets(docs, batchSize, textCol, idCol)
+      windowLengthBuckets(docs, batchSize)
     else
-      shardedLengthBuckets(docs, batchSize, 4096L, textCol, idCol)
+      shardedLengthBuckets(docs, batchSize, blockSize = 4096L)
   }
 
   /** (doc_id, n_tokens, bucket) projection shared by both formulations.
@@ -82,10 +90,10 @@ object PipelineOps {
     * (len(bin(n−1)) = ⌊log2(n−1)⌋+1 = ⌈log2(n)⌉ for n ≥ 2): floating log2
     * at power-of-two boundaries is one ulp from flipping the ceil between
     * engines, binary-string length never is. */
-  private def bucketed(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val n = size(split(col(textCol), " ")).cast("long")
+  private def bucketed(docs: DataFrame): DataFrame = {
+    val n = size(split(col(Text), " ")).cast("long")
     docs.select(
-      col(idCol).as("doc_id"),
+      col(DocId).as("doc_id"),
       n.as("n_tokens"),
       when(n <= 1, lit(0L))
         .otherwise(length(bin(n - 1)).cast("long")).as("bucket"))
@@ -97,15 +105,15 @@ object PipelineOps {
     * numeric string id can order blocks differently than the id itself —
     * breaking the bit-identity contract with the single-window form. Fail
     * loudly at plan time instead. */
-  private def hasIntegralId(docs: DataFrame, idCol: String): Boolean = {
+  private def hasIntegralId(docs: DataFrame): Boolean = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    Seq(ByteType, ShortType, IntegerType, LongType).contains(docs.schema(idCol).dataType)
+    Seq(ByteType, ShortType, IntegerType, LongType).contains(docs.schema(DocId).dataType)
   }
 
-  private def requireIntegralId(docs: DataFrame, idCol: String, who: String): Unit =
-    require(hasIntegralId(docs, idCol),
+  private def requireIntegralId(docs: DataFrame, who: String): Unit =
+    require(hasIntegralId(docs),
       s"$who derives id-blocks arithmetically and requires an integral id " +
-        s"column; '$idCol' is ${docs.schema(idCol).dataType}")
+        s"column; '$DocId' is ${docs.schema(DocId).dataType}")
 
   /** Waste accounting over ranked docs: batch = ⌊(rank−1)/batchSize⌋. */
   private def packBatches(ranked: DataFrame, batchSize: Int): DataFrame =
@@ -122,12 +130,10 @@ object PipelineOps {
   /** Direct form: one ranking window partitioned by bucket. Parallelism =
     * bucket count (~17 keys), task memory ∝ largest bucket — planned only
     * below the crossover (see [[lengthBuckets]]). */
-  private[graft] def windowLengthBuckets(docs: DataFrame, batchSize: Int,
-                                             textCol: String = "text",
-                                             idCol: String = "doc_id"): DataFrame = {
+  private[graft] def windowLengthBuckets(docs: DataFrame, batchSize: Int): DataFrame = {
     val w = Window.partitionBy("bucket").orderBy("doc_id")
     packBatches(
-      bucketed(docs, textCol, idCol).withColumn("__rk", row_number().over(w).cast("long")),
+      bucketed(docs).withColumn("__rk", row_number().over(w).cast("long")),
       batchSize)
   }
 
@@ -140,12 +146,10 @@ object PipelineOps {
     * order, so ranks — and hence batch ids and waste rows — are
     * bit-identical to [[windowLengthBuckets]]. */
   private[graft] def shardedLengthBuckets(docs: DataFrame, batchSize: Int,
-                                              blockSize: Long = 4096L,
-                                              textCol: String = "text",
-                                              idCol: String = "doc_id"): DataFrame = {
+                                              blockSize: Long): DataFrame = {
     require(blockSize > 0, s"blockSize must be positive, got $blockSize")
-    requireIntegralId(docs, idCol, "shardedLengthBuckets")
-    val d = bucketed(docs, textCol, idCol).withColumn("blk",
+    requireIntegralId(docs, "shardedLengthBuckets")
+    val d = bucketed(docs).withColumn("blk",
       call_function("div", col("doc_id") - pmod(col("doc_id"), lit(blockSize)), lit(blockSize)))
     val partials = d.groupBy("bucket", "blk").agg(count(lit(1)).as("blk_n"))
     val wOff = Window.partitionBy("bucket").orderBy("blk")
@@ -163,19 +167,18 @@ object PipelineOps {
   /** Sliding-window token chunking (size/stride in tokens) — the standard
     * pre-tokenization step that turns documents into fixed-length training
     * sequences with overlap. One output row per (doc, window start). */
-  def chunk(docs: DataFrame, size: Int, stride: Int,
-            textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def chunk(docs: DataFrame, size: Int, stride: Int): DataFrame = {
     require(stride > 0 && size > 0, "size and stride must be positive")
-    val toks = split(col(textCol), " ")
+    val toks = split(col(Text), " ")
     docs
-      .select(col(idCol), toks.as("__toks"))
+      .select(col(DocId), toks.as("__toks"))
       // one start offset per stride step; size-1 guard keeps ANSI sequence()
       // happy for docs shorter than one stride
-      .select(col(idCol), col("__toks"),
+      .select(col(DocId), col("__toks"),
         explode(sequence(lit(0),
           greatest(org.apache.spark.sql.functions.size(col("__toks")) - 1, lit(0)),
           lit(stride))).as("start"))
-      .select(col(idCol),
+      .select(col(DocId),
         (col("start") / stride).cast("long").as("chunk_id"),
         array_join(slice(col("__toks"), col("start") + 1, lit(size)), " ").as("chunk"),
         org.apache.spark.sql.functions.size(slice(col("__toks"), col("start") + 1, lit(size)))
@@ -196,12 +199,11 @@ object PipelineOps {
     * relation is touched by one bucket-partitioned sort, never a global
     * one. (The naive `Window.orderBy(id)` formulation funnels 100 TB
     * through one task.) */
-  def packSequences(docs: DataFrame, ctxLen: Long, bucketSize: Long = 4096,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def packSequences(docs: DataFrame, ctxLen: Long, bucketSize: Long = 4096): DataFrame = {
     require(ctxLen > 0 && bucketSize > 0, "ctxLen and bucketSize must be positive")
-    requireIntegralId(docs, idCol, "packSequences")
-    val counts = docs.select(col(idCol).as("id"),
-      org.apache.spark.sql.functions.size(split(col(textCol), " ")).cast("long").as("n_tok"))
+    requireIntegralId(docs, "packSequences")
+    val counts = docs.select(col(DocId).as("id"),
+      org.apache.spark.sql.functions.size(split(col(Text), " ")).cast("long").as("n_tok"))
     val bucketed = counts.withColumn("bkt",
       call_function("div", col("id") - pmod(col("id"), lit(bucketSize)), lit(bucketSize)))
     val partials = bucketed.groupBy("bkt").agg(sum("n_tok").as("bkt_tok"))
@@ -216,22 +218,21 @@ object PipelineOps {
       .join(broadcast(offsets), Seq("bkt"))
       .withColumn("start",
         col("bkt_off") + sum("n_tok").over(wLocal) - col("n_tok"))
-      .select(col("id").as(idCol), col("n_tok"),
+      .select(col("id").as(DocId), col("n_tok"),
         call_function("div", col("start") - pmod(col("start"), lit(ctxLen)), lit(ctxLen))
           .as("seq_id"),
         pmod(col("start"), lit(ctxLen)).as("seq_offset"))
   }
 
   /** Deterministic MLM-style token masking: token i of doc d is replaced by
-    * `maskTok` when the first 4 hex digits of md5("d:i") fall below
+    * [[MaskToken]] when the first 4 hex digits of md5("d:i") fall below
     * rate·65536 — a pure, reproducible function of (doc, position) that any
     * engine recomputes identically (no RNG state, retries re-derive the
     * same corruption). Narrow codegen'd map over the token array; no
     * shuffle, no state. Hex-string comparison against the fixed-width
     * threshold IS the numeric comparison, so both sides stay in string
     * space. */
-  def maskTokens(docs: DataFrame, rate: Double = 0.15, maskTok: String = "<mask>",
-                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def maskTokens(docs: DataFrame, rate: Double = 0.15): DataFrame = {
     require(rate >= 0 && rate <= 1, s"rate must be in [0,1], got $rate")
     val threshold = math.round(rate * 65536)
     val thresholdHex = f"$threshold%04x"
@@ -239,7 +240,7 @@ object PipelineOps {
       // rate 1.0 would need a 5-hex-digit threshold, outside the 4-digit
       // compare domain — short-circuit it
       if (threshold >= 65536) lit(true)
-      else substring(md5(concat(col(idCol).cast("string"), lit(":"), i.cast("string"))
+      else substring(md5(concat(col(DocId).cast("string"), lit(":"), i.cast("string"))
         .cast("binary")), 1, 4) < thresholdHex
     // bind the per-position mask decisions to ONE projected array column:
     // both consumers (token substitution and the mask count) read the same
@@ -247,14 +248,14 @@ object PipelineOps {
     // cost of this operator, and an expression referenced inside two lambdas
     // evaluates once PER REFERENCE (r9: q_mask_tokens paid every md5 twice)
     docs
-      .withColumn("__toks", split(col(textCol), " "))
+      .withColumn("__toks", split(col(Text), " "))
       .withColumn("__mask", transform(
         sequence(lit(0), org.apache.spark.sql.functions.size(col("__toks")) - 1),
         i => hit(i)))
       .select(
-        col(idCol),
+        col(DocId),
         concat_ws(" ", zip_with(col("__toks"), col("__mask"),
-          (t, m) => when(m, lit(maskTok)).otherwise(t))).as("masked_text"),
+          (t, m) => when(m, lit(MaskToken)).otherwise(t))).as("masked_text"),
         aggregate(col("__mask"), lit(0L),
           (acc, m) => acc + when(m, 1L).otherwise(0L)).as("n_masked"),
         org.apache.spark.sql.functions.size(col("__toks")).cast("long").as("n_tokens"))
@@ -301,16 +302,15 @@ object PipelineOps {
     * values of top_frac/dup_frac flag boilerplate and degenerate text.
     * Two-stage aggregation — (doc, token) counts then per-doc roll-up — both
     * with map-side partial aggregation. */
-  def repetitionStats(docs: DataFrame, textCol: String = "text",
-                      idCol: String = "doc_id"): DataFrame =
+  def repetitionStats(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("c"))
-      .groupBy(col(idCol)).agg(
+      .select(col(DocId), explode(split(col(Text), " ")).as("tok"))
+      .groupBy(col(DocId), col("tok")).agg(count(lit(1)).as("c"))
+      .groupBy(col(DocId)).agg(
         sum("c").as("n_tokens"),
         count(lit(1)).as("n_distinct"),
         max("c").as("top_cnt"))
-      .select(col(idCol),
+      .select(col(DocId),
         col("n_tokens"), col("n_distinct"),
         round(col("top_cnt") / col("n_tokens"), 6).as("top_frac"),
         round((col("n_tokens") - col("n_distinct")) / col("n_tokens"), 6).as("dup_frac"))
@@ -320,9 +320,8 @@ object PipelineOps {
     * the n-gram itself. The n-gram build is a per-row transform; the count
     * partial-aggregates before the single shuffle; top-k is a global sort of
     * the (small) aggregated result. */
-  def topNgrams(docs: DataFrame, n: Int, k: Int,
-                textCol: String = "text"): DataFrame = {
-    val toks = split(col(textCol), " ")
+  def topNgrams(docs: DataFrame, n: Int, k: Int): DataFrame = {
+    val toks = split(col(Text), " ")
     val grams = (0 until n).map(i => col("__toks")(col("pos") + i))
     docs
       .select(toks.as("__toks"))
@@ -340,9 +339,8 @@ object PipelineOps {
     * by content hash (deterministic), where minCount is the smallest class
     * size — equalizes class frequencies without `rand()`. The per-class rank
     * is a window over the class key; the min-count is a broadcast scalar. */
-  def balanceClasses(docs: DataFrame, classCol: String,
-                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(col(classCol)).orderBy(md5(col(textCol)), col(idCol))
+  def balanceClasses(docs: DataFrame, classCol: String): DataFrame = {
+    val w = Window.partitionBy(col(classCol)).orderBy(md5(col(Text)), col(DocId))
     val counts = docs.groupBy(col(classCol)).agg(count(lit(1)).as("__cnt"))
     val minCnt = counts.agg(min("__cnt").as("__min"))
     docs
@@ -362,13 +360,12 @@ object PipelineOps {
     * per (task, key) instead of the whole corpus — with web-scale source
     * cardinality (millions of domains) the window itself is embarrassingly
     * parallel. */
-  def sourceCap(docs: DataFrame, maxPerKey: Int, classCol: String = "source",
-                lenCol: String = "n_chars", idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(col(classCol)).orderBy(col(lenCol).desc, col(idCol))
+  def sourceCap(docs: DataFrame, maxPerKey: Int): DataFrame = {
+    val w = Window.partitionBy(col("source")).orderBy(col("n_chars").desc, col(DocId))
     docs
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= maxPerKey)
-      .select(col(idCol), col(classCol), col(lenCol))
+      .select(col(DocId), col("source"), col("n_chars"))
   }
 
   /** Curation filter-cascade report: for an ORDERED list of (name,
@@ -408,28 +405,26 @@ object PipelineOps {
     *
     * Scale shape: NO data-sized global window (the naive cumulative sum
     * would total-order the corpus on one reducer). Quality (∈ [0,1]) is
-    * quantized into `nBuckets` buckets; the global running sum runs over
+    * quantized into [[BudgetBuckets]] buckets; the global running sum runs over
     * the BUCKET TOTALS (a model-sized table), whole buckets inside the
     * budget pass via a broadcast semi-join, and only the single straddling
     * bucket runs a per-doc prefix window — partitioned by bucket, i.e.
-    * 1/nBuckets of the corpus sorts, distributed. Same two-level pattern
+    * 1/BudgetBuckets of the corpus sorts, distributed. Same two-level pattern
     * as [[packSequences]]. Exactly equals the global greedy selection:
     * bucket order refines quality order and ties break on id inside one
     * bucket (equal qualities always share a bucket). Callers should pass a
     * quality already rounded to a cross-engine-stable precision if results
     * must reproduce bitwise across engines. */
-  def selectByTokenBudget(docs: DataFrame, budget: Long, nBuckets: Int = 1000,
-                          qualityCol: String = "quality", tokenCol: String = "n_tokens",
-                          idCol: String = "doc_id"): DataFrame = {
-    require(budget >= 0 && nBuckets > 0, s"need budget>=0, nBuckets>0; got $budget, $nBuckets")
-    val q = col(qualityCol)
+  def selectByTokenBudget(docs: DataFrame, budget: Long): DataFrame = {
+    require(budget >= 0, s"need budget>=0, got $budget")
+    val q = col("quality")
     // bucket 0 = best quality
     val d = docs.withColumn("__bkt",
-      least(greatest(floor((lit(1.0) - q) * nBuckets), lit(0.0)), lit(nBuckets - 1.0))
+      least(greatest(floor((lit(1.0) - q) * BudgetBuckets), lit(0.0)), lit(BudgetBuckets - 1.0))
         .cast("int"))
-    val totals = d.groupBy("__bkt").agg(sum(col(tokenCol)).as("__btok"))
+    val totals = d.groupBy("__bkt").agg(sum(col("n_tokens")).as("__btok"))
     // running total of tokens in strictly better buckets — a global window
-    // over ≤ nBuckets rows (model-sized, the one place a global order is OK)
+    // over ≤ BudgetBuckets rows (model-sized, the one place a global order is OK)
     val wB = Window.orderBy(col("__bkt")).rowsBetween(Window.unboundedPreceding, -1)
     val offsets = totals.withColumn("__prev", coalesce(sum(col("__btok")).over(wB), lit(0L)))
     val fullyIn = offsets.where(col("__prev") + col("__btok") <= budget).select("__bkt")
@@ -437,10 +432,10 @@ object PipelineOps {
       .where(col("__prev") < budget && col("__prev") + col("__btok") > budget)
       .select("__bkt", "__prev") // ≤ 1 row
     val keptWhole = d.join(broadcast(fullyIn), Seq("__bkt"), "left_semi")
-    val wD = Window.partitionBy(col("__bkt")).orderBy(q.desc, col(idCol))
+    val wD = Window.partitionBy(col("__bkt")).orderBy(q.desc, col(DocId))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val keptPart = d.join(broadcast(straddle), Seq("__bkt"))
-      .withColumn("__cum", sum(col(tokenCol)).over(wD))
+      .withColumn("__cum", sum(col("n_tokens")).over(wD))
       .where(col("__prev") + col("__cum") <= budget)
       .drop("__prev", "__cum")
     keptWhole.unionByName(keptPart).drop("__bkt")
@@ -462,10 +457,8 @@ object PipelineOps {
     * (w_g = ⌊√(n_g·10⁶)⌋, exact in IEEE), targets use pure BIGINT arithmetic
     * (tgt_g = min(n_g, T·w_g div Σw)), and the cut is an 8-hex-digit string
     * compare (lexicographic = numeric for fixed-width lowercase hex). */
-  def temperatureSample(docs: DataFrame, frac: Double = 0.5,
-                        classCol: String = "lang", textCol: String = "text",
-                        idCol: String = "doc_id"): DataFrame = {
-    val counts = docs.groupBy(col(classCol)).agg(count(lit(1)).as("__n"))
+  def temperatureSample(docs: DataFrame, frac: Double = 0.5): DataFrame = {
+    val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("__n"))
       .withColumn("__w", floor(sqrt(col("__n") * lit(1000000.0))).cast("long"))
     val totals = counts.agg(sum("__n").as("__tn"), sum("__w").as("__tw"))
     val cuts = counts.crossJoin(broadcast(totals))
@@ -478,11 +471,11 @@ object PipelineOps {
           .otherwise(lpad(lower(hex(
             floor(col("__tgt").cast("double") / col("__n") * lit(4294967296.0))
               .cast("long"))), 8, "0")))
-      .select(col(classCol), col("__cut"))
+      .select(col("lang"), col("__cut"))
     docs
-      .join(broadcast(cuts), classCol)
-      .where(substring(md5(col(textCol)), 1, 8) < col("__cut"))
-      .select(col(idCol), col(classCol))
+      .join(broadcast(cuts), "lang")
+      .where(substring(md5(col(Text)), 1, 8) < col("__cut"))
+      .select(col(DocId), col("lang"))
   }
 
   /** Weighted source mixing: keep a per-source fraction of documents
@@ -492,23 +485,21 @@ object PipelineOps {
     * 0.25, ...) for bit-stable quotas across engines. The per-source ranks
     * shuffle once on the source key; the (sources × weights) quota table is
     * broadcast. */
-  def mixSources(docs: DataFrame, weights: Map[String, Double],
-                 classCol: String = "source", textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
+  def mixSources(docs: DataFrame, weights: Map[String, Double]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val w = weights.toSeq.toDF(classCol, "__w")
-    val counts = docs.groupBy(col(classCol)).agg(count(lit(1)).as("__cnt"))
-    val quotas = counts.join(w, classCol)
+    val w = weights.toSeq.toDF("source", "__w")
+    val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("__cnt"))
+    val quotas = counts.join(w, "source")
       .withColumn("__quota", floor(col("__w") * col("__cnt")))
-      .select(col(classCol), col("__quota"))
+      .select(col("source"), col("__quota"))
     val rn = row_number().over(
-      Window.partitionBy(col(classCol)).orderBy(md5(col(textCol)), col(idCol)))
+      Window.partitionBy(col("source")).orderBy(md5(col(Text)), col(DocId)))
     docs
       .withColumn("__rn", rn)
-      .join(broadcast(quotas), classCol)
+      .join(broadcast(quotas), "source")
       .where(col("__rn") <= col("__quota"))
-      .select(col(idCol), col(classCol))
+      .select(col(DocId), col("source"))
   }
 
   /** SCD-1 upsert: apply a keyed changeset to a snapshot — changed keys are
@@ -728,18 +719,17 @@ object PipelineOps {
     * broadcast, because at `minDf` = 2 the frequent set is as large as the
     * duplicated text itself. Covered positions aggregate per document
     * (state bounded by document length) and the rebuild is a codegen'd
-    * array filter per document. Output: (idCol, clean_text, n_removed,
+    * array filter per document. Output: (doc_id, clean_text, n_removed,
     * n_tokens); documents shorter than n tokens pass through unchanged.
     *
     * Positions are 1-based so the SQL oracle's list slicing maps 1:1.
     */
-  def stripBoilerplate(docs: DataFrame, n: Int = 8, minDf: Int = 2,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def stripBoilerplate(docs: DataFrame, n: Int = 8, minDf: Int = 2): DataFrame = {
     // fanOut the raw (id, text) before tokenizing: the per-position
     // slice+concat+hash pass below would otherwise run single-task in the
     // scan stage of a small parquet source (no-op at scale); the rebuild
     // join's re-tokenize reuses the same fanned-out exchange subtree
-    val base = ScaleOps.fanOut(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
+    val base = ScaleOps.fanOut(docs.select(col(DocId).as("id"), col(Text).as("__t")))
     val toked = base.select(col("id"), split(col("__t"), " ").as("toks"))
     // Positional grams partitioned by gram hash ONCE, shared by the df
     // aggregation AND the join probe (same exchange subtree → ReuseExchange
@@ -765,7 +755,7 @@ object PipelineOps {
       .select(col("id"), explode(sequence(col("i"), col("i") + (n - 1))).as("p"))
       .groupBy("id")
       .agg(sort_array(collect_set(col("p"))).as("cov"))
-    rebuildWithoutPositions(toked, covered, idCol)
+    rebuildWithoutPositions(toked, covered)
   }
 
   /** Rebuild step shared by [[stripBoilerplate]] and
@@ -773,15 +763,14 @@ object PipelineOps {
     * positions and re-join the survivors — a codegen'd array filter per
     * document; docs with no covered positions pass through via the left
     * join. */
-  private def rebuildWithoutPositions(toked: DataFrame, covered: DataFrame,
-                                      idCol: String): DataFrame = {
+  private def rebuildWithoutPositions(toked: DataFrame, covered: DataFrame): DataFrame = {
     val positions = sequence(lit(1), size(col("toks")))
     val kept = filter(
       zip_with(col("toks"), positions, (t, p) => struct(t.as("t"), p.as("p"))),
       s => not(array_contains(col("cov"), s.getField("p"))))
     toked.join(covered, Seq("id"), "left")
       .withColumn("cov", coalesce(col("cov"), array().cast("array<int>")))
-      .select(col("id").as(idCol),
+      .select(col("id").as(DocId),
         concat_ws(" ", transform(kept, s => s.getField("t"))).as("clean_text"),
         size(col("cov")).cast("long").as("n_removed"),
         size(col("toks")).cast("long").as("n_tokens"))
@@ -805,10 +794,9 @@ object PipelineOps {
     * and the shared [[rebuildWithoutPositions]] array filter. At 100 TB
     * this is the scalable stand-in for a suffix array: same removal
     * semantics for spans ≥ n tokens, at n-gram (not suffix) index cost. */
-  def dedupSpansKeepFirst(docs: DataFrame, n: Int = 8,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def dedupSpansKeepFirst(docs: DataFrame, n: Int = 8): DataFrame = {
     // fanOut before tokenizing — see [[stripBoilerplate]]
-    val base = ScaleOps.fanOut(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
+    val base = ScaleOps.fanOut(docs.select(col(DocId).as("id"), col(Text).as("__t")))
     val toked = base.select(col("id"), split(col("__t"), " ").as("toks"))
     // gram stream partitioned by hash once and shared by the first-
     // occurrence aggregation and the join probe — see [[stripBoilerplate]]
@@ -827,22 +815,22 @@ object PipelineOps {
       .select(col("id"), explode(sequence(col("i"), col("i") + (n - 1))).as("p"))
       .groupBy("id")
       .agg(sort_array(collect_set(col("p"))).as("cov"))
-    rebuildWithoutPositions(toked, covered, idCol)
+    rebuildWithoutPositions(toked, covered)
   }
 
   /** DSIR data selection (Xie et al. 2023, "Data Selection for Language
     * Models via Importance Resampling"): score every raw document by how
     * much it resembles a target distribution under hashed bag-of-words
     * models, then Gumbel-top-k sample by the importance weight. The
-    * target/raw models are bucket-count vectors over `nBuckets` hashed
-    * unigrams (the hashing trick — first 8 md5 hex chars mod nBuckets,
+    * target/raw models are bucket-count vectors over [[DsirBuckets]] hashed
+    * unigrams (the hashing trick — first 8 md5 hex chars mod DsirBuckets,
     * portable to the SQL oracle like [[TextOps.linearQualityScore]]);
     * log importance of a doc = Σ_tokens (ln p_target(b) − ln p_raw(b)),
     * add-one smoothed.
     *
     * Scale shape: pass 1 fits BOTH models in one conditional aggregation
-    * over the token stream (the shuffle carries nBuckets rows, not
-    * tokens); the 1-row totals cross-join and the nBuckets-row ratio
+    * over the token stream (the shuffle carries DsirBuckets rows, not
+    * tokens); the 1-row totals cross-join and the DsirBuckets-row ratio
     * table are model-sized broadcasts; pass 2 re-derives the token stream
     * and scores it with a broadcast hash join + per-doc sum (partial
     * map-side); selection is TakeOrderedAndProject — no global sort, no
@@ -854,18 +842,17 @@ object PipelineOps {
     * RNG state), also ×1e6-quantized, so the selection key is a long and
     * the top-k frontier is engine-independent.
     */
-  def dsirResample(docs: DataFrame, isTarget: Column, k: Int, nBuckets: Int = 256,
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def dsirResample(docs: DataFrame, isTarget: Column, k: Int): DataFrame = {
     val scale = 1000000L
     def bucketOf(w: Column): Column =
-      (call_function("md5_u32", w) % nBuckets).cast("int")
-    val tok = docs.select(col(idCol).as("doc_id"), isTarget.as("is_tgt"),
-        explode(split(col(textCol), " ")).as("w"))
+      (call_function("md5_u32", w) % DsirBuckets).cast("int")
+    val tok = docs.select(col(DocId).as("doc_id"), isTarget.as("is_tgt"),
+        explode(split(col(Text), " ")).as("w"))
       .select(col("doc_id"), col("is_tgt"), bucketOf(col("w")).as("b"))
     // ONE tokenize + per-token-md5 pass (the dominant cost — r13 profiling
     // attributed the query's 1.6 s to running it twice, once for the fit
     // and once for scoring): the per-(doc, bucket) histogram is bounded by
-    // |docs| × nBuckets rows, materializes eagerly, and BOTH the bucket fit
+    // |docs| × DsirBuckets rows, materializes eagerly, and BOTH the bucket fit
     // and the per-doc scores derive from it. Scores are unchanged exact
     // integer sums: Σ_tokens lr = Σ_buckets n·lr.
     val perDoc = tok.groupBy(col("doc_id"), col("is_tgt"), col("b"))
@@ -877,8 +864,8 @@ object PipelineOps {
     val totals = counts.agg(sum("raw_n").as("raw_tot"), sum("tgt_n").as("tgt_tot"))
     val ratios = counts.crossJoin(broadcast(totals))
       .select(col("b"),
-        round((log((col("tgt_n") + 1).cast("double") / (col("tgt_tot") + nBuckets)) -
-               log((col("raw_n") + 1).cast("double") / (col("raw_tot") + nBuckets))) * scale)
+        round((log((col("tgt_n") + 1).cast("double") / (col("tgt_tot") + DsirBuckets)) -
+               log((col("raw_n") + 1).cast("double") / (col("raw_tot") + DsirBuckets))) * scale)
           .cast("long").as("lr_l"))
     val scored = perDoc.join(broadcast(ratios), Seq("b"))
       .groupBy("doc_id")

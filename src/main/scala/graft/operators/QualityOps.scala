@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object QualityOps {
 
+  private val Text = "text"
+  private val DocId = "doc_id"
+
   /** One named constraint: a metric column (evaluated inside the single
     * aggregation) and the minimum value it must reach to pass.
     */
@@ -129,10 +132,9 @@ object QualityOps {
     * payload is dims × partitions partial sums, never the vectors.
     * Output: one row per dimension (dim, mean_ref, mean_cur, shift).
     */
-  def embeddingDrift(ref: DataFrame, cur: DataFrame,
-      vecCol: String = "embedding"): DataFrame = {
+  def embeddingDrift(ref: DataFrame, cur: DataFrame): DataFrame = {
     def side(df: DataFrame, isRef: Boolean): DataFrame = df
-      .select(col(vecCol).as("__v"), lit(isRef).as("__is_ref"))
+      .select(col("embedding").as("__v"), lit(isRef).as("__is_ref"))
     side(ref, isRef = true).unionByName(side(cur, isRef = false))
       .select(col("__is_ref"), posexplode(col("__v")))
       .groupBy(col("pos").cast("long").as("dim"))
@@ -153,15 +155,14 @@ object QualityOps {
     * the only state that grows with vocabulary — swap count_distinct for
     * approx_count_distinct when exactness stops mattering; the plan is
     * otherwise identical. */
-  def sourceProfile(docs: DataFrame, groupCol: String = "source",
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+  def sourceProfile(docs: DataFrame): DataFrame =
     docs
-      .select(col(groupCol).as("source"), col(idCol),
-        split(col(textCol), " ").as("__toks"))
-      .select(col("source"), col(idCol), explode(col("__toks")).as("tok"))
+      .select(col("source").as("source"), col(DocId),
+        split(col(Text), " ").as("__toks"))
+      .select(col("source"), col(DocId), explode(col("__toks")).as("tok"))
       .groupBy("source")
       .agg(
-        count_distinct(col(idCol)).as("n_docs"),
+        count_distinct(col(DocId)).as("n_docs"),
         count(lit(1)).as("n_tokens"),
         count_distinct(col("tok")).as("n_distinct_tokens"))
       .withColumn("avg_tokens", round(col("n_tokens") / col("n_docs").cast("double"), 6))
@@ -176,10 +177,9 @@ object QualityOps {
     * by the SOURCE COUNT (handfuls, not corpus-sized) and a map-side pair
     * explode of that tiny set — the |sources|² pair space never joins
     * corpus-sized relations. */
-  def sourceOverlap(docs: DataFrame, n: Int = 8, groupCol: String = "source",
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def sourceOverlap(docs: DataFrame, n: Int = 8): DataFrame = {
     val grams = docs
-      .select(col(groupCol).as("src_grp"), split(col(textCol), " ").as("toks"))
+      .select(col("source").as("src_grp"), split(col(Text), " ").as("toks"))
       .where(size(col("toks")) >= n)
       .select(col("src_grp"), explode(sequence(lit(1), size(col("toks")) - (n - 1))).as("i"),
         col("toks"))

@@ -226,6 +226,10 @@ object QuantileOps {
         round(min(v), 6).as("min_v"), round(max(v), 6).as("max_v"))
   }
 
+  /** Decimal places of winsorize's and robustOutliers' quantiles and
+    * outputs. */
+  private val Scale = 6
+
   /** Winsorize: clamp `valCol` into its group's [pLo, pHi] quantile range,
     * the robust-stats outlier treatment that keeps row count (unlike
     * trimming). The quantile table is one row per group — broadcast back
@@ -257,12 +261,12 @@ object QuantileOps {
   }
 
   def winsorize(df: DataFrame, groupCol: String, valCol: String,
-      pLo: Double, pHi: Double, scale: Int = 6): DataFrame = {
+      pLo: Double, pHi: Double): DataFrame = {
     val qs = exactQuantiles(df, groupCol, valCol,
-      ps = Seq("__qlo" -> pLo, "__qhi" -> pHi), scale = scale)
+      ps = Seq("__qlo" -> pLo, "__qhi" -> pHi), scale = Scale)
     df.join(broadcast(qs), Seq(groupCol))
       .withColumn(s"${valCol}_w",
-        round(least(greatest(col(valCol), col("__qlo")), col("__qhi")), scale))
+        round(least(greatest(col(valCol), col("__qlo")), col("__qhi")), Scale))
       .drop("__qlo", "__qhi")
   }
 
@@ -276,7 +280,7 @@ object QuantileOps {
     * (|robust_z| > cutoff).
     *
     * Determinism contract: both medians come from [[exactQuantiles]]
-    * rounded at `scale` BEFORE any arithmetic, so the score is a single
+    * rounded at [[Scale]] places BEFORE any arithmetic, so the score is a single
     * fixed expression over engine-identical inputs — no accumulation
     * order. Groups with MAD = 0 (over half the values identical) have no
     * defined scale and are skipped, matching the SQL oracle's `mad > 0`.
@@ -286,15 +290,14 @@ object QuantileOps {
     * stats (|groups| rows) onto the data — the data itself never
     * shuffles for scoring. */
   def robustOutliers(df: DataFrame, groupCol: String, idCol: String,
-                     valCol: String, cutoff: Double = 3.5,
-                     scale: Int = 6): DataFrame = {
+                     valCol: String, cutoff: Double = 3.5): DataFrame = {
     val med = exactQuantiles(df, groupCol, valCol,
-      ps = Seq("__med" -> 0.5), scale = scale)
+      ps = Seq("__med" -> 0.5), scale = Scale)
     val withMed = df.select(col(groupCol), col(idCol), col(valCol))
       .join(broadcast(med), Seq(groupCol))
       .withColumn("__dev", abs(col(valCol) - col("__med")))
     val mad = exactQuantiles(withMed, groupCol, "__dev",
-      ps = Seq("__mad" -> 0.5), scale = scale)
+      ps = Seq("__mad" -> 0.5), scale = Scale)
     withMed.join(broadcast(mad), Seq(groupCol))
       .where(col("__mad") > 0)
       .withColumn("robust_z",

@@ -34,6 +34,11 @@ object ScaleOps {
     else df
   }
 
+  /** Bits in bloomSemiJoin's filter: an 8 KB broadcast blob. */
+  private val BloomBits = 1 << 16
+  /** Bits of each key that zorderValue interleaves. */
+  private val ZorderBits = 16
+
   /** Bloom-prefiltered left-semi join: keep `big` rows whose `bigKey`
     * appears in `small`'s `smallKey` set — the exact semi-join result —
     * but prune the big side MAP-SIDE first with a broadcast Bloom filter
@@ -51,10 +56,10 @@ object ScaleOps {
     * shuffle carries one m-bit blob per partition (bitwise-OR merge),
     * never the key set.
     */
-  def bloomSemiJoin(big: DataFrame, bigKey: String, small: DataFrame, smallKey: String,
-                    numBits: Int = 1 << 16): DataFrame = {
+  def bloomSemiJoin(big: DataFrame, bigKey: String,
+                    small: DataFrame, smallKey: String): DataFrame = {
     val k = graft.plans.BloomMightContain.NumHashes
-    val bloomAgg = udaf(new graft.functions.BloomFilterAggregator(numBits, k))
+    val bloomAgg = udaf(new graft.functions.BloomFilterAggregator(BloomBits, k))
     val blob = small.agg(bloomAgg(col(smallKey).cast("long")).as("__bloom"))
     big
       .crossJoin(broadcast(blob)) // 1-row m-bit blob
@@ -83,15 +88,15 @@ object ScaleOps {
       .drop("__salt")
   }
 
-  /** Z-order (Morton) value of two keys: interleave the low `bits` bits of
+  /** Z-order (Morton) value of two keys: interleave the low [[ZorderBits]] bits of
     * x (even positions) and y (odd positions). Sorting/range-partitioning a
     * table by this value clusters rows that are close in BOTH dimensions
     * into the same files, so min/max file statistics prune scans for
     * predicates on either key — the multi-dimensional layout optimization
     * behind Delta/Iceberg Z-ORDER, here as a plain codegen'd column
     * expression (a sum of shift/mask terms; no UDF, no shuffle). */
-  def zorderValue(x: Column, y: Column, bits: Int = 16): Column =
-    (0 until bits).map { i =>
+  def zorderValue(x: Column, y: Column): Column =
+    (0 until ZorderBits).map { i =>
       shiftleft(shiftright(x, i).bitwiseAND(1), 2 * i) +
         shiftleft(shiftright(y, i).bitwiseAND(1), 2 * i + 1)
     }.reduce(_ + _)

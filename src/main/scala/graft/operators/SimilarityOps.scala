@@ -26,14 +26,30 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityOps {
 
+  private val VecId = "vec_id"
+  private val Embedding = "embedding"
+  /** Lloyd steps of the quantizer fits: 0 keeps the deterministic
+    * lowest-id init, so cell routing and codes reproduce exactly in SQL. */
+  private val KmeansIters = 0
+  /** Lloyd steps of ivfTopK's coarse quantizer. */
+  private val IvfKmeansIters = 2
+  /** Seed of randomProject's projection matrix. */
+  private val ProjectionSeed = 42L
+  /** marginMine's LSH bands and planes per band, past the broadcast budget. */
+  private val MarginLshPlanes = 8
+  private val MarginLshBands = 8
+  /** nearDupPairsLsh's planes per band and bands. */
+  private val NearDupPlanes = 8
+  private val NearDupBands = 16
+
   /** Corpus with normalised vector + precomputed norm. Fanned out when the
     * source under-supplies partitions (small single-row-group parquet scans
     * as ONE partition, and the block/band explodes downstream then run
     * single-task until the first shuffle) — a provable no-op at production
     * scale, see [[ScaleOps.fanOut]]. */
-  private[operators] def prepared(emb: DataFrame, vecCol: String, idCol: String): DataFrame =
+  private[operators] def prepared(emb: DataFrame): DataFrame =
     ScaleOps.fanOut(
-      emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
+      emb.select(col(VecId).as("id"), toDouble(col(Embedding)).as("v"))
         .withColumn("nrm", norm(col("v"))))
 
   /** How many sample vectors a quantizer fit trains on, per centroid. */
@@ -147,10 +163,9 @@ object SimilarityOps {
 
   /** Exact top-k neighbours for each query vector (excluding self).
     * The query side is broadcast — corpus never shuffles. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = prepared(corpus, vecCol, idCol)
-    val q = prepared(queries, vecCol, idCol)
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val c = prepared(corpus)
+    val q = prepared(queries)
       .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
@@ -172,12 +187,11 @@ object SimilarityOps {
     * similarity-search shape of the streaming top-k literature (EDBT'19/
     * SIGMOD'20 continuous similarity search). Batch output is identical to
     * [[bruteForceTopK]] (same sim, same desc/id tie-break). */
-  def topKAggregated(corpus: DataFrame, queries: DataFrame, k: Int,
-                     vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def topKAggregated(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = prepared(corpus, vecCol, idCol)
-    val q = prepared(queries, vecCol, idCol)
+    val c = prepared(corpus)
+    val q = prepared(queries)
       .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
@@ -203,14 +217,12 @@ object SimilarityOps {
     * exclusion rides the scored join as a codegen'd filter before ranking.
     * At production scale swap the scoring join for [[lshTopK]]'s banded
     * candidates — the label filter composes unchanged. */
-  def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
-                    labelCol: String = "label",
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
-        toDouble(col(vecCol)).as("v"))
+  def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val c = corpus.select(col(VecId).as("id"), col("label").as("lbl"),
+        toDouble(col(Embedding)).as("v"))
       .withColumn("nrm", norm(col("v")))
-    val qs = queries.select(col(idCol).as("query_id"), col(labelCol).as("qlbl"),
-        toDouble(col(vecCol)).as("qv"))
+    val qs = queries.select(col(VecId).as("query_id"), col("label").as("qlbl"),
+        toDouble(col(Embedding)).as("qv"))
       .withColumn("qnrm", norm(col("qv")))
     val scored = c.join(broadcast(qs),
         col("id") =!= col("query_id") && col("lbl") =!= col("qlbl"))
@@ -239,21 +251,14 @@ object SimilarityOps {
     * candidates exactly as [[nearDupPairsLsh]] does — the aggregation
     * composes unchanged. */
   def contaminationScreen(corpus: DataFrame, benchmark: DataFrame,
-                          threshold: Double,
-                          vecCol: String = "embedding",
-                          idCol: String = "vec_id",
-                          excludeSelfId: Boolean = false): DataFrame = {
-    val c = prepared(corpus, vecCol, idCol)
-    val b = prepared(benchmark, vecCol, idCol)
+                          threshold: Double): DataFrame = {
+    val c = prepared(corpus)
+    val b = prepared(benchmark)
       .select(col("id").as("bench_id"), col("v").as("bv"), col("nrm").as("bnrm"))
     // Corpus and benchmark id spaces need NOT be disjoint: every pair is
-    // compared by default. `excludeSelfId` is the explicit opt-in for
-    // screening a table against ITSELF (where id equality means "the same
-    // row", not a coincidence of independent namespaces) — an implicit
-    // id =!= bench_id predicate would silently skip any corpus/bench pair
-    // whose independently-assigned ids happen to coincide.
-    val pairPred = if (excludeSelfId) col("id") =!= col("bench_id") else lit(true)
-    c.join(broadcast(b), pairPred)
+    // compared, so a corpus/bench pair whose independently-assigned ids
+    // happen to coincide is still screened.
+    c.join(broadcast(b), lit(true))
       .withColumn("sim", cosinePrenormed(col("bv"), col("v"), col("bnrm"), col("nrm")))
       .where(col("sim") >= threshold)
       .groupBy(col("id"))
@@ -307,27 +312,25 @@ object SimilarityOps {
     * Survivors materialize eagerly (localCheckpoint) so the scoring scan
     * runs exactly once even though two aggregations consume them. */
   def marginMine(xSide: DataFrame, ySide: DataFrame, k: Int = 4,
-                 minMargin: Double = 1.0,
-                 vecCol: String = "embedding", idCol: String = "vec_id",
-                 lshPlanes: Int = 8, lshBands: Int = 8): DataFrame = {
-    val strategy = if (seedPastBroadcastBudget(xSide, vecCol)) "lsh" else "broadcast"
+                 minMargin: Double = 1.0): DataFrame = {
+    val strategy = if (seedPastBroadcastBudget(xSide)) "lsh" else "broadcast"
     // The crossover changes RESULT semantics, not just cost (the lsh path's
     // recall follows the band parameters), so a conf- or data-size-driven
     // flip must be observable rather than silent.
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"marginMine strategy=$strategy (seed side vs autoBroadcastJoinThreshold; " +
-        s"lsh recall follows bands=$lshBands x planes=$lshPlanes)")
-    marginMineStrategy(xSide, ySide, k, minMargin, vecCol, idCol,
-      strategy, lshPlanes, lshBands)
+        s"lsh recall follows bands=$MarginLshBands x planes=$MarginLshPlanes)")
+    marginMineStrategy(xSide, ySide, k, minMargin,
+      strategy, MarginLshPlanes, MarginLshBands)
   }
 
   /** True when the seed side's estimated in-memory footprint exceeds the
     * session broadcast budget. One scalar aggregate (row count + vector
     * dim) — bounded model metadata, never data rows. */
-  private[graft] def seedPastBroadcastBudget(seed: DataFrame, vecCol: String): Boolean = {
+  private[graft] def seedPastBroadcastBudget(seed: DataFrame): Boolean = {
     val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
     if (thresh <= 0) return true
-    val m = seed.agg(count(lit(1)).as("n"), max(size(col(vecCol))).as("d")).head()
+    val m = seed.agg(count(lit(1)).as("n"), max(size(col(Embedding))).as("d")).head()
     val n = m.getLong(0)
     val dim = if (m.isNullAt(1)) 0L else m.getInt(1).toLong
     n * (dim * 8L + 48L) > thresh
@@ -336,11 +339,10 @@ object SimilarityOps {
   /** Strategy-pinned entry (tests pin lsh ≡ broadcast through this). */
   private[graft] def marginMineStrategy(xSide: DataFrame, ySide: DataFrame,
                                         k: Int, minMargin: Double,
-                                        vecCol: String, idCol: String,
                                         strategy: String,
-                                        lshPlanes: Int = 8, lshBands: Int = 8): DataFrame = {
+                                        lshPlanes: Int, lshBands: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val surv = marginSurvivors(xSide, ySide, k, vecCol, idCol,
+    val surv = marginSurvivors(xSide, ySide, k,
         strategy, lshPlanes, lshBands)
       .ckpt(true) // bounded: (|X|+|Y|)·k narrow rows
     val xStats = surv.where(col("side") === 0).groupBy(col("key"))
@@ -367,11 +369,10 @@ object SimilarityOps {
     * per-direction windows. Package-private so PlanQualitySpec pins the
     * scoring plan that eager checkpointing hides from the final query. */
   private[graft] def marginSurvivors(xSide: DataFrame, ySide: DataFrame, k: Int,
-                                     vecCol: String, idCol: String,
                                      strategy: String,
                                      lshPlanes: Int, lshBands: Int): DataFrame = {
-    val x = prepared(xSide, vecCol, idCol)
-    val y = prepared(ySide, vecCol, idCol)
+    val x = prepared(xSide)
+    val y = prepared(ySide)
     val scored = strategy match {
       case "broadcast" => marginScoredBroadcast(x, y)
       case "lsh"       => marginScoredLsh(x, y, lshPlanes, lshBands)
@@ -442,11 +443,10 @@ object SimilarityOps {
     * Returns (rank, vec_id, sep_dist) where sep_dist is the quantized
     * min-distance at selection time (NULL for the seed) — the classic
     * "coverage radius" curve a curator reads k off of. */
-  def kCenterSelect(emb: DataFrame, k: Int,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def kCenterSelect(emb: DataFrame, k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    kCenterGreedy(emb, k, vecCol, idCol).zipWithIndex
+    kCenterGreedy(emb, k).zipWithIndex
       .map { case ((id, _, _, md), rank) => (rank.toLong, id, md) }
       .toDF("rank", "vec_id", "sep_dist")
       .select(col("rank"), col("vec_id"),
@@ -460,19 +460,16 @@ object SimilarityOps {
     * One codegen'd corpus scan against the k-center model riding along as
     * array literals (an argmin over k structs) — no join, no shuffle
     * beyond the scan; centers assign to themselves at distance 0. */
-  def kCenterAssign(emb: DataFrame, k: Int,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    kCenterAssignWith(emb, kCenterFit(emb, k, vecCol, idCol), vecCol, idCol)
+  def kCenterAssign(emb: DataFrame, k: Int): DataFrame =
+    kCenterAssignWith(emb, kCenterFit(emb, k))
 
   /** Fit the exemplar panel ALONE: (center_id, vector, norm) in selection
     * order — bounded model metadata, the artifact a maintained core-set
     * lifecycle freezes between refits (the kCenter mirror of [[fitIvfPq]]'s
     * models: build once, serve appends against it, re-greedy on drift
     * — CoreSetLifecycleSpec pins the discipline). */
-  def kCenterFit(emb: DataFrame, k: Int,
-                 vecCol: String = "embedding",
-                 idCol: String = "vec_id"): Seq[(Long, Seq[Double], Double)] =
-    kCenterGreedy(emb, k, vecCol, idCol).map { case (id, v, n, _) => (id, v, n) }
+  def kCenterFit(emb: DataFrame, k: Int): Seq[(Long, Seq[Double], Double)] =
+    kCenterGreedy(emb, k).map { case (id, v, n, _) => (id, v, n) }
 
   /** [[kCenterAssign]] against an ALREADY-fitted frozen panel — a pure
     * codegen projection (argmin over k struct literals: no join, no
@@ -480,11 +477,9 @@ object SimilarityOps {
     * STREAMING append feed unchanged: streamed rows assign to the frozen
     * panel exactly as a batch re-run would (streamed ≡ batch pinned in
     * CoreSetLifecycleSpec). */
-  def kCenterAssignWith(emb: DataFrame, panel: Seq[(Long, Seq[Double], Double)],
-                        vecCol: String = "embedding",
-                        idCol: String = "vec_id"): DataFrame = {
+  def kCenterAssignWith(emb: DataFrame, panel: Seq[(Long, Seq[Double], Double)]): DataFrame = {
     require(panel.nonEmpty, "kCenterAssignWith: empty panel")
-    val p = prepared(emb, vecCol, idCol)
+    val p = prepared(emb)
       .select(col("id").cast("long").as("id"), col("v"), col("nrm"))
     val best = array_min(array(panel.map { case (cid, cv, cn) =>
       struct(
@@ -510,10 +505,10 @@ object SimilarityOps {
     * null in round 0 it is the seed, the lowest id. An exhausted corpus
     * (n < k) probes None, which leaves the frame as it is, so the next
     * probe repeats and the rounds stop with the selected prefix. */
-  private def kCenterGreedy(emb: DataFrame, k: Int, vecCol: String,
-                            idCol: String): Seq[(Long, Seq[Double], Double, Option[Long])] = {
+  private def kCenterGreedy(emb: DataFrame,
+                            k: Int): Seq[(Long, Seq[Double], Double, Option[Long])] = {
     require(k >= 1 && k <= 128, s"k must be in [1, 128] (k driver rounds), got $k")
-    val p = prepared(emb, vecCol, idCol)
+    val p = prepared(emb)
       .select(col("id").cast("long").as("id"), col("v"), col("nrm"), lit(null).cast("long").as("md"))
     val rounds = Fixpoint.iterate(p, k - 1) { frame =>
       frame.orderBy(col("md").desc, col("id")).limit(1).take(1).headOption.map(row =>
@@ -560,10 +555,9 @@ object SimilarityOps {
     * rows with the query side broadcast; vectors rejoin afterwards keyed on
     * id. The corpus never cross-joins the query set. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, nPlanes: Int = 8,
-              bands: Int = 1,
-              vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = prepared(corpus, vecCol, idCol)
-    val q = prepared(queries, vecCol, idCol)
+              bands: Int = 1): DataFrame = {
+    val c = prepared(corpus)
+    val q = prepared(queries)
     val qb = banded(q, nPlanes, bands)
       .select(col("id").as("query_id"), col("band"), col("bucket"))
     val cands = banded(c, nPlanes, bands)
@@ -594,12 +588,11 @@ object SimilarityOps {
     * the probed query cells — the corpus never cross-joins the query set.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nCentroids: Int = 16, nProbe: Int = 4, kmeansIters: Int = 2,
-              vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = prepared(corpus, vecCol, idCol)
-    val centroids = fitCoarseQuantizer(c, nCentroids, kmeansIters)
+              nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    val c = prepared(corpus)
+    val centroids = fitCoarseQuantizer(c, nCentroids, IvfKmeansIters)
     val assigned = c.withColumn("cell", element_at(cellsFor(centroids, col("v"), 1), 1))
-    val q = prepared(queries, vecCol, idCol)
+    val q = prepared(queries)
       .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
         explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
     val scored = assigned.join(broadcast(q), Seq("cell"))
@@ -631,25 +624,22 @@ object SimilarityOps {
     * order on both engines (bitwise-reproducible), argmin via array_sort on
     * (dist², cid). No shuffle, no state — at 100 TB this is scan-speed. */
   def pqCodes(emb: DataFrame, nSub: Int = 4, nCentroids: Int = 16,
-              kmeansIters: Int = 0,
-              vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    pqCodesWith(emb, pqFitBooks(emb, nSub, nCentroids, kmeansIters, vecCol, idCol),
-      vecCol, idCol)
+              kmeansIters: Int = 0): DataFrame = {
+    pqCodesWith(emb, pqFitBooks(emb, nSub, nCentroids, kmeansIters))
   }
 
   /** [[pqCodes]] against ALREADY-FITTED codebooks — use when the same fit
     * is shared with [[adcTopK]] (the fit is deterministic, but refitting
     * per call would still rescan the corpus kmeansIters × nSub times). */
-  def pqCodesWith(emb: DataFrame, books: Array[Array[Seq[Double]]],
-                  vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def pqCodesWith(emb: DataFrame, books: Array[Array[Seq[Double]]]): DataFrame = {
     val nSub = books.length
     val sd = books(0)(0).length
-    val p = emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
+    val p = emb.select(col(VecId).as("id"), toDouble(col(Embedding)).as("v"))
     val withSubs = bindSubspaces(p, nSub, sd)
     val coded = withSubs.select(col("id") +:
       (0 until nSub).map(s => nearestEntry(s, books(s)).as(s"__b$s")): _*)
     coded.select(
-      col("id").as(idCol),
+      col("id").as(VecId),
       concat_ws(",", (0 until nSub).map(s =>
         col(s"__b$s").getField("cid").cast("string")): _*).as("codes"),
       round(sqrt((0 until nSub).map(s => col(s"__b$s").getField("d2")).reduce(_ + _)), 4)
@@ -696,11 +686,10 @@ object SimilarityOps {
     * `books` must be the codebooks the codes were assigned under — pass
     * the same (nSub, nCentroids, kmeansIters, corpus) to [[pqCodes]]. */
   def adcTopK(codes: DataFrame, queries: DataFrame, books: Array[Array[Seq[Double]]],
-              k: Int,
-              vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), toDouble(col(vecCol)).as("qv"))
+              k: Int): DataFrame = {
+    val q = queries.select(col(VecId).as("query_id"), toDouble(col(Embedding)).as("qv"))
       .withColumn("qnrm", norm(col("qv")))
-    val withCodes = codes.select(col(idCol).as("id"),
+    val withCodes = codes.select(col(VecId).as("id"),
       split(col("codes"), ",").as("cs"))
     val scored = withCodes
       .join(broadcast(q), col("id") =!= col("query_id"))
@@ -726,14 +715,13 @@ object SimilarityOps {
     * true top-k survive the shortlist (pinned in ScalaTest; the oracle
     * models shortlist + re-rank end-to-end, nothing exhaustive). */
   def adcRerankTopK(corpus: DataFrame, queries: DataFrame,
-                    books: Array[Array[Seq[Double]]], shortlist: Int, k: Int,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+                    books: Array[Array[Seq[Double]]], shortlist: Int, k: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be ≥ k $k")
-    val codes = pqCodesWith(corpus, books, vecCol, idCol)
-    val cand = adcTopK(codes, queries, books, shortlist, vecCol, idCol)
+    val codes = pqCodesWith(corpus, books)
+    val cand = adcTopK(codes, queries, books, shortlist)
       .select(col("query_id"), col("neighbor_id").as("id"))
-    val c = prepared(corpus, vecCol, idCol)
-    val q = prepared(queries, vecCol, idCol)
+    val c = prepared(corpus)
+    val q = prepared(queries)
       .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     val exact = c.join(broadcast(cand), Seq("id"))
       .join(broadcast(q), Seq("query_id"))
@@ -813,17 +801,16 @@ object SimilarityOps {
     * billion-vector index layout: scale nCentroids to ~√n, partition the
     * corpus BY cell at write time, and the probe join prunes partitions.
     *
-    * With `kmeansIters = 0` both quantizers are deterministic functions of
+    * With [[KmeansIters]] = 0 both quantizers are deterministic functions of
     * the lowest-id vectors, so cell routing AND scoring reproduce exactly
     * in SQL; partial-probe recall is pinned in ScalaTest, and full probe
     * (nProbe = nCentroids) degenerates to [[adcTopK]] by construction. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nCentroids: Int = 16, nProbe: Int = 4,
-                nSub: Int = 4, nPqCentroids: Int = 16, kmeansIters: Int = 0,
-                vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+                nSub: Int = 4, nPqCentroids: Int = 16): DataFrame = {
     val (centroids, books) =
-      fitIvfPq(corpus, nCentroids, nSub, nPqCentroids, kmeansIters, vecCol, idCol)
-    ivfPqTopKWith(corpus, queries, k, centroids, books, nProbe, vecCol, idCol)
+      fitIvfPq(corpus, nCentroids, nSub, nPqCentroids, KmeansIters)
+    ivfPqTopKWith(corpus, queries, k, centroids, books, nProbe)
   }
 
   /** Fit BOTH IVF-PQ models — coarse quantizer and PQ codebooks — from ONE
@@ -836,10 +823,9 @@ object SimilarityOps {
     * model-build entry an index pipeline calls once and shares across
     * search, coding ([[ivfPqCode]]) and evaluation ([[recallAtK]]). */
   def fitIvfPq(emb: DataFrame, nCentroids: Int = 16, nSub: Int = 4,
-               nPqCentroids: Int = 16, kmeansIters: Int = 0,
-               vecCol: String = "embedding", idCol: String = "vec_id")
+               nPqCentroids: Int = 16, kmeansIters: Int = 0)
       : (Array[(Int, Seq[Double], Double)], Array[Array[Seq[Double]]]) = {
-    val p = emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
+    val p = emb.select(col(VecId).as("id"), toDouble(col(Embedding)).as("v"))
     val sample = fitSample(p, math.max(nCentroids, nPqCentroids))
     val coarse = fitCoarseQuantizerFromSample(
       sample.take(FitSamplePerCentroid * nCentroids), nCentroids, kmeansIters)
@@ -855,16 +841,15 @@ object SimilarityOps {
     * nothing but cost — two TakeOrdered corpus passes per call). */
   def ivfPqTopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
                     centroids: Array[(Int, Seq[Double], Double)],
-                    books: Array[Array[Seq[Double]]], nProbe: Int = 4,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+                    books: Array[Array[Seq[Double]]], nProbe: Int = 4): DataFrame = {
     val nCentroids = centroids.length
     require(nProbe >= 1 && nProbe <= nCentroids,
       s"nProbe must be in [1, nCentroids=$nCentroids]; got $nProbe")
-    val q = prepared(queries, vecCol, idCol)
+    val q = prepared(queries)
       .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
         explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
-    val coded = ivfPqCode(corpus, centroids, books, vecCol, idCol)
-      .select(col(idCol).as("id"), col("cell"), split(col("codes"), ",").as("cs"))
+    val coded = ivfPqCode(corpus, centroids, books)
+      .select(col(VecId).as("id"), col("cell"), split(col("codes"), ",").as("cs"))
     val scored = coded.join(broadcast(q), Seq("cell"))
       .where(col("id") =!= col("query_id"))
       .withColumn("sim", adcSim(books, col("cs"), col("qv"), col("qnrm")))
@@ -884,8 +869,7 @@ object SimilarityOps {
     * in `StreamingPqIngestSpec`) and new vectors land in the same cells
     * with the same codes the batch build would assign. */
   def ivfPqCode(emb: DataFrame, centroids: Array[(Int, Seq[Double], Double)],
-                books: Array[Array[Seq[Double]]],
-                vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+                books: Array[Array[Seq[Double]]]): DataFrame = {
     require(centroids.nonEmpty, "empty coarse quantizer")
     require(books.nonEmpty && books.forall(_.nonEmpty),
       "PQ codebooks must have at least one entry per subspace")
@@ -893,9 +877,9 @@ object SimilarityOps {
     val sd = books(0)(0).length
     require(sd * nSub == centroids.head._2.length,
       s"codebook geometry ($nSub × $sd) does not cover the quantizer dim ${centroids.head._2.length}")
-    val p = emb.select(col(idCol), toDouble(col(vecCol)).as("v"))
+    val p = emb.select(col(VecId), toDouble(col(Embedding)).as("v"))
     bindSubspaces(p, nSub, sd)
-      .select(col(idCol),
+      .select(col(VecId),
         element_at(cellsFor(centroids, col("v"), 1), 1).as("cell"),
         concat_ws(",", (0 until nSub).map(s =>
           nearestEntry(s, books(s)).getField("cid").cast("string")): _*).as("codes"))
@@ -936,9 +920,8 @@ object SimilarityOps {
     * never rescanned per Lloyd step, and the exact arithmetic keeps the
     * fit a constant of the corpus, not of the cluster layout. */
   def pqFitBooks(emb: DataFrame, nSub: Int = 4, nCentroids: Int = 16,
-                 kmeansIters: Int = 0,
-                 vecCol: String = "embedding", idCol: String = "vec_id"): Array[Array[Seq[Double]]] = {
-    val p = emb.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
+                 kmeansIters: Int = 0): Array[Array[Seq[Double]]] = {
+    val p = emb.select(col(VecId).as("id"), toDouble(col(Embedding)).as("v"))
     pqFitBooksFromSample(fitSample(p, nCentroids), nSub, nCentroids, kmeansIters)
   }
 
@@ -974,21 +957,20 @@ object SimilarityOps {
     * map is a narrow codegen'd scan: no shuffle, no state, scan-speed at
     * 100 TB. With outDim a power of 4 the entries (e.g. ±0.25) are exact in
     * floating point, so the projection reproduces bitwise on any engine. */
-  def randomProject(emb: DataFrame, inDim: Int, outDim: Int = 16, seed: Long = 42,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def randomProject(emb: DataFrame, inDim: Int, outDim: Int = 16): DataFrame = {
     require(inDim > 0 && outDim > 0, s"need positive dims; got $inDim -> $outDim")
-    val rows = projectionMatrix(inDim, outDim, seed)
+    val rows = projectionMatrix(inDim, outDim)
     emb
-      .withColumn("__v", toDouble(col(vecCol)))
-      .select(col(idCol),
+      .withColumn("__v", toDouble(col(Embedding)))
+      .select(col(VecId),
         array(rows.map(r =>
           round(dot(col("__v"), array(r.map(lit): _*)), 6)): _*).as("proj"))
   }
 
   /** The ±1/√outDim projection matrix [[randomProject]] bakes into its plan
     * — exposed so an oracle can reproduce the identical literals. */
-  def projectionMatrix(inDim: Int, outDim: Int, seed: Long = 42): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
+  def projectionMatrix(inDim: Int, outDim: Int): Array[Array[Double]] = {
+    val rnd = new scala.util.Random(ProjectionSeed)
     val scale = 1.0 / math.sqrt(outDim)
     Array.fill(outDim, inDim)(if (rnd.nextBoolean()) scale else -scale)
   }
@@ -998,16 +980,15 @@ object SimilarityOps {
     * 8× smaller than the f64 compute type). Per vector: scale by
     * 127/max|x|, round to int; the l2 norm is kept at full precision for
     * dequantized scoring. Pure per-row map — no shuffle, no state. */
-  def quantizeInt8(emb: DataFrame, vecCol: String = "embedding",
-                   idCol: String = "vec_id"): DataFrame = {
-    val v = toDouble(col(vecCol))
+  def quantizeInt8(emb: DataFrame): DataFrame = {
+    val v = toDouble(col(Embedding))
     emb
       .withColumn("__v", v)
       // bind max|x| to a column first: a non-attribute expression referenced
       // inside a lambda re-evaluates per reference
       .withColumn("__mx", array_max(transform(col("__v"), x => abs(x))))
       .select(
-        col(idCol),
+        col(VecId),
         round(norm(col("__v")), 6).as("l2_norm"),
         when(col("__mx") === 0d, concat_ws(",", transform(col("__v"), _ => lit("0"))))
           .otherwise(concat_ws(",",
@@ -1033,9 +1014,8 @@ object SimilarityOps {
     * exactly once (ida < idb keeps one direction). For genuine near-dup
     * thresholds (≥ ~0.8) use [[nearDupPairsLsh]], which prunes candidates
     * before exact verification. */
-  def nearDupPairs(emb: DataFrame, threshold: Double, nBlocks: Int = 64,
-                   vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val p = prepared(emb, vecCol, idCol)
+  def nearDupPairs(emb: DataFrame, threshold: Double, nBlocks: Int = 64): DataFrame = {
+    val p = prepared(emb)
     val a = p.select(col("id").as("ida"), col("v").as("va"), col("nrm").as("na"))
       .withColumn("pb", explode(sequence(lit(0), lit(nBlocks - 1))))
     val b = p.select(col("id").as("idb"), col("v").as("vb"), col("nrm").as("nb"),
@@ -1055,11 +1035,9 @@ object SimilarityOps {
     * near-linear. Same verify-exact contract as [[graft.operators.DedupOps
     * .minhashLsh]]: with full candidate recall the output equals
     * [[nearDupPairs]]. */
-  def nearDupPairsLsh(emb: DataFrame, threshold: Double, nPlanes: Int = 8,
-                      bands: Int = 16,
-                      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val p = prepared(emb, vecCol, idCol)
-    val pb = banded(p, nPlanes, bands)
+  def nearDupPairsLsh(emb: DataFrame, threshold: Double): DataFrame = {
+    val p = prepared(emb)
+    val pb = banded(p, NearDupPlanes, NearDupBands)
     // Materialize the candidate pairs once (executor-local checkpoint, the
     // verifyJaccard pattern): they are read three times below (id semi-join
     // + two verify joins), and each un-materialized reference re-derives
@@ -1105,11 +1083,9 @@ object SimilarityOps {
     * partition. At 100 TB scale nCentroids to ~√n (the paper runs 110k
     * cells on LAION): per-cell work stays bounded and the cluster scales
     * the cells out; skewed cells are the AQE skew-join case. */
-  def semanticDedup(emb: DataFrame, nCentroids: Int = 16, threshold: Double = 0.4,
-                    kmeansIters: Int = 0,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = prepared(emb, vecCol, idCol)
-    val centroids = fitCoarseQuantizer(c, nCentroids, kmeansIters)
+  def semanticDedup(emb: DataFrame, nCentroids: Int = 16, threshold: Double = 0.4): DataFrame = {
+    val c = prepared(emb)
+    val centroids = fitCoarseQuantizer(c, nCentroids, KmeansIters)
     val assigned = c.withColumn("cell", element_at(cellsFor(centroids, col("v"), 1), 1))
     val a = assigned.select(col("cell"), col("id").as("ida"),
       col("v").as("va"), col("nrm").as("na"))
@@ -1132,14 +1108,12 @@ object SimilarityOps {
     * never |corpus|². Emits (cell, new_id, old_id, sim ≥ threshold);
     * aggregate per new_id for the keep/drop decision. */
   def incrementalSemanticDedup(existing: DataFrame, incoming: DataFrame,
-                               nCentroids: Int = 16, threshold: Double = 0.4,
-                               kmeansIters: Int = 0,
-                               vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val c = prepared(existing, vecCol, idCol)
-    val centroids = fitCoarseQuantizer(c, nCentroids, kmeansIters)
+                               nCentroids: Int = 16, threshold: Double = 0.4): DataFrame = {
+    val c = prepared(existing)
+    val centroids = fitCoarseQuantizer(c, nCentroids, KmeansIters)
     val corpus = c.withColumn("cell", element_at(cellsFor(centroids, col("v"), 1), 1))
       .select(col("cell"), col("id").as("old_id"), col("v").as("vo"), col("nrm").as("no"))
-    val batch = prepared(incoming, vecCol, idCol)
+    val batch = prepared(incoming)
       .withColumn("cell", element_at(cellsFor(centroids, col("v"), 1), 1))
       .select(col("cell"), col("id").as("new_id"), col("v").as("vn"), col("nrm").as("nn"))
     batch.join(corpus, Seq("cell"))
@@ -1166,12 +1140,10 @@ object SimilarityOps {
     * to the cluster, e.g. √N cells, so no cell outgrows a task). Emits
     * the kept rows: (cell, id, proto_sim, rk) with rk 1 = hardest.
     */
-  def protoPrune(emb: DataFrame, keepFrac: Double, nCentroids: Int = 16,
-                 kmeansIters: Int = 0,
-                 vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def protoPrune(emb: DataFrame, keepFrac: Double, nCentroids: Int = 16): DataFrame = {
     require(keepFrac > 0.0 && keepFrac <= 1.0, "keepFrac must be in (0, 1]")
-    val c = prepared(emb, vecCol, idCol)
-    val centroids = fitCoarseQuantizer(c, nCentroids, kmeansIters)
+    val c = prepared(emb)
+    val centroids = fitCoarseQuantizer(c, nCentroids, KmeansIters)
     // argmin of (−dot/cnorm, cid) — cellsFor's ordering — but keeping the
     // winning negSim so the prototype cosine needs no second pass:
     // cos(v, c) = dot/(cnorm·nrm) = −negSim/nrm
@@ -1189,7 +1161,7 @@ object SimilarityOps {
       .withColumn("rk", row_number().over(byCell.orderBy(col("sim").asc, col("id"))))
       .withColumn("n_cell", count(lit(1)).over(byCell))
       .where(col("rk") <= ceil(col("n_cell") * keepFrac))
-      .select(col("cell"), col("id").as(idCol),
+      .select(col("cell"), col("id").as(VecId),
         round(col("sim"), 4).as("proto_sim"), col("rk").cast("long").as("rk"))
   }
 }

@@ -14,6 +14,16 @@ import org.apache.spark.sql.functions._
   */
 object StatsOps {
 
+  /** Value-range blocks of the two-phase prefix sum in ksTest,
+    * aucMannWhitney and rankSumTest: the offsets table never has more rows. */
+  private val NBlocks = 4096
+  /** bootstrapCi's percentile endpoints. */
+  private val LoPct = 0.025
+  private val HiPct = 0.975
+  /** calibration's fixed-point confidence unit (1/ConfScale) and bin count. */
+  private val ConfScale = 10000L
+  private val CalibrationBins = 10
+
   /** Welch's two-sample t statistic per segment.
     *
     * For each `segmentCol` group, compares `valCol` between rows matching
@@ -145,7 +155,7 @@ object StatsOps {
     * Blocking is a function of values only (never of layout), and any
     * `nBlocks ≥ 1` yields the identical D. */
   def ksTest(df: DataFrame, valCol: Column, isA: Column,
-             nBlocks: Int = 4096): DataFrame = {
+             nBlocks: Int = NBlocks): DataFrame = {
     require(nBlocks >= 1 && nBlocks <= (1 << 20),
       s"nBlocks must be in [1, 2^20] (the offsets table must stay model-sized), got $nBlocks")
     val counts = df
@@ -204,7 +214,7 @@ object StatsOps {
     * Degenerate inputs (one class absent) yield NULL, mirrored in the
     * oracle. */
   def aucMannWhitney(df: DataFrame, scoreCol: Column, isPos: Column,
-                     nBlocks: Int = 4096): DataFrame = {
+                     nBlocks: Int = NBlocks): DataFrame = {
     require(nBlocks >= 1 && nBlocks <= (1 << 20),
       s"nBlocks must be in [1, 2^20] (the offsets table must stay model-sized), got $nBlocks")
     val counts = df
@@ -269,11 +279,8 @@ object StatsOps {
     * Scale shape: identical to [[ksTest]]/[[aucMannWhitney]] — one
     * conditional aggregation to per-distinct-value counts, two-phase
     * prefix sum over in-plan-derived range blocks (offsets table provably
-    * ≤ nBlocks rows), no unpartitioned window over the value relation. */
-  def rankSumTest(df: DataFrame, valCol: Column, isX: Column,
-                  nBlocks: Int = 4096): DataFrame = {
-    require(nBlocks >= 1 && nBlocks <= (1 << 20),
-      s"nBlocks must be in [1, 2^20] (the offsets table must stay model-sized), got $nBlocks")
+    * ≤ [[NBlocks]] rows), no unpartitioned window over the value relation. */
+  def rankSumTest(df: DataFrame, valCol: Column, isX: Column): DataFrame = {
     val counts = df
       .where(valCol.isNotNull)
       .groupBy(valCol.as("v"))
@@ -291,8 +298,8 @@ object StatsOps {
       .withColumn("blk",
         when(col("vmax") <= col("vmin"), lit(0L))
           .otherwise(least(
-            floor((col("v") - col("vmin")) / ((col("vmax") - col("vmin")) / nBlocks)),
-            lit(nBlocks - 1L))))
+            floor((col("v") - col("vmin")) / ((col("vmax") - col("vmin")) / NBlocks)),
+            lit(NBlocks - 1L))))
     val partials = blocked.groupBy("blk").agg(sum("cy").as("blk_y"))
     val wOff = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = partials
@@ -334,50 +341,43 @@ object StatsOps {
     * p(good) ≥ 0.8 needs 0.8 to mean 80%).
     *
     * `confUnits` must be the confidence in EXACT fixed-point units of
-    * 1/`scale` (e.g. `least(round(value*100), 10000)` for 2-dp data at
-    * scale 10000). Working in integer units is what makes the audit
-    * deterministic: per-bin accuracy, mean confidence, the signed gap and
+    * 1/[[ConfScale]] (e.g. `least(round(value*100), 10000)` for 2-dp data),
+    * binned into [[CalibrationBins]] bins. Working in integer units is what
+    * makes the audit deterministic: per-bin accuracy, mean confidence, the signed gap and
     * ECE are all single divisions of exact integer sums —
     *   gap_b = (scale·pos_b − Σunits_b) / (scale·n_b)
     *   ECE   = Σ_b |scale·pos_b − Σunits_b| / (scale·N)
     * so no floating-point accumulation order enters any output.
     *
     * Scale shape: ONE conditional aggregation collapses the corpus to
-    * ≤ nBins rows (the shuffle carries integer partials only), then the
-    * corpus-level ECE joins back as a broadcast 1-row aggregate of that
+    * ≤ CalibrationBins rows (the shuffle carries integer partials only),
+    * then the corpus-level ECE joins back as a broadcast 1-row aggregate of that
     * model-sized bin table — no unpartitioned window, no second scan.
     * Decimal(38) sums: Σunits can reach scale·|rows| ≈ 10^16 at 100-TB
     * cardinalities, inside decimal range but past safe long·long products. */
-  def calibration(df: DataFrame, confUnits: Column, isPos: Column,
-                  scale: Long = 10000L, nBins: Int = 10): DataFrame = {
-    require(scale > 0, s"scale must be positive, got $scale")
-    require(nBins >= 2 && nBins <= 10000,
-      s"nBins must be in [2, 10000] (the bin table must stay model-sized), got $nBins")
-    require(scale <= Long.MaxValue / nBins,
-      s"scale * nBins must stay in long range, got $scale * $nBins")
-    // integral floor division, never `/`: double division of the long
-    // product wobbles bin boundaries once scale * nBins passes 2^53
-    val prod = confUnits * nBins
-    val binDiv = call_function("div", prod - pmod(prod, lit(scale)), lit(scale))
+  def calibration(df: DataFrame, confUnits: Column, isPos: Column): DataFrame = {
+    // integral floor division, never `/`: the bin edges stay exact
+    val prod = confUnits * CalibrationBins
+    val binDiv = call_function("div", prod - pmod(prod, lit(ConfScale)), lit(ConfScale))
     val bins = df
       .where(confUnits.isNotNull)
-      .groupBy(least(binDiv, lit(nBins - 1L)).cast("long").as("bin"))
+      .groupBy(least(binDiv, lit(CalibrationBins - 1L)).cast("long").as("bin"))
       .agg(
         count(lit(1)).as("n"),
         sum(when(isPos, 1L).otherwise(0L)).as("n_pos"),
         sum(confUnits.cast("decimal(38,0)")).as("cs"))
     val totals = bins.agg(
       sum("n").as("nn"),
-      sum(abs(col("n_pos").cast("decimal(38,0)") * scale - col("cs"))).as("en"))
+      sum(abs(col("n_pos").cast("decimal(38,0)") * ConfScale - col("cs"))).as("en"))
     bins.crossJoin(broadcast(totals))
       .select(
         col("bin"), col("n"), col("n_pos"),
         round(col("n_pos").cast("double") / col("n"), 6).as("acc"),
-        round(col("cs").cast("double") / (lit(scale.toDouble) * col("n")), 6)
+        round(col("cs").cast("double") / (lit(ConfScale.toDouble) * col("n")), 6)
           .as("mean_conf"),
-        round((col("n_pos").cast("decimal(38,0)") * scale - col("cs")).cast("double") /
-          (lit(scale.toDouble) * col("n")), 6).as("gap"),
-        round(col("en").cast("double") / (lit(scale.toDouble) * col("nn")), 6)
+        round((col("n_pos").cast("decimal(38,0)") * ConfScale - col("cs")).cast("double") /
+          (lit(ConfScale.toDouble) * col("n")), 6).as("gap"),
+        round(col("en").cast("double") / (lit(ConfScale.toDouble) * col("nn")), 6)
           .as("ece"))
   }
 
@@ -469,25 +469,22 @@ object StatsOps {
     * BEFORE weighting, so every replica sum is an exact long and each
     * replica mean is ONE division. The CI is an exact order statistic of
     * the ≤ b replica means (a bounded per-group array, sorted): lo = the
-    * max(1, ⌊loPct·b⌋)-th smallest, hi = the min(b, ⌈hiPct·b⌉)-th.
+    * max(1, ⌊[[LoPct]]·b⌋)-th smallest, hi = the min(b, ⌈[[HiPct]]·b⌉)-th.
     * CONVENTION: the floor-with-min-1 lower index is deliberately
-    * conservative — at the documented defaults (loPct=0.025, b=64) it
+    * conservative — at LoPct = 0.025 and b = 64 it
     * selects the MINIMUM replica mean (empirical ~1.5th percentile)
     * rather than ceil's 2.5th-percentile order statistic; the generated
     * oracle SQL hardcodes the same indices, so both engines share the
     * convention exactly (ADVICE r13). Callers wanting textbook
-    * percentile-bootstrap endpoints can raise b (the index granularity)
-    * or loPct.
+    * percentile-bootstrap endpoints can raise b (the index granularity).
     * Replicas that drew total weight 0 (probability e^{-n·b} — only
     * conceivable for single-digit groups) are dropped from the order
     * statistic rather than polluting it with NULL.
     *
     * Output: (key, n, mean, ci_lo, ci_hi), mean/CI rounded to 6 dp. */
   def bootstrapCi(df: DataFrame, keyCol: Column, valCol: Column, idCol: Column,
-                  b: Int = 32, loPct: Double = 0.025, hiPct: Double = 0.975): DataFrame = {
+                  b: Int = 32): DataFrame = {
     require(b >= 2, s"need at least 2 replicas, got $b")
-    require(loPct > 0 && hiPct < 1 && loPct < hiPct,
-      s"percentiles must satisfy 0 < lo < hi < 1, got ($loPct, $hiPct)")
     val cents = round(valCol * 100).cast("long")
     // fanOut: the ×b explode + per-replica md5 is the query's entire cost
     // and sits in the scan stage — on a single-row-group parquet source it
@@ -508,8 +505,8 @@ object StatsOps {
       .agg(sum(col("w") * col("cv")).as("sv"), sum(col("w")).as("sw"))
       .where(col("sw") > 0)
       .select(col("k"), (col("sv").cast("double") / col("sw") / 100.0).as("mean_r"))
-    val kLo = math.max(1, math.floor(loPct * b).toInt)
-    val kHi = math.min(b, math.ceil(hiPct * b).toInt)
+    val kLo = math.max(1, math.floor(LoPct * b).toInt)
+    val kHi = math.min(b, math.ceil(HiPct * b).toInt)
     val stats = base.groupBy(col("k"))
       .agg(count(lit(1)).as("n"), sum(col("cv")).as("sv"))
     perRep.groupBy(col("k"))

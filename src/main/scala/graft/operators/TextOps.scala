@@ -16,11 +16,24 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  private val Text = "text"
+  private val DocId = "doc_id"
+  /** The symbol separator bpeApply and tokenizerFertility write between
+    * the characters of a word. */
+  private val Sep = "·"
+  /** BM25's term-frequency saturation (k1) and length normalization (b). */
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+  /** linearQualityScore keeps a document whose score is at least this. */
+  private val QualityCutoff = 0.0
+  /** Seed of the PRNG that draws the classifier weights. */
+  private val QualitySeed = 7L
+
   /** Per-document token statistics. */
-  def tokenStats(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = tokens(col(textCol))
+  def tokenStats(docs: DataFrame): DataFrame = {
+    val toks = tokens(col(Text))
     docs.select(
-      col(idCol),
+      col(DocId),
       size(toks).cast("long").as("n_tokens"),
       size(array_distinct(toks)).cast("long").as("n_distinct"),
       (size(array_distinct(toks)).cast("double") / size(toks)).as("ttr"))
@@ -57,8 +70,7 @@ object TextOps {
     * 4-element struct array. The automaton counts EVERY occurrence, so
     * regexp-oracle parity requires borderless trigrams (no proper suffix
     * equals a prefix) — mechanically `require`d below, not assumed. */
-  def langId(docs: DataFrame,
-             textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def langId(docs: DataFrame): DataFrame = {
     val allTris = LangTrigramProfiles.flatMap(_._2).distinct.sorted
     allTris.foreach { p =>
       require(!(1 until p.length).exists(k => p.take(k) == p.takeRight(k)),
@@ -67,14 +79,14 @@ object TextOps {
     }
     // counts indexed by the automaton's sorted-distinct pattern order;
     // materialized ONCE per row (a named column, not 20 repeated subtrees)
-    val counts = call_function("keyword_counts", col(textCol),
+    val counts = call_function("keyword_counts", col(Text),
       array(allTris.map(lit): _*))
-    val withCounts = docs.select(col(idCol), counts.as("_tri_counts"))
+    val withCounts = docs.select(col(DocId), counts.as("_tri_counts"))
     val hits = LangTrigramProfiles.map { case (l, tris) =>
       tris.map(tr => element_at(col("_tri_counts"), lit(allTris.indexOf(tr) + 1)))
         .reduce(_ + _).as(s"hits_$l")
     }
-    val scored = withCounts.select(col(idCol) +: hits: _*)
+    val scored = withCounts.select(col(DocId) +: hits: _*)
     // struct max orders by (h, negRank): highest count first, then the
     // HIGHEST negated profile index = lowest index = smallest language
     // (profiles are sorted ascending)
@@ -91,7 +103,7 @@ object TextOps {
       LangTrigramProfiles.map { case (l, _) => col(s"hits_$l") }: _*))
     val nLangs = LangTrigramProfiles.length
     scored.select(
-      col(idCol) +:
+      col(DocId) +:
         LangTrigramProfiles.map { case (l, _) => col(s"hits_$l") } :+
         when(best.getField("h") === 0, lit("other"))
           .otherwise(element_at(names, (-best.getField("nr")) + 1))
@@ -102,14 +114,14 @@ object TextOps {
 
   /** Composite quality score from length, lexical diversity, and stopword
     * density — the usual cheap pre-filter before expensive pipeline stages. */
-  def qualityScore(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = tokens(col(textCol))
+  def qualityScore(docs: DataFrame): DataFrame = {
+    val toks = tokens(col(Text))
     val nTok = size(toks).cast("double")
     val ttr = size(array_distinct(toks)).cast("double") / nTok
     val stopRatio = vocabCount(toks, EnglishStopwords).cast("double") / nTok
     val lenScore = least(nTok / 100.0, lit(1.0))
     docs.select(
-      col(idCol),
+      col(DocId),
       size(toks).cast("long").as("n_tokens"),
       round(ttr, 6).as("ttr"),
       round(stopRatio, 6).as("stop_ratio"),
@@ -117,19 +129,19 @@ object TextOps {
   }
 
   /** Token counting: whitespace tokens and a BPE-ish regex tokenisation. */
-  def tokenCounts(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+  def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(
-      col(idCol),
-      size(tokens(col(textCol))).cast("long").as("ws_tokens"),
-      size(regexp_extract_all(col(textCol), lit(BpePattern), lit(0))).cast("long").as("bpe_tokens"))
+      col(DocId),
+      size(tokens(col(Text))).cast("long").as("ws_tokens"),
+      size(regexp_extract_all(col(Text), lit(BpePattern), lit(0))).cast("long").as("bpe_tokens"))
 
   /** Content fingerprints: md5 of normalised text (oracle-checkable) plus an
     * order-sensitive rolling token hash (engine-specific, test-covered). */
-  def fingerprints(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+  def fingerprints(docs: DataFrame): DataFrame =
     docs.select(
-      col(idCol),
-      fingerprint(col(textCol)).as("fp_md5"),
-      rollingHash(tokens(normalized(col(textCol)))).as("fp_rolling"))
+      col(DocId),
+      fingerprint(col(Text)).as("fp_md5"),
+      rollingHash(tokens(normalized(col(Text)))).as("fp_rolling"))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD 2003 —
     * the MOSS algorithm): hash every k-token gram, slide a window of w
@@ -148,12 +160,11 @@ object TextOps {
     * reference), then the window min as a bounded w-row frame over the
     * per-document position order, then one distinct. The only exchange is
     * the doc_id hash partitioning the window and distinct share. */
-  def winnow(docs: DataFrame, k: Int = 4, w: Int = 5,
-             textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = tokens(col(textCol))
+  def winnow(docs: DataFrame, k: Int = 4, w: Int = 5): DataFrame = {
+    val toks = tokens(col(Text))
     val grams = docs
       .where(size(toks) >= k + w - 1) // at least one full window
-      .select(col(idCol).as("doc_id"), toks.as("t"))
+      .select(col(DocId).as("doc_id"), toks.as("t"))
       .select(col("doc_id"), (size(col("t")) - k).as("last_i"), col("t"))
       .select(col("doc_id"), col("last_i"),
         explode(sequence(lit(0), col("last_i"))).as("i"), col("t"))
@@ -173,9 +184,9 @@ object TextOps {
     * operators below. One explode + one (doc, term) aggregation; partial
     * (map-side) combine absorbs most of the explode fan-out before the
     * shuffle. */
-  private def termFreqs(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+  private def termFreqs(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
+      .select(col(DocId).as("doc_id"), explode(tokens(col(Text))).as("term"))
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
 
@@ -187,9 +198,8 @@ object TextOps {
     * the corpus, so AQE broadcasts it; the only big shuffles are the two
     * aggregations, both partial-combined. N (corpus size) is a broadcast
     * scalar, not a window over the data. */
-  def tfidfTopK(docs: DataFrame, k: Int = 3,
-                textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val tf = termFreqs(docs, textCol, idCol)
+  def tfidfTopK(docs: DataFrame, k: Int = 3): DataFrame = {
+    val tf = termFreqs(docs)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf
@@ -212,18 +222,16 @@ object TextOps {
     * (pushed to the scan side of the aggregate), idf constants live in a
     * broadcast row, and the final top-k is `orderBy.limit` =
     * TakeOrderedAndProject: per-partition heaps, no global sort. */
-  def bm25(docs: DataFrame, queryTerms: Seq[String], k: Int = 20,
-           k1: Double = 1.2, b: Double = 0.75,
-           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def bm25(docs: DataFrame, queryTerms: Seq[String], k: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val tf = termFreqs(docs, textCol, idCol)
+    val tf = termFreqs(docs)
       .where(col("term").isin(queryTerms: _*))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = docs.agg(
       count(lit(1)).as("n_docs"),
-      avg(size(tokens(col(textCol))).cast("double")).as("avgdl"))
-    val dl = docs.select(col(idCol).as("doc_id"),
-      size(tokens(col(textCol))).cast("double").as("dl"))
+      avg(size(tokens(col(Text))).cast("double")).as("avgdl"))
+    val dl = docs.select(col(DocId).as("doc_id"),
+      size(tokens(col(Text))).cast("double").as("dl"))
     val idf = df.crossJoin(broadcast(stats))
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
@@ -231,8 +239,9 @@ object TextOps {
       .join(broadcast(idf), "term")
       .join(dl, "doc_id")
       .withColumn("contrib",
-        col("idf") * (col("tf") * (lit(k1) + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
+        col("idf") * (col("tf") * (lit(Bm25K1) + 1.0)) /
+          (col("tf") + lit(Bm25K1) *
+            (lit(1.0) - lit(Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))))
     perTerm
       .groupBy("doc_id")
       .agg(round(sum("contrib"), 6).as("score"))
@@ -246,10 +255,9 @@ object TextOps {
     * scalar pair construction, the same hot path as the shingle operators)
     * and one partial-combined count; top-k via orderBy+limit =
     * TakeOrderedAndProject. Linear in corpus tokens. */
-  def bpePairCounts(docs: DataFrame, k: Int = 20,
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def bpePairCounts(docs: DataFrame, k: Int = 20): DataFrame = {
     val pairs = docs
-      .select(tokens(col(textCol)).as("toks"))
+      .select(tokens(col(Text)).as("toks"))
       .where(size(col("toks")) >= 2)
       .select(col("toks"), explode(sequence(lit(0), size(col("toks")) - 2)).as("i"))
       .select(
@@ -286,11 +294,10 @@ object TextOps {
     * string map. Each round runs two eager checkpoints while the plan is
     * built: the 1-row best pair and the merged vocabulary, so the returned
     * union only reads checkpointed rows. */
-  def bpeTrain(docs: DataFrame, rounds: Int,
-               textCol: String = "text"): DataFrame = {
+  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"rounds must be in [1, 64], got $rounds")
     var vocab = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
+      .select(explode(split(col(Text), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), trim(regexp_replace(col("w"), "(.)", "$1 ")).as("s"))
@@ -332,7 +339,7 @@ object TextOps {
   /** Apply a TRAINED byte-pair-encoding merge table to text — the
     * production tokenization step ([[bpePairCounts]] is the training-side
     * statistic; this is inference with the resulting model artifact). Each
-    * word becomes a `sep`-delimited symbol sequence (every character a
+    * word becomes a [[Sep]]-delimited symbol sequence (every character a
     * symbol), then the merge list applies in rank order, each merge a
     * global leftmost-nonoverlapping literal replace — the rank-greedy
     * application order of the BPE literature (Sennrich 2016; GPT-2's
@@ -342,21 +349,20 @@ object TextOps {
     * literals — the broadcast-a-model-artifact shape at any scale.
     * Emits the symbolized text and the post-merge symbol count.
     */
-  def bpeApply(docs: DataFrame, merges: Seq[(String, String)], sep: String = "·",
-               textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def bpeApply(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     // ONE native pass over a per-word symbol table (graft.plans.BpeMerger)
     // instead of one regexp wrap + one full-string replace PER MERGE — the
     // r12 10× stress probe priced the chain at a merges-count constant
     // (8.1× ratio / 15.2 s at 10× data for 10 merges). Semantic parity
-    // with the chain is exact on sep-free text (pinned by a randomized
+    // with the chain is exact on Sep-free text (pinned by a randomized
     // property against the chain, BpeMergerProperties, AND by the
     // unchanged chain-formulation DuckDB oracle).
-    val flat = sep +: merges.flatMap { case (a, b) => Seq(a, b) }
-    val clean = call_function("bpe_apply", col(textCol), array(flat.map(lit): _*))
+    val flat = Sep +: merges.flatMap { case (a, b) => Seq(a, b) }
+    val clean = call_function("bpe_apply", col(Text), array(flat.map(lit): _*))
     docs
-      .select(col(idCol), clean.as("bpe_text"))
-      .select(col(idCol), col("bpe_text"),
-        size(split(col("bpe_text"), "[ " + sep + "]")).cast("long").as("n_symbols"))
+      .select(col(DocId), clean.as("bpe_text"))
+      .select(col(DocId), col("bpe_text"),
+        size(split(col("bpe_text"), "[ " + Sep + "]")).cast("long").as("n_symbols"))
   }
 
   /** Tokenizer-fertility report per language: how many BPE symbols the
@@ -370,16 +376,14 @@ object TextOps {
     * partial-aggregated groupBy over the |langs|-sized rollup; ratios are
     * single divisions of exact long sums, so the report is
     * partitioning-independent. */
-  def tokenizerFertility(docs: DataFrame, merges: Seq[(String, String)],
-                         sep: String = "·", textCol: String = "text",
-                         langCol: String = "lang"): DataFrame = {
-    val flat = sep +: merges.flatMap { case (a, b) => Seq(a, b) }
-    val clean = call_function("bpe_apply", col(textCol), array(flat.map(lit): _*))
+  def tokenizerFertility(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    val flat = Sep +: merges.flatMap { case (a, b) => Seq(a, b) }
+    val clean = call_function("bpe_apply", col(Text), array(flat.map(lit): _*))
     docs
-      .select(col(langCol).as("lang"),
-        size(split(clean, "[ " + sep + "]")).cast("long").as("n_symbols"),
-        size(split(col(textCol), " ")).cast("long").as("n_words"),
-        octet_length(col(textCol)).cast("long").as("n_bytes"))
+      .select(col("lang").as("lang"),
+        size(split(clean, "[ " + Sep + "]")).cast("long").as("n_symbols"),
+        size(split(col(Text), " ")).cast("long").as("n_words"),
+        octet_length(col(Text)).cast("long").as("n_bytes"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum("n_symbols").as("ss"), sum("n_words").as("swd"), sum("n_bytes").as("sb"))
@@ -403,9 +407,8 @@ object TextOps {
     * TakeOrderedAndProject. The PMI argument is evaluated in a fixed
     * association (((c_ab·T)·T) / ((B·c_a)·c_b)) so engines agree bitwise
     * before the round. */
-  def pmiCollocations(docs: DataFrame, minCount: Long = 10, k: Int = 30,
-                      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = docs.select(tokens(col(textCol)).as("toks"))
+  def pmiCollocations(docs: DataFrame, minCount: Long = 10, k: Int = 30): DataFrame = {
+    val toks = docs.select(tokens(col(Text)).as("toks"))
     val uni = toks.select(explode(col("toks")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
     val uniTot = uni.agg(sum("c").cast("double").as("tt"))
@@ -442,17 +445,16 @@ object TextOps {
     * TakeOrderedAndProject. With two rankers the per-group sum is a single
     * commutative FP add, bit-stable across engines; for 3+ rankers prefer
     * higher-precision accumulation if bit-reproducibility matters. */
-  def rrfFuse(rankings: Seq[DataFrame], kRrf: Int = 60, topN: Int = 20,
-              idCol: String = "doc_id", rankCol: String = "rank"): DataFrame = {
+  def rrfFuse(rankings: Seq[DataFrame], kRrf: Int = 60, topN: Int = 20): DataFrame = {
     require(rankings.nonEmpty, "need at least one ranking")
     rankings
-      .map(r => r.select(col(idCol),
-        (lit(1.0) / (lit(kRrf) + col(rankCol))).as("__c")))
+      .map(r => r.select(col(DocId),
+        (lit(1.0) / (lit(kRrf) + col("rank"))).as("__c")))
       .reduce(_ unionByName _)
-      .groupBy(idCol)
+      .groupBy(DocId)
       .agg(round(sum("__c"), 6).as("rrf_score"),
         count(lit(1)).cast("long").as("n_rankers"))
-      .orderBy(col("rrf_score").desc, col(idCol))
+      .orderBy(col("rrf_score").desc, col(DocId))
       .limit(topN)
   }
 
@@ -466,8 +468,8 @@ object TextOps {
     * counts (a second, vocabulary-sized aggregation — broadcast back), the
     * corpus total as a broadcast scalar, then one per-doc aggregation.
     * The corpus is scanned once; nothing driver-side. */
-  def unigramLogProb(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val tf = termFreqs(docs, textCol, idCol)
+  def unigramLogProb(docs: DataFrame): DataFrame = {
+    val tf = termFreqs(docs)
     val cnt = tf.groupBy("term").agg(sum("tf").as("cnt"))
     val total = cnt.agg(sum("cnt").as("total"))
     tf
@@ -494,9 +496,9 @@ object TextOps {
     * shuffle — skew follows real collocations, AQE-splittable); the prefix
     * counts are vocabulary-sized (broadcast) and V is a broadcast scalar.
     * Linear in corpus tokens, nothing driver-side. */
-  def bigramLogProb(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def bigramLogProb(docs: DataFrame): DataFrame = {
     val pos = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col(DocId).as("doc_id"), tokens(col(Text)).as("toks"))
       .where(size(col("toks")) >= 2)
       .select(col("doc_id"), col("toks"),
         explode(sequence(lit(0), size(col("toks")) - 2)).as("i"))
@@ -505,7 +507,7 @@ object TextOps {
         element_at(col("toks"), col("i") + 2).as("w2"))
     val c12 = pos.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val c1 = pos.groupBy("w1").agg(count(lit(1)).as("c1"))
-    val v = docs.select(explode(tokens(col(textCol))).as("w"))
+    val v = docs.select(explode(tokens(col(Text))).as("w"))
       .agg(count_distinct(col("w")).as("v"))
     pos
       .join(c12, Seq("w1", "w2"))
@@ -517,11 +519,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_bigrams"), round(avg("lp"), 6).as("avg_logprob"))
   }
 
-  /** Inverted index: one row per term with document frequency, collection
-    * frequency, and the sorted distinct posting list. Single aggregation on
-    * the term after the explode; posting lists are built from the already
-    * per-(doc,term)-collapsed tf rows, so the collected arrays carry one
-    * entry per document, not per occurrence. */
   /** Feature-hashed linear quality classifier — the fasttext-style scoring
     * tier of quality filtering (CCNet / Llama-style pipelines run a learned
     * linear model over bag-of-words features; heuristics and LM perplexity
@@ -529,7 +526,7 @@ object TextOps {
     * Each token maps to one of `nFeatures` buckets via the hashing trick
     * (first 8 hex chars of md5 mod nFeatures — portable across engines,
     * unlike murmur/xxhash), and the document score is the mean bucket
-    * weight, squashed to a keep decision at `cutoff`.
+    * weight, squashed to a keep decision at [[QualityCutoff]].
     *
     * Weights are multiples of 1/64 in [-0.5, 0.5) from a seeded PRNG (a
     * stand-in for trained coefficients — swap in a real model's weights at
@@ -539,34 +536,37 @@ object TextOps {
     * weight table rides as a constant-folded array literal (model
     * metadata), the per-token lookup is an `aggregate` HOF over the token
     * array — no explode, no shuffle, no state; scan-speed at 100 TB. */
-  def linearQualityScore(docs: DataFrame, nFeatures: Int = 1024, seed: Long = 7,
-                         cutoff: Double = 0.0,
-                         textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val weights = array(classifierWeights(nFeatures, seed).map(lit): _*)
-    val toks = split(col(textCol), " ")
+  def linearQualityScore(docs: DataFrame, nFeatures: Int = 1024): DataFrame = {
+    val weights = array(classifierWeights(nFeatures).map(lit): _*)
+    val toks = split(col(Text), " ")
     def featOf(tok: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       (call_function("md5_u32", tok) % nFeatures).cast("int")
     docs
       .withColumn("__toks", toks)
       .select(
-        col(idCol),
+        col(DocId),
         size(col("__toks")).cast("long").as("n_tokens"),
         round(
           aggregate(col("__toks"), lit(0.0d),
             (acc, tok) => acc + element_at(weights, featOf(tok) + 1)) /
             greatest(size(col("__toks")), lit(1)), 6).as("score"))
-      .withColumn("keep", col("score") >= cutoff)
+      .withColumn("keep", col("score") >= QualityCutoff)
   }
 
   /** The dyadic weight table [[linearQualityScore]] bakes into its plan —
     * exposed so an oracle can reproduce the identical literals. */
-  def classifierWeights(nFeatures: Int, seed: Long = 7): Array[Double] = {
-    val rnd = new scala.util.Random(seed)
+  def classifierWeights(nFeatures: Int): Array[Double] = {
+    val rnd = new scala.util.Random(QualitySeed)
     Array.fill(nFeatures)((rnd.nextInt(64) - 32) / 64.0)
   }
 
-  def invertedIndex(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    termFreqs(docs, textCol, idCol)
+  /** Inverted index: one row per term with document frequency, collection
+    * frequency, and the sorted distinct posting list. Single aggregation on
+    * the term after the explode; posting lists are built from the already
+    * per-(doc,term)-collapsed tf rows, so the collected arrays carry one
+    * entry per document, not per occurrence. */
+  def invertedIndex(docs: DataFrame): DataFrame =
+    termFreqs(docs)
       .groupBy("term")
       .agg(
         count(lit(1)).as("df"),
@@ -586,17 +586,16 @@ object TextOps {
     * BROADCASTS onto the exploded token stream and membership aggregates
     * per document — the big relation sees one shuffle (the per-doc agg);
     * the vocab side is |V| rows regardless of corpus size. */
-  def oovRate(docs: DataFrame, vocabSize: Int = 50,
-              textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def oovRate(docs: DataFrame, vocabSize: Int = 50): DataFrame = {
     require(vocabSize > 0, s"vocabSize must be positive, got $vocabSize")
-    val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+    val toks = docs.select(col(DocId), explode(tokens(col(Text))).as("tok"))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok").asc)
       .limit(vocabSize)
       .select(col("tok"), lit(1).as("__in_vocab"))
     toks
       .join(broadcast(vocab), Seq("tok"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col(DocId))
       .agg(
         count(lit(1)).as("n_tokens"),
         sum(when(col("__in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
@@ -617,12 +616,11 @@ object TextOps {
     * anything corpus-sized. The join key here is the gram STRING so the
     * SQL oracle reproduces it byte-for-byte; at 100 TB key it on
     * xxhash64(gram) instead — same plan, 8-byte exchange keys. */
-  def ngramNovelty(docs: DataFrame, n: Int = 3,
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def ngramNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     // fanOut before tokenizing (the shingleHashed small-file-trap fix)
     val grams = graft.operators.ScaleOps.fanOut(
-        docs.select(col(idCol).as("id"), col(textCol).as("__t")))
+        docs.select(col(DocId).as("id"), col(Text).as("__t")))
       .select(col("id"), tokens(col("__t")).as("toks"))
       .where(size(col("toks")) >= n)
       .select(col("id"), explode(sequence(lit(0), size(col("toks")) - n)).as("i"),
@@ -637,7 +635,7 @@ object TextOps {
         count(lit(1)).as("n_grams"),
         sum(when(col("id") === col("first_id"), 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty_rate", round(col("n_novel") / col("n_grams").cast("double"), 6))
-      .select(col("id").as(idCol), col("n_grams"), col("n_novel"), col("novelty_rate"))
+      .select(col("id").as(DocId), col("n_grams"), col("n_novel"), col("novelty_rate"))
   }
 
   /** Zipf rank-frequency slope over the top-`k` tokens: the least-squares
@@ -650,10 +648,9 @@ object TextOps {
     * top-k (ties broken lexicographically — total order, oracle-exact),
     * rank + regression over those k rows only. The ranking window and the
     * final aggregate run on k rows — model-sized, never corpus-sized. */
-  def zipfSlope(docs: DataFrame, k: Int = 100,
-                textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def zipfSlope(docs: DataFrame, k: Int = 100): DataFrame = {
     require(k >= 2, s"need at least 2 ranks for a slope, got $k")
-    val top = docs.select(explode(tokens(col(textCol))).as("tok"))
+    val top = docs.select(explode(tokens(col(Text))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok").asc)
       .limit(k)
@@ -739,14 +736,13 @@ object TextOps {
     * the expression is bound to a single projected attribute and the
     * derived columns reference the attribute (the q_mask_tokens lesson —
     * filter/project pushdown re-evaluates per REFERENCE otherwise). */
-  def keywordSpot(docs: DataFrame, phrases: Seq[String],
-                  textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def keywordSpot(docs: DataFrame, phrases: Seq[String]): DataFrame = {
     require(phrases.nonEmpty, "keywordSpot: need at least one phrase")
     docs.select(
-        col(idCol),
-        TextFunctions.keywordMatches(col(textCol), phrases).as("hits_arr"))
+        col(DocId),
+        TextFunctions.keywordMatches(col(Text), phrases).as("hits_arr"))
       .select(
-        col(idCol),
+        col(DocId),
         col("hits_arr"),
         array_join(col("hits_arr"), ",").as("hits"),
         size(col("hits_arr")).cast("long").as("n_hits"))
@@ -759,10 +755,9 @@ object TextOps {
     * document costs only its prefix up to the first offending phrase and
     * no hit array is ever materialized. Narrow filter at scan parallelism
     * — the 100-TB blocklist pass is one map stage. */
-  def keywordFilter(docs: DataFrame, denyPhrases: Seq[String],
-                    textCol: String = "text"): DataFrame = {
+  def keywordFilter(docs: DataFrame, denyPhrases: Seq[String]): DataFrame = {
     require(denyPhrases.nonEmpty, "keywordFilter: need at least one phrase")
-    docs.where(size(TextFunctions.keywordMatches(col(textCol), denyPhrases)) === 0)
+    docs.where(size(TextFunctions.keywordMatches(col(Text), denyPhrases)) === 0)
   }
 
   /** Dictionary span extraction: one row per OCCURRENCE of any phrase —
@@ -772,12 +767,11 @@ object TextOps {
     * narrow generator — the only shuffle a consumer pays is whatever it
     * aggregates afterwards. Offsets are BYTE offsets (no per-row decode;
     * equal to character offsets for ASCII corpora). */
-  def keywordSpans(docs: DataFrame, phrases: Seq[String],
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def keywordSpans(docs: DataFrame, phrases: Seq[String]): DataFrame = {
     require(phrases.nonEmpty, "keywordSpans: need at least one phrase")
-    docs.select(col(idCol),
-        explode(TextFunctions.keywordSpans(col(textCol), phrases)).as("__s"))
-      .select(col(idCol),
+    docs.select(col(DocId),
+        explode(TextFunctions.keywordSpans(col(Text), phrases)).as("__s"))
+      .select(col(DocId),
         col("__s.pos").cast("long").as("pos"),
         col("__s.phrase").as("phrase"))
   }
@@ -788,11 +782,10 @@ object TextOps {
     * one byte rewrite per document, independent of dictionary size — a
     * per-phrase `replace` chain re-copies the string once per phrase and
     * is order-dependent under overlap; union masking is order-free. */
-  def keywordRedact(docs: DataFrame, denyPhrases: Seq[String],
-                    textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def keywordRedact(docs: DataFrame, denyPhrases: Seq[String]): DataFrame = {
     require(denyPhrases.nonEmpty, "keywordRedact: need at least one phrase")
-    docs.select(col(idCol),
-      TextFunctions.keywordRedact(col(textCol), denyPhrases).as("masked"))
+    docs.select(col(DocId),
+      TextFunctions.keywordRedact(col(Text), denyPhrases).as("masked"))
   }
 
   /** Flesch readability per document — reading-ease and Flesch–Kincaid
@@ -815,20 +808,19 @@ object TextOps {
     *
     * Scale shape: a pure per-row projection — no shuffle, no state; the
     * regex work is codegen'd string scanning in the scan stage. */
-  def readability(docs: DataFrame, textCol: String = "text",
-                  idCol: String = "doc_id"): DataFrame = {
-    val words = split(col(textCol), " ")
+  def readability(docs: DataFrame): DataFrame = {
+    val words = split(col(Text), " ")
     val nWords = size(words).cast("long")
     val nSent = greatest(lit(1L),
-      size(regexp_extract_all(col(textCol), lit("[.!?]+"), lit(0))).cast("long"))
+      size(regexp_extract_all(col(Text), lit("[.!?]+"), lit(0))).cast("long"))
     val nSyl = aggregate(words, lit(0L),
       (acc, w) => acc + greatest(lit(1L),
         size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))).cast("long")))
     val wps = nWords.cast("double") / nSent.cast("double")
     val spw = nSyl.cast("double") / nWords.cast("double")
     docs
-      .where(col(textCol).isNotNull && nWords > 0)
-      .select(col(idCol), nWords.as("n_words"), nSent.as("n_sentences"),
+      .where(col(Text).isNotNull && nWords > 0)
+      .select(col(DocId), nWords.as("n_words"), nSent.as("n_sentences"),
         nSyl.as("n_syllables"),
         round(wps, 6).as("words_per_sentence"),
         round(spw, 6).as("syllables_per_word"),
@@ -851,9 +843,9 @@ object TextOps {
     * aggregation; the ranking window runs over that model-sized table
     * only (allowlisted in the global-window audit), and the final
     * aggregate is a second one-row reduction. */
-  def sourceConcentration(docs: DataFrame, srcCol: String = "source"): DataFrame = {
+  def sourceConcentration(docs: DataFrame): DataFrame = {
     val counts = docs
-      .groupBy(col(srcCol).as("s"))
+      .groupBy(col("source").as("s"))
       .agg(count(lit(1)).as("c"))
     // rank over the |sources|-row table (bounded single-partition window)
     val ranked = counts.withColumn("i",

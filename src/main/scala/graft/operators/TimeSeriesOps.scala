@@ -59,6 +59,8 @@ object TimeSeriesOps {
   }
 
   private val DayNs = 86400L * 1000 * 1000 * 1000
+  /** Decimal places of theilSen's slope and intercept medians. */
+  private val Scale = 6
 
   /** Floor division on Column longs (floors toward -inf, negative-safe).
     * NOT DuckDB `//` semantics: DuckDB integer `//` truncates toward zero
@@ -342,7 +344,7 @@ object TimeSeriesOps {
     *
     * Determinism contract: every slope is ONE division of exact integer
     * differences; both medians come from [[QuantileOps.exactQuantiles]]
-    * ROUNDED at `scale` before any further arithmetic (the intercept's
+    * ROUNDED at [[Scale]] places before any further arithmetic (the intercept's
     * residuals use the rounded slope), so the estimates are fixed
     * expressions over engine-identical inputs.
     *
@@ -351,8 +353,7 @@ object TimeSeriesOps {
     * per decade), never in the data; the pair generation is a key-local
     * equi-join on the rollup and both median passes inherit
     * exactQuantiles' own distribution-safe crossover. */
-  def theilSen(df: DataFrame, keyCol: String, tsNsCol: String,
-               scale: Int = 6): DataFrame = {
+  def theilSen(df: DataFrame, keyCol: String, tsNsCol: String): DataFrame = {
     val counts = df
       .select(col(keyCol).as("k"), floorDiv(col(tsNsCol), DayNs).as("d"))
       .groupBy("k", "d").agg(count(lit(1)).as("n"))
@@ -368,13 +369,13 @@ object TimeSeriesOps {
         ((col("nb") - col("na")).cast("double") /
           (col("db") - col("da")).cast("double")).as("slope"))
     val sen = QuantileOps.exactQuantiles(pairs, "k", "slope",
-      ps = Seq("sen_slope" -> 0.5), scale = scale)
+      ps = Seq("sen_slope" -> 0.5), scale = Scale)
     val resid = counts.join(broadcast(sen), Seq("k"))
       .select(col("k"),
         (col("n").cast("double") - col("sen_slope") * col("d").cast("double"))
           .as("resid"))
     val icpt = QuantileOps.exactQuantiles(resid, "k", "resid",
-      ps = Seq("sen_intercept" -> 0.5), scale = scale)
+      ps = Seq("sen_intercept" -> 0.5), scale = Scale)
     val nDays = counts.groupBy("k").agg(count(lit(1)).as("n_days"))
     nDays.join(broadcast(sen), Seq("k")).join(broadcast(icpt), Seq("k"))
       .select(col("k").as(keyCol), col("n_days"),

@@ -1,7 +1,8 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import java.net.{HttpURLConnection, URI}
+import java.net.{HttpURLConnection, URI, URLEncoder}
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.io.Source
 
 /** Minimal Nomad HTTP API client for the source's control-plane calls.
@@ -16,8 +17,13 @@ final case class NomadConfig(
 
 object NomadApi {
 
+  /** GET `path` with `params` as its query, each key and value
+    * URL-encoded: a configured value with a space or an `&` stays one
+    * parameter. */
   def open(cfg: NomadConfig, path: String, params: Map[String, String] = Map.empty): HttpURLConnection = {
-    val query = params.map { case (k, v) => s"$k=$v" }.mkString("&")
+    val query = params.map { case (k, v) =>
+      s"${URLEncoder.encode(k, UTF_8)}=${URLEncoder.encode(v, UTF_8)}"
+    }.mkString("&")
     val url = new URI(cfg.baseUrl + path + (if (query.nonEmpty) s"?$query" else "")).toURL
     val conn = url.openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("GET")

@@ -457,8 +457,7 @@ class PlanQualitySpec extends SparkSpec {
     val emb = t.embeddings
     val plan = graft.operators.SimilarityOps.marginSurvivors(
         emb.where(col("vec_id") % 29 === 0), emb.where(col("vec_id") % 29 =!= 0),
-        k = 4, vecCol = "embedding", idCol = "vec_id",
-        strategy = "broadcast", lshPlanes = 8, lshBands = 8)
+        k = 4, strategy = "broadcast", lshPlanes = 8, lshBands = 8)
       .queryExecution.executedPlan.toString
     // scoring = ONE corpus scan x broadcast seed (pre-r13 ran it twice);
     // a partial WindowGroupLimit prunes to k rows per (side, key) BEFORE
@@ -480,8 +479,7 @@ class PlanQualitySpec extends SparkSpec {
     val emb = t.embeddings
     val plan = graft.operators.SimilarityOps.marginSurvivors(
         emb.where(col("vec_id") % 29 === 0), emb.where(col("vec_id") % 29 =!= 0),
-        k = 4, vecCol = "embedding", idCol = "vec_id",
-        strategy = "lsh", lshPlanes = 2, lshBands = 40)
+        k = 4, strategy = "lsh", lshPlanes = 2, lshBands = 40)
       .queryExecution.executedPlan.toString
     // candidate generation is an equi-join on (band, bucket) signature rows;
     // nothing in the plan may fall back to a nested-loop / cartesian pairing
@@ -493,13 +491,13 @@ class PlanQualitySpec extends SparkSpec {
   test("bitext crossover flips to LSH exactly when the seed outgrows the broadcast budget") {
     val emb = t.embeddings
     val seed = emb.where(col("vec_id") % 29 === 0)
-    assert(!graft.operators.SimilarityOps.seedPastBroadcastBudget(seed, "embedding"),
+    assert(!graft.operators.SimilarityOps.seedPastBroadcastBudget(seed),
       "the sf0.001 seed panel must fit the 64 MB session budget")
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "1024") // 1 KB: any real seed table exceeds it
-      assert(graft.operators.SimilarityOps.seedPastBroadcastBudget(seed, "embedding"),
+      assert(graft.operators.SimilarityOps.seedPastBroadcastBudget(seed),
         "a seed past the budget must select the banded-LSH path")
     } finally spark.conf.set(key, prev)
   }

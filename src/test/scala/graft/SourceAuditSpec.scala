@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Reachability: every top-level type serves a product path (the batch
   * registry, the notifier pipeline, the mains, the benchmark harness), and
   * so does every member of the batch library, so code kept only for its
-  * own spec fails the build.
+  * own spec fails the build. Likewise every default-valued parameter of a
+  * library member is set by some product call: a knob no caller turns is
+  * a constant.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
@@ -26,11 +28,16 @@ class SourceAuditSpec extends AnyFunSuite {
   // string and char literals are matched first so a `//` inside one stays.
   private val lexeme =
     """"{3}[\s\S]*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/""".r
-  /** Source text with comments blanked, and literals too when `literals`. */
-  private def code(p: Path, literals: Boolean = false): String =
-    lexeme.replaceAllIn(Files.readString(p), m =>
-      if (literals || m.matched.startsWith("/")) " "
+  /** Source text with comments blanked, and literals too when `literals`.
+    * A blanked literal becomes `""`: it names nothing, but it still
+    * counts as an argument. */
+  private def blank(src: String, literals: Boolean): String =
+    lexeme.replaceAllIn(src, m =>
+      if (m.matched.startsWith("/")) " "
+      else if (literals) "\"\""
       else java.util.regex.Matcher.quoteReplacement(m.matched))
+  private def code(p: Path, literals: Boolean = false): String =
+    blank(Files.readString(p), literals)
   private def scalaFiles(dir: Path): Seq[Path] =
     Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
 
@@ -177,5 +184,174 @@ class SourceAuditSpec extends AnyFunSuite {
     val stale = (testedReferences.keySet -- unreached).toSeq.sorted
     assert(stale.isEmpty, s"allowlisted members that now have a product caller " +
       s"(drop them from the allowlist): ${stale.mkString(", ")}")
+  }
+
+  /** Index just past the bracket group that opens at `i`. */
+  private def groupEnd(s: String, i: Int): Int = {
+    var depth = 0
+    var j = i
+    do {
+      s(j) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1
+        case _ =>
+      }
+      j += 1
+    } while (depth > 0 && j < s.length)
+    j
+  }
+
+  /** The comma-separated parts of a group's inside, at its own depth. */
+  private def topLevel(inside: String): Seq[String] = {
+    val parts = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    for ((c, i) <- inside.zipWithIndex) c match {
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
+      case ',' if depth == 0 => parts += inside.substring(from, i); from = i + 1
+      case _ =>
+    }
+    (parts += inside.substring(from)).result()
+  }
+
+  /** The `(…)` and `{…}` groups that follow position `i` (after one
+    * optional `[…]` type group), each as (opening bracket, inside). */
+  private def groups(s: String, i: Int): Seq[(Char, String)] = {
+    def skip(j: Int): Int = if (j < s.length && (s(j) == ' ' || s(j) == '\t')) skip(j + 1) else j
+    var j = skip(i)
+    if (j < s.length && s(j) == '[') j = groupEnd(s, j)
+    val out = Seq.newBuilder[(Char, String)]
+    var k = skip(j)
+    while (k < s.length && (s(k) == '(' || s(k) == '{')) {
+      val end = groupEnd(s, k)
+      out += ((s(k), s.substring(k + 1, end - 1)))
+      k = skip(end)
+    }
+    out.result()
+  }
+
+  private val declared = """\b(def|class)\s+(\w+)""".r
+  private val paramName = """^\s*(?:(?:implicit|val|var|private|override)\s+)*(\w+)""".r
+  private val namedArg = """^\s*(\w+)\s*=(?![=>])""".r
+
+  /** Whether a parameter declaration has a default: an `=` at its own
+    * depth that is no part of `==`, `=>`, `<=`, `>=`, `!=` or `:=`. */
+  private def hasDefault(param: String): Boolean = {
+    var depth = 0
+    param.indices.exists { i =>
+      param(i) match {
+        case '(' | '[' | '{' => depth += 1; false
+        case ')' | ']' | '}' => depth -= 1; false
+        case '=' => depth == 0 && (i == 0 || !"=!<>:".contains(param(i - 1))) &&
+          (i + 1 == param.length || !"=>".contains(param(i + 1)))
+        case _ => false
+      }
+    }
+  }
+
+  /** The default-valued parameters declared in `library` (owner -> source
+    * with comments and literals blanked) that no call in `callers` sets, as
+    * `Owner.member.param`. A call `member(…)` sets a parameter when it
+    * passes it by name, or passes an argument at its position in its
+    * group. A `def`/`class` declaration is no call, and a call counts for
+    * every member of that name. */
+  private def unsetDefaults(library: Seq[(String, String)], callers: Seq[String]): Seq[String] = {
+    // (owner, member, group, position, parameter)
+    val params = for {
+      (owner, src) <- library
+      m <- declared.findAllMatchIn(src).toSeq
+      ((_, inside), g) <- groups(src, m.end).filter(_._1 == '(').zipWithIndex
+      if inside.trim.nonEmpty
+      (p, i) <- topLevel(inside).zipWithIndex
+      if hasDefault(p)
+    } yield (owner, m.group(2), g, i, paramName.findFirstMatchIn(p).get.group(1))
+    // member name -> the (group, position) and names its calls pass
+    val names = params.map(_._2).toSet
+    val setters: Map[String, Set[Either[(Int, Int), String]]] = callers.flatMap { src =>
+      val declarations = declared.findAllMatchIn(src).map(_.start(2)).toSet
+      """\w+""".r.findAllMatchIn(src)
+        .filter(m => names(m.matched) && !declarations(m.start))
+        .flatMap { m =>
+          groups(src, m.end).zipWithIndex.flatMap {
+            case (('{', _), g) => Seq(Left((g, 0)))
+            case ((_, inside), g) if inside.trim.nonEmpty =>
+              topLevel(inside).zipWithIndex.map { case (a, i) =>
+                namedArg.findFirstMatchIn(a).map(n => Right(n.group(1))).getOrElse(Left((g, i)))
+              }
+            case _ => Nil
+          }.map(m.matched -> _)
+        }
+    }.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap.withDefaultValue(Set.empty)
+    params.collect { case (owner, member, g, i, p)
+        if !setters(member).contains(Left((g, i))) && !setters(member).contains(Right(p)) =>
+      s"$owner.$member.$p"
+    }.distinct.sorted
+  }
+
+  // default-valued parameter -> the test that sets it to another value
+  private val testedDefaults = Map(
+    "GraphOps.kCore.maxRounds" ->
+      "FixpointSpec \"at the round cap kCore still throws …\" caps the peel below convergence",
+    "DedupOps.connectedComponents.maxIter" ->
+      "FixpointSpec \"at the round cap … connectedComponents still returns its labels\"",
+    "GraphOps.coOccurrenceEdges.maxBasket" ->
+      "GraphQualityOpsSpec \"maxBasket drops oversized baskets …\"",
+    "GraphOps.associationRules.maxBasket" ->
+      "GraphQualityOpsSpec \"maxBasket drops oversized baskets …\"",
+    "DedupOps.ngramJaccard.maxDf" ->
+      "OpsSpec \"ngramJaccard df-cap drops stop-shingles from the join …\"",
+    "StatsOps.ksTest.nBlocks" ->
+      "AnalyticsOpsSpec \"ksTest: … block-count invariance …\"",
+    "StatsOps.aucMannWhitney.nBlocks" ->
+      "AnalyticsOpsSpec \"aucMannWhitney: … block invariance …\"",
+    "SimilarityOps.pqCodes.kmeansIters" ->
+      "OpsSpec \"PQ codes: … a Lloyd-fitted codebook never increases distortion\"")
+
+  test("every default-valued parameter in operators/, functions/ and plans/ is set by a product call") {
+    val texts = (scalaFiles(root) ++ scalaFiles(Paths.get("perfbench/scala")))
+      .map(p => p -> code(p, literals = true))
+    val library = Seq("operators", "functions", "plans").map(root.resolve)
+    val unset = unsetDefaults(
+      texts.collect { case (p, src) if library.exists(p.startsWith) =>
+        p.getFileName.toString.stripSuffix(".scala") -> src },
+      texts.map(_._2))
+
+    val knobs = unset.filterNot(testedDefaults.contains)
+    assert(knobs.isEmpty,
+      s"default-valued parameters no product call sets (fold each into the " +
+        s"member as a constant):\n  ${knobs.mkString("\n  ")}")
+    val stale = testedDefaults.keySet.filterNot(unset.contains).toSeq.sorted
+    assert(stale.isEmpty, s"allowlisted parameters that a product call now sets " +
+      s"(drop them from the allowlist): ${stale.mkString(", ")}")
+  }
+
+  test("the default-parameter audit counts positional, named and multi-line setters only") {
+    val library = blank(
+      """object Ops {
+        |  def positional(x: Int, a: Int = 1): Int = a
+        |  def literal(x: Int, s: String = "a"): String = s
+        |  def named(x: Int, b: Int = 2, c: Int = 3): Int = b
+        |  def multiLine(x: Int,
+        |                d: Int = 4)(e: Int = 5): Int = d
+        |  def commented(f: Int = 6): Int = f
+        |  def quoted(g: Int = 7): Int = g
+        |  def declared(h: Int = 8): Int = h
+        |}""".stripMargin, literals = true)
+    val callers = blank(
+      """object Use {
+        |  Ops.positional(0, 9)
+        |  Ops.literal(0, "b")
+        |  Ops.named(0, c = 9)
+        |  Ops.multiLine(
+        |    0,
+        |    9)(
+        |    e = 9)
+        |  // Ops.commented(9)
+        |  val s = "Ops.quoted(9)"
+        |  def declared(h: Int = 9): Int = h
+        |}""".stripMargin, literals = true)
+    assert(unsetDefaults(Seq("Ops" -> library), Seq(library, callers)) ==
+      Seq("Ops.commented.f", "Ops.declared.h", "Ops.named.b", "Ops.quoted.g"))
   }
 }

@@ -349,28 +349,27 @@ class AnalyticsOpsSpec extends SparkSpec {
   }
 
   test("calibration: closed-form bins, exact-integer gap and ECE") {
-    // scale 100, 2 bins. bin0: units 10 (pos) + 30 (neg) → acc .5,
-    // mean_conf .2, gap (100−40)/200 = .3; bin1: 90 (pos) → acc 1,
-    // mean_conf .9, gap .1. ECE = (|100−40|+|100−90|)/(100·3) = 7/30.
-    val df = Seq((10L, true), (30L, false), (90L, true))
+    // units of 1/10000, 10 bins. bin1: units 1000 (pos) + 1800 (neg) →
+    // acc .5, mean_conf .14, gap (10000−2800)/20000 = .36; bin9: 9000
+    // (pos) → acc 1, mean_conf .9, gap .1.
+    // ECE = (|10000−2800|+|10000−9000|)/(10000·3) = 8200/30000.
+    val df = Seq((1000L, true), (1800L, false), (9000L, true))
       .toDF("cu", "pos")
-    val out = StatsOps.calibration(df, col("cu"), col("pos"),
-        scale = 100L, nBins = 2)
+    val out = StatsOps.calibration(df, col("cu"), col("pos"))
       .orderBy("bin").collect()
     assert(out.length == 2)
     val b0 = out(0); val b1 = out(1)
-    assert(b0.getLong(0) == 0L && b0.getLong(1) == 2L && b0.getLong(2) == 1L)
-    assert(b0.getDouble(3) == 0.5 && b0.getDouble(4) == 0.2 && b0.getDouble(5) == 0.3)
-    assert(b1.getLong(0) == 1L && b1.getDouble(3) == 1.0 &&
+    assert(b0.getLong(0) == 1L && b0.getLong(1) == 2L && b0.getLong(2) == 1L)
+    assert(b0.getDouble(3) == 0.5 && b0.getDouble(4) == 0.14 && b0.getDouble(5) == 0.36)
+    assert(b1.getLong(0) == 9L && b1.getDouble(3) == 1.0 &&
       b1.getDouble(4) == 0.9 && b1.getDouble(5) == 0.1)
-    assert(out.forall(_.getDouble(6) == 0.233333)) // ECE repeated per row
+    assert(out.forall(_.getDouble(6) == 0.273333)) // ECE repeated per row
   }
 
   test("calibration clamps the top edge into the last bin") {
-    // cu = scale lands in bin nBins−1, not a phantom bin nBins
-    val df = Seq((100L, true), (0L, false)).toDF("cu", "pos")
-    val bins = StatsOps.calibration(df, col("cu"), col("pos"),
-        scale = 100L, nBins = 10)
+    // cu = 10000 (confidence 1.0) lands in the last bin 9, not a phantom bin 10
+    val df = Seq((10000L, true), (0L, false)).toDF("cu", "pos")
+    val bins = StatsOps.calibration(df, col("cu"), col("pos"))
       .orderBy("bin").collect().map(_.getLong(0)).toSeq
     assert(bins == Seq(0L, 9L))
   }
@@ -417,10 +416,6 @@ class AnalyticsOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == Seq((2L, 2L, 1.0)),
       s"coinciding ids must still be screened: ${out.mkString(",")}")
-    // ...while the explicit self-screen opt-in restores the old exclusion
-    val selfScreen = SimilarityOps.contaminationScreen(corpus, corpus,
-      threshold = 0.9, excludeSelfId = true).collect()
-    assert(selfScreen.isEmpty, "self-screen must not flag a row against itself")
   }
 
   test("rankSumTest: textbook tie-corrected U and z; degenerate inputs yield NULL z") {
@@ -563,9 +558,9 @@ class AnalyticsOpsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Double)].collect().toSet
     val bcast = rows(SimilarityOps.marginMineStrategy(xs, ys, k = 4, minMargin = 1.0,
-      vecCol = "embedding", idCol = "vec_id", strategy = "broadcast"))
+      strategy = "broadcast", lshPlanes = 8, lshBands = 8))
     val lsh = rows(SimilarityOps.marginMineStrategy(xs, ys, k = 4, minMargin = 1.0,
-      vecCol = "embedding", idCol = "vec_id", strategy = "lsh",
+      strategy = "lsh",
       lshPlanes = 2, lshBands = 40))
     assert(bcast.nonEmpty, "degenerate fixture: broadcast path mined no pairs")
     assert(lsh == bcast,

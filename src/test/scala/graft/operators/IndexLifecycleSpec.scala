@@ -23,7 +23,7 @@ class IndexLifecycleSpec extends SparkSpec {
       (2L, "completely different text with no overlap at all here")
     ).toDF("doc_id", "text")
     val incoming = Seq((10L, "a b c d e f g h i j k l")).toDF("doc_id", "text")
-    val index = DedupOps.buildNearDupIndex(existing, n = 3, maxDf = 100)
+    val index = DedupOps.buildNearDupIndex(existing, n = 3)
     val got = DedupOps.incrementalNearDupAgainst(index, incoming, n = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == Seq((10L, 1L, 1.0)),
@@ -42,7 +42,7 @@ class IndexLifecycleSpec extends SparkSpec {
   test("containment checker works against a maintained index too") {
     val existing = Seq((1L, "q w e r t y u i o p")).toDF("doc_id", "text")
     val incoming = Seq((20L, "zz q w e r t y u i o p zz")).toDF("doc_id", "text")
-    val index = DedupOps.buildNearDupIndex(existing, n = 4, maxDf = 100)
+    val index = DedupOps.buildNearDupIndex(existing, n = 4)
     val got = DedupOps.incrementalContainmentAgainst(index, incoming, n = 4, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((20L, 1L)))

@@ -61,7 +61,7 @@ class MediaNearDupSpec extends SparkSpec {
     assert(pairs == Seq((1L, 2L, 0)), s"expected exactly the gain pair: $pairs")
   }
 
-  test("frameHashes: one reader walk yields every frame's dHash; stride subsamples") {
+  test("frameHashes: one reader walk yields every frame's dHash") {
     def pix(x: Int, y: Int, f: Int) = (x * 31 + y * 17 + f * 97) % 256
     val gif = encodeGrayGifFrames(9, 8, frames = 4, pixel = pix)
     val df = Seq((7L, gif), (8L, "not an image".getBytes("UTF-8"))).toDF("id", "blob")
@@ -76,9 +76,6 @@ class MediaNearDupSpec extends SparkSpec {
       val expected = DecodedImage(9, 8, Array.tabulate(72)(k => pix(k % 9, k / 9, f)))
       assert(dh == dHash64(expected), s"frame $f hash drifted")
     }
-    val strided = frameHashes(df, "blob", "id", stride = 2)
-      .orderBy("frame_idx").as[(Long, Int, Int, Int, Long)].collect().toSeq
-    assert(strided.map(_._2) == Seq(0, 2))
   }
 
   test("animationNearDup: every frame must match AND frame counts must agree") {
@@ -89,9 +86,9 @@ class MediaNearDupSpec extends SparkSpec {
     val c = encodeGrayGifFrames(9, 8, 2, pix)                            // truncated
     val d = encodeGrayGifFrames(9, 8, 3, (x, y, f) =>
       if (f == 1) ((x + 3) * (y + 5) * 97) % 256 else pix(x, y, f))      // one frame replaced
-    val fh = frameHashes(Seq((1L, a), (2L, b), (3L, c), (4L, d)).toDF("id", "blob"),
-      "blob", "id")
-    val out = animationNearDup(fh, maxHamming = 3, idCol = "id")
+    val fh = frameHashes(Seq((1L, a), (2L, b), (3L, c), (4L, d)).toDF("doc_id", "blob"),
+      "blob", "doc_id")
+    val out = animationNearDup(fh, maxHamming = 3)
       .as[(Long, Long, Long, Int)].collect().toSeq
     assert(out.map(p => (p._1, p._2)) == Seq((1L, 2L)),
       s"only the all-frames near-copy pairs — not the truncated or one-frame-off: $out")
@@ -189,16 +186,16 @@ class MediaNearDupSpec extends SparkSpec {
     val full = encodeGrayGifFrames(9, 8, 8, (x, y, f) => pix(x, y, f))
     val halved = encodeGrayGifFrames(9, 8, 4, (x, y, f) => pix(x, y, f * 2))
     val other = encodeGrayGifFrames(9, 8, 8, (x, y, f) => ((x + 3) * (y + 5) + f * 53) % 256)
-    val fh = frameHashes(Seq((1L, full), (2L, halved), (3L, other)).toDF("id", "blob"),
-      "blob", "id")
-    val out = animationNearDupNormalized(fh, slots = 4, maxHamming = 3, idCol = "id")
+    val fh = frameHashes(Seq((1L, full), (2L, halved), (3L, other)).toDF("doc_id", "blob"),
+      "blob", "doc_id")
+    val out = animationNearDupNormalized(fh, slots = 4, maxHamming = 3)
       .as[(Long, Long, Long, Long, Int)].collect().toSeq
     assert(out.map(p => (p._1, p._2)) == Seq((1L, 2L)),
       s"exactly the rate-halved pair: $out")
     assert(out.head._3 == 8L && out.head._4 == 4L && out.head._5 == 0,
       s"counts reported unequal, slots identical: $out")
     // the equal-count aligned-index form is structurally blind to this pair
-    assert(animationNearDup(fh, maxHamming = 3, idCol = "id").collect().isEmpty,
+    assert(animationNearDup(fh, maxHamming = 3).collect().isEmpty,
       "animationNearDup matching a rate-halved copy would make the normalized form redundant")
   }
 }

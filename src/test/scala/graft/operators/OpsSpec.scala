@@ -393,7 +393,7 @@ class OpsSpec extends SparkSpec {
     val exact = SimilarityOps.nearDupPairs(emb, threshold = 0.95)
       .select("ida", "idb").as[(Long, Long)].collect().toSet
     assert(exact.size >= 10, s"planted pairs missing from exact: $exact")
-    val lsh = SimilarityOps.nearDupPairsLsh(emb, threshold = 0.95, nPlanes = 8, bands = 16)
+    val lsh = SimilarityOps.nearDupPairsLsh(emb, threshold = 0.95)
       .select("ida", "idb").as[(Long, Long)].collect().toSet
     assert(lsh == exact, s"LSH missed: ${exact diff lsh}")
   }
@@ -411,8 +411,7 @@ class OpsSpec extends SparkSpec {
       (1000L + id, v.map(x => x + rnd.nextFloat() * 0.01f))
     }
     val emb = (base ++ dups).toDF("vec_id", "embedding")
-    val out = SimilarityOps.semanticDedup(emb, nCentroids = 4, threshold = 0.999,
-      kmeansIters = 2).collect()
+    val out = SimilarityOps.semanticDedup(emb, nCentroids = 4, threshold = 0.999).collect()
     // every planted pair survives: duplicates are near-identical, so they
     // share a cell under any sane quantizer and sit far above the threshold
     val pairs = out.map(r => (r.getLong(1), r.getLong(2))).toSet
@@ -439,8 +438,7 @@ class OpsSpec extends SparkSpec {
       (100L, centers(0).zipWithIndex.map { case (x, j) => if (j < 8) x else 0.2f }),
       (101L, centers(1).zipWithIndex.map { case (x, j) => if (j < 8) x else 0.2f }))
     val emb = (tight ++ outliers).toDF("vec_id", "embedding")
-    val kept = SimilarityOps.protoPrune(emb, keepFrac = 0.3, nCentroids = 2,
-      kmeansIters = 2).collect()
+    val kept = SimilarityOps.protoPrune(emb, keepFrac = 0.3, nCentroids = 2).collect()
     val byCell = kept.groupBy(_.getInt(0))
     // ceil(11 * 0.3) = 4 kept per 11-member cell
     byCell.foreach { case (cell, rows) =>
@@ -465,7 +463,7 @@ class OpsSpec extends SparkSpec {
     } ++ (0 until 5).map(i => (3000L + i, Array.fill(16)(rnd.nextFloat() * 10 - 5)))
     val out = SimilarityOps.incrementalSemanticDedup(
         existing.toDF("vec_id", "embedding"), incoming.toDF("vec_id", "embedding"),
-        nCentroids = 4, threshold = 0.999, kmeansIters = 2)
+        nCentroids = 4, threshold = 0.999)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     (0 until 5).foreach { i =>
       assert(out.contains((2000L + i, i.toLong)), s"planted copy $i not matched: $out")
@@ -547,16 +545,18 @@ class OpsSpec extends SparkSpec {
     val (cFit, bFit) = SimilarityOps.fitIvfPq(emb, nCentroids = 8, nSub = 4,
       nPqCentroids = 4, kmeansIters = 2)
     val cSep = SimilarityOps.fitCoarseQuantizer(
-      SimilarityOps.prepared(emb, "embedding", "vec_id"), nCentroids = 8, kmeansIters = 2)
+      SimilarityOps.prepared(emb), nCentroids = 8, kmeansIters = 2)
     val bSep = SimilarityOps.pqFitBooks(emb, nSub = 4, nCentroids = 4, kmeansIters = 2)
     assert(cFit.toSeq == cSep.toSeq, "coarse quantizer diverged from standalone fit")
     assert(bFit.map(_.toSeq).toSeq == bSep.map(_.toSeq).toSeq,
       "PQ books diverged from standalone fit")
+    // ivfPqTopK fits with its fixed Lloyd step count, the fit's default
     val queries = emb.where(col("vec_id") < 4)
-    val viaWith = SimilarityOps.ivfPqTopKWith(emb, queries, k = 3, cFit, bFit, nProbe = 3)
+    val (c0, b0) = SimilarityOps.fitIvfPq(emb, nCentroids = 8, nSub = 4, nPqCentroids = 4)
+    val viaWith = SimilarityOps.ivfPqTopKWith(emb, queries, k = 3, c0, b0, nProbe = 3)
       .collect().toSet
     val direct = SimilarityOps.ivfPqTopK(emb, queries, k = 3, nCentroids = 8,
-      nProbe = 3, nSub = 4, nPqCentroids = 4, kmeansIters = 2).collect().toSet
+      nProbe = 3, nSub = 4, nPqCentroids = 4).collect().toSet
     assert(viaWith == direct, "fit-once search diverged from fit-per-call search")
   }
 
@@ -956,7 +956,7 @@ class OpsSpec extends SparkSpec {
       (i.toLong, c.map(x => x + rnd.nextFloat() * 0.5f))
     }.toDF("vec_id", "embedding")
     val queries = emb.where(col("vec_id") < 4)
-    val books = SimilarityOps.pqFitBooks(emb, nSub = 4, nCentroids = 8, kmeansIters = 2)
+    val books = SimilarityOps.pqFitBooks(emb, nSub = 4, nCentroids = 8)
     val adc = SimilarityOps.adcTopK(
         SimilarityOps.pqCodesWith(emb, books), queries, books, k = 5)
       .select("query_id", "neighbor_id", "rank", "sim")
@@ -964,7 +964,7 @@ class OpsSpec extends SparkSpec {
     // probing every cell makes the candidate set the whole corpus, so the
     // composed search must equal the flat ADC scan bit-for-bit
     val full = SimilarityOps.ivfPqTopK(emb, queries, k = 5,
-        nCentroids = 8, nProbe = 8, nSub = 4, nPqCentroids = 8, kmeansIters = 2)
+        nCentroids = 8, nProbe = 8, nSub = 4, nPqCentroids = 8)
       .select("query_id", "neighbor_id", "rank", "sim")
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(full == adc,
@@ -973,7 +973,7 @@ class OpsSpec extends SparkSpec {
     // on well-separated clusters the probe keeps the query's own cell, so
     // recall vs the flat ADC scan stays high and hits stay in-cluster
     val part = SimilarityOps.ivfPqTopK(emb, queries, k = 5,
-        nCentroids = 8, nProbe = 3, nSub = 4, nPqCentroids = 8, kmeansIters = 2)
+        nCentroids = 8, nProbe = 3, nSub = 4, nPqCentroids = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val adcPairs = adc.map(r => (r._1, r._2))
     val recall = (adcPairs intersect part).size.toDouble / adcPairs.size

@@ -227,7 +227,7 @@ class PipelineOpsSpec extends SparkSpec {
   test("block-sharded ops reject non-integral ids loudly (blocks derive arithmetically)") {
     val s = Seq(("a1", "x y z"), ("a2", "p q")).toDF("doc_id", "text")
     val e1 = intercept[IllegalArgumentException] {
-      PipelineOps.shardedLengthBuckets(s, batchSize = 4)
+      PipelineOps.shardedLengthBuckets(s, batchSize = 4, blockSize = 4096L)
     }
     assert(e1.getMessage.contains("integral id"))
     val e2 = intercept[IllegalArgumentException] {
@@ -356,13 +356,13 @@ class PipelineOpsSpec extends SparkSpec {
   test("mixSources keeps floor(weight × count) docs per source, deterministically") {
     val d = (1L to 8L).map(i => (i, s"t$i", if (i <= 4) "web" else "books"))
       .toDF("doc_id", "text", "source")
-    val out = PipelineOps.mixSources(d, Map("web" -> 0.75, "books" -> 0.5), classCol = "source")
+    val out = PipelineOps.mixSources(d, Map("web" -> 0.75, "books" -> 0.5))
     val counts = out.groupBy("source").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(counts == Map("web" -> 3L, "books" -> 2L)) // floor(.75×4)=3, floor(.5×4)=2
     assert(out.collect().toSet ==
-      PipelineOps.mixSources(d, Map("web" -> 0.75, "books" -> 0.5), classCol = "source").collect().toSet)
+      PipelineOps.mixSources(d, Map("web" -> 0.75, "books" -> 0.5)).collect().toSet)
     // a source without a weight contributes nothing
-    val partial = PipelineOps.mixSources(d, Map("web" -> 0.75), classCol = "source")
+    val partial = PipelineOps.mixSources(d, Map("web" -> 0.75))
     assert(partial.select("source").distinct().collect().map(_.getString(0)).toSeq == Seq("web"))
   }
 
@@ -485,11 +485,14 @@ class PipelineOpsSpec extends SparkSpec {
   test("selectByTokenBudget equals the naive global greedy cumsum on random corpora") {
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(17)
-    // coarse quality grid (2 decimal places) forces many same-bucket ties at
-    // nBuckets = 100 — exactly the boundary case where the two-level plan
-    // could diverge from the global order
-    val rows = (0 until 400).map(i =>
-      (i.toLong, math.round(rnd.nextDouble() * 100.0) / 100.0, 10L + rnd.nextInt(90)))
+    // a 2-dp quality grid forces many equal-quality ties, and a 4-dp grid
+    // puts distinct qualities into one of the 1000 buckets — exactly the
+    // boundary cases where the two-level plan could diverge from the
+    // global order
+    val rows = (0 until 400).map { i =>
+      val grid = if (i % 2 == 0) 100.0 else 10000.0
+      (i.toLong, math.round(rnd.nextDouble() * grid) / grid, 10L + rnd.nextInt(90))
+    }
     val df = rows.toDF("doc_id", "quality", "n_tokens")
     for (budget <- Seq(0L, 500L, 7000L, 1000000L)) {
       val w = Window.orderBy(col("quality").desc, col("doc_id"))
@@ -497,7 +500,7 @@ class PipelineOpsSpec extends SparkSpec {
       val naive = df.withColumn("__cum", sum(col("n_tokens")).over(w))
         .where(col("__cum") <= budget)
         .select("doc_id").as[Long].collect().toSet
-      val got = PipelineOps.selectByTokenBudget(df, budget, nBuckets = 100)
+      val got = PipelineOps.selectByTokenBudget(df, budget)
         .select("doc_id").as[Long].collect().toSet
       assert(got == naive,
         s"budget=$budget:\n spurious ${got diff naive}\n missing ${naive diff got}")

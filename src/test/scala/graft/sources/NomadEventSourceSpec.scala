@@ -61,6 +61,24 @@ class NomadEventSourceSpec extends SparkSpec {
     }
   }
 
+  test("the namespace query parameter is URL-encoded: a space or & stays in its value") {
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val rawQuery = new java.util.concurrent.atomic.AtomicReference[String]
+    server.createContext("/v1/event/stream", (ex: HttpExchange) => {
+      rawQuery.set(ex.getRequestURI.getRawQuery)
+      ex.sendResponseHeaders(204, -1); ex.close()
+    })
+    server.start()
+    try {
+      val cfg = NomadConfig(s"http://127.0.0.1:${server.getAddress.getPort}",
+        namespace = Some("a b&index=0"))
+      // the parameters the nomad-events source sends
+      val conn = NomadApi.open(cfg, "/v1/event/stream", cfg.namespace.map("namespace" -> _).toMap)
+      try assert(conn.getResponseCode == 204) finally conn.disconnect()
+      assert(rawQuery.get == "namespace=a+b%26index%3D0")
+    } finally server.stop(0)
+  }
+
   test("configFromAgent seeds the stale-index filter; aborts without raft stats") {
     withServer(Nil) { (url, _) =>
       val cfg = graft.streaming.NomadPipeline.configFromAgent(NomadConfig(url))

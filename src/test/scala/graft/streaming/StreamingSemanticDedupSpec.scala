@@ -34,7 +34,7 @@ class StreamingSemanticDedupSpec extends SparkSpec {
 
     val expected = SimilarityOps.incrementalSemanticDedup(
         existing, incoming.toDF("vec_id", "embedding"),
-        nCentroids = 4, threshold = 0.999, kmeansIters = 2)
+        nCentroids = 4, threshold = 0.999)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     assert(copies.map(_._1).toSet.subsetOf(expected.map(_._1)),
       s"every planted near-copy must be flagged: $expected")
@@ -43,7 +43,7 @@ class StreamingSemanticDedupSpec extends SparkSpec {
     def ingest(batch: DataFrame, batchId: Long): Unit =
       got.synchronized {
         got ++= SimilarityOps.incrementalSemanticDedup(existing, batch,
-            nCentroids = 4, threshold = 0.999, kmeansIters = 2)
+            nCentroids = 4, threshold = 0.999)
           .select("new_id", "old_id").as[(Long, Long)].collect()
       }
 
