@@ -569,17 +569,8 @@ object DedupOps {
     * corpus positions, which is what makes this the 100 TB-safe exact
     * signal next to the pairwise Jaccard family. */
   def duplicatedSpanStats(docs: DataFrame, n: Int = 8): DataFrame = {
-    val pos = docs
-      .select(col(DocId).as("id"), tokens(col(Text)).as("toks"))
-      .where(size(col("toks")) >= n)
-      .select(col("id"), col("toks"),
-        explode(sequence(lit(0), size(col("toks")) - n)).as("i"))
-      .select(col("id"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("i") + 1, lit(n)))).as("g"))
-      // partitioned by gram hash once, shared by the count aggregation and
-      // the join probe — one tokenize+hash derivation and one exchange
-      // instead of two of each (the PipelineOps.stripBoilerplate shape)
-      .repartition(col("g"))
+    val pos = ScaleOps.gramExchange(
+      docs.select(col(DocId).as("id"), tokens(col(Text)).as("toks")), n)
     val counts = pos.groupBy("g").agg(count(lit(1)).as("cnt"))
     pos
       .join(counts.hint("shuffle_hash"), Seq("g"))

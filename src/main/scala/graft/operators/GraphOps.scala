@@ -453,9 +453,7 @@ object GraphOps {
     // at ~32 B/row (long + double + row overhead) against the session's
     // autoBroadcastJoinThreshold — past it, flip to the pre-partitioned
     // shuffle iteration (identical output, pinned in ScalaTest).
-    val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    if (thresh > 0 && n * 32L <= thresh) broadcastIterate(e, nodes, n, iterations)
-    else partitionedIterate(e, nodes, n, iterations)
+    iterate(e, nodes, n, iterations, broadcastRanks = ScaleOps.fitsBroadcast(n * 32L))
   }
 
   /** Normalized edge fractions + node table + node count — shared setup of
@@ -483,66 +481,48 @@ object GraphOps {
   private def rankOf(c: Column, n: Long): Column =
     lit((1 - Damping) / n) + lit(Damping) * coalesce(c, lit(0.0))
 
-  /** Small-|V| iteration: the rank vector broadcasts, the edge relation
-    * never moves after setup — zero per-iteration exchanges of |E| rows.
+  /** The power iteration, in one of two layouts that differ only in where
+    * the edges sit and how the |V|-row vector meets them:
+    *
+    *  - '''broadcast''' (small |V|): the vector broadcasts and the edge
+    *    relation never moves after setup — zero per-iteration exchanges of
+    *    |E| rows.
+    *  - '''partitioned''' (the vector outgrows broadcast): the edges pay
+    *    ONE extra exchange at setup (repartition by src, persisted) and then
+    *    never move; per iteration only the |V|-row vector shuffles to the
+    *    edges' partitioning, the contribution aggregation partial-aggregates
+    *    map-side before exchanging |V|-sized partials, and every exchange is
+    *    O(|V|), none O(|E|). The shuffle_hash hint keeps the planner from
+    *    sorting the persisted edges per iteration (SMJ) or re-broadcasting a
+    *    vector the crossover said doesn't fit.
+    *
     * The rank vector is carried IMPLICITLY as the previous iteration's
     * contribution table: rank_k(src) = (1-d)/N + d·coalesce(c_k(src), 0),
     * computed inline on the contribution side of the next scoring join —
     * algebraically (and bitwise: same doubles, same op order, left join
     * emits e's rows in e's order exactly like the former inner join on the
     * all-srcs ranks frame) the former explicit ranks frame, minus the
-    * per-iteration nodes-join and its broadcast build: ONE broadcast per
+    * per-iteration nodes-join and its build: ONE vector exchange per
     * iteration instead of two, iteration 1 inlines rank₀ = 1/N as a
-    * literal (no broadcast at all), and `nodes` is joined exactly once at
+    * literal (no exchange at all), and `nodes` is joined exactly once at
     * the end to emit zero-in-degree nodes. */
-  private def broadcastIterate(e: DataFrame, nodes: DataFrame, n: Long,
-                               iterations: Int): DataFrame = {
+  private def iterate(e: DataFrame, nodes: DataFrame, n: Long, iterations: Int,
+                      broadcastRanks: Boolean): DataFrame = {
     if (iterations < 1)
       return finishRank(nodes.withColumn("rank", lit(1.0 / n)), n)
-    var contrib = e.groupBy(col("dst"))
+    val (edges, vector) =
+      if (broadcastRanks) (e, broadcast(_: DataFrame))
+      else (e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK),
+        (v: DataFrame) => v.hint("shuffle_hash"))
+    var contrib = edges.groupBy(col("dst"))
       .agg(sum(col("frac") * lit(1.0 / n)).as("c"))
     for (_ <- 2 to iterations) {
-      contrib = e.join(broadcast(contrib.select(col("dst").as("__cs"), col("c"))),
+      contrib = edges.join(vector(contrib.select(col("dst").as("__cs"), col("c"))),
           col("src") === col("__cs"), "left")
         .groupBy(col("dst"))
         .agg(sum(col("frac") * rankOf(col("c"), n)).as("c"))
     }
-    val ranks = nodes.join(broadcast(contrib), col("node") === col("dst"), "left")
-      .select(col("node"), rankOf(col("c"), n).as("rank"))
-    finishRank(ranks, n)
-  }
-
-  /** Large-|V| iteration: when the rank vector outgrows broadcast, both
-    * iteration joins become shuffle-hash joins against a src-partitioned
-    * copy of the edges. The |E|-row relation pays ONE extra exchange at
-    * setup (repartition by src, persisted) and then never moves: per
-    * iteration only the |V|-row rank vector shuffles to the edges'
-    * partitioning, the contribution aggregation partial-aggregates
-    * map-side before exchanging |V|-sized partials, and the rank update is
-    * a node-keyed equi-join — every exchange is O(|V|), none O(|E|). The
-    * shuffle_hash hint keeps the planner from sorting the persisted edges
-    * per iteration (SMJ) or re-broadcasting a vector the crossover said
-    * doesn't fit. */
-  private def partitionedIterate(e: DataFrame, nodes: DataFrame, n: Long,
-                                 iterations: Int): DataFrame = {
-    if (iterations < 1)
-      return finishRank(nodes.withColumn("rank", lit(1.0 / n)), n)
-    val eSrc = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    // same implicit-rank carry as [[broadcastIterate]] (see there for the
-    // bitwise-identity argument): per iteration only the |V|-row
-    // contribution vector shuffles to the edges' src partitioning — the
-    // former per-iteration nodes-join (a second |V| exchange + join) is
-    // folded into the rank expression, and `nodes` joins once at the end.
-    var contrib = eSrc.groupBy(col("dst"))
-      .agg(sum(col("frac") * lit(1.0 / n)).as("c"))
-    for (_ <- 2 to iterations) {
-      contrib = eSrc
-        .join(contrib.select(col("dst").as("__cs"), col("c")).hint("shuffle_hash"),
-          col("src") === col("__cs"), "left")
-        .groupBy(col("dst"))
-        .agg(sum(col("frac") * rankOf(col("c"), n)).as("c"))
-    }
-    val ranks = nodes.join(contrib.hint("shuffle_hash"), col("node") === col("dst"), "left")
+    val ranks = nodes.join(vector(contrib), col("node") === col("dst"), "left")
       .select(col("node"), rankOf(col("c"), n).as("rank"))
     finishRank(ranks, n)
   }
@@ -551,11 +531,11 @@ object GraphOps {
     * the [[pageRank]] crossover. */
   private[operators] def pageRankBroadcast(edges: DataFrame, iterations: Int): DataFrame = {
     val (e, nodes, n) = prepRank(edges)
-    broadcastIterate(e, nodes, n, iterations)
+    iterate(e, nodes, n, iterations, broadcastRanks = true)
   }
 
   private[operators] def pageRankPartitioned(edges: DataFrame, iterations: Int): DataFrame = {
     val (e, nodes, n) = prepRank(edges)
-    partitionedIterate(e, nodes, n, iterations)
+    iterate(e, nodes, n, iterations, broadcastRanks = false)
   }
 }

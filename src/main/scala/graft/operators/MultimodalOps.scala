@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.reflect.runtime.universe.TypeTag
 import scala.util.control.NonFatal
 
 /** Multimodal-column operators: image/audio/video as opaque `binary` columns
@@ -33,6 +34,21 @@ object MultimodalOps {
     * exact for gray inputs (77+150+29 = 256) and deterministic everywhere
     * (no floating point, no platform color management). */
   final case class DecodedImage(width: Int, height: Int, gray: Array[Int])
+
+  /** The typed decode pass every binary-column stage runs: (id, payload)
+    * rows through `decode` one partition at a time, with ImageIO's disk
+    * cache off for the partition's codec contexts; the output columns are
+    * `idCol`, then `out`. Only the tuples `decode` emits leave the pass. */
+  private def binaryPass[T <: Product : TypeTag](df: DataFrame, binCol: String, idCol: String,
+                                                 out: String*)(
+      decode: ((Long, Array[Byte])) => IterableOnce[T]): DataFrame =
+    df.select(col(idCol).cast("long"), col(binCol))
+      .as(Encoders.product[(Long, Array[Byte])])
+      .mapPartitions { rows =>
+        javax.imageio.ImageIO.setUseCache(false)
+        rows.flatMap(decode)
+      }(Encoders.product[T])
+      .toDF(idCol +: out: _*)
 
   /** REAL image decode via the JDK's built-in `javax.imageio` codecs
     * (PNG/JPEG/GIF/BMP — no external library). Returns None for bytes no
@@ -159,6 +175,15 @@ object MultimodalOps {
     * the fixture/ingest helper for the decode path (PNG is lossless, so
     * decode∘encode recovers pixels exactly). */
   def encodeGrayPng(width: Int, height: Int, pixel: (Int, Int) => Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(grayImage(width, height, pixel), "png", out)
+    out.toByteArray
+  }
+
+  /** An 8-bit grayscale image whose sample at (x, y) is `pixel(x, y)`'s
+    * low byte. */
+  private def grayImage(width: Int, height: Int,
+                        pixel: (Int, Int) => Int): java.awt.image.BufferedImage = {
     val img = new java.awt.image.BufferedImage(
       width, height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
     val raster = img.getRaster
@@ -168,9 +193,7 @@ object MultimodalOps {
       while (x < width) { raster.setSample(x, y, 0, pixel(x, y) & 0xFF); x += 1 }
       y += 1
     }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
+    img
   }
 
   // ---------------------------------------------------------------- audio
@@ -340,13 +363,11 @@ object MultimodalOps {
     * layout-independent with no floating-point rounding contract. NULL
     * columns for undecodable payloads. Per-partition decode; downstream
     * sees (id, 5 scalars), never sample arrays. */
-  def audioFeatures(df: DataFrame, binCol: String, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        decodeWav(bytes) match {
+  def audioFeatures(df: DataFrame, binCol: String, idCol: String): DataFrame =
+    binaryPass(df, binCol, idCol,
+        "decoded", "sample_rate", "channels", "n_frames", "sum_sq", "peak_abs") {
+      case (id, bytes) =>
+        Some(decodeWav(bytes) match {
           case Some(a) =>
             var sumSq = 0L
             var peak = 0L
@@ -361,10 +382,8 @@ object MultimodalOps {
               Some(a.samples.length.toLong / a.channels), Some(sumSq), Some(peak))
           case None => (id, false, None: Option[Int], None: Option[Int],
             None: Option[Long], None: Option[Long], None: Option[Long])
-        }
-      })
-      .toDF(idCol, "decoded", "sample_rate", "channels", "n_frames", "sum_sq", "peak_abs")
-  }
+        })
+    }
 
   /** Windowed audio energy: decode, then one row per `windowFrames`-frame
     * window with its EXACT integer sum of squared samples — the audio
@@ -375,27 +394,22 @@ object MultimodalOps {
   def audioWindowEnergy(df: DataFrame, binCol: String, idCol: String,
                         windowFrames: Int): DataFrame = {
     require(windowFrames > 0, s"windowFrames must be positive, got $windowFrames")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        decodeWav(bytes).iterator.flatMap { a =>
-          val frames = a.samples.length / a.channels
-          Iterator.range(0, frames, windowFrames).map { w0 =>
-            val w1 = math.min(w0 + windowFrames, frames)
-            var sumSq = 0L
-            var i = w0 * a.channels
-            while (i < w1 * a.channels) {
-              val s = a.samples(i).toLong
-              sumSq += s * s
-              i += 1
-            }
-            (id, (w0 / windowFrames).toLong, (w1 - w0).toLong, sumSq)
+    binaryPass(df, binCol, idCol, "win", "n_frames", "sum_sq") { case (id, bytes) =>
+      decodeWav(bytes).iterator.flatMap { a =>
+        val frames = a.samples.length / a.channels
+        Iterator.range(0, frames, windowFrames).map { w0 =>
+          val w1 = math.min(w0 + windowFrames, frames)
+          var sumSq = 0L
+          var i = w0 * a.channels
+          while (i < w1 * a.channels) {
+            val s = a.samples(i).toLong
+            sumSq += s * s
+            i += 1
           }
+          (id, (w0 / windowFrames).toLong, (w1 - w0).toLong, sumSq)
         }
       }
-      .toDF(idCol, "win", "n_frames", "sum_sq")
+    }
   }
 
   /** 64-bit windowed-energy-envelope signature over decoded PCM — the audio
@@ -494,17 +508,11 @@ object MultimodalOps {
     * payloads yield no rows. */
   def audioShingleFingerprints(df: DataFrame, binCol: String, idCol: String,
                                windowSamples: Int = 4,
-                               shingleBits: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        decodeWav(bytes).iterator.flatMap(a =>
-          audioShingles(a, windowSamples, shingleBits).iterator.map(v => (id, v)))
-      })
-      .toDF(idCol, "shingle")
-  }
+                               shingleBits: Int = 16): DataFrame =
+    binaryPass(df, binCol, idCol, "shingle") { case (id, bytes) =>
+      decodeWav(bytes).iterator.flatMap(a =>
+        audioShingles(a, windowSamples, shingleBits).iterator.map(v => (id, v)))
+    }
 
   /** Near-dup pairs by shingle-set containment over (id, shingle) rows
     * ([[audioShingleFingerprints]] output): candidates are the shingle-value
@@ -539,19 +547,13 @@ object MultimodalOps {
     * downstream near-dup bucketing shuffles 64-bit fingerprints, never
     * samples (the audio mirror of [[imageFeatures]]). NULL fingerprint for
     * undecodable payloads. */
-  def audioFingerprints(df: DataFrame, binCol: String, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        decodeWav(bytes) match {
-          case Some(a) if a.samples.nonEmpty => (id, true, Some(audioEnvelopeHash(a)))
-          case _ => (id, false, None: Option[Long])
-        }
+  def audioFingerprints(df: DataFrame, binCol: String, idCol: String): DataFrame =
+    binaryPass(df, binCol, idCol, "decoded", "afp") { case (id, bytes) =>
+      Some(decodeWav(bytes) match {
+        case Some(a) if a.samples.nonEmpty => (id, true, Some(audioEnvelopeHash(a)))
+        case _ => (id, false, None: Option[Long])
       })
-      .toDF(idCol, "decoded", "afp")
-  }
+    }
 
   /** Deterministic audio decimation by an integer factor: each non-
     * overlapping `factor`-frame block collapses to its per-channel integer
@@ -591,19 +593,14 @@ object MultimodalOps {
   def resampleAudio(df: DataFrame, binCol: String, idCol: String,
                     factor: Int): DataFrame = {
     require(factor > 0, s"factor must be positive, got $factor")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        decodeWav(bytes) match {
-          case Some(a) =>
-            val d = decimatePcm(a, factor)
-            (id, encodePcmWav(d.sampleRate, d.channels, d.samples))
-          case None => (id, bytes)
-        }
+    binaryPass(df, binCol, idCol, binCol) { case (id, bytes) =>
+      Some(decodeWav(bytes) match {
+        case Some(a) =>
+          val d = decimatePcm(a, factor)
+          (id, encodePcmWav(d.sampleRate, d.channels, d.samples))
+        case None => (id, bytes)
       })
-      .toDF(idCol, binCol)
+    }
   }
 
   // --------------------------------------------------------- multi-frame
@@ -621,15 +618,8 @@ object MultimodalOps {
       writer.prepareWriteSequence(null)
       var f = 0
       while (f < frames) {
-        val img = new java.awt.image.BufferedImage(
-          width, height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        val raster = img.getRaster
-        var y = 0
-        while (y < height) {
-          var x = 0
-          while (x < width) { raster.setSample(x, y, 0, pixel(x, y, f) & 0xFF); x += 1 }
-          y += 1
-        }
+        val frame = f
+        val img = grayImage(width, height, (x, y) => pixel(x, y, frame))
         writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
         f += 1
       }
@@ -642,47 +632,47 @@ object MultimodalOps {
     * dimensions and exact gray-sum checksum — the routing metadata a video/
     * animation ingest records before per-frame feature extraction. NULLs
     * for undecodable payloads; one per-partition decode pass. */
-  def frameSummary(df: DataFrame, binCol: String, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, bytes) =>
-          frameCountAndFirst(bytes) match {
-            case Some((n, d)) =>
-              (id, Some(n), Some(d.width), Some(d.height),
-                Some(d.gray.foldLeft(0L)(_ + _)))
-            case None => (id, None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Long])
-          }
-        }
-      }
-      .toDF(idCol, "n_frames", "width", "height", "f0_gray_sum")
-  }
+  def frameSummary(df: DataFrame, binCol: String, idCol: String): DataFrame =
+    binaryPass(df, binCol, idCol, "n_frames", "width", "height", "f0_gray_sum") {
+      case (id, bytes) =>
+        Some(frameCountAndFirst(bytes) match {
+          case Some((n, d)) =>
+            (id, Some(n), Some(d.width), Some(d.height), Some(d.gray.foldLeft(0L)(_ + _)))
+          case None => (id, None: Option[Int], None: Option[Int],
+            None: Option[Int], None: Option[Long])
+        })
+    }
 
   /** One ImageReader serves both the frame-directory walk and the frame-0
     * decode — parsing the container twice (separate count + decode calls)
     * roughly doubles decode CPU on the ingest path for multi-frame
     * payloads. */
   private def frameCountAndFirst(bytes: Array[Byte]): Option[(Int, DecodedImage)] =
+    withReader(bytes, None: Option[(Int, DecodedImage)]) { (r, n) =>
+      grayOf(r.read(0)).map(d => (n, d))
+    }
+
+  /** `read` over the one ImageReader that accepts `bytes`, with the frame
+    * count from its directory walk; the reader and stream are disposed
+    * after `read` returns, so `read` materializes what it keeps. `none`
+    * for bytes no reader accepts or a decode that throws. */
+  private def withReader[T](bytes: Array[Byte], none: T)(
+      read: (javax.imageio.ImageReader, Int) => T): T =
     try {
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(bytes))
       try {
         val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
+        if (!readers.hasNext) none
         else {
           val r = readers.next()
           try {
             r.setInput(iis)
-            val n = r.getNumImages(true)
-            grayOf(r.read(0)).map(d => (n, d))
+            read(r, r.getNumImages(true))
           } finally r.dispose()
         }
       } finally iis.close()
-    } catch { case NonFatal(_) => None }
+    } catch { case NonFatal(_) => none }
 
   /** Per-frame perceptual hashes for multi-frame containers: ONE ImageReader
     * walk per payload (the [[frameCountAndFirst]] single-reader discipline —
@@ -696,39 +686,19 @@ object MultimodalOps {
     * Scale shape: a narrow per-partition flatMap; fan-out is the frame count
     * per payload, and only 8-byte hashes leave the stage — the per-frame
     * mirror of [[imageFeatures]], feeding [[animationNearDup]]. */
-  def frameHashes(df: DataFrame, binCol: String, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { case (id, bytes) => readFrameHashes(id, bytes) }
-      }
-      .toDF(idCol, "frame_idx", "width", "height", "dhash")
-  }
+  def frameHashes(df: DataFrame, binCol: String, idCol: String): DataFrame =
+    binaryPass(df, binCol, idCol, "frame_idx", "width", "height", "dhash") {
+      case (id, bytes) => readFrameHashes(id, bytes)
+    }
 
   /** Single-reader frame walk: directory count + per-frame decode + dHash,
     * materialized BEFORE the reader is disposed. */
   private def readFrameHashes(id: Long, bytes: Array[Byte]): Seq[(Long, Int, Int, Int, Long)] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) Seq.empty
-        else {
-          val r = readers.next()
-          try {
-            r.setInput(iis)
-            val n = r.getNumImages(true)
-            (0 until n).flatMap { f =>
-              grayOf(r.read(f)).map(d => (id, f, d.width, d.height, dHash64(d)))
-            }
-          } finally r.dispose()
-        }
-      } finally iis.close()
-    } catch { case NonFatal(_) => Seq.empty }
+    withReader(bytes, Seq.empty[(Long, Int, Int, Int, Long)]) { (r, n) =>
+      (0 until n).flatMap { f =>
+        grayOf(r.read(f)).map(d => (id, f, d.width, d.height, dHash64(d)))
+      }
+    }
 
   /** Animation near-dup over per-frame hashes ([[frameHashes]] output):
     * two payloads are near-duplicates when they have the SAME frame count
@@ -797,24 +767,16 @@ object MultimodalOps {
     * payloads. The narrow per-partition decode pass — output is (id, flag,
     * 2 ints, 2 longs), so everything downstream (near-dup bucketing,
     * grouping) shuffles fingerprints, never pixels. */
-  def imageFeatures(df: DataFrame, binCol: String, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.map { case (id, bytes) =>
-          decodeImage(bytes) match {
-            case Some(d) =>
-              (id, true, Some(d.width), Some(d.height), Some(aHash64(d)), Some(dHash64(d)))
-            case None => (id, false, None: Option[Int], None: Option[Int],
-              None: Option[Long], None: Option[Long])
-          }
-        }
-      }
-      .toDF(idCol, "decoded", "width", "height", "ahash", "dhash")
-  }
+  def imageFeatures(df: DataFrame, binCol: String, idCol: String): DataFrame =
+    binaryPass(df, binCol, idCol, "decoded", "width", "height", "ahash", "dhash") {
+      case (id, bytes) =>
+        Some(decodeImage(bytes) match {
+          case Some(d) =>
+            (id, true, Some(d.width), Some(d.height), Some(aHash64(d)), Some(dHash64(d)))
+          case None => (id, false, None: Option[Int], None: Option[Int],
+            None: Option[Long], None: Option[Long])
+        })
+    }
 
   /** Near-duplicate pairs over a 64-bit perceptual hash column by Hamming
     * distance — pigeonhole banding (the chunk blocking of

@@ -56,7 +56,7 @@ object PipelineOps {
     * per batch instead of maxLen·size under random batching.
     *
     * ADAPTIVE plan (the [[QuantileOps.exactQuantiles]] contract — two
-    * formulations, IDENTICAL output, chosen from the plan's size estimate):
+    * formulations, IDENTICAL output, chosen by [[ScaleOps.fitsOneWave]]):
     * the window key has only ~log2(maxLen) values, so the direct
     * bucket-partitioned ranking window caps parallelism at the bucket
     * count and buffers a whole bucket per task — fine while the input is
@@ -70,16 +70,12 @@ object PipelineOps {
     * merely waste-equivalent like a hash-shard would be. */
   def lengthBuckets(docs: DataFrame, batchSize: Int = 8): DataFrame = {
     require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    val spark = docs.sparkSession
-    val threads = spark.sparkContext.defaultParallelism
-    val maxPart = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
     // the sharded form needs integral ids for its block arithmetic; a
     // non-integral id must stay on the window form AT ANY SIZE rather than
     // start throwing once the corpus grows past the crossover (the window
     // form is correct for any orderable id, just bucket-bound in
     // parallelism — a documented trade, not a failure)
-    if (!hasIntegralId(docs) ||
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxPart) * threads)
+    if (!hasIntegralId(docs) || ScaleOps.fitsOneWave(docs))
       windowLengthBuckets(docs, batchSize)
     else
       shardedLengthBuckets(docs, batchSize, blockSize = 4096L)
@@ -731,22 +727,12 @@ object PipelineOps {
     // join's re-tokenize reuses the same fanned-out exchange subtree
     val base = ScaleOps.fanOut(docs.select(col(DocId).as("id"), col(Text).as("__t")))
     val toked = base.select(col("id"), split(col("__t"), " ").as("toks"))
-    // Positional grams partitioned by gram hash ONCE, shared by the df
-    // aggregation AND the join probe (same exchange subtree → ReuseExchange
-    // computes the tokenize+slice+hash derivation a single time). The old
-    // shape derived the gram stream twice — once partial-aggregated into
-    // the frequency exchange, once as the unshuffled join side — paying the
-    // dominant per-position hash work double at every scale. shuffle_hash
-    // on the frequent-gram side: it is aggregation output already
-    // colocated with the probe partitions, so the join needs neither an
-    // exchange nor a sort of the gram stream (and at minDf = 2 it is never
-    // a broadcast — the frequent set scales with the duplicated text).
-    val grams = toked
-      .where(size(col("toks")) >= n)
-      .select(col("id"), col("toks"), explode(sequence(lit(1), size(col("toks")) - (n - 1))).as("i"))
-      .select(col("id"), col("i"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("i"), lit(n)))).as("g"))
-      .repartition(col("g"))
+    // shuffle_hash on the frequent-gram side: it is aggregation output
+    // already colocated with the gram exchange's partitions, so the join
+    // needs neither an exchange nor a sort of the gram stream (and at
+    // minDf = 2 it is never a broadcast — the frequent set scales with the
+    // duplicated text).
+    val grams = ScaleOps.gramExchange(toked, n)
     val freq = grams
       .groupBy("g").agg(count_distinct(col("id")).as("df"))
       .where(col("df") >= minDf)
@@ -798,15 +784,7 @@ object PipelineOps {
     // fanOut before tokenizing — see [[stripBoilerplate]]
     val base = ScaleOps.fanOut(docs.select(col(DocId).as("id"), col(Text).as("__t")))
     val toked = base.select(col("id"), split(col("__t"), " ").as("toks"))
-    // gram stream partitioned by hash once and shared by the first-
-    // occurrence aggregation and the join probe — see [[stripBoilerplate]]
-    // (one derivation + one exchange instead of two of each)
-    val grams = toked
-      .where(size(col("toks")) >= n)
-      .select(col("id"), col("toks"), explode(sequence(lit(1), size(col("toks")) - (n - 1))).as("i"))
-      .select(col("id"), col("i"),
-        xxhash64(concat_ws(" ", slice(col("toks"), col("i"), lit(n)))).as("g"))
-      .repartition(col("g"))
+    val grams = ScaleOps.gramExchange(toked, n)
     val first = grams.groupBy("g")
       .agg(min(struct(col("id"), col("i"))).as("f"))
       .select(col("g"), col("f.id").as("fid"), col("f.i").as("fi"))

@@ -20,9 +20,9 @@ object QuantileOps {
     * the round(·, scale) quantile of `valCol`.
     *
     * ADAPTIVE: two formulations with identical results (pinned in
-    * ScalaTest), chosen from the plan's size estimate the same way
-    * [[ScaleOps.fanOut]] decides — the crossover is "would the whole input
-    * fit the executors comfortably" (cores × files.maxPartitionBytes):
+    * ScalaTest), chosen by [[ScaleOps.fitsOneWave]] from the plan's size
+    * estimate — "would the whole input fit the executors comfortably"
+    * (cores × files.maxPartitionBytes):
     *
     *  - small inputs → [[windowQuantiles]]: one shuffle + per-group window.
     *    Parallelism is capped at the group count, but below the threshold
@@ -36,10 +36,7 @@ object QuantileOps {
   def exactQuantiles(df: DataFrame, groupCol: String, valCol: String,
                      ps: Seq[(String, Double)], scale: Int = 4): DataFrame = {
     require(ps.nonEmpty, "need at least one quantile")
-    val spark = df.sparkSession
-    val threads = spark.sparkContext.defaultParallelism
-    val maxPart = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxPart) * threads)
+    if (ScaleOps.fitsOneWave(df))
       windowQuantiles(df, groupCol, valCol, ps, scale)
     else
       selectionQuantiles(df, groupCol, valCol, ps, scale)

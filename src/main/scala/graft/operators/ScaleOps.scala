@@ -3,9 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale-technique helpers: source fan-out, Bloom-prefiltered semi
-  * joins, key salting for skewed joins and Z-order keys. These are the
-  * knobs the engine reaches for at 100 TB when AQE alone isn't enough.
+/** Scale-technique helpers: source fan-out, the two size crossovers
+  * (one wave of scan tasks, the broadcast budget), the content-keyed
+  * n-gram exchange, Bloom-prefiltered semi joins, key salting for skewed
+  * joins and Z-order keys. These are the knobs the engine reaches for at
+  * 100 TB when AQE alone isn't enough.
   */
 object ScaleOps {
 
@@ -27,12 +29,48 @@ object ScaleOps {
     // DataFrame is a batch-analysis error, and micro-batch sources manage
     // their own partitioning
     if (df.isStreaming) return df
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val maxPart = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxPart) * target)
-      df.repartition(target)
+    if (fitsOneWave(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
   }
+
+  /** The one-wave crossover: true when the plan's estimated size is below
+    * `cores × files.maxPartitionBytes` — the whole input fits one wave of
+    * scan tasks, so the executors hold it comfortably. [[fanOut]],
+    * [[QuantileOps.exactQuantiles]] and [[PipelineOps.lengthBuckets]] pick
+    * their small-input form with it. */
+  def fitsOneWave(df: DataFrame): Boolean = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val maxPart = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxPart) * cores
+  }
+
+  /** The broadcast-budget crossover: true when an estimated `bytes` fits
+    * the session's `spark.sql.autoBroadcastJoinThreshold`. A disabled
+    * budget (≤ 0) fits nothing, and then `bytes` is never evaluated, so an
+    * estimate that costs a job runs only when the answer depends on it.
+    * [[GraphOps.pageRank]] and [[SimilarityOps.marginMine]] pick their
+    * broadcast form with it. */
+  def fitsBroadcast(bytes: => Long): Boolean = {
+    val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    thresh > 0 && bytes <= thresh
+  }
+
+  /** The content-keyed n-gram exchange: one (id, i, g) row per positional
+    * word n-gram of each (id, toks) row with at least `n` tokens — `i` the
+    * gram's 1-based start, `g` the xxhash64 of its space-joined text —
+    * repartitioned by `g` ONCE. A gram-keyed aggregation and a gram-keyed
+    * join probe over the result share that one exchange subtree
+    * (ReuseExchange), so the tokenize + slice + hash derivation runs a
+    * single time. Every gram-frequency operator (boilerplate stripping,
+    * keep-first span dedup, duplicated-span stats) exchanges through here,
+    * so skew handling for a hot gram has this one site. */
+  def gramExchange(toked: DataFrame, n: Int): DataFrame =
+    toked
+      .where(size(col("toks")) >= n)
+      .select(col("id"), col("toks"), explode(sequence(lit(1), size(col("toks")) - (n - 1))).as("i"))
+      .select(col("id"), col("i"),
+        xxhash64(concat_ws(" ", slice(col("toks"), col("i"), lit(n)))).as("g"))
+      .repartition(col("g"))
 
   /** Bits in bloomSemiJoin's filter: an 8 KB broadcast blob. */
   private val BloomBits = 1 << 16

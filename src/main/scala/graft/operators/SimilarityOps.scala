@@ -52,6 +52,23 @@ object SimilarityOps {
       emb.select(col(VecId).as("id"), toDouble(col(Embedding)).as("v"))
         .withColumn("nrm", norm(col("v"))))
 
+  /** The query side of a search over [[prepared]] vectors: (query_id, qv,
+    * qnrm), then `extra`. */
+  private def asQueries(p: DataFrame, extra: Column*): DataFrame =
+    p.select(Seq(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")) ++ extra: _*)
+
+  /** The top-k tail of every search: rank each query's scored candidates by
+    * (sim desc, id), keep k, and emit (query_id, neighbor_id, `extra`…,
+    * rank, sim rounded to 4 dp). */
+  private def nearest(scored: DataFrame, k: Int, extra: Column*): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
+    scored
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k)
+      .select(Seq(col("query_id"), col("id").as("neighbor_id")) ++ extra ++
+        Seq(col("rank"), round(col("sim"), 4).as("sim")): _*)
+  }
+
   /** How many sample vectors a quantizer fit trains on, per centroid. */
   private val FitSamplePerCentroid = 256
 
@@ -165,16 +182,10 @@ object SimilarityOps {
     * The query side is broadcast — corpus never shuffles. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = prepared(corpus)
-    val q = prepared(queries)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+    val q = asQueries(prepared(queries))
     val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    nearest(scored, k)
   }
 
   /** [[bruteForceTopK]] re-expressed as a BOUNDED-STATE aggregation: the
@@ -191,8 +202,7 @@ object SimilarityOps {
     val spark = corpus.sparkSession
     import spark.implicits._
     val c = prepared(corpus)
-    val q = prepared(queries)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+    val q = asQueries(prepared(queries))
     c.join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
       .select(col("query_id"), col("sim"), col("id"))
@@ -227,12 +237,7 @@ object SimilarityOps {
     val scored = c.join(broadcast(qs),
         col("id") =!= col("query_id") && col("lbl") =!= col("qlbl"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        col("lbl").as("neg_label"), col("rank"), round(col("sim"), 4).as("sim"))
+    nearest(scored, k, col("lbl").as("neg_label"))
   }
 
   /** Semantic benchmark decontamination: flag every corpus vector whose
@@ -284,8 +289,8 @@ object SimilarityOps {
     * never flip a rank or a 6-dp margin), ties rank by ascending id, and
     * the margin is one exact-integer ratio rounded at 6 dp.
     *
-    * Scale shape — TWO strategies behind a size crossover (the same
-    * broadcast↔partitioned discipline as [[GraphOps.pageRank]]):
+    * Scale shape — TWO strategies behind [[ScaleOps.fitsBroadcast]], the
+    * broadcast-budget predicate [[GraphOps.pageRank]] also uses:
     *
     *  - '''broadcast''' (seed side fits the session broadcast budget): X
     *    broadcasts onto ONE fully-codegen'd scoring scan of the Y corpus;
@@ -306,9 +311,9 @@ object SimilarityOps {
     *    it exactly the broadcast output (pinned in ScalaTest); production
     *    high-sim regimes use fewer wider bands and inherit LSH recall.
     *
-    * The crossover estimates the seed table at dim×8+48 B/row against
-    * `spark.sql.autoBroadcastJoinThreshold` via one scalar aggregate
-    * (count + dim — model metadata, the [[GraphOps.pageRank]] precedent).
+    * The estimate puts the seed table at dim×8+48 B/row via one scalar
+    * aggregate (count + dim — model metadata), run only when a broadcast
+    * budget is set.
     * Survivors materialize eagerly (localCheckpoint) so the scoring scan
     * runs exactly once even though two aggregations consume them. */
   def marginMine(xSide: DataFrame, ySide: DataFrame, k: Int = 4,
@@ -327,14 +332,12 @@ object SimilarityOps {
   /** True when the seed side's estimated in-memory footprint exceeds the
     * session broadcast budget. One scalar aggregate (row count + vector
     * dim) — bounded model metadata, never data rows. */
-  private[graft] def seedPastBroadcastBudget(seed: DataFrame): Boolean = {
-    val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    if (thresh <= 0) return true
-    val m = seed.agg(count(lit(1)).as("n"), max(size(col(Embedding))).as("d")).head()
-    val n = m.getLong(0)
-    val dim = if (m.isNullAt(1)) 0L else m.getInt(1).toLong
-    n * (dim * 8L + 48L) > thresh
-  }
+  private[graft] def seedPastBroadcastBudget(seed: DataFrame): Boolean =
+    !ScaleOps.fitsBroadcast {
+      val m = seed.agg(count(lit(1)).as("n"), max(size(col(Embedding))).as("d")).head()
+      val dim = if (m.isNullAt(1)) 0L else m.getInt(1).toLong
+      m.getLong(0) * (dim * 8L + 48L)
+    }
 
   /** Strategy-pinned entry (tests pin lsh ≡ broadcast through this). */
   private[graft] def marginMineStrategy(xSide: DataFrame, ySide: DataFrame,
@@ -566,15 +569,9 @@ object SimilarityOps {
       .select("query_id", "id").distinct()
     val scored = cands
       .join(c, Seq("id"))
-      .join(broadcast(q.select(col("id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))), Seq("query_id"))
+      .join(broadcast(asQueries(q)), Seq("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    nearest(scored, k)
   }
 
   /** IVF (inverted-file) approximate top-k: a coarse quantizer of
@@ -592,18 +589,12 @@ object SimilarityOps {
     val c = prepared(corpus)
     val centroids = fitCoarseQuantizer(c, nCentroids, IvfKmeansIters)
     val assigned = c.withColumn("cell", element_at(cellsFor(centroids, col("v"), 1), 1))
-    val q = prepared(queries)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
-        explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
+    val q = asQueries(prepared(queries),
+      explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
     val scored = assigned.join(broadcast(q), Seq("cell"))
       .where(col("id") =!= col("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    nearest(scored, k)
   }
 
   /** Product-quantization (PQ) codes — the storage layer of IVF-PQ, the
@@ -694,12 +685,7 @@ object SimilarityOps {
     val scored = withCodes
       .join(broadcast(q), col("id") =!= col("query_id"))
       .withColumn("sim", adcSim(books, col("cs"), col("qv"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    nearest(scored, k)
   }
 
   /** Two-stage retrieval: ADC shortlist over PQ codes → exact cosine
@@ -721,17 +707,11 @@ object SimilarityOps {
     val cand = adcTopK(codes, queries, books, shortlist)
       .select(col("query_id"), col("neighbor_id").as("id"))
     val c = prepared(corpus)
-    val q = prepared(queries)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+    val q = asQueries(prepared(queries))
     val exact = c.join(broadcast(cand), Seq("id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("sim", cosinePrenormed(col("qv"), col("v"), col("qnrm"), col("nrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    exact
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    nearest(exact, k)
   }
 
   /** Recall@k of an approximate top-k result against the exact one — the
@@ -845,20 +825,14 @@ object SimilarityOps {
     val nCentroids = centroids.length
     require(nProbe >= 1 && nProbe <= nCentroids,
       s"nProbe must be in [1, nCentroids=$nCentroids]; got $nProbe")
-    val q = prepared(queries)
-      .select(col("id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"),
-        explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
+    val q = asQueries(prepared(queries),
+      explode(cellsFor(centroids, col("v"), nProbe)).as("cell"))
     val coded = ivfPqCode(corpus, centroids, books)
       .select(col(VecId).as("id"), col("cell"), split(col("codes"), ",").as("cs"))
     val scored = coded.join(broadcast(q), Seq("cell"))
       .where(col("id") =!= col("query_id"))
       .withColumn("sim", adcSim(books, col("cs"), col("qv"), col("qnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("id").as("neighbor_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    nearest(scored, k)
   }
 
   /** The IVF-PQ WRITE path: code vectors against ALREADY-FITTED quantizers

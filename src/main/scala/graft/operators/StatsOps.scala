@@ -134,6 +134,23 @@ object StatsOps {
         col("n").cast("long").as("n"))
   }
 
+  /** The per-distinct-value `counts` (a `v` column) with the 1-row
+    * `bounds` (`vmin`, `vmax`, totals) broadcast onto every row and `blk`,
+    * the value's block among `nBlocks` equal-width blocks over
+    * [vmin, vmax] — a function of the value alone, never of layout. A
+    * width that rounds to 0.0 (all values equal, or a range so narrow that
+    * range / nBlocks underflows) puts every value in block 0, which the
+    * block-count invariance allows, instead of dividing by zero. */
+  private def rangeBlocked(counts: DataFrame, bounds: DataFrame, nBlocks: Int): DataFrame = {
+    require(nBlocks >= 1 && nBlocks <= (1 << 20),
+      s"nBlocks must be in [1, 2^20] (the offsets table must stay model-sized), got $nBlocks")
+    val width = (col("vmax") - col("vmin")) / nBlocks
+    counts.crossJoin(broadcast(bounds))
+      .withColumn("blk",
+        when(width <= 0.0, lit(0L))
+          .otherwise(least(floor((col("v") - col("vmin")) / width), lit(nBlocks - 1L))))
+  }
+
   /** Two-sample Kolmogorov–Smirnov statistic D = max_x |F_a(x) − F_b(x)| —
     * the nonparametric distribution-drift test that needs no binning
     * choice (PSI's bin-free sibling): compare a metric's distribution
@@ -156,8 +173,6 @@ object StatsOps {
     * `nBlocks ≥ 1` yields the identical D. */
   def ksTest(df: DataFrame, valCol: Column, isA: Column,
              nBlocks: Int = NBlocks): DataFrame = {
-    require(nBlocks >= 1 && nBlocks <= (1 << 20),
-      s"nBlocks must be in [1, 2^20] (the offsets table must stay model-sized), got $nBlocks")
     val counts = df
       .where(valCol.isNotNull)
       .groupBy(valCol.as("v"))
@@ -165,17 +180,11 @@ object StatsOps {
         sum(when(isA, 1L).otherwise(0L)).as("ca"),
         sum(when(isA, 0L).otherwise(1L)).as("cb"))
     // sample totals AND value range in ONE pass over the distinct-value
-    // relation; the width guard (greatest vs a subnormal-safe floor) keeps
-    // the division meaningful when all values are equal
+    // relation
     val bounds = counts.agg(
       sum("ca").as("n_a"), sum("cb").as("n_b"),
       min("v").cast("double").as("vmin"), max("v").cast("double").as("vmax"))
-    val blocked = counts.crossJoin(broadcast(bounds))
-      .withColumn("blk",
-        when(col("vmax") <= col("vmin"), lit(0L))
-          .otherwise(least(
-            floor((col("v") - col("vmin")) / ((col("vmax") - col("vmin")) / nBlocks)),
-            lit(nBlocks - 1L))))
+    val blocked = rangeBlocked(counts, bounds, nBlocks)
     val partials = blocked.groupBy("blk")
       .agg(sum("ca").as("blk_a"), sum("cb").as("blk_b"))
     val wOff = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
@@ -215,8 +224,6 @@ object StatsOps {
     * oracle. */
   def aucMannWhitney(df: DataFrame, scoreCol: Column, isPos: Column,
                      nBlocks: Int = NBlocks): DataFrame = {
-    require(nBlocks >= 1 && nBlocks <= (1 << 20),
-      s"nBlocks must be in [1, 2^20] (the offsets table must stay model-sized), got $nBlocks")
     val counts = df
       .where(scoreCol.isNotNull)
       .groupBy(scoreCol.as("v"))
@@ -226,12 +233,7 @@ object StatsOps {
     val bounds = counts.agg(
       sum("np").as("n_pos"), sum("nn").as("n_neg"),
       min("v").cast("double").as("vmin"), max("v").cast("double").as("vmax"))
-    val blocked = counts.crossJoin(broadcast(bounds))
-      .withColumn("blk",
-        when(col("vmax") <= col("vmin"), lit(0L))
-          .otherwise(least(
-            floor((col("v") - col("vmin")) / ((col("vmax") - col("vmin")) / nBlocks)),
-            lit(nBlocks - 1L))))
+    val blocked = rangeBlocked(counts, bounds, nBlocks)
     val partials = blocked.groupBy("blk").agg(sum("nn").as("blk_n"))
     val wOff = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = partials
@@ -294,12 +296,7 @@ object StatsOps {
       sum("cx").as("n_x"), sum("cy").as("n_y"),
       min("v").cast("double").as("vmin"), max("v").cast("double").as("vmax"),
       sum(t * t * t - t).as("tt"))
-    val blocked = counts.crossJoin(broadcast(bounds))
-      .withColumn("blk",
-        when(col("vmax") <= col("vmin"), lit(0L))
-          .otherwise(least(
-            floor((col("v") - col("vmin")) / ((col("vmax") - col("vmin")) / NBlocks)),
-            lit(NBlocks - 1L))))
+    val blocked = rangeBlocked(counts, bounds, NBlocks)
     val partials = blocked.groupBy("blk").agg(sum("cy").as("blk_y"))
     val wOff = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
     val offsets = partials

@@ -106,11 +106,7 @@ final class AhoCorasick private (
     val n = text.numBytes()
     var i = 0
     while (i < n) {
-      val b = text.getByte(i) & 0xff
-      var s = state
-      var nx = step(s, b)
-      while (nx < 0 && s != 0) { s = fail(s); nx = step(s, b) }
-      state = if (nx >= 0) nx else 0
+      state = advance(state, text.getByte(i) & 0xff)
       val o = out(state)
       var j = 0
       while (j < o.length) {
@@ -197,15 +193,20 @@ final class AhoCorasick private (
     val n = text.numBytes()
     var i = 0
     while (i < n) {
-      val b = text.getByte(i) & 0xff
-      var s = state
-      var nx = step(s, b)
-      while (nx < 0 && s != 0) { s = fail(s); nx = step(s, b) }
-      state = if (nx >= 0) nx else 0
+      state = advance(state, text.getByte(i) & 0xff)
       if (out(state).length > 0) return true
       i += 1
     }
     false
+  }
+
+  /** The automaton's transition on byte `b` from `state`: follow failure
+    * links until some state has a `b` edge, or fall back to the root. */
+  private def advance(state: Int, b: Int): Int = {
+    var s = state
+    var nx = step(s, b)
+    while (nx < 0 && s != 0) { s = fail(s); nx = step(s, b) }
+    if (nx >= 0) nx else 0
   }
 
   private def step(s: Int, b: Int): Int =

@@ -28,6 +28,22 @@ object RelationalQueries {
     * one-session-per-event. */
   private val SessionGapNs = 36000000000000L
 
+  /** Events with `tsn` (ts truncated to µs) and a per-user `session_id`:
+    * a new session starts at a user's first event and after every gap
+    * over [[SessionGapNs]] (lag, then a running sum of the starts) —
+    * shared by q_sessionize and q_session_stats. */
+  private def sessionized(events: DataFrame): DataFrame = {
+    val byTime = Window.partitionBy(col("user_id")).orderBy(col("tsn"))
+    val cum = Window.partitionBy(col("user_id")).orderBy(col("tsn"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events
+      .withColumn("tsn", col("ts") - (col("ts") % 1000))
+      .withColumn("prev", lag(col("tsn"), 1).over(byTime))
+      .withColumn("new_s",
+        when(col("prev").isNull || col("tsn") - col("prev") > SessionGapNs, 1).otherwise(0))
+      .withColumn("session_id", sum(col("new_s")).over(cum))
+  }
+
   val queries: Map[String, Tables => DataFrame] = Map(
     // X8 — star join: orders→customer (AQE choice) →nation (broadcast).
     "q_join_orders_customer" -> { t =>
@@ -309,15 +325,7 @@ object RelationalQueries {
     // sum, then per-session aggregates. All event-time math on µs-truncated
     // ns longs (see EventQueries.tsUs rationale).
     "q_sessionize" -> { t =>
-      val byTime = Window.partitionBy(col("user_id")).orderBy(col("tsn"))
-      val cum = Window.partitionBy(col("user_id")).orderBy(col("tsn"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t.events
-        .withColumn("tsn", col("ts") - (col("ts") % 1000))
-        .withColumn("prev", lag(col("tsn"), 1).over(byTime))
-        .withColumn("new_s",
-          when(col("prev").isNull || col("tsn") - col("prev") > SessionGapNs, 1).otherwise(0))
-        .withColumn("session_id", sum(col("new_s")).over(cum))
+      sessionized(t.events)
         .groupBy("user_id", "session_id")
         .agg(count(lit(1)).as("n_events"),
              min(col("tsn")).as("start_ts"), max(col("tsn")).as("end_ts"))
@@ -330,15 +338,7 @@ object RelationalQueries {
     // quantiles (exactQuantiles, crossover-guarded) and the max. Duration
     // math is integral div on µs-truncated ns.
     "q_session_stats" -> { t =>
-      val byTime = Window.partitionBy(col("user_id")).orderBy(col("tsn"))
-      val cum = Window.partitionBy(col("user_id")).orderBy(col("tsn"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val sessions = t.events
-        .withColumn("tsn", col("ts") - (col("ts") % 1000))
-        .withColumn("prev", lag(col("tsn"), 1).over(byTime))
-        .withColumn("new_s",
-          when(col("prev").isNull || col("tsn") - col("prev") > SessionGapNs, 1).otherwise(0))
-        .withColumn("session_id", sum(col("new_s")).over(cum))
+      val sessions = sessionized(t.events)
         .groupBy("user_id", "session_id")
         .agg(count(lit(1)).as("n_events"),
           min(col("tsn")).as("st"), max(col("tsn")).as("en"))

@@ -760,14 +760,7 @@ object TextQueries {
     // the container roundtrip, endianness handling, or sample parsing
     // mismatches the integer sums.
     "q_audio_decode" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val wavs = t.documents.select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = 64 + (id % 32).toInt
-          val samples = Array.tabulate(n)(i => ((id * 7 + i * 31) % 2003 - 1001).toInt)
-          (id, graft.operators.MultimodalOps.encodePcmWav(8000, 1, samples))
-        }).toDF("doc_id", "wav")
+      val wavs = closedFormWavs(t)
       graft.operators.MultimodalOps.audioFeatures(wavs, "wav", "doc_id")
         .select(col("doc_id"), col("sample_rate"), col("channels"),
           col("n_frames"), col("sum_sq"), col("peak_abs"))
@@ -778,14 +771,7 @@ object TextQueries {
     // VAD shape): 16-frame windows with exact integer sums, short tails
     // reporting their own frame count. Same shared-construction oracle.
     "q_audio_energy" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val wavs = t.documents.select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = 64 + (id % 32).toInt
-          val samples = Array.tabulate(n)(i => ((id * 7 + i * 31) % 2003 - 1001).toInt)
-          (id, graft.operators.MultimodalOps.encodePcmWav(8000, 1, samples))
-        }).toDF("doc_id", "wav")
+      val wavs = closedFormWavs(t)
       graft.operators.MultimodalOps.audioWindowEnergy(wavs, "wav", "doc_id",
           windowFrames = 16)
         .orderBy("doc_id", "win")
@@ -797,14 +783,7 @@ object TextQueries {
     // The whole decode∘encode∘decimate∘decode chain must land on the
     // closed-form block means for the oracle to match.
     "q_audio_resample" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val wavs = t.documents.select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          val n = 64 + (id % 32).toInt
-          val samples = Array.tabulate(n)(i => ((id * 7 + i * 31) % 2003 - 1001).toInt)
-          (id, graft.operators.MultimodalOps.encodePcmWav(8000, 1, samples))
-        }).toDF("doc_id", "wav")
+      val wavs = closedFormWavs(t)
       val small = graft.operators.MultimodalOps.resampleAudio(wavs, "wav", "doc_id",
         factor = 4)
       graft.operators.MultimodalOps.audioFeatures(small, "wav", "doc_id")
@@ -849,24 +828,16 @@ object TextQueries {
     // banding as images; the oracle recomputes the signature closed-form
     // from the level ordering and mirrors the band join in SQL.
     "q_audio_neardup" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val wavs = t.documents.select(col("doc_id")).where(col("doc_id") < 96).as[Long]
-        .mapPartitions { ids =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          ids.map { id =>
-            val g = id % 12
-            val m = (id / 12).toInt
-            // 260 samples = 4 per span: span w = i*65/260 = i/4
-            val samples = Array.tabulate(260) { i =>
-              val w = i / 4
-              val lvl = 1 + (md.digest(s"a:$g:$w".getBytes("UTF-8"))(0) & 0xFF) +
-                (if (m == 7 && w == 0) 1 else 0)
-              lvl * (m + 1)
-            }
-            (id, graft.operators.MultimodalOps.encodePcmWav(8000, 1, samples))
-          }
-        }.toDF("doc_id", "wav")
+      val wavs = planted(t, "wav") { (md, g, m) =>
+        // 260 samples = 4 per span: span w = i*65/260 = i/4
+        val samples = Array.tabulate(260) { i =>
+          val w = i / 4
+          val lvl = 1 + (md.digest(s"a:$g:$w".getBytes("UTF-8"))(0) & 0xFF) +
+            (if (m == 7 && w == 0) 1 else 0)
+          lvl * (m + 1)
+        }
+        graft.operators.MultimodalOps.encodePcmWav(8000, 1, samples)
+      }
       val fps = graft.operators.MultimodalOps.audioFingerprints(wavs, "wav", "doc_id")
         .select(col("doc_id").as("id"), col("afp").as("h"))
       graft.operators.MultimodalOps.hammingPairs(fps, maxHamming = 3)
@@ -888,24 +859,16 @@ object TextQueries {
     // windows, signs, shingles and the containment join in SQL: silence
     // never appears in it at all, which IS the invariance proof.
     "q_audio_neardup_shift" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val wavs = t.documents.select(col("doc_id")).where(col("doc_id") < 96).as[Long]
-        .mapPartitions { ids =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          ids.map { id =>
-            val g = id % 12
-            val m = (id / 12).toInt
-            val silence = Array.fill(m * 7 % 13)(0)
-            val content = Array.tabulate(320) { i =>
-              val w = i / 4
-              val lvl = 1 + (md.digest(s"s:$g:$w".getBytes("UTF-8"))(0) & 0xFF) +
-                (if (m == 7 && w == 5) 1 else 0)
-              lvl * (m + 1)
-            }
-            (id, graft.operators.MultimodalOps.encodePcmWav(8000, 1, silence ++ content))
-          }
-        }.toDF("doc_id", "wav")
+      val wavs = planted(t, "wav") { (md, g, m) =>
+        val silence = Array.fill(m * 7 % 13)(0)
+        val content = Array.tabulate(320) { i =>
+          val w = i / 4
+          val lvl = 1 + (md.digest(s"s:$g:$w".getBytes("UTF-8"))(0) & 0xFF) +
+            (if (m == 7 && w == 5) 1 else 0)
+          lvl * (m + 1)
+        }
+        graft.operators.MultimodalOps.encodePcmWav(8000, 1, silence ++ content)
+      }
       val fps = graft.operators.MultimodalOps.audioShingleFingerprints(
         wavs, "wav", "doc_id", windowSamples = 4, shingleBits = 16)
       graft.operators.MultimodalOps.shingleContainmentPairs(fps, minContainment = 0.5,
@@ -921,24 +884,15 @@ object TextQueries {
     // (frame alignment rides the band join key). The oracle recomputes every
     // frame's dHash closed-form and re-derives the full-series match in SQL.
     "q_gif_neardup" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val gifs = t.documents.select(col("doc_id")).where(col("doc_id") < 96).as[Long]
-        .mapPartitions { ids =>
-          javax.imageio.ImageIO.setUseCache(false)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          ids.map { id =>
-            val g = id % 12
-            val m = (id / 12).toInt
-            (id, graft.operators.MultimodalOps.encodeGrayGifFrames(9, 8,
-              frames = 2 + (g % 3).toInt,
-              pixel = (x, y, f) => {
-                val base = md.digest(s"v:$g:$f:$x:$y".getBytes("UTF-8"))(0) & 0xFF
-                val bump = if (x == m % 9 && y == (m / 9) % 8) 1 else 0
-                (base + bump) % 256
-              }))
-          }
-        }.toDF("doc_id", "gif")
+      val gifs = planted(t, "gif") { (md, g, m) =>
+        graft.operators.MultimodalOps.encodeGrayGifFrames(9, 8,
+          frames = 2 + (g % 3).toInt,
+          pixel = (x, y, f) => {
+            val base = md.digest(s"v:$g:$f:$x:$y".getBytes("UTF-8"))(0) & 0xFF
+            val bump = if (x == m % 9 && y == (m / 9) % 8) 1 else 0
+            (base + bump) % 256
+          })
+      }
       val fh = graft.operators.MultimodalOps.frameHashes(gifs, "gif", "doc_id")
       graft.operators.MultimodalOps.animationNearDup(fh, maxHamming = 3)
         .orderBy("ida", "idb")
@@ -956,27 +910,18 @@ object TextQueries {
     // equal-frame-count q_gif_neardup can never emit. Oracle recomputes
     // the 4 sampled frames' dHashes closed-form and mirrors the rollup.
     "q_gif_neardup_rate" -> { t =>
-      val s = t.spark
-      import s.implicits._
-      val gifs = t.documents.select(col("doc_id")).where(col("doc_id") < 96).as[Long]
-        .mapPartitions { ids =>
-          javax.imageio.ImageIO.setUseCache(false)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          ids.map { id =>
-            val g = id % 12
-            val m = (id / 12).toInt
-            val d = 1 + m % 2 // frame-decimation factor: odd members at half rate
-            (id, graft.operators.MultimodalOps.encodeGrayGifFrames(9, 8,
-              frames = 8 / d,
-              pixel = (x, y, f) => {
-                // pixels keyed on the SOURCE frame index f·d, so the
-                // decimated copy shows the same content where it samples
-                val base = md.digest(s"r:$g:${f * d}:$x:$y".getBytes("UTF-8"))(0) & 0xFF
-                val bump = if (m == 7 && x == 2 && y == 3) 1 else 0
-                (base + bump) % 256
-              }))
-          }
-        }.toDF("doc_id", "gif")
+      val gifs = planted(t, "gif") { (md, g, m) =>
+        val d = 1 + m % 2 // frame-decimation factor: odd members at half rate
+        graft.operators.MultimodalOps.encodeGrayGifFrames(9, 8,
+          frames = 8 / d,
+          pixel = (x, y, f) => {
+            // pixels keyed on the SOURCE frame index f·d, so the
+            // decimated copy shows the same content where it samples
+            val base = md.digest(s"r:$g:${f * d}:$x:$y".getBytes("UTF-8"))(0) & 0xFF
+            val bump = if (m == 7 && x == 2 && y == 3) 1 else 0
+            (base + bump) % 256
+          })
+      }
       val fh = graft.operators.MultimodalOps.frameHashes(gifs, "gif", "doc_id")
       graft.operators.MultimodalOps.animationNearDupNormalized(fh, slots = 4,
           maxHamming = 3)
@@ -1099,24 +1044,58 @@ object TextQueries {
     * md5-pattern groups, member m bumping one pixel by +1 luma; encoded,
     * REALLY decoded, and reduced to (id, dhash). */
   private def plantedNeardupHashes(t: graft.Tables): org.apache.spark.sql.DataFrame = {
+    val imgs = planted(t, "png") { (md, g, m) =>
+      graft.operators.MultimodalOps.encodeGrayPng(9, 8, (x, y) => {
+        val base = md.digest(s"g:$g:$x:$y".getBytes("UTF-8"))(0) & 0xFF
+        val bump = if (x == m % 9 && y == (m / 9) % 8) 1 else 0
+        (base + bump) % 256
+      })
+    }
+    graft.operators.MultimodalOps.imageFeatures(imgs, "png", "doc_id")
+      .select(col("doc_id").as("id"), col("dhash").as("h"))
+  }
+
+  /** The closed-form WAV corpus of the audio decode queries: per doc one
+    * real 16-bit mono PCM WAV at 8 kHz with 64 + id % 32 samples
+    * ((id·7 + i·31) % 2003 − 1001), JDK-encoded — the sample formula
+    * their oracles recompute. Output (doc_id, wav). */
+  private def closedFormWavs(t: Tables): DataFrame = {
     val s = t.spark
     import s.implicits._
-    val imgs = t.documents.select(col("doc_id")).where(col("doc_id") < 96).as[Long]
+    t.documents.select(col("doc_id")).as[Long]
+      .mapPartitions(_.map { id =>
+        val n = 64 + (id % 32).toInt
+        val samples = Array.tabulate(n)(i => ((id * 7 + i * 31) % 2003 - 1001).toInt)
+        (id, graft.operators.MultimodalOps.encodePcmWav(8000, 1, samples))
+      }).toDF("doc_id", "wav")
+  }
+
+  /** The md5-planted near-dup corpus: docs 0–95 in 12 groups, doc `id` the
+    * member m = id / 12 of group g = id % 12, its payload
+    * `encode(md, g, m)` built with one MD5 digest per partition (and the
+    * ImageIO disk cache off). Output (doc_id, `name`). */
+  private def planted(t: Tables, name: String)(
+      encode: (java.security.MessageDigest, Long, Int) => Array[Byte]): DataFrame = {
+    val s = t.spark
+    import s.implicits._
+    t.documents.select(col("doc_id")).where(col("doc_id") < 96).as[Long]
       .mapPartitions { ids =>
         javax.imageio.ImageIO.setUseCache(false)
         val md = java.security.MessageDigest.getInstance("MD5")
-        ids.map { id =>
-          val g = id % 12
-          val m = (id / 12).toInt
-          (id, graft.operators.MultimodalOps.encodeGrayPng(9, 8, (x, y) => {
-            val base = md.digest(s"g:$g:$x:$y".getBytes("UTF-8"))(0) & 0xFF
-            val bump = if (x == m % 9 && y == (m / 9) % 8) 1 else 0
-            (base + bump) % 256
-          }))
-        }
-      }.toDF("doc_id", "png")
-    graft.operators.MultimodalOps.imageFeatures(imgs, "png", "doc_id")
-      .select(col("doc_id").as("id"), col("dhash").as("h"))
+        ids.map(id => (id, encode(md, id % 12, (id / 12).toInt)))
+      }.toDF("doc_id", name)
+  }
+
+  /** The generated SQL of a planted 9×8 raster: the 72 pixel columns
+    * `p(x, y) AS cX_Y`, and the dHash packing over them as a 64-term CASE
+    * sum (bit y·8+x set when cX+1_Y > cX_Y). */
+  private def plantedPixels(p: (Int, Int) => String): (String, String) = {
+    val pxCols = (for (y <- 0 until 8; x <- 0 until 9) yield
+      s"${p(x, y)} AS c${x}_$y").mkString(", ")
+    val dhash = (for (y <- 0 until 8; x <- 0 until 8) yield
+      s"CASE WHEN c${x + 1}_$y > c${x}_$y THEN ${bitPow(y * 8 + x)} ELSE 0 END")
+      .mkString(" + ")
+    (pxCols, dhash)
   }
 
   /** Shared CTE prefix for the planted-image oracles: closed-form
@@ -1127,11 +1106,7 @@ object TextQueries {
       s"(('0x' || substr(md5('g:' || (doc_id % 12) || ':$x:$y'), 1, 2))::UBIGINT + " +
         s"CASE WHEN (doc_id // 12) % 9 = $x AND ((doc_id // 12) // 9) % 8 = $y " +
         "THEN 1 ELSE 0 END) % 256"
-    val pxCols = (for (y <- 0 until 8; x <- 0 until 9) yield
-      s"${p(x, y)} AS c${x}_$y").mkString(", ")
-    val dhash = (for (y <- 0 until 8; x <- 0 until 8) yield
-      s"CASE WHEN c${x + 1}_$y > c${x}_$y THEN ${bitPow(y * 8 + x)} ELSE 0 END")
-      .mkString(" + ")
+    val (pxCols, dhash) = plantedPixels(p)
     s"WITH ${if (recursive) "RECURSIVE " else ""}px AS " +
       s"(SELECT doc_id, $pxCols FROM documents WHERE doc_id < 96), " +
       s"h AS (SELECT doc_id AS id, ($dhash) AS h FROM px), " +
@@ -1237,11 +1212,7 @@ object TextQueries {
     def p(x: Int, y: Int) =
       s"(('0x' || substr(md5('r:' || (doc_id % 12) || ':' || (2 * slot) || ':$x:$y'), 1, 2))::UBIGINT + " +
         s"CASE WHEN doc_id // 12 = 7 AND $x = 2 AND $y = 3 THEN 1 ELSE 0 END) % 256"
-    val pxCols = (for (y <- 0 until 8; x <- 0 until 9) yield
-      s"${p(x, y)} AS c${x}_$y").mkString(", ")
-    val dhash = (for (y <- 0 until 8; x <- 0 until 8) yield
-      s"CASE WHEN c${x + 1}_$y > c${x}_$y THEN ${bitPow(y * 8 + x)} ELSE 0 END")
-      .mkString(" + ")
+    val (pxCols, dhash) = plantedPixels(p)
     s"""WITH sl AS (SELECT doc_id, unnest([0, 1, 2, 3]) AS slot
        |  FROM documents WHERE doc_id < 96),
        |px AS (SELECT doc_id, slot, $pxCols FROM sl),
@@ -1275,11 +1246,7 @@ object TextQueries {
       s"(('0x' || substr(md5('v:' || (doc_id % 12) || ':' || f || ':$x:$y'), 1, 2))::UBIGINT + " +
         s"CASE WHEN (doc_id // 12) % 9 = $x AND ((doc_id // 12) // 9) % 8 = $y " +
         "THEN 1 ELSE 0 END) % 256"
-    val pxCols = (for (y <- 0 until 8; x <- 0 until 9) yield
-      s"${p(x, y)} AS c${x}_$y").mkString(", ")
-    val dhash = (for (y <- 0 until 8; x <- 0 until 8) yield
-      s"CASE WHEN c${x + 1}_$y > c${x}_$y THEN ${bitPow(y * 8 + x)} ELSE 0 END")
-      .mkString(" + ")
+    val (pxCols, dhash) = plantedPixels(p)
     s"""WITH fr AS (SELECT doc_id, unnest(range(0, 2 + (doc_id % 12) % 3)) AS f
        |  FROM documents WHERE doc_id < 96),
        |px AS (SELECT doc_id, f, $pxCols FROM fr),

@@ -301,7 +301,7 @@ class PlanQualitySpec extends SparkSpec {
   test("pagerank partitioned iteration: shuffle-hash joins, edges never re-exchange") {
     import graft.operators.GraphOps
     // one iteration step over a src-partitioned persisted edge table — the
-    // shape partitionedIterate runs when the rank vector outgrows
+    // shape of pageRank's partitioned layout when the rank vector outgrows
     // broadcast. The edges side must be read from cache with NO further
     // Exchange; only the rank vector (1 exchange) and the dst aggregation
     // (1 exchange) may shuffle, through ShuffledHashJoin (an SMJ would

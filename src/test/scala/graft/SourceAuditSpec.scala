@@ -19,13 +19,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * own spec fails the build. Likewise every default-valued parameter of a
   * library member is set by some product call: a knob no caller turns is
   * a constant.
+  *
+  * Copies: no run of six code lines occurs twice in src/main — a shape
+  * that is needed twice has one definition.
   */
 class SourceAuditSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
 
-  // Comments are blanked (a scaladoc "Heartbeat frames" is no caller);
-  // string and char literals are matched first so a `//` inside one stays.
+  // Comments are blanked (a scaladoc "Heartbeat frames" is no caller) down
+  // to their line breaks, so line numbers survive; string and char
+  // literals are matched first so a `//` inside one stays.
   private val lexeme =
     """"{3}[\s\S]*?"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/""".r
   /** Source text with comments blanked, and literals too when `literals`.
@@ -33,7 +37,7 @@ class SourceAuditSpec extends AnyFunSuite {
     * counts as an argument. */
   private def blank(src: String, literals: Boolean): String =
     lexeme.replaceAllIn(src, m =>
-      if (m.matched.startsWith("/")) " "
+      if (m.matched.startsWith("/")) " " + "\n" * m.matched.count(_ == '\n')
       else if (literals) "\"\""
       else java.util.regex.Matcher.quoteReplacement(m.matched))
   private def code(p: Path, literals: Boolean = false): String =
@@ -353,5 +357,73 @@ class SourceAuditSpec extends AnyFunSuite {
         |}""".stripMargin, literals = true)
     assert(unsetDefaults(Seq("Ops" -> library), Seq(library, callers)) ==
       Seq("Ops.commented.f", "Ops.declared.h", "Ops.named.b", "Ops.quoted.g"))
+  }
+
+  /** Lines per window of the copy audit. */
+  private val CloneWindow = 6
+
+  /** The copied runs in `files` (name -> source with comments blanked), as
+    * `name:first-last` source lines, by name and line. A source line
+    * normalizes to its text with whitespace runs collapsed; lines of
+    * `|`-margin text (SQL) and lines with no word character are skipped,
+    * so a run spans them. A line is copied when it lies in a window of
+    * [[CloneWindow]] consecutive normalized lines that occurs more than
+    * once anywhere in `files`, and a run is a maximal stretch of copied
+    * lines. */
+  private def clonedRuns(files: Seq[(String, String)]): Seq[String] = {
+    val word = """\w""".r
+    val lines = files.map { case (f, src) =>
+      f -> src.split("\n", -1).toIndexedSeq.zipWithIndex
+        .map { case (l, i) => (i + 1, l.trim.replaceAll("\\s+", " ")) }
+        .filter { case (_, l) => !l.startsWith("|") && word.findFirstIn(l).isDefined }
+    }
+    val windows = for {
+      (f, ls) <- lines
+      i <- 0 to ls.length - CloneWindow
+    } yield ls.slice(i, i + CloneWindow).map(_._2) -> (f, i)
+    val copied: Map[String, Seq[Int]] = windows.groupMap(_._1)(_._2).values
+      .filter(_.size > 1).flatten.toSeq
+      .flatMap { case (f, i) => (i until i + CloneWindow).map(f -> _) }
+      .groupMap(_._1)(_._2).view.mapValues(_.distinct.sorted).toMap
+    lines.sortBy(_._1).flatMap { case (f, ls) =>
+      copied.getOrElse(f, Nil).foldLeft(List.empty[(Int, Int)]) {
+        case ((from, to) :: done, i) if i == to + 1 => (from, i) :: done
+        case (done, i) => (i, i) :: done
+      }.reverse.map { case (from, to) => s"$f:${ls(from)._1}-${ls(to)._1}" }
+    }
+  }
+
+  // file (relative to src/main/scala/graft) -> (copied runs, why they stay)
+  private val allowedCopies = Map.empty[String, (Int, String)]
+
+  test("no run of six code lines in src/main occurs twice") {
+    val runs = clonedRuns(scalaFiles(root).map(p => root.relativize(p).toString -> code(p)))
+    val byFile = runs.groupBy(_.takeWhile(_ != ':'))
+    val copies = byFile.toSeq.sortBy(_._1).flatMap { case (f, rs) =>
+      if (allowedCopies.get(f).exists(_._1 == rs.size)) Nil else rs
+    }
+    assert(copies.isEmpty,
+      s"${copies.size} copied runs (give each repeated shape one definition, or " +
+        s"allowlist the file with its run count and a reason):\n  ${copies.mkString("\n  ")}")
+    val stale = allowedCopies.keySet.filterNot(byFile.contains).toSeq.sorted
+    assert(stale.isEmpty, s"allowlisted files with no copied run (drop them from " +
+      s"the allowlist): ${stale.mkString(", ")}")
+  }
+
+  test("the copy audit flags six re-indented lines, not comments, margin SQL or five lines") {
+    val block = Seq("def f(x: Int): Int = {", "  val a = x + 1", "  val b = a * 2",
+      "  val c = b - 3", "  val d = c / 4", "  a + b + c + d", "}")
+    val five = Seq("val p = 1", "val q = 2", "val r = 3", "val s = 4", "val t = 5")
+    def file(lines: Seq[String]): String = blank(lines.mkString("\n"), literals = false)
+    val files = Seq(
+      "Orig.scala" -> file(Seq("object Orig {") ++ block.map("  " + _) ++ Seq("}")),
+      // re-indented, and a trailing comment on one line
+      "Moved.scala" -> file(Seq("object Moved {", "  object Inner {") ++
+        block.map("      " + _).updated(2, "        val b = a * 2 // doubled") ++ Seq("  }", "}")),
+      "Commented.scala" -> file(Seq("object Commented {", "  /*") ++ block ++ Seq("  */", "}")),
+      "Sql.scala" -> file(Seq("object Sql {", "  val q = \"\"\"") ++
+        block.map("    |" + _) ++ Seq("    |\"\"\".stripMargin", "}")),
+      "Five.scala" -> file(Seq("object Five {") ++ five ++ Seq("def g = 0") ++ five ++ Seq("}")))
+    assert(clonedRuns(files) == Seq("Moved.scala:3-8", "Orig.scala:2-7"))
   }
 }

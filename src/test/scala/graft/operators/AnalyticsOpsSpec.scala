@@ -134,6 +134,11 @@ class AnalyticsOpsSpec extends SparkSpec {
     val onev = (Seq(7.5, 7.5).map((_, true)) ++ Seq(7.5).map((_, false))).toDF("v", "ia")
     assert(StatsOps.ksTest(onev, col("v"), col("ia"))
       .as[(Double, Long, Long)].collect().head == ((0.0, 2L, 1L)))
+    // a range so narrow that range / nBlocks underflows to 0.0 puts every
+    // value in block 0 instead of dividing by zero
+    val narrow = Seq((0.0, true), (Double.MinPositiveValue, false)).toDF("v", "ia")
+    assert(StatsOps.ksTest(narrow, col("v"), col("ia"))
+      .as[(Double, Long, Long)].collect().head == ((1.0, 1L, 1L)))
   }
 
   test("aucMannWhitney: closed forms, tie handling, block invariance, brute-force parity") {
@@ -162,6 +167,9 @@ class AnalyticsOpsSpec extends SparkSpec {
       && auc(rows, blocks = 3) == auc(rows, blocks = 4096))
     // degenerate single-class input → NULL auc, not a division error
     assert(auc(Seq((1.0, true), (2.0, true))) == ((None, 2L, 0L)))
+    // a subnormal score range (range / nBlocks underflows to 0.0) still
+    // separates the classes
+    assert(auc(Seq((Double.MinPositiveValue, true), (0.0, false))) == ((Some(1.0), 1L, 1L)))
     // randomized parity with the brute-force pair count
     val rnd = new scala.util.Random(11)
     for (_ <- 0 until 10) {
@@ -436,6 +444,11 @@ class AnalyticsOpsSpec extends SparkSpec {
     // one side empty → NULL z
     val one = Seq((1.0, true), (2.0, true)).toDF("v", "ix")
     assert(StatsOps.rankSumTest(one, col("v"), col("ix")).collect().head.isNullAt(3))
+    // a subnormal value range (range / blocks underflows to 0.0): U = 0,
+    // σ² = (1/12)·3, z = (0 − 1) / (2·0.5)
+    val narrow = Seq((0.0, true), (Double.MinPositiveValue, false)).toDF("v", "ix")
+    val rn = StatsOps.rankSumTest(narrow, col("v"), col("ix")).collect().head
+    assert(rn.getDouble(2) == 0.0 && rn.getDouble(3) == -1.0)
   }
 
   test("marginMine keeps mutual partners, drops non-reciprocated hubs, enforces the margin") {
