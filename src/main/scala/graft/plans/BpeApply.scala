@@ -139,10 +139,9 @@ case class BpeApplyExpr(left: Expression, right: Expression)
   override def nullSafeEval(text: Any, pats: Any): Any =
     merger.merge(text.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerger", merger, classOf[BpeMerger].getName)
-    nullSafeCodeGen(ctx, ev, (t, _) => s"${ev.value} = $ref.merge($t);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, _) =>
+      s"${ctx.addReferenceObj("bpeMerger", merger, classOf[BpeMerger].getName)}.merge($t)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -310,11 +310,12 @@ trait KeywordExpression extends BinaryExpression with ExpectsInputTypes {
   @transient protected lazy val automaton: AhoCorasick =
     KeywordScan.automatonFrom(right, prettyName)
 
-  /** Codegen accessor for the shared automaton (the NgramHashes precedent:
-    * one virtual call keeps the expression inside whole-stage codegen
-    * without inlining the matcher as a string template). */
-  protected def automatonRef(ctx: CodegenContext): String =
-    ctx.addReferenceObj("ahoCorasick", automaton, classOf[AhoCorasick].getName)
+  /** Generated code for `automaton.method(text)` over the shared automaton
+    * (the NgramHashes precedent: one virtual call keeps the expression
+    * inside whole-stage codegen without inlining the matcher as a string
+    * template). */
+  protected def automatonCall(ctx: CodegenContext, method: String, text: String): String =
+    s"${ctx.addReferenceObj("ahoCorasick", automaton, classOf[AhoCorasick].getName)}.$method($text)"
 }
 
 private[plans] object KeywordScan {
@@ -375,11 +376,8 @@ case class KeywordMatches(left: Expression, right: Expression) extends KeywordEx
   override def nullSafeEval(text: Any, pats: Any): Any =
     automaton.matchArray(text.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ac = automatonRef(ctx)
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ac.matchArray($a);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, _) => automatonCall(ctx, "matchArray", a))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -400,11 +398,8 @@ case class KeywordCounts(left: Expression, right: Expression) extends KeywordExp
   override def nullSafeEval(text: Any, pats: Any): Any =
     automaton.countArray(text.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ac = automatonRef(ctx)
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ac.countArray($a);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, _) => automatonCall(ctx, "countArray", a))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -425,10 +420,8 @@ case class KeywordAny(left: Expression, right: Expression) extends KeywordExpres
   override def nullSafeEval(text: Any, pats: Any): Any =
     automaton.matchesAny(text.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ac = automatonRef(ctx)
-    nullSafeCodeGen(ctx, ev, (a, _) => s"${ev.value} = $ac.matchesAny($a);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, _) => automatonCall(ctx, "matchesAny", a))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -452,11 +445,8 @@ case class KeywordSpans(left: Expression, right: Expression) extends KeywordExpr
   override def nullSafeEval(text: Any, pats: Any): Any =
     automaton.spanArray(text.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ac = automatonRef(ctx)
-    nullSafeCodeGen(ctx, ev, (a, _) =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ac.spanArray($a);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, _) => automatonCall(ctx, "spanArray", a))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -478,10 +468,8 @@ case class KeywordRedact(left: Expression, right: Expression) extends KeywordExp
   override def nullSafeEval(text: Any, pats: Any): Any =
     automaton.redact(text.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ac = automatonRef(ctx)
-    nullSafeCodeGen(ctx, ev, (a, _) => s"${ev.value} = $ac.redact($a);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, _) => automatonCall(ctx, "redact", a))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -359,6 +359,36 @@ class SourceAuditSpec extends AnyFunSuite {
       Seq("Ops.commented.f", "Ops.declared.h", "Ops.named.b", "Ops.quoted.g"))
   }
 
+  test("every doGenCode is one defineCodeGen call, no Java template") {
+    // A native function's kernel has one definition, a JVM method that
+    // nullSafeEval and the generated code both call. A Java copy of the
+    // kernel in a string template is a second definition that only the
+    // generated code runs, and the copy audit cannot see it.
+    val sig = """def doGenCode\([^)]*\)\s*:\s*ExprCode\s*=""".r
+    val owner = """class\s+(\w+)""".r
+    val bodies = scalaFiles(root).flatMap { p =>
+      val src = code(p)
+      sig.findAllMatchIn(src).map { m =>
+        // the body runs to the next line at member indent or less
+        val end = """\n {0,2}\S""".r.findFirstMatchIn(src.substring(m.end))
+          .fold(src.length)(m.end + _.start)
+        val cls = owner.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+        s"${root.relativize(p)} $cls" -> src.substring(m.end, end).trim
+      }
+    }.sortBy(_._1)
+    assert(bodies.length >= 17, s"${bodies.length} doGenCode bodies found")
+    val templates = bodies.collect {
+      case (at, body) if Seq("stripMargin", "for (", "while (").exists(body.contains) => at
+    }
+    assert(templates.isEmpty, s"doGenCode with a Java template (move the loop into a kernel " +
+      s"method that nullSafeEval calls too):\n  ${templates.mkString("\n  ")}")
+    val call = "defineCodeGen("
+    val others = bodies.collect {
+      case (at, body) if !body.startsWith(call) || groupEnd(body, call.length - 1) != body.length => at
+    }
+    assert(others.isEmpty, s"doGenCode that is not one defineCodeGen call:\n  ${others.mkString("\n  ")}")
+  }
+
   /** Lines per window of the copy audit. */
   private val CloneWindow = 6
 
