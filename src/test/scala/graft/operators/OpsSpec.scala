@@ -733,12 +733,14 @@ class OpsSpec extends SparkSpec {
     rejects(call_function("sorted_intersect_count", col("ai"), col("ai")))
     rejects(call_function("nfc_normalize", col("ai")))
     // too few arguments: the registered builder must raise WRONG_NUM_ARGS,
-    // not index past the argument list
+    // not index past the argument list; too many must not be dropped silently
     val unary = Seq("simhash64", "poisson_w", "md5_u32", "nfc_normalize", "char_entropy")
     val binary = Seq("vec_dot", "vec_lsh_bits", "sorted_intersect_count", "ngram_hashes",
       "bloom_might_contain", "jaro_winkler", "keyword_matches", "keyword_any",
       "keyword_counts", "bpe_apply", "keyword_spans", "keyword_redact")
-    (unary.map(call_function(_)) ++ binary.map(call_function(_, col("ad")))).foreach { c =>
+    val tooMany = Seq(call_function("vec_dot", col("ad"), col("ad"), col("ad")),
+      call_function("simhash64", col("ad"), col("ad")))
+    (unary.map(call_function(_)) ++ binary.map(call_function(_, col("ad"))) ++ tooMany).foreach { c =>
       val e = intercept[org.apache.spark.sql.AnalysisException] { df.select(c).collect() }
       assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$c: ${e.getMessage}")
     }
